@@ -67,7 +67,7 @@ object Engine {
       // Straggler mitigation: at 1000 executors one slow disk stalls the
       // stage tail. Safe for this engine's COMMITTED sinks — parquet's
       // commit protocol and the graft-influx staging/publish protocol
-      // (which LineProtocolSink now routes through) both discard the
+      // (behind InfluxDsv2Sink and format("graft-influx")) both discard the
       // losing attempt's files. NOT safe for a raw MicroBatchSink with a
       // side-effecting flushFn (HTTP POST, message bus): that path is
       // at-least-once under speculation and the flushFn must be

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
 
@@ -12,20 +12,11 @@ import graft.Tables
   * (l82) all consume ONE shared build instead of each retraining
   * identical artifacts per query.
   *
-  * Scope: the cache lives for the Spark application (applicationId in
-  * the key) and holds localCheckpoint'ed frames — centroids and
-  * codebook are O(model), lists/codes/norms are O(corpus vectors), the
-  * same footprint any one of the consumers already checkpointed. A
-  * production pipeline keeps the artifacts as bucketed TABLES across
-  * applications (l72 persists and serves exactly that way); a
-  * cross-application file cache is deliberately NOT attempted here —
-  * a half-written artifact path would poison every later run, whereas
-  * catalog tables have transactional overwrite semantics.
+  * The cache holds localCheckpoint'ed frames — centroids and codebook
+  * are O(model), lists/codes/norms are O(corpus vectors), the same
+  * footprint any one of the consumers already checkpointed.
   */
 object AnnIndexStore {
-
-  private final case class Key(appId: String, dir: String, nCentroids: Int,
-      trainIters: Int, m: Int, nCodes: Int, pqTrainIters: Int)
 
   /** The harness's ONE shared build parameterization — 8 coarse
     * centroids (seeded, no Lloyd iterations — deterministic), m=16
@@ -40,21 +31,21 @@ object AnnIndexStore {
   val DefaultNCodes = 64
   val DefaultPqTrainIters = 1
 
-  private val cache =
-    scala.collection.mutable.Map.empty[Key, Similarity.AnnIndex]
+  private val index = new AppCache[Similarity.AnnIndex]("ann_index")
+  private val serve = new AppCache[(Similarity.AnnServeMeta, DataFrame)](
+    "ann_serve")
 
-  private def keyFor(s: SparkSession, dir: String, nCentroids: Int,
-      trainIters: Int, m: Int, nCodes: Int, pqTrainIters: Int): Key = {
-    val key = Key(s.sparkContext.applicationId,
-      new java.io.File(dir).getCanonicalPath,
-      nCentroids, trainIters, m, nCodes, pqTrainIters)
-    // entries from stopped applications (earlier SparkSessions in the
-    // same JVM — test suites, notebooks) can never be hit again but
-    // would pin checkpointed frames for the JVM's life: evict them
-    cache.filterInPlace((k, _) => k.appId == key.appId)
-    serveCache.filterInPlace((k, _) => k.appId == key.appId)
-    key
-  }
+  /** Checkpoint every part — of a fresh build or a durable reload — so
+    * consumers share in-memory frames (serving raw table reads
+    * measurably slows every later consumer).
+    */
+  private def pin(idx: Similarity.AnnIndex): Similarity.AnnIndex =
+    Similarity.AnnIndex(
+      idx.centroids.localCheckpoint(eager = true),
+      idx.lists.localCheckpoint(eager = true),
+      idx.codebook.localCheckpoint(eager = true),
+      idx.codes.localCheckpoint(eager = true),
+      idx.norms.localCheckpoint(eager = true))
 
   /** The canonical-parameterization miss path goes through the
     * DURABLE layout (the DupSpanStore discipline): index training
@@ -68,27 +59,16 @@ object AnnIndexStore {
       nCentroids: Int = DefaultNCentroids,
       trainIters: Int = DefaultTrainIters, m: Int = DefaultM,
       nCodes: Int = DefaultNCodes,
-      pqTrainIters: Int = DefaultPqTrainIters): Similarity.AnnIndex =
-    synchronized {
-    val key = keyFor(s, dir, nCentroids, trainIters, m, nCodes,
-      pqTrainIters)
-    val canonical = key == keyFor(s, dir, DefaultNCentroids,
-      DefaultTrainIters, DefaultM, DefaultNCodes, DefaultPqTrainIters)
-    cache.getOrElseUpdate(key, {
-      val idx =
-        if (canonical) durableIndex(s, dir, corpusFp(s, dir))
-        else Similarity.buildAnnIndex(
-          Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
-          nCentroids, trainIters, m, nCodes, pqTrainIters)
-      StoreBuildLedger.timed("ann_index") {
-        Similarity.AnnIndex(
-          idx.centroids.localCheckpoint(eager = true),
-          idx.lists.localCheckpoint(eager = true),
-          idx.codebook.localCheckpoint(eager = true),
-          idx.codes.localCheckpoint(eager = true),
-          idx.norms.localCheckpoint(eager = true))
-      }
-    })
+      pqTrainIters: Int = DefaultPqTrainIters): Similarity.AnnIndex = {
+    val params = Seq(nCentroids, trainIters, m, nCodes, pqTrainIters)
+    val canonical = params == Seq(DefaultNCentroids, DefaultTrainIters,
+      DefaultM, DefaultNCodes, DefaultPqTrainIters)
+    index.get(s, dir, if (canonical) "" else params.mkString("/")) {
+      if (canonical) durableIndex(s, dir, DurableStore.embeddingsFp(s, dir))
+      else Similarity.buildAnnIndex(
+        Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
+        nCentroids, trainIters, m, nCodes, pqTrainIters)
+    }(pin)
   }
 
   /** Durable layout of the index family: lists/codes/norms bucketed on
@@ -97,15 +77,11 @@ object AnnIndexStore {
     */
   val DurableFamily = "ann_index"
   val DurableParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("cent", None),
-    DurableStore.Part("lists", Some("cent_id")),
-    DurableStore.Part("codebook", None),
-    DurableStore.Part("codes", Some("c_id")),
-    DurableStore.Part("norms", Some("c_id")))
-
-  def corpusFp(s: SparkSession, dir: String): String =
-    DurableStore.corpusFingerprint(s, dir, "embeddings",
-      Seq("vec_id", "embedding"))
+    DurableStore.Part("cent", None, Seq("cent_id", "cent_emb")),
+    DurableStore.Part("lists", Some("cent_id"), Seq("c_id", "cent_id")),
+    DurableStore.Part("codebook", None, Seq("blk", "code", "cent")),
+    DurableStore.Part("codes", Some("c_id"), Seq("c_id", "codes")),
+    DurableStore.Part("norms", Some("c_id"), Seq("c_id", "c_norm")))
 
   /** Load-or-build the DURABLE index: later applications (and the
     * post-evict reload inside one) serve the five tables with zero
@@ -115,16 +91,13 @@ object AnnIndexStore {
     * seconds land un-nested under `durable_ann_index`).
     */
   def durableIndex(s: SparkSession, dir: String,
-      fp: String): Similarity.AnnIndex = {
-    val t = DurableStore.loadOrBuild(s, DurableFamily, fp, DurableParts) {
-      val idx = Similarity.buildAnnIndex(
+      fp: String): Similarity.AnnIndex =
+    asIndex(DurableStore.loadOrBuild(s, DurableFamily, fp, DurableParts) {
+      asParts(Similarity.buildAnnIndex(
         Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
         DefaultNCentroids, DefaultTrainIters, DefaultM, DefaultNCodes,
-        DefaultPqTrainIters)
-      asParts(idx)
-    }
-    asIndex(t)
-  }
+        DefaultPqTrainIters))
+    })
 
   /** The INCREMENTAL durable lineage — a separate family from
     * `ann_index` because the two hold DIFFERENT artifacts for the same
@@ -150,14 +123,12 @@ object AnnIndexStore {
     */
   val IncFamily = "ann_index_inc"
 
-  private def asParts(idx: Similarity.AnnIndex)
-      : Map[String, org.apache.spark.sql.DataFrame] =
+  private def asParts(idx: Similarity.AnnIndex): Map[String, DataFrame] =
     Map("cent" -> idx.centroids, "lists" -> idx.lists,
       "codebook" -> idx.codebook, "codes" -> idx.codes,
       "norms" -> idx.norms)
 
-  private def asIndex(t: Map[String, org.apache.spark.sql.DataFrame])
-      : Similarity.AnnIndex =
+  private def asIndex(t: Map[String, DataFrame]): Similarity.AnnIndex =
     Similarity.AnnIndex(t("cent"), t("lists"), t("codebook"),
       t("codes"), t("norms"))
 
@@ -166,16 +137,13 @@ object AnnIndexStore {
     * FRAME's content hash, so any base change invalidates), published
     * as a single-segment manifest.
     */
-  def durableIncBase(s: SparkSession,
-      base: org.apache.spark.sql.DataFrame, baseFp: String,
+  def durableIncBase(s: SparkSession, base: DataFrame, baseFp: String,
       idCol: String, embCol: String): Similarity.AnnIndex =
-    asIndex(DurableStore.loadOrBuildManifest(s, IncFamily, baseFp,
+    asIndex(DurableStore.loadOrBuildBase(s, IncFamily, baseFp,
       DurableParts) {
-      val idx = Similarity.buildAnnIndex(base, idCol, embCol,
+      asParts(Similarity.buildAnnIndex(base, idCol, embCol,
         DefaultNCentroids, DefaultTrainIters, DefaultM, DefaultNCodes,
-        DefaultPqTrainIters)
-      Seq(DurableStore.writeSegment(s, IncFamily, DurableParts,
-        asParts(idx)))
+        DefaultPqTrainIters))
     })
 
   /** Extend a published incremental layout to an appended corpus and
@@ -193,27 +161,22 @@ object AnnIndexStore {
     * built this is a pure reload (a re-run day costs zero jobs —
     * gated in l131).
     */
-  def durableUpdateTo(s: SparkSession, baseFp: String,
-      newFp: String, delta: org.apache.spark.sql.DataFrame,
-      idCol: String, embCol: String): Similarity.AnnIndex =
-    asIndex(DurableStore.loadOrBuildManifest(s, IncFamily, newFp,
+  def durableUpdateTo(s: SparkSession, baseFp: String, newFp: String,
+      delta: DataFrame, idCol: String, embCol: String): Similarity.AnnIndex =
+    asIndex(DurableStore.loadOrBuildAppend(s, IncFamily, baseFp, newFp,
       DurableParts) {
       val baseT = DurableStore.manifestTables(s, IncFamily, baseFp,
         DurableParts)
       val (l, c, n) = Similarity.assignEncode(baseT("cent"),
         baseT("codebook"), delta, idCol, embCol, m = DefaultM)
-      val seg = DurableStore.writeSegment(s, IncFamily, DurableParts,
-        Map("lists" -> l, "codes" -> c, "norms" -> n))
-      DurableStore.manifestSegments(s, IncFamily, baseFp) :+ seg
+      Map("lists" -> l, "codes" -> c, "norms" -> n)
     })
 
   /** Drop every in-memory artifact (the fresh-application simulation
     * of the durable-reload gates, spec-side / cold-boot t50 where the
     * query pays its own boot).
     */
-  def evictAll(): Unit = synchronized {
-    cache.clear(); serveCache.clear()
-  }
+  def evictAll(): Unit = { index.clear(); serve.clear() }
 
   /** Drop ONLY the index cache — the artifact whose durable reload
     * l123 gates. The serve-meta cache survives: its collected
@@ -222,7 +185,7 @@ object AnnIndexStore {
     * driver collect (ledger noise), while proving nothing — the
     * durable layout holds the five index tables, not the serve meta.
     */
-  def evictIndex(): Unit = synchronized { cache.clear() }
+  def evictIndex(): Unit = index.clear()
 
   /** Re-seed the shared cache with a (reloaded) index so sibling
     * queries after an evict-reload gate serve the durable tables
@@ -230,44 +193,20 @@ object AnnIndexStore {
     * re-derives lazily from these frames).
     */
   def seedIndex(s: SparkSession, dir: String,
-      idx: Similarity.AnnIndex): Unit = synchronized {
-    // checkpoint the reloaded tables so siblings get the same
-    // in-memory frames a fresh build would have pinned (serving raw
-    // table reads measurably slows every later consumer)
-    cache.update(keyFor(s, dir, DefaultNCentroids, DefaultTrainIters,
-      DefaultM, DefaultNCodes, DefaultPqTrainIters),
-      StoreBuildLedger.timed("ann_index_seed") {
-        Similarity.AnnIndex(
-          idx.centroids.localCheckpoint(eager = true),
-          idx.lists.localCheckpoint(eager = true),
-          idx.codebook.localCheckpoint(eager = true),
-          idx.codes.localCheckpoint(eager = true),
-          idx.norms.localCheckpoint(eager = true))
-      })
-  }
+      idx: Similarity.AnnIndex): Unit =
+    index.seed(s, dir)("ann_index_seed")(pin(idx))
 
   /** The serve-tier view of the shared index (t22's boot artifacts):
     * the driver-collected meta (codebook + centroids) and the index's
     * own ARRAY-form codes table (already checkpointed by
     * `sharedIndex`) — since r17 the persisted codes ARE the serve
     * layout, so boot is just the two tiny collects, with zero
-    * reconstruction jobs.
+    * reconstruction jobs. The index resolves outside the timed pin:
+    * its build seconds belong to `ann_index`, not `ann_serve`.
     */
-  private val serveCache = scala.collection.mutable.Map.empty[
-    Key, (Similarity.AnnServeMeta, org.apache.spark.sql.DataFrame)]
-
   def sharedServe(s: SparkSession, dir: String)
-      : (Similarity.AnnServeMeta, org.apache.spark.sql.DataFrame) =
-    synchronized {
-      val key = keyFor(s, dir, DefaultNCentroids, DefaultTrainIters,
-        DefaultM, DefaultNCodes, DefaultPqTrainIters)
-      // resolve the index OUTSIDE the timed body: on a serve-cache
-      // miss the index may itself be a miss, and its build seconds
-      // belong to the ann_index ledger key, not ann_serve's
-      val idx = sharedIndex(s, dir)
-      serveCache.getOrElseUpdate(key, StoreBuildLedger.timed("ann_serve") {
-        (Similarity.collectServeMeta(idx.centroids, idx.codebook),
-          idx.codes)
-      })
+      : (Similarity.AnnServeMeta, DataFrame) =
+    serve.get(s, dir)(sharedIndex(s, dir)) { idx =>
+      (Similarity.collectServeMeta(idx.centroids, idx.codebook), idx.codes)
     }
 }

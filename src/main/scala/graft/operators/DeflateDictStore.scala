@@ -17,15 +17,12 @@ import graft.Tables
   */
 object DeflateDictStore {
 
-  private final case class Key(appId: String, dir: String)
-
-  private val cache =
-    scala.collection.mutable.Map.empty[Key, Map[String, Array[Byte]]]
+  private val dicts = new AppCache[Map[String, Array[Byte]]]("deflate_dicts")
 
   /** Durable layout: one (source, dict) table — sources-bounded. */
   val DurableFamily = "deflate_dicts"
   val DurableParts: Seq[DurableStore.Part] =
-    Seq(DurableStore.Part("dicts", None))
+    Seq(DurableStore.Part("dicts", None, Seq("source", "dict")))
 
   /** The fingerprint hashes source TOO: dictionaries are trained PER
     * SOURCE, so a re-bucketed source assignment over identical texts
@@ -44,28 +41,18 @@ object DeflateDictStore {
     * (the two never double-count).
     */
   def sharedDicts(s: SparkSession, dir: String): Map[String, Array[Byte]] =
-    synchronized {
-      val key = Key(s.sparkContext.applicationId,
-        new java.io.File(dir).getCanonicalPath)
-      cache.filterInPlace((k, _) => k.appId == key.appId)
-      cache.getOrElseUpdate(key, {
-        val fp = corpusFp(s, dir)
-        val t = DurableStore.loadOrBuild(s, DurableFamily, fp,
-          DurableParts) {
-          import s.implicits._
-          Map("dicts" -> TextAnalysis.trainDeflateDicts(
-              Tables.load(s, dir, "documents"), "doc_id", "text",
-              "source")
-            .toSeq.toDF("source", "dict"))
-        }("dicts")
-        StoreBuildLedger.timed("deflate_dicts") {
-          val rows = t.collect()
-          require(rows.length <= 65536,
-            "dictionary table exceeds the boot bound")
-          rows.map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
-        }
-      })
+    dicts.get(s, dir)(DurableStore.loadOrBuild(s, DurableFamily,
+        corpusFp(s, dir), DurableParts) {
+      import s.implicits._
+      Map("dicts" -> TextAnalysis.trainDeflateDicts(
+          Tables.load(s, dir, "documents"), "doc_id", "text", "source")
+        .toSeq.toDF("source", "dict"))
+    }("dicts")) { t =>
+      val rows = t.collect()
+      require(rows.length <= 65536,
+        "dictionary table exceeds the boot bound")
+      rows.map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
     }
 
-  def evictAll(): Unit = synchronized { cache.clear() }
+  def evictAll(): Unit = dicts.clear()
 }

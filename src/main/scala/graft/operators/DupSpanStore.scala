@@ -31,20 +31,16 @@ import graft.Tables
   */
 object DupSpanStore {
 
-  private final case class Key(appId: String, dir: String)
-
-  private val cache = scala.collection.mutable.Map.empty[Key, DataFrame]
+  private val spans = new AppCache[DataFrame]("dup_spans")
+  private val hotGrams = new AppCache[DataFrame]("hot_grams")
 
   /** Durable layout: the spans frame bucketed on doc_id (the census
     * groupBy key, so the daily aggregation is exchange-free).
     */
   val DurableFamily = "dup_spans"
   val DurableParts: Seq[DurableStore.Part] =
-    Seq(DurableStore.Part("spans", Some("doc_id")))
-
-  def corpusFp(s: SparkSession, dir: String): String =
-    DurableStore.corpusFingerprint(s, dir, "documents",
-      Seq("doc_id", "text"))
+    Seq(DurableStore.Part("spans", Some("doc_id"),
+      Seq("doc_id", "i", "span")))
 
   /** The in-memory cache's MISS path goes through the durable layout:
     * the ladder+descent machine runs only if NO application ever saw
@@ -55,53 +51,33 @@ object DupSpanStore {
     * per-application reload checkpoint alone (never double-counted).
     */
   def sharedSpans(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = Key(s.sparkContext.applicationId,
-        new java.io.File(dir).getCanonicalPath)
-      cache.filterInPlace((k, _) => k.appId == key.appId)
-      cache.getOrElseUpdate(key, {
-        val fp = corpusFp(s, dir)
-        val t = DurableStore.loadOrBuild(s, DurableFamily, fp,
-          DurableParts) {
-          Map("spans" -> Dedup.maximalDupSpans(
-            Tables.load(s, dir, "documents"),
-            "doc_id", "text", minLen = 6, minDocs = 2))
-        }("spans")
-        StoreBuildLedger.timed("dup_spans") {
-          t.localCheckpoint(eager = true)
-        }
-      })
-    }
+    spans.get(s, dir)(DurableStore.loadOrBuild(s, DurableFamily,
+        DurableStore.documentsFp(s, dir), DurableParts) {
+      Map("spans" -> Dedup.maximalDupSpans(Tables.load(s, dir, "documents"),
+        "doc_id", "text", minLen = 6, minDocs = 2))
+    }("spans"))(_.localCheckpoint(eager = true))
 
   /** The corpus's hot k-gram df table (the l77 prune: every 6-gram in
     * >= 2 docs with its document frequency) — t49's standing admission
     * artifact, cached per (application, corpus) so stream reps stop
     * re-aggregating the corpus and pinning fresh checkpoints.
     */
-  private val gramCache =
-    scala.collection.mutable.Map.empty[Key, DataFrame]
-
   def sharedHotGrams(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = Key(s.sparkContext.applicationId,
-        new java.io.File(dir).getCanonicalPath)
-      gramCache.filterInPlace((k, _) => k.appId == key.appId)
-      gramCache.getOrElseUpdate(key, StoreBuildLedger.timed("hot_grams") {
-        import org.apache.spark.sql.functions._
-        val d = Tables.load(s, dir, "documents")
-        d.where(col("text").isNotNull && trim(col("text")) =!= "")
-          .select(col("doc_id"), split(trim(col("text")), " ").as("t"))
-          .where(size(col("t")) >= 6)
-          .select(col("doc_id"),
-            explode(transform(sequence(lit(0), size(col("t")) - 6),
-              i => concat_ws(" ", slice(col("t"), i + 1, lit(6)))))
-              .as("g"))
-          .groupBy(col("g"))
-          .agg(countDistinct(col("doc_id")).as("nd"))
-          .where(col("nd") >= 2)
-          .localCheckpoint(eager = true)
-      })
+    hotGrams.get(s, dir)(()) { _ =>
+      import org.apache.spark.sql.functions._
+      val d = Tables.load(s, dir, "documents")
+      d.where(col("text").isNotNull && trim(col("text")) =!= "")
+        .select(col("doc_id"), split(trim(col("text")), " ").as("t"))
+        .where(size(col("t")) >= 6)
+        .select(col("doc_id"),
+          explode(transform(sequence(lit(0), size(col("t")) - 6),
+            i => concat_ws(" ", slice(col("t"), i + 1, lit(6)))))
+            .as("g"))
+        .groupBy(col("g"))
+        .agg(countDistinct(col("doc_id")).as("nd"))
+        .where(col("nd") >= 2)
+        .localCheckpoint(eager = true)
     }
 
-  def evictAll(): Unit = synchronized { cache.clear(); gramCache.clear() }
+  def evictAll(): Unit = { spans.clear(); hotGrams.clear() }
 }

@@ -69,8 +69,13 @@ import graft.Tables
   */
 object DurableStore {
 
-  /** One persisted table of a family's layout. */
-  final case class Part(name: String, bucket: Option[String])
+  /** One persisted table of a family's layout. `cols` names the
+    * columns the engine's writer produces; every load compares the
+    * persisted part against them and refuses a different layout
+    * (empty = an ad-hoc part, unchecked).
+    */
+  final case class Part(name: String, bucket: Option[String],
+      cols: Seq[String] = Nil)
 
   /** Bucket width shared by writer and re-registration DDL. */
   val Buckets = 8
@@ -269,6 +274,18 @@ object DurableStore {
   def corpusFingerprint(s: SparkSession, dir: String, table: String,
       hashCols: Seq[String]): String =
     frameFingerprint(Tables.load(s, dir, table), hashCols)
+
+  /** The `documents` corpus fingerprint every text-model family keys
+    * its durable layout by.
+    */
+  def documentsFp(s: SparkSession, dir: String): String =
+    corpusFingerprint(s, dir, "documents", Seq("doc_id", "text"))
+
+  /** The `embeddings` corpus fingerprint every vector family keys its
+    * durable layout by.
+    */
+  def embeddingsFp(s: SparkSession, dir: String): String =
+    corpusFingerprint(s, dir, "embeddings", Seq("vec_id", "embedding"))
 
   /** `corpusFingerprint` over an arbitrary frame — the incremental-
     * maintenance face (l131) fingerprints corpus SLICES (base vs
@@ -533,21 +550,38 @@ object DurableStore {
     parts.map { p =>
       val t = tableName(family, fp, p.name)
       if (!s.catalog.tableExists(t))
-        register(s, t, partLocation(s, family, fp, p.name), p.bucket)
+        register(s, t, partLocation(s, family, fp, p.name), family, fp, p)
       p.name -> s.table(t)
     }.toMap
   }
 
+  /** Refuse a persisted part whose columns differ from the ones this
+    * engine writes: parquet resolves columns by name, so a retired
+    * layout would otherwise load with the missing columns null-filled
+    * and serve silently wrong answers.
+    */
+  private def requireLayout(family: String, fp: String, p: Part,
+      found: Seq[String], seg: String = ""): Unit =
+    require(p.cols.isEmpty || found.toSet == p.cols.toSet,
+      s"$family/$fp${if (seg.isEmpty) "" else s" (segment $seg)"} part " +
+        s"${p.name} has columns ${found.mkString("(", ", ", ")")} but " +
+        s"this engine reads ${p.cols.mkString("(", ", ", ")")} — a " +
+        "layout written by another engine version; sweep the family " +
+        s"once with DurableStore.vacuum(s, \"$family\", keep = " +
+        "Set(\"-\")) (or delete the fingerprint dir) and rebuild")
+
   /** Re-register an existing part dir as an external table, restoring
     * the bucket spec so downstream equi-joins stay exchange-free. The
     * schema comes from the parquet footers (a metadata read, not a
-    * scan); the files keep Spark's bucket-id naming, which the scan
-    * recovers.
+    * scan) and must match the part's declared columns; the files keep
+    * Spark's bucket-id naming, which the scan recovers.
     */
   private def register(s: SparkSession, table: String, path: String,
-      bucket: Option[String]): Unit = {
-    val ddl = s.read.parquet(path).schema.toDDL
-    val cluster = bucket
+      family: String, fp: String, p: Part): Unit = {
+    val schema = s.read.parquet(path).schema
+    requireLayout(family, fp, p, schema.fieldNames.toSeq)
+    val ddl = schema.toDDL
+    val cluster = p.bucket
       .map(k => s"CLUSTERED BY ($k) INTO $Buckets BUCKETS")
       .getOrElse("")
     s.sql(s"CREATE TABLE $table ($ddl) USING PARQUET $cluster " +
@@ -634,11 +668,18 @@ object DurableStore {
     val seg = "seg_" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(12)
     val dir = new Path(fam, seg)
-    writeParts(s, family, seg, parts.filter(p => built.contains(p.name)),
-      built, dir)
+    val written = parts.filter(p => built.contains(p.name))
+    // a writer emitting other columns than its part declares is a bug:
+    // refuse it here, and spare this segment the read-time footer check
+    written.foreach(p =>
+      requireLayout(family, seg, p, built(p.name).columns.toSeq))
+    writeParts(s, family, seg, written, built, dir)
     require(createExclusive(f, new Path(dir, Marker),
       s".\n$fmtLine\n${stampLine()}"),
       s"fresh segment $seg already carried a marker — UUID collision?")
+    written.foreach(p =>
+      if (p.cols.nonEmpty)
+        checkedSegmentParts.add(new Path(dir, p.name).toString))
     seg
   }
 
@@ -752,16 +793,42 @@ object DurableStore {
         s"manifest $family/$fp lists no segment carrying part ${p.name}")
       val dirs = carrying
         .map(seg => new Path(fam, new Path(seg, p.name)).toString)
+      carrying.zip(dirs).foreach { case (seg, dir) =>
+        checkSegmentPart(s, family, fp, p, seg, dir) }
       val df =
         if (carrying.size == 1 && p.bucket.isDefined) {
           val t = tableName(family, fp, s"${carrying.head}_${p.name}")
           if (!s.catalog.tableExists(t))
-            register(s, t, dirs.head, p.bucket)
+            register(s, t, dirs.head, family, fp, p)
           s.table(t)
         } else s.read.parquet(dirs: _*)
       p.name -> df
     }.toMap
   }
+
+  /** Segment part dirs whose columns passed `requireLayout`. Segments
+    * are immutable, so each is checked once per JVM and a serve pays no
+    * footer read for it afterwards.
+    */
+  private val checkedSegmentParts =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Check ONE segment's copy of a part: a multi-segment union infers
+    * its schema from a single footer, so a retired-layout segment
+    * among current ones would otherwise read back null-filled.
+    */
+  private def checkSegmentPart(s: SparkSession, family: String,
+      fp: String, p: Part, seg: String, dir: String): Unit =
+    if (p.cols.nonEmpty && !checkedSegmentParts.contains(dir)) {
+      val found =
+        try s.read.parquet(dir).schema.fieldNames.toSeq
+        catch {
+          // no data files: no rows to misread
+          case _: org.apache.spark.sql.AnalysisException => p.cols
+        }
+      requireLayout(family, fp, p, found, seg)
+      checkedSegmentParts.add(dir)
+    }
 
   /** Publish an explicit ordered segment list as `fp`'s manifest: ONE
     * create-if-absent of the manifest marker. Returns false when a
@@ -830,6 +897,28 @@ object DurableStore {
     }
     manifestTables(s, family, fp, parts)
   }
+
+  /** Serve an incremental lineage's BASE layout, building it (on a
+    * miss) as ONE segment holding every part `build` returns.
+    */
+  def loadOrBuildBase(s: SparkSession, family: String, fp: String,
+      parts: Seq[Part])(build: => Map[String, DataFrame])
+      : Map[String, DataFrame] =
+    loadOrBuildManifest(s, family, fp, parts)(
+      Seq(writeSegment(s, family, parts, build)))
+
+  /** Serve `newFp` = `baseFp`'s layout plus one appended delta: on a
+    * miss, write `build`'s parts as ONE new segment and publish
+    * `manifestSegments(baseFp) :+ seg` — the standing segments are
+    * never copied or touched (O(delta) write).
+    */
+  def loadOrBuildAppend(s: SparkSession, family: String, baseFp: String,
+      newFp: String, parts: Seq[Part])(build: => Map[String, DataFrame])
+      : Map[String, DataFrame] =
+    loadOrBuildManifest(s, family, newFp, parts) {
+      val seg = writeSegment(s, family, parts, build)
+      manifestSegments(s, family, baseFp) :+ seg
+    }
 
   /** Maintenance-window COMPACTION of a manifest layout — the LSM
     * merge the segment lineages defer: read the fingerprint's current
@@ -1708,18 +1797,6 @@ object DurableStore {
     */
   def headLineage(s: SparkSession, family: String): Seq[(Long, String)] =
     headFileLines(s, family).map { case (v, lines) => (v, lines.head) }
-
-  /** The delta segment head version `v` recorded at commit time —
-    * the commit-log entry change capture prefers. None when the head
-    * file is swept, v is the base version 0, or the head predates
-    * the seg-line continuation (legacy commits fall back to the
-    * manifest diff).
-    */
-  def headDeltaSegAt(s: SparkSession, family: String,
-      v: Long): Option[String] =
-    headFileLines(s, family).collectFirst { case (`v`, lines) =>
-      lines.find(_.startsWith("seg_"))
-    }.flatten
 
   /** The fingerprint head version `v` committed, when that head file
     * still survives retention.

@@ -18,36 +18,17 @@ import graft.Tables
   * `documents` table's doc_id/text/source columns, the held-out clean
   * slice doc_id % 7 = 0, DSIR's B = 4096 hashed buckets.
   *
-  * Scope: entries live for the Spark application and hold
-  * localCheckpoint'ed frames — the pair/bucket frames are O(corpus
-  * n-gram occurrences) but narrow, the count tables vocab-bounded. A
-  * production pipeline persists these as tables across applications;
-  * a cross-application file cache is deliberately not attempted (the
-  * AnnIndexStore note: half-written artifact paths poison later runs,
-  * catalog tables have transactional overwrite).
+  * Entries hold localCheckpoint'ed frames — the pair/bucket frames
+  * are O(corpus n-gram occurrences) but narrow, the count tables
+  * vocab-bounded.
   */
 object MixtureModelStore {
 
   /** DSIR's canonical hashed-vocabulary size (l94/t35/l98). */
   val DsirBuckets = 4096
 
-  private final case class Key(appId: String, dir: String)
-
-  private val jointCache =
-    scala.collection.mutable.Map.empty[Key, Doremi.JointLm]
-  private val dsirCache =
-    scala.collection.mutable.Map.empty[Key, DataFrame]
-
-  private def keyFor(s: SparkSession, dir: String): Key = {
-    val key = Key(s.sparkContext.applicationId,
-      new java.io.File(dir).getCanonicalPath)
-    // evict entries of stopped applications (earlier SparkSessions in
-    // the same JVM) — they can never be hit again but would pin
-    // checkpointed frames for the JVM's life
-    jointCache.filterInPlace((k, _) => k.appId == key.appId)
-    dsirCache.filterInPlace((k, _) => k.appId == key.appId)
-    key
-  }
+  private val joint = new AppCache[Doremi.JointLm]("mixture_joint")
+  private val dsir = new AppCache[DataFrame]("dsir_buckets")
 
   /** The canonical held-out clean-slice predicate — PUBLIC so serve
     * consumers (l109's scoring-input frame) reference THE slice the
@@ -58,8 +39,6 @@ object MixtureModelStore {
   def cleanSlicePred: org.apache.spark.sql.Column =
     col("doc_id") % 7 === 0
 
-  private def cleanSlice: org.apache.spark.sql.Column = cleanSlicePred
-
   /** The standing joint proxy+reference bigram model over `dir`'s
     * documents table. The COUNT tables' miss path goes through the
     * DURABLE layout (the DupSpanStore discipline — training runs only
@@ -69,30 +48,21 @@ object MixtureModelStore {
     * is what the `mixture_joint` ledger key times on a warm machine.
     */
   def sharedJoint(s: SparkSession, dir: String): Doremi.JointLm =
-    synchronized {
-      jointCache.getOrElseUpdate(keyFor(s, dir), {
-        val (pc, ctx, vocab) =
-          durableJointCounts(s, dir, corpusFp(s, dir))
-        StoreBuildLedger.timed("mixture_joint") {
-          val docs = Tables.load(s, dir, "documents")
-          Doremi.JointLm(
-            Doremi.pairsFrame(docs, "doc_id", "text", "source",
-              cleanSlice).localCheckpoint(eager = true),
-            pc.localCheckpoint(eager = true),
-            ctx.localCheckpoint(eager = true),
-            vocab.localCheckpoint(eager = true))
-        }
-      })
+    joint.get(s, dir)(durableJointCounts(s, dir,
+        DurableStore.documentsFp(s, dir))) { case (pc, ctx, vocab) =>
+      Doremi.JointLm(
+        Doremi.pairsFrame(Tables.load(s, dir, "documents"), "doc_id",
+          "text", "source", cleanSlicePred).localCheckpoint(eager = true),
+        pc.localCheckpoint(eager = true),
+        ctx.localCheckpoint(eager = true),
+        vocab.localCheckpoint(eager = true))
     }
 
   /** The standing DSIR hashed-bucket frame over `dir`'s documents. */
   def sharedDsirBuckets(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      dsirCache.getOrElseUpdate(keyFor(s, dir), StoreBuildLedger.timed("dsir_buckets") {
-        val docs = Tables.load(s, dir, "documents")
-        Dsir.bucketFrame(docs, "doc_id", "text", cleanSlice, DsirBuckets)
-          .localCheckpoint(eager = true)
-      })
+    dsir.get(s, dir)(()) { _ =>
+      Dsir.bucketFrame(Tables.load(s, dir, "documents"), "doc_id", "text",
+        cleanSlicePred, DsirBuckets).localCheckpoint(eager = true)
     }
 
   /** Durable layout of the joint count tables (pc/ctx bucketed on
@@ -102,20 +72,17 @@ object MixtureModelStore {
     */
   val JointFamily = "mixture_joint"
   val JointParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("pc", Some("prev")),
-    DurableStore.Part("ctx", Some("prev")),
-    DurableStore.Part("vocab", None))
+    DurableStore.Part("pc", Some("prev"),
+      Seq("prev", "cur", "pair_f", "pair_r")),
+    DurableStore.Part("ctx", Some("prev"), Seq("prev", "ctx_f", "ctx_r")),
+    DurableStore.Part("vocab", None, Seq("v_f", "v_r")))
 
   /** Durable layout of DSIR's trained importance table (<= DsirBuckets
     * rows — the l110 writer's spec).
     */
   val DsirFamily = "dsir_imp"
   val DsirParts: Seq[DurableStore.Part] =
-    Seq(DurableStore.Part("imp", None))
-
-  def corpusFp(s: SparkSession, dir: String): String =
-    DurableStore.corpusFingerprint(s, dir, "documents",
-      Seq("doc_id", "text"))
+    Seq(DurableStore.Part("imp", None, Seq("bkt", "imp")))
 
   /** Load-or-build the DURABLE joint count tables (pc, ctx, vocab):
     * count training runs in the first application ever to see this
@@ -128,7 +95,7 @@ object MixtureModelStore {
       fp: String): (DataFrame, DataFrame, DataFrame) = {
     val t = DurableStore.loadOrBuild(s, JointFamily, fp, JointParts) {
       val jl = Doremi.trainJoint(Tables.load(s, dir, "documents"),
-        "doc_id", "text", "source", cleanSlice)
+        "doc_id", "text", "source", cleanSlicePred)
       Map("pc" -> jl.pc, "ctx" -> jl.ctx, "vocab" -> jl.vocab)
     }
     (t("pc"), t("ctx"), t("vocab"))
@@ -156,7 +123,7 @@ object MixtureModelStore {
     */
   val DsirIncFamily = "dsir_counts_inc"
   val DsirIncParts: Seq[DurableStore.Part] =
-    Seq(DurableStore.Part("counts", None))
+    Seq(DurableStore.Part("counts", None, Seq("bkt", "ct", "cr")))
 
   private def bucketCounts(docs: DataFrame): DataFrame =
     Dsir.bucketCountsOf(Dsir.bucketFrame(docs, "doc_id", "text",
@@ -167,11 +134,8 @@ object MixtureModelStore {
     */
   def durableDsirIncBase(s: SparkSession, base: DataFrame,
       baseFp: String): Map[String, DataFrame] =
-    DurableStore.loadOrBuildManifest(s, DsirIncFamily, baseFp,
-      DsirIncParts) {
-      Seq(DurableStore.writeSegment(s, DsirIncFamily, DsirIncParts,
-        Map("counts" -> bucketCounts(base))))
-    }
+    DurableStore.loadOrBuildBase(s, DsirIncFamily, baseFp, DsirIncParts)(
+      Map("counts" -> bucketCounts(base)))
 
   /** Extend a published count layout by an appended document batch
     * and republish under the new fingerprint: only the DELTA is
@@ -180,12 +144,8 @@ object MixtureModelStore {
     */
   def durableDsirIncUpdateTo(s: SparkSession, baseFp: String,
       newFp: String, delta: DataFrame): Map[String, DataFrame] =
-    DurableStore.loadOrBuildManifest(s, DsirIncFamily, newFp,
-      DsirIncParts) {
-      val seg = DurableStore.writeSegment(s, DsirIncFamily,
-        DsirIncParts, Map("counts" -> bucketCounts(delta)))
-      DurableStore.manifestSegments(s, DsirIncFamily, baseFp) :+ seg
-    }
+    DurableStore.loadOrBuildAppend(s, DsirIncFamily, baseFp, newFp,
+      DsirIncParts)(Map("counts" -> bucketCounts(delta)))
 
   /** Merge-on-read of an incremental layout's count segments: one
     * <= DsirBuckets-row groupBy-sum (additivity makes it exact).
@@ -211,8 +171,9 @@ object MixtureModelStore {
     */
   val JointIncFamily = "mixture_joint_inc"
   val JointIncParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("pc", Some("prev")),
-    DurableStore.Part("toks", None))
+    DurableStore.Part("pc", Some("prev"),
+      Seq("prev", "cur", "pair_f", "pair_r")),
+    DurableStore.Part("toks", None, Seq("tok", "is_r")))
 
   /** One batch's slice of the joint trained state: its own pair
     * counts and its own distinct (tok, is_r) set.
@@ -233,23 +194,16 @@ object MixtureModelStore {
   /** One-time count build of the joint lineage's base layout. */
   def durableJointIncBase(s: SparkSession, base: DataFrame,
       baseFp: String): Map[String, DataFrame] =
-    DurableStore.loadOrBuildManifest(s, JointIncFamily, baseFp,
-      JointIncParts) {
-      Seq(DurableStore.writeSegment(s, JointIncFamily, JointIncParts,
-        jointSlice(base)))
-    }
+    DurableStore.loadOrBuildBase(s, JointIncFamily, baseFp,
+      JointIncParts)(jointSlice(base))
 
   /** Extend a published joint layout by an appended document batch:
     * only the DELTA is exploded, counted and WRITTEN.
     */
   def durableJointIncUpdateTo(s: SparkSession, baseFp: String,
       newFp: String, delta: DataFrame): Map[String, DataFrame] =
-    DurableStore.loadOrBuildManifest(s, JointIncFamily, newFp,
-      JointIncParts) {
-      val seg = DurableStore.writeSegment(s, JointIncFamily,
-        JointIncParts, jointSlice(delta))
-      DurableStore.manifestSegments(s, JointIncFamily, baseFp) :+ seg
-    }
+    DurableStore.loadOrBuildAppend(s, JointIncFamily, baseFp, newFp,
+      JointIncParts)(jointSlice(delta))
 
   /** Assemble the servable joint model from an incremental layout:
     * pair counts merge by one vocab-bounded groupBy-sum, ctx derives
@@ -276,7 +230,5 @@ object MixtureModelStore {
   /** Drop every in-memory artifact (the fresh-application simulation
     * of the durable-reload gates).
     */
-  def evictAll(): Unit = synchronized {
-    jointCache.clear(); dsirCache.clear()
-  }
+  def evictAll(): Unit = { joint.clear(); dsir.clear() }
 }

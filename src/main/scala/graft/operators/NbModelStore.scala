@@ -27,20 +27,9 @@ object NbModelStore {
   val MinShared = 2
   val DfCap = 64
 
-  private final case class Key(appId: String, dir: String)
-
-  private val cache =
-    scala.collection.mutable.Map.empty[Key, (DataFrame, NbClassifier.NbModel)]
-  private val serveCache =
-    scala.collection.mutable.Map.empty[Key, NbClassifier.NbServeModel]
-
-  private def keyFor(s: SparkSession, dir: String): Key = {
-    val key = Key(s.sparkContext.applicationId,
-      new java.io.File(dir).getCanonicalPath)
-    cache.filterInPlace((k, _) => k.appId == key.appId)
-    serveCache.filterInPlace((k, _) => k.appId == key.appId)
-    key
-  }
+  private val model =
+    new AppCache[(DataFrame, NbClassifier.NbModel)]("nb_model")
+  private val serve = new AppCache[NbClassifier.NbServeModel]("nb_serve")
 
   /** The shared (labels, model): `labeled` is the (doc_id, is_dup=1)
     * frame of winnow-pair members. The miss path goes through the
@@ -51,31 +40,22 @@ object NbModelStore {
     * `durable_nb_model`).
     */
   def sharedBoilerplateModel(s: SparkSession, dir: String)
-      : (DataFrame, NbClassifier.NbModel) = synchronized {
-    val key = keyFor(s, dir)
-    cache.getOrElseUpdate(key, {
-      val (labeled, model) =
-        durableBoilerplateModel(s, dir, corpusFp(s, dir))
-      StoreBuildLedger.timed("nb_model") {
-        (labeled.localCheckpoint(eager = true), NbClassifier.NbModel(
-          model.featCounts.localCheckpoint(eager = true),
-          model.totals.localCheckpoint(eager = true)))
-      }
-    })
-  }
+      : (DataFrame, NbClassifier.NbModel) =
+    model.get(s, dir)(durableBoilerplateModel(s, dir,
+        DurableStore.documentsFp(s, dir))) { case (labeled, m) =>
+      (labeled.localCheckpoint(eager = true), NbClassifier.NbModel(
+        m.featCounts.localCheckpoint(eager = true),
+        m.totals.localCheckpoint(eager = true)))
+    }
 
   /** Durable layout of the classifier family (feat bucketed on the
     * serve join key; totals and the winnow label frame unbucketed).
     */
   val DurableFamily = "nb_model"
   val DurableParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("feat", Some("feat")),
-    DurableStore.Part("totals", None),
-    DurableStore.Part("labels", None))
-
-  def corpusFp(s: SparkSession, dir: String): String =
-    DurableStore.corpusFingerprint(s, dir, "documents",
-      Seq("doc_id", "text"))
+    DurableStore.Part("feat", Some("feat"), Seq("feat", "pos_c", "neg_c")),
+    DurableStore.Part("totals", None, Seq("n_pos", "n_neg", "v")),
+    DurableStore.Part("labels", None, Seq("doc_id", "is_dup")))
 
   /** Load-or-build the DURABLE (labels, model): the winnow pass and
     * the training aggregate run in the first application ever to see
@@ -131,7 +111,8 @@ object NbModelStore {
     */
   val IncFamily = "nb_model_inc"
   val IncParts: Seq[DurableStore.Part] =
-    Seq(DurableStore.Part("feat", Some("feat")))
+    Seq(DurableStore.Part("feat", Some("feat"),
+      Seq("feat", "pos_c", "neg_c")))
 
   /** Labeled-batch fingerprint: doc_id + text + is_dup, so the same
     * documents under a different label assignment are a different
@@ -156,10 +137,8 @@ object NbModelStore {
     */
   def durableNbIncBase(s: SparkSession, labeledBase: DataFrame,
       baseFp: String): Map[String, DataFrame] =
-    DurableStore.loadOrBuildManifest(s, IncFamily, baseFp, IncParts) {
-      Seq(DurableStore.writeSegment(s, IncFamily, IncParts,
-        Map("feat" -> featSlice(labeledBase))))
-    }
+    DurableStore.loadOrBuildBase(s, IncFamily, baseFp, IncParts)(
+      Map("feat" -> featSlice(labeledBase)))
 
   /** Extend a published layout by a labeled delta batch: only the
     * DELTA is featurized, counted and WRITTEN (one new segment + one
@@ -167,11 +146,8 @@ object NbModelStore {
     */
   def durableNbIncUpdateTo(s: SparkSession, baseFp: String,
       newFp: String, labeledDelta: DataFrame): Map[String, DataFrame] =
-    DurableStore.loadOrBuildManifest(s, IncFamily, newFp, IncParts) {
-      val seg = DurableStore.writeSegment(s, IncFamily, IncParts,
-        Map("feat" -> featSlice(labeledDelta)))
-      DurableStore.manifestSegments(s, IncFamily, baseFp) :+ seg
-    }
+    DurableStore.loadOrBuildAppend(s, IncFamily, baseFp, newFp, IncParts)(
+      Map("feat" -> featSlice(labeledDelta)))
 
   /** Merge-on-read of an incremental layout: one vocab-bounded
     * groupBy-sum over the segment union, totals (n_pos, n_neg, V)
@@ -191,19 +167,14 @@ object NbModelStore {
   /** Drop every in-memory artifact (the fresh-application simulation
     * of the durable-reload gates).
     */
-  def evictAll(): Unit = synchronized {
-    cache.clear(); serveCache.clear()
-  }
+  def evictAll(): Unit = { model.clear(); serve.clear() }
 
-  /** The serve-tier view (t33's boot artifact), cached alongside. */
+  /** The serve-tier view (t33's boot artifact), cached alongside. The
+    * model resolves outside the timed pin (its build seconds belong to
+    * nb_model's ledger key, not nb_serve's).
+    */
   def sharedServeModel(s: SparkSession, dir: String)
-      : NbClassifier.NbServeModel = synchronized {
-    val key = keyFor(s, dir)
-    // resolve the model outside the timed body (its build seconds
-    // belong to nb_model's ledger key, not nb_serve's)
-    val model = sharedBoilerplateModel(s, dir)._2
-    serveCache.getOrElseUpdate(key, StoreBuildLedger.timed("nb_serve") {
-      NbClassifier.collectNbServeModel(model)
-    })
-  }
+      : NbClassifier.NbServeModel =
+    serve.get(s, dir)(sharedBoilerplateModel(s, dir)._2)(
+      NbClassifier.collectNbServeModel(_))
 }

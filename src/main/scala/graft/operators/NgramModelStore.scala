@@ -20,23 +20,18 @@ import graft.Tables
   */
 object NgramModelStore {
 
-  private final case class Key(appId: String, dir: String, kind: String)
+  private val bigram = new AppCache[NgramLm.BigramModel]("lm_bigram")
+  private val backoff = new AppCache[NgramLm.BackoffModel]("lm_backoff")
+  private val kn = new AppCache[NgramLm.KneserNeyModel]("lm_kn")
 
-  private val bigramCache =
-    scala.collection.mutable.Map.empty[Key, NgramLm.BigramModel]
-  private val backoffCache =
-    scala.collection.mutable.Map.empty[Key, NgramLm.BackoffModel]
-  private val knCache =
-    scala.collection.mutable.Map.empty[Key, NgramLm.KneserNeyModel]
-
-  private def keyFor(s: SparkSession, dir: String, kind: String): Key = {
-    val key = Key(s.sparkContext.applicationId,
-      new java.io.File(dir).getCanonicalPath, kind)
-    bigramCache.filterInPlace((k, _) => k.appId == key.appId)
-    backoffCache.filterInPlace((k, _) => k.appId == key.appId)
-    knCache.filterInPlace((k, _) => k.appId == key.appId)
-    key
-  }
+  /** Checkpoint the count tables — of a fresh build or a durable
+    * reload — so consumers share in-memory frames (serving raw table
+    * reads measurably slows every later consumer).
+    */
+  private def pin(m: NgramLm.BigramModel): NgramLm.BigramModel =
+    NgramLm.BigramModel(m.pairCounts.localCheckpoint(eager = true),
+      m.ctxCounts.localCheckpoint(eager = true),
+      m.vocab.localCheckpoint(eager = true))
 
   private def cleanSlice(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents").where(col("doc_id") % 7 === 0)
@@ -51,33 +46,23 @@ object NgramModelStore {
     * (no durable layout — no standing consumer) train in-memory.
     */
   def sharedBigram(s: SparkSession, dir: String,
-      order: Int = 2): NgramLm.BigramModel = synchronized {
-    bigramCache.getOrElseUpdate(keyFor(s, dir, s"bigram$order"), {
-      val m =
-        if (order == 2) durableBigram(s, dir, corpusFp(s, dir))
-        else NgramLm.trainBigram(cleanSlice(s, dir), "text", order)
-      StoreBuildLedger.timed("lm_bigram") {
-        NgramLm.BigramModel(m.pairCounts.localCheckpoint(eager = true),
-          m.ctxCounts.localCheckpoint(eager = true),
-          m.vocab.localCheckpoint(eager = true))
-      }
-    })
-  }
+      order: Int = 2): NgramLm.BigramModel =
+    bigram.get(s, dir, s"$order") {
+      if (order == 2) durableBigram(s, dir, DurableStore.documentsFp(s, dir))
+      else NgramLm.trainBigram(cleanSlice(s, dir), "text", order)
+    }(pin)
 
-  /** The interpolated-backoff artifact on the shared bigram base. */
+  /** The interpolated-backoff artifact on the shared bigram base (the
+    * base resolves outside the timed pin — its build seconds belong to
+    * lm_bigram's ledger key).
+    */
   def sharedBackoff(s: SparkSession, dir: String): NgramLm.BackoffModel =
-    synchronized {
-      // resolve the base outside the timed body (its build seconds
-      // belong to lm_bigram's ledger key)
-      val base = sharedBigram(s, dir)
-      backoffCache.getOrElseUpdate(keyFor(s, dir, "backoff"),
-          StoreBuildLedger.timed("lm_backoff") {
-        val m = NgramLm.trainBackoff(cleanSlice(s, dir), "text",
-          baseOpt = Some(base))
-        NgramLm.BackoffModel(m.base,
-          m.uniCounts.localCheckpoint(eager = true),
-          m.totals.localCheckpoint(eager = true))
-      })
+    backoff.get(s, dir)(sharedBigram(s, dir)) { base =>
+      val m = NgramLm.trainBackoff(cleanSlice(s, dir), "text",
+        baseOpt = Some(base))
+      NgramLm.BackoffModel(m.base,
+        m.uniCounts.localCheckpoint(eager = true),
+        m.totals.localCheckpoint(eager = true))
     }
 
   /** Durable layout of the bigram family (pairs/ctx bucketed on prev —
@@ -86,13 +71,9 @@ object NgramModelStore {
     */
   val DurableFamily = "lm_bigram"
   val DurableParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("pairs", Some("prev")),
-    DurableStore.Part("ctx", Some("prev")),
-    DurableStore.Part("vocab", None))
-
-  def corpusFp(s: SparkSession, dir: String): String =
-    DurableStore.corpusFingerprint(s, dir, "documents",
-      Seq("doc_id", "text"))
+    DurableStore.Part("pairs", Some("prev"), Seq("prev", "cur", "pair_c")),
+    DurableStore.Part("ctx", Some("prev"), Seq("prev", "ctx_c")),
+    DurableStore.Part("vocab", None, Seq("v")))
 
   /** Load-or-build the DURABLE bigram store: the first application
     * ever to see this corpus trains and persists (the raw training
@@ -135,13 +116,19 @@ object NgramModelStore {
     */
   val IncFamily = "lm_bigram_inc"
   val IncParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("pairs", Some("prev")),
-    DurableStore.Part("toks", None))
+    DurableStore.Part("pairs", Some("prev"), Seq("prev", "cur", "pair_c")),
+    DurableStore.Part("toks", None, Seq("tok")))
 
-  private def tokTable(train: DataFrame, textCol: String): DataFrame =
-    train.select(explode(
-        graft.functions.TextFunctions.tokens(col(textCol))).as("tok"))
-      .distinct()
+  /** One batch's slice of the lineage: its clean-slice pair counts
+    * and its distinct token set.
+    */
+  private def countSlice(docs: DataFrame): Map[String, DataFrame] = {
+    val clean = docs.where(col("doc_id") % 7 === 0)
+    Map("pairs" -> NgramLm.trainBigram(clean, "text", 2).pairCounts,
+      "toks" -> clean.select(explode(
+          graft.functions.TextFunctions.tokens(col("text"))).as("tok"))
+        .distinct())
+  }
 
   /** One-time training build of the incremental lineage's base layout
     * (clean-slice counts of the BASE corpus; fingerprint = the base
@@ -150,12 +137,8 @@ object NgramModelStore {
   def durableIncBase(s: SparkSession, base: DataFrame,
       baseFp: String,
       family: String = IncFamily): Map[String, DataFrame] =
-    DurableStore.loadOrBuildManifest(s, family, baseFp, IncParts) {
-      val clean = base.where(col("doc_id") % 7 === 0)
-      val m = NgramLm.trainBigram(clean, "text", 2)
-      Seq(DurableStore.writeSegment(s, family, IncParts,
-        Map("pairs" -> m.pairCounts, "toks" -> tokTable(clean, "text"))))
-    }
+    DurableStore.loadOrBuildBase(s, family, baseFp, IncParts)(
+      countSlice(base))
 
   /** Extend a published incremental layout by an appended document
     * batch and republish under the new fingerprint: ONLY the delta is
@@ -167,13 +150,8 @@ object NgramModelStore {
   def durableIncUpdateTo(s: SparkSession, baseFp: String,
       newFp: String, delta: DataFrame,
       family: String = IncFamily): Map[String, DataFrame] =
-    DurableStore.loadOrBuildManifest(s, family, newFp, IncParts) {
-      val clean = delta.where(col("doc_id") % 7 === 0)
-      val dm = NgramLm.trainBigram(clean, "text", 2)
-      val seg = DurableStore.writeSegment(s, family, IncParts,
-        Map("pairs" -> dm.pairCounts, "toks" -> tokTable(clean, "text")))
-      DurableStore.manifestSegments(s, family, baseFp) :+ seg
-    }
+    DurableStore.loadOrBuildAppend(s, family, baseFp, newFp, IncParts)(
+      countSlice(delta))
 
   /** Compact an incremental layout's segment chain into ONE merged
     * segment (the LSM maintenance face): applies exactly the
@@ -210,9 +188,7 @@ object NgramModelStore {
   /** Drop every in-memory artifact (the fresh-application simulation
     * of the durable-reload gates, spec-side where no siblings follow).
     */
-  def evictAll(): Unit = synchronized {
-    bigramCache.clear(); backoffCache.clear(); knCache.clear()
-  }
+  def evictAll(): Unit = { bigram.clear(); backoff.clear(); kn.clear() }
 
   /** Drop ONLY the bigram cache — the artifact whose durable reload
     * l122 gates. The derived backoff/KN caches survive: they were
@@ -222,40 +198,27 @@ object NgramModelStore {
     * bench lines with re-collect noise) while proving nothing — the
     * durable layout holds only the bigram tables.
     */
-  def evictBigram(): Unit = synchronized { bigramCache.clear() }
+  def evictBigram(): Unit = bigram.clear()
 
   /** Re-seed the shared cache with a (reloaded) model so sibling
     * queries after an evict-reload gate serve the durable tables
     * instead of silently re-paying the training job.
     */
   def seedBigram(s: SparkSession, dir: String,
-      m: NgramLm.BigramModel, order: Int = 2): Unit = synchronized {
-    // checkpoint the reloaded tables so siblings get the same
-    // in-memory frames a fresh build would have pinned (serving raw
-    // table reads measurably slows every later consumer)
-    bigramCache.update(keyFor(s, dir, s"bigram$order"),
-      StoreBuildLedger.timed("lm_bigram_seed") {
-        NgramLm.BigramModel(m.pairCounts.localCheckpoint(eager = true),
-          m.ctxCounts.localCheckpoint(eager = true),
-          m.vocab.localCheckpoint(eager = true))
-      })
-  }
+      m: NgramLm.BigramModel, order: Int = 2): Unit =
+    bigram.seed(s, dir, s"$order")("lm_bigram_seed")(pin(m))
 
   /** The Kneser-Ney artifact on the shared bigram base (the three
     * continuation tables derive from the checkpointed pair table, so
     * building them is vocab-bounded work).
     */
   def sharedKneserNey(s: SparkSession, dir: String): NgramLm.KneserNeyModel =
-    synchronized {
-      val base = sharedBigram(s, dir)
-      knCache.getOrElseUpdate(keyFor(s, dir, "kn"),
-          StoreBuildLedger.timed("lm_kn") {
-        val m = NgramLm.trainKneserNey(cleanSlice(s, dir), "text",
-          baseOpt = Some(base))
-        NgramLm.KneserNeyModel(m.base,
-          m.contCounts.localCheckpoint(eager = true),
-          m.distinctCont.localCheckpoint(eager = true),
-          m.pairTypes.localCheckpoint(eager = true))
-      })
+    kn.get(s, dir)(sharedBigram(s, dir)) { base =>
+      val m = NgramLm.trainKneserNey(cleanSlice(s, dir), "text",
+        baseOpt = Some(base))
+      NgramLm.KneserNeyModel(m.base,
+        m.contCounts.localCheckpoint(eager = true),
+        m.distinctCont.localCheckpoint(eager = true),
+        m.pairTypes.localCheckpoint(eager = true))
     }
 }

@@ -35,27 +35,16 @@ object OpqModelStore {
   val NCodes = 64
   val Iters = 4
 
-  private final case class Key(appId: String, dir: String)
-
-  private val cache =
-    scala.collection.mutable.Map.empty[Key, (Pca.PcaModel, Opq.OpqModel)]
-
-  private def keyFor(s: SparkSession, dir: String): Key = {
-    val key = Key(s.sparkContext.applicationId,
-      new java.io.File(dir).getCanonicalPath)
-    cache.filterInPlace((k, _) => k.appId == key.appId)
-    key
-  }
+  private val model =
+    new AppCache[(Pca.PcaModel, Opq.OpqModel)]("opq_rotation")
 
   /** The standing (PCA seed, trained OPQ rotation) pair over `dir`'s
     * embeddings — miss path durable, reconstruction timed under
     * `opq_rotation`.
     */
   def shared(s: SparkSession, dir: String): (Pca.PcaModel, Opq.OpqModel) =
-    synchronized {
-      cache.getOrElseUpdate(keyFor(s, dir),
-        durableModel(s, dir, corpusFp(s, dir)))
-    }
+    model.get(s, dir)(durableTables(s, dir,
+      DurableStore.embeddingsFp(s, dir)))(reconstruct)
 
   /** Durable layout of the full model: every matrix as an (i, row)
     * table, the codebook as (m, c, row), the trace as (i, v).
@@ -77,26 +66,22 @@ object OpqModelStore {
     */
   val DurableFamily = "opq_model"
   val DurableParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("rot", None),
-    DurableStore.Part("err", None),
-    DurableStore.Part("cb", None),
-    DurableStore.Part("pca_mean", None),
-    DurableStore.Part("pca_axes", None),
-    DurableStore.Part("pca_eig", None))
+    DurableStore.Part("rot", None, Seq("i", "row")),
+    DurableStore.Part("err", None, Seq("i", "v")),
+    DurableStore.Part("cb", None, Seq("m", "c", "row")),
+    DurableStore.Part("pca_mean", None, Seq("i", "row")),
+    DurableStore.Part("pca_axes", None, Seq("i", "row")),
+    DurableStore.Part("pca_eig", None, Seq("i", "row")))
 
-  def corpusFp(s: SparkSession, dir: String): String =
-    DurableStore.corpusFingerprint(s, dir, "embeddings",
-      Seq("vec_id", "embedding"))
-
-  /** Load-or-build the DURABLE model: the PCA pass and the
+  /** Load-or-build the DURABLE model tables: the PCA pass and the
     * alternating fit run in the first application ever to see this
     * corpus (the raw training lives HERE — shared()'s miss path calls
     * down, never the other way); later applications reload six
-    * model-sized tables and reconstruct driver-side.
+    * model-sized tables and `reconstruct` driver-side.
     */
-  def durableModel(s: SparkSession, dir: String,
-      fp: String): (Pca.PcaModel, Opq.OpqModel) = {
-    val t = DurableStore.loadOrBuild(s, DurableFamily, fp, DurableParts) {
+  private def durableTables(s: SparkSession, dir: String,
+      fp: String): Map[String, DataFrame] =
+    DurableStore.loadOrBuild(s, DurableFamily, fp, DurableParts) {
       import s.implicits._
       val e = Tables.load(s, dir, "embeddings")
       val pca = Pca.fit(e, "embedding")
@@ -116,29 +101,33 @@ object OpqModelStore {
         "pca_axes" -> matDf(pca.axes),
         "pca_eig" -> matDf(Array(pca.eigenvalues)))
     }
-    StoreBuildLedger.timed("opq_rotation") {
-      def mat(df: DataFrame): Array[Array[Double]] =
-        df.orderBy("i").collect()
-          .map(_.getSeq[Double](1).toArray)
-      val err = t("err").orderBy("i").collect().map(_.getDouble(1))
-      val cb = t("cb").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (_, rows) => rows.sortBy(_._2).map(_._3) }
-        .toArray
-      (Pca.PcaModel(mat(t("pca_mean")).head, mat(t("pca_axes")),
-          mat(t("pca_eig")).head),
-        Opq.OpqModel(mat(t("rot")), err, cb))
-    }
+
+  /** Driver-side model from the durable tables (boot-bounded collects). */
+  private def reconstruct(
+      t: Map[String, DataFrame]): (Pca.PcaModel, Opq.OpqModel) = {
+    def mat(df: DataFrame): Array[Array[Double]] =
+      df.orderBy("i").collect()
+        .map(_.getSeq[Double](1).toArray)
+    val err = t("err").orderBy("i").collect().map(_.getDouble(1))
+    val cb = t("cb").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (_, rows) => rows.sortBy(_._2).map(_._3) }
+      .toArray
+    (Pca.PcaModel(mat(t("pca_mean")).head, mat(t("pca_axes")),
+        mat(t("pca_eig")).head),
+      Opq.OpqModel(mat(t("rot")), err, cb))
   }
 
   /** The rotation matrix alone (the l116 index-build input). */
   def durableRotation(s: SparkSession, dir: String,
-      fp: String): Array[Array[Double]] =
-    durableModel(s, dir, fp)._2.rotation
+      fp: String): Array[Array[Double]] = {
+    val t = durableTables(s, dir, fp)
+    StoreBuildLedger.timed("opq_rotation")(reconstruct(t))._2.rotation
+  }
 
   /** Drop every in-memory artifact (the fresh-application simulation
     * of the durable-reload gates).
     */
-  def evictAll(): Unit = synchronized { cache.clear() }
+  def evictAll(): Unit = model.clear()
 }

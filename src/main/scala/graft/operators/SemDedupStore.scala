@@ -43,41 +43,20 @@ object SemDedupStore {
     */
   val DurableFamily = "semdedup"
   val DurableParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("pairs", Some("a_id")),
-    DurableStore.Part("labels", Some("doc_id")))
+    DurableStore.Part("pairs", Some("a_id"), Seq("a_id", "b_id", "cos")),
+    DurableStore.Part("labels", Some("doc_id"), Seq("doc_id", "cluster_id")))
 
-  def corpusFp(s: SparkSession, dir: String): String =
-    DurableStore.corpusFingerprint(s, dir, "embeddings",
-      Seq("vec_id", "embedding"))
-
-  private final case class Key(appId: String, dir: String)
-
-  private val exactCache =
-    scala.collection.mutable.Map.empty[Key, DataFrame]
-  private val semPairsCache =
-    scala.collection.mutable.Map.empty[Key, DataFrame]
-  private val semLblCache =
-    scala.collection.mutable.Map.empty[Key, DataFrame]
-
-  private def keyFor(s: SparkSession, dir: String): Key = {
-    val key = Key(s.sparkContext.applicationId,
-      new java.io.File(dir).getCanonicalPath)
-    exactCache.filterInPlace((k, _) => k.appId == key.appId)
-    semPairsCache.filterInPlace((k, _) => k.appId == key.appId)
-    semLblCache.filterInPlace((k, _) => k.appId == key.appId)
-    key
-  }
+  private val exact = new AppCache[DataFrame]("semdedup_exact")
+  private val semPairs = new AppCache[DataFrame]("semdedup_pairs")
+  private val semLabels = new AppCache[DataFrame]("semdedup_labels")
 
   /** The exact all-pairs cosine set at the canonical threshold —
     * gate-only twin, app-scoped in-memory by design (see object doc).
     */
   def sharedExactPairs(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      exactCache.getOrElseUpdate(keyFor(s, dir), StoreBuildLedger.timed("semdedup_exact") {
-        val e = Tables.load(s, dir, "embeddings")
-        Similarity.exactCosinePairs(e, "vec_id", "embedding", Threshold)
-          .localCheckpoint(eager = true)
-      })
+    exact.get(s, dir)(()) { _ =>
+      Similarity.exactCosinePairs(Tables.load(s, dir, "embeddings"),
+        "vec_id", "embedding", Threshold).localCheckpoint(eager = true)
     }
 
   /** Load-or-build the durable semantic tables (both parts build
@@ -103,30 +82,18 @@ object SemDedupStore {
     * ledger key times the per-application checkpoint alone.
     */
   def sharedSemPairs(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = keyFor(s, dir)
-      semPairsCache.getOrElseUpdate(key, {
-        val t = durableSem(s, dir, corpusFp(s, dir))("pairs")
-        StoreBuildLedger.timed("semdedup_pairs") {
-          t.localCheckpoint(eager = true)
-        }
-      })
-    }
+    semPairs.get(s, dir)(durableSem(s, dir,
+      DurableStore.embeddingsFp(s, dir))("pairs"))(
+      _.localCheckpoint(eager = true))
 
   /** Connected-component labels over the shared semantic pairs —
     * (doc_id, cluster_id), the keeper/dropped ledger. Same durable
     * miss path as the pairs.
     */
   def sharedSemLabels(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = keyFor(s, dir)
-      semLblCache.getOrElseUpdate(key, {
-        val t = durableSem(s, dir, corpusFp(s, dir))("labels")
-        StoreBuildLedger.timed("semdedup_labels") {
-          t.localCheckpoint(eager = true)
-        }
-      })
-    }
+    semLabels.get(s, dir)(durableSem(s, dir,
+      DurableStore.embeddingsFp(s, dir))("labels"))(
+      _.localCheckpoint(eager = true))
 
   /** The INCREMENTAL durable lineage of the semantic family — frozen-
     * model like the ANN one (l131): the base build trains ONE centroid
@@ -144,9 +111,9 @@ object SemDedupStore {
     */
   val IncFamily = "semdedup_inc"
   val IncParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("cents", None),
-    DurableStore.Part("assign", Some("cent_id")),
-    DurableStore.Part("pairs", Some("a_id")))
+    DurableStore.Part("cents", None, Seq("cent_id", "cent_emb")),
+    DurableStore.Part("assign", Some("cent_id"), Seq("c_id", "cent_id")),
+    DurableStore.Part("pairs", Some("a_id"), Seq("a_id", "b_id", "cos")))
 
   /** Since round 14 a MANIFEST family (O(delta) WRITE): the base
     * segment holds the frozen centroids + base assignment/pairs; each
@@ -167,7 +134,7 @@ object SemDedupStore {
     */
   def durableSemIncBase(s: SparkSession, base: DataFrame,
       baseFp: String): Map[String, DataFrame] =
-    DurableStore.loadOrBuildManifest(s, IncFamily, baseFp, IncParts) {
+    DurableStore.loadOrBuildBase(s, IncFamily, baseFp, IncParts) {
       val cents = Similarity.semanticCentroids(base, "vec_id",
         "embedding", nClusters = 8, trainIters = 1)
         .localCheckpoint(eager = true)
@@ -175,8 +142,7 @@ object SemDedupStore {
         "embedding", cents, probes = 3).localCheckpoint(eager = true)
       val pairs = Similarity.semanticPairsFromAssign(assign, base,
         "vec_id", "embedding", Threshold)
-      Seq(DurableStore.writeSegment(s, IncFamily, IncParts,
-        Map("cents" -> cents, "assign" -> assign, "pairs" -> pairs)))
+      Map("cents" -> cents, "assign" -> assign, "pairs" -> pairs)
     }
 
   /** Extend a published incremental layout by an appended vector
@@ -188,7 +154,8 @@ object SemDedupStore {
   def durableSemIncUpdateTo(s: SparkSession, baseFp: String,
       newFp: String, delta: DataFrame,
       corpus: DataFrame): Map[String, DataFrame] =
-    DurableStore.loadOrBuildManifest(s, IncFamily, newFp, IncParts) {
+    DurableStore.loadOrBuildAppend(s, IncFamily, baseFp, newFp,
+      IncParts) {
       val baseT = DurableStore.manifestTables(s, IncFamily, baseFp,
         IncParts)
       val dAssign = Similarity.semanticAssign(delta, "vec_id",
@@ -197,9 +164,7 @@ object SemDedupStore {
       val dPairs = Similarity.semanticPairsDelta(dAssign,
         baseT("assign").unionByName(dAssign), corpus,
         "vec_id", "embedding", Threshold)
-      val seg = DurableStore.writeSegment(s, IncFamily, IncParts,
-        Map("assign" -> dAssign, "pairs" -> dPairs))
-      DurableStore.manifestSegments(s, IncFamily, baseFp) :+ seg
+      Map("assign" -> dAssign, "pairs" -> dPairs)
     }
 
   /** Component labels of an incremental layout, derived at read time
@@ -214,12 +179,8 @@ object SemDedupStore {
     * exact-pair twin survives: it is gate-only machinery, not part of
     * the durable contract being proven.
     */
-  def evictSem(): Unit = synchronized {
-    semPairsCache.clear(); semLblCache.clear()
-  }
+  def evictSem(): Unit = { semPairs.clear(); semLabels.clear() }
 
   /** Drop every in-memory artifact (spec-side full reset). */
-  def evictAll(): Unit = synchronized {
-    exactCache.clear(); semPairsCache.clear(); semLblCache.clear()
-  }
+  def evictAll(): Unit = { exact.clear(); evictSem() }
 }

@@ -75,17 +75,6 @@ object Similarity {
     topKPerQuery(scored, "cos", k)
   }
 
-  /** b-bit random-hyperplane signature per vector, as one narrow codegen'd
-    * expression per row (`HyperplaneSignature`): zero shuffle, dim taken
-    * from the array itself, deterministic per-row sequential FP fold.
-    * (Replaces an earlier posexplode + plane-table join + two-shuffle
-    * formulation — a rows x dim x bits intermediate explosion.)
-    */
-  def hyperplaneSignatures(spark: SparkSession, df: DataFrame,
-      idCol: String, embCol: String, bits: Int = 16): DataFrame =
-    df.select(col(idCol).as("v_id"),
-      graft.functions.VectorFunctions.hyperplaneSig(col(embCol), bits).as("sig"))
-
   /** One (table, bucket) row per vector per hash table: a single
     * (bits*tables)-bit signature is computed per row (one narrow codegen'd
     * expression), then sliced into `tables` independent b-bit bucket keys.

@@ -10,6 +10,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
@@ -169,6 +170,9 @@ final class InfluxWriteBuilder(schema: StructType, seriesDir: String,
   }
 
   override def build(): Write = new Write {
+    override def supportedCustomMetrics(): Array[CustomMetric] =
+      Array(new InfluxRowsMetric)
+
     override def toBatch: BatchWrite =
       new InfluxBatchWrite(schema, seriesDir, measurement, timeCol,
         insertLimit, truncateFirst, makeTransport())
@@ -532,6 +536,20 @@ final class InfluxDsv2Sink(baseDir: String, insertLimit: Int = 1000,
       .mode("append").save()
 }
 
+/** Rows a graft-influx write task rendered. DSv2 writers leave the
+  * task's `outputMetrics` at 0, so the count travels as a custom metric;
+  * `ProgressListener` reads it by its accumulator name, `Description`.
+  */
+final class InfluxRowsMetric extends CustomSumMetric {
+  override def name(): String = InfluxRowsMetric.Name
+  override def description(): String = InfluxRowsMetric.Description
+}
+
+object InfluxRowsMetric {
+  val Name = "graftInfluxRows"
+  val Description = "graft-influx rows written"
+}
+
 /** Runs ON THE EXECUTOR: buffers rendered lines and STAGES one flush file
   * per `insertLimit` rows — the moral equivalent of one POST body
   * (reference index.js:209-232 re-chunks pages into insertlimit-sized
@@ -586,6 +604,12 @@ final class InfluxDataWriter(schema: StructType, seriesDir: String,
     // have no active session; http has nothing to clean.
     transport.abortAttempt(attemptDir)
   }
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    Array(new CustomTaskMetric {
+      override def name(): String = InfluxRowsMetric.Name
+      override def value(): Long = rows
+    })
 
   override def close(): Unit = ()
 }

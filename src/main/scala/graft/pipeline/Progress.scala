@@ -59,14 +59,22 @@ final class ProgressListener extends SparkListener {
     })
 
   override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
-    val written = Option(taskEnd.taskMetrics)
-      .map(_.outputMetrics.recordsWritten).getOrElse(0L)
+    val written = math.max(influxRows(taskEnd), Option(taskEnd.taskMetrics)
+      .map(_.outputMetrics.recordsWritten).getOrElse(0L))
     if (written > 0) {
       Option(stageTable.get(taskEnd.stageId)).foreach { table =>
         state.computeIfPresent(table, (_, v) => (v._1 + written, v._2))
       }
     }
   }
+
+  /** Rows a graft-influx task reported through its DSv2 custom metric
+    * (DSv2 writers leave `outputMetrics.recordsWritten` at 0).
+    */
+  private def influxRows(taskEnd: SparkListenerTaskEnd): Long =
+    Option(taskEnd.taskInfo).toSeq.flatMap(_.accumulables)
+      .find(_.name.contains(InfluxRowsMetric.Description))
+      .flatMap(_.update).collect { case n: Long => n }.getOrElse(0L)
 
   /** Per-table (rowsWritten, rowsPerSec) since first task. */
   def snapshot(): Map[String, (Long, Double)] =

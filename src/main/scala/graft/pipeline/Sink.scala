@@ -84,7 +84,7 @@ final class ParquetSink(baseDir: String, partitionCols: Seq[String] = Nil)
 object SinkFiles {
 
   /** Serializable carrier for the driver's Hadoop configuration, so
-    * executor-side filesystem work (LineProtocolSink flushes) sees the
+    * executor-side filesystem work (graft-influx flushes) sees the
     * session's `spark.hadoop.*` settings — object-store credentials,
     * endpoints — instead of a bare `new Configuration()`. (Spark has its
     * own SerializableConfiguration, but it is `private[spark]`.)
@@ -147,7 +147,7 @@ object SinkFiles {
   * batches and nothing here discards the duplicates — `writeBatch` must
   * be idempotent (upsert by key, dedup by batch id) if the destination
   * cannot tolerate replays. For exactly-once file/series visibility use
-  * `LineProtocolSink`/`InfluxDsv2Sink`, which stage attempts and publish
+  * `InfluxDsv2Sink`, which stages attempts and publishes
   * only the committed one. This is the caveat `Engine.clusterDefaults`
   * attaches to `spark.speculation`.
   *
@@ -276,32 +276,4 @@ object InfluxLineProtocol {
     assemble(measurement, schema.length, schema.fieldNames(_), jvm,
       schema.fieldNames.indexOf(timeCol))
   }
-}
-
-/** The wired fidelity path: line-protocol rendering + `insertLimit`-sized
-  * flush files under `baseDir/<series>/` (reference: index.js:242-252,
-  * where each flush is one `writePoints` POST; in the sandbox the POST
-  * body lands on disk).
-  *
-  * Routed through the DSv2 `graft-influx` writer, NOT a bare
-  * `foreachPartition`: the earlier direct-write form published
-  * `flush-<part>-<uuid>.lp` straight into the series dir, so a retried or
-  * SPECULATIVE duplicate task attempt left a second copy of its rows that
-  * nothing discarded — unsafe under `Engine.clusterDefaults`'
-  * `spark.speculation=true`. The DSv2 path stages every attempt's files
-  * under `_staging/` and only the driver-side commit — fed exactly one
-  * winning attempt per partition by Spark — publishes deterministic final
-  * names (`InfluxTable.scala` commit protocol), so losing attempts are
-  * swept, never visible. Same flush-file output, real exactly-once
-  * visibility.
-  */
-final class LineProtocolSink(
-    baseDir: String, insertLimit: Int, timeCol: String = "time")
-    extends Sink {
-
-  private val inner = new InfluxDsv2Sink(baseDir, insertLimit, timeCol)
-
-  override def truncate(table: String): Unit = inner.truncate(table)
-  override def append(df: DataFrame, table: String): Unit =
-    inner.append(df, table)
 }

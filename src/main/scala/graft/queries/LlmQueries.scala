@@ -4510,7 +4510,7 @@ object LlmQueries {
       (s, dir) => {
         val st = graft.operators.NgramModelStore
         val ds = graft.operators.DurableStore
-        val fp = st.corpusFp(s, dir)
+        val fp = ds.documentsFp(s, dir)
         // (a) first touch builds the layout iff NO application ever saw
         // this corpus; otherwise this is already a durable reload
         st.durableBigram(s, dir, fp)
@@ -4562,7 +4562,7 @@ object LlmQueries {
       (s, dir) => {
         val st = graft.operators.AnnIndexStore
         val ds = graft.operators.DurableStore
-        val fp = st.corpusFp(s, dir)
+        val fp = ds.embeddingsFp(s, dir)
         st.durableIndex(s, dir, fp)
         // evict the INDEX cache only — the durable layout's artifact;
         // the serve-meta cache derives from still-valid checkpointed
@@ -4622,7 +4622,7 @@ object LlmQueries {
       (s, dir) => {
         val st = SemDedupStore
         val ds = graft.operators.DurableStore
-        val fp = st.corpusFp(s, dir)
+        val fp = ds.embeddingsFp(s, dir)
         st.durableSem(s, dir, fp)
         st.evictSem()
         ds.dropRegistered(s, st.DurableFamily, fp, st.DurableParts)

@@ -330,9 +330,7 @@ object ParityQueries {
           val baseFp = ds.frameFingerprint(base, hashCols)
           val newFp = ds.frameFingerprint(src, hashCols)
           // day 1: the base migration — one segment, one generation
-          ds.loadOrBuildManifest(s, fam, baseFp, parts) {
-            Seq(ds.writeSegment(s, fam, parts, Map("events" -> base)))
-          }
+          ds.loadOrBuildBase(s, fam, baseFp, parts)(Map("events" -> base))
           val segsBase = ds.manifestSegments(s, fam, baseFp)
           val statsBefore = Gates.manifestStats(s, fam, baseFp)
           // day 2: the source grew; the re-migration discovers its
@@ -343,10 +341,8 @@ object ParityQueries {
             parts)("events")
           val newRows = src.join(migrated.select(col("event_id")),
             Seq("event_id"), "left_anti")
-          ds.loadOrBuildManifest(s, fam, newFp, parts) {
-            segsBase :+
-              ds.writeSegment(s, fam, parts, Map("events" -> newRows))
-          }
+          ds.loadOrBuildAppend(s, fam, baseFp, newFp, parts)(
+            Map("events" -> newRows))
           val odeltaOk = Gates.writeODeltaOk(s, fam, baseFp, newFp,
             statsBefore)
           // retention: keep the newest generation; the base generation

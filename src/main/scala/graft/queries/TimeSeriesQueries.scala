@@ -2082,7 +2082,7 @@ object TimeSeriesQueries {
         val st = graft.operators.AnnIndexStore
         val ds = graft.operators.DurableStore
         val e = Tables.load(s, dir, "embeddings")
-        val fp = st.corpusFp(s, dir)
+        val fp = ds.embeddingsFp(s, dir)
         st.durableIndex(s, dir, fp)
         // fresh-application simulation: EVERYTHING in-memory goes —
         // unlike l123's scoped evict, the cold boot pays its own
@@ -2226,14 +2226,13 @@ object TimeSeriesQueries {
         ds.vacuum(s, fam, keep = Set(baseFp))
         // the standing base: one-time training build per base-corpus
         // lifetime, a single-segment manifest (ledgered durable_<fam>)
-        val baseT = ds.loadOrBuildManifest(s, fam, baseFp, parts) {
+        val baseT = ds.loadOrBuildBase(s, fam, baseFp, parts) {
           val idx = S.buildAnnIndex(base, "vec_id", "embedding",
             st.DefaultNCentroids, st.DefaultTrainIters, st.DefaultM,
             st.DefaultNCodes, st.DefaultPqTrainIters)
-          Seq(ds.writeSegment(s, fam, parts, Map(
-            "cent" -> idx.centroids, "lists" -> idx.lists,
+          Map("cent" -> idx.centroids, "lists" -> idx.lists,
             "codebook" -> idx.codebook, "codes" -> idx.codes,
-            "norms" -> idx.norms)))
+            "norms" -> idx.norms)
         }
         val cent = baseT("cent").localCheckpoint(eager = true)
         val cb = baseT("codebook").localCheckpoint(eager = true)

@@ -40,15 +40,6 @@ object StreamingOps {
       out.columns.filterNot(_ == "w").map(col): _*)
   }
 
-  /** Sliding-window aggregate — streaming face of t02. */
-  def slidingAgg(events: DataFrame, lateness: String = "1 hour",
-      windowLen: String = "2 hours", slide: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), windowLen, slide).as("w"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("w.start").as("bucket"), col("n"), col("sum_value"))
-
   /** Gap-based sessionization via `session_window` — streaming face of
     * t03 (which composes lag/cumsum windows; streaming uses the native
     * session operator, whose state merges windows within the gap).

@@ -313,7 +313,7 @@ class DurableStoreSpec extends SparkSpec {
 
   test("NB family: durable reload is zero-build with identical " +
       "artifacts") {
-    val fp = NbModelStore.corpusFp(spark, fixtureDir)
+    val fp = DurableStore.documentsFp(spark, fixtureDir)
     val (labels1, m1) =
       NbModelStore.durableBoilerplateModel(spark, fixtureDir, fp)
     val featRows = sortedRows(m1.featCounts)
@@ -333,7 +333,7 @@ class DurableStoreSpec extends SparkSpec {
 
   test("mixture + DSIR families: durable reload is zero-build with " +
       "identical artifacts") {
-    val fp = MixtureModelStore.corpusFp(spark, fixtureDir)
+    val fp = DurableStore.documentsFp(spark, fixtureDir)
     val (pc1, ctx1, v1) =
       MixtureModelStore.durableJointCounts(spark, fixtureDir, fp)
     val imp1 = MixtureModelStore
@@ -363,7 +363,7 @@ class DurableStoreSpec extends SparkSpec {
 
   test("OPQ family: durable reload is zero-build with the identical " +
       "rotation matrix") {
-    val fp = OpqModelStore.corpusFp(spark, fixtureDir)
+    val fp = DurableStore.embeddingsFp(spark, fixtureDir)
     val r1 = OpqModelStore.durableRotation(spark, fixtureDir, fp)
     OpqModelStore.evictAll()
     DurableStore.dropRegistered(spark, OpqModelStore.DurableFamily, fp,
@@ -387,7 +387,7 @@ class DurableStoreSpec extends SparkSpec {
     DupSpanStore.evictAll()
     DeflateDictStore.evictAll()
     DurableStore.dropRegistered(spark, DupSpanStore.DurableFamily,
-      DupSpanStore.corpusFp(spark, fixtureDir), DupSpanStore.DurableParts)
+      DurableStore.documentsFp(spark, fixtureDir), DupSpanStore.DurableParts)
     DurableStore.dropRegistered(spark, DeflateDictStore.DurableFamily,
       DeflateDictStore.corpusFp(spark, fixtureDir),
       DeflateDictStore.DurableParts)
@@ -408,7 +408,7 @@ class DurableStoreSpec extends SparkSpec {
   test("semdedup family: durable reload is zero-build with identical " +
       "pair and label tables; the exact twin stays in-memory") {
     import graft.operators.SemDedupStore
-    val fp = SemDedupStore.corpusFp(spark, fixtureDir)
+    val fp = DurableStore.embeddingsFp(spark, fixtureDir)
     val t1 = SemDedupStore.durableSem(spark, fixtureDir, fp)
     val (p1, l1) = (sortedRows(t1("pairs")), sortedRows(t1("labels")))
     assert(l1.nonEmpty, "fixture produced no semantic components")
@@ -470,6 +470,72 @@ class DurableStoreSpec extends SparkSpec {
       assert(sortedRows(again.lists) === rows)
     }
     assert(d === 0.0, s"update reload accrued build seconds: $d")
+  }
+
+  test("a changed part layout is refused loudly: a pre-r17 codes " +
+      "(c_id, blk, code) base segment never serves null codes") {
+    import graft.operators.{AnnIndexStore, Similarity}
+    val fam = AnnIndexStore.IncFamily
+    // an engine that declared no columns — the pre-check writer
+    val unchecked = AnnIndexStore.DurableParts.map(_.copy(cols = Nil))
+    val e = graft.Tables.load(spark, fixtureDir, "embeddings")
+    val base = e.where(col("vec_id") % 4 =!= 0)
+    val dl = e.where(col("vec_id") % 4 === 0)
+    val idx = Similarity.buildAnnIndex(base, "vec_id", "embedding",
+      AnnIndexStore.DefaultNCentroids, AnnIndexStore.DefaultTrainIters,
+      AnnIndexStore.DefaultM, AnnIndexStore.DefaultNCodes,
+      AnnIndexStore.DefaultPqTrainIters)
+    val oldSeg = DurableStore.writeSegment(spark, fam, unchecked, Map(
+      "cent" -> idx.centroids, "lists" -> idx.lists,
+      "codebook" -> idx.codebook, "norms" -> idx.norms,
+      "codes" -> idx.codes.select(col("c_id"),
+        posexplode(col("codes")).as(Seq("blk", "code")))))
+    DurableStore.loadOrBuildManifest(spark, fam, "specPreR17Base",
+      unchecked)(Seq(oldSeg))
+    def refused(fp: String)(body: => Any): Unit = {
+      val err = intercept[IllegalArgumentException](body).getMessage
+      Seq(s"$fam/$fp", s"segment $oldSeg", "part codes",
+          "has columns (c_id, blk, code)",
+          "DurableStore.vacuum(s, \"ann_index_inc\"")
+        .foreach(w => assert(err.contains(w), err))
+    }
+    // the append reads the base through the checked parts: refused
+    // before any delta is written or published
+    refused("specPreR17Base")(AnnIndexStore.durableUpdateTo(spark,
+      "specPreR17Base", "specPreR17Child", dl, "vec_id", "embedding"))
+    assert(!DurableStore.isBuilt(spark, fam, "specPreR17Child"))
+    // a post-r17 delta segment next to the pre-r17 base: the union
+    // infers ONE footer's schema, so unchecked it null-fills codes
+    val r17Base = DurableStore.frameFingerprint(base,
+      Seq("vec_id", "embedding"))
+    AnnIndexStore.durableIncBase(spark, base, r17Base, "vec_id",
+      "embedding")
+    AnnIndexStore.durableUpdateTo(spark, r17Base, "specR17Child", dl,
+      "vec_id", "embedding")
+    val newSeg = DurableStore.manifestSegments(spark, fam,
+      "specR17Child").last
+    assert(DurableStore.publishManifest(spark, fam, "specMixed",
+      Seq(oldSeg, newSeg)))
+    val loose = DurableStore.manifestTables(spark, fam, "specMixed",
+      unchecked)("codes")
+    assert(!loose.columns.contains("codes") ||
+      loose.where(col("codes").isNull).count() > 0,
+      "positive control: the unchecked union should misread codes")
+    refused("specMixed")(DurableStore.manifestTables(spark, fam,
+      "specMixed", AnnIndexStore.DurableParts))
+    // the loadOrBuild register path refuses the same way
+    DurableStore.loadOrBuild(spark, "spec_layout", "fp0",
+        Seq(DurableStore.Part("t", None))) {
+      import spark.implicits._
+      Map("t" -> Seq((1L, 2L)).toDF("a", "c"))
+    }
+    DurableStore.dropRegistered(spark, "spec_layout", "fp0",
+      Seq(DurableStore.Part("t", None)))
+    val err = intercept[IllegalArgumentException](
+      DurableStore.loadOrBuild(spark, "spec_layout", "fp0",
+        Seq(DurableStore.Part("t", None, Seq("a", "b"))))(
+        fail("a built layout must not rebuild"))).getMessage
+    assert(err.contains("spec_layout/fp0 part t has columns (a, c)"), err)
   }
 
   test("incremental LM lineage: merged counts equal a full-corpus " +
@@ -577,7 +643,7 @@ class DurableStoreSpec extends SparkSpec {
     val docs = graft.Tables.load(spark, fixtureDir, "documents")
     val (labeled, fullModel) =
       NbModelStore.durableBoilerplateModel(spark, fixtureDir,
-        NbModelStore.corpusFp(spark, fixtureDir))
+        DurableStore.documentsFp(spark, fixtureDir))
     val lab = docs.join(labeled, Seq("doc_id"), "left")
       .select(col("doc_id"), col("text"),
         coalesce(col("is_dup"), lit(0L)).as("is_dup"))
@@ -1561,7 +1627,7 @@ class DurableStoreSpec extends SparkSpec {
 
   test("LM family: the l122 evict-reload shape serves identical count " +
       "tables") {
-    val fp = NgramModelStore.corpusFp(spark, fixtureDir)
+    val fp = DurableStore.documentsFp(spark, fixtureDir)
     val m1 = NgramModelStore.durableBigram(spark, fixtureDir, fp)
     val (p1, c1, v1) = (sortedRows(m1.pairCounts),
       sortedRows(m1.ctxCounts), sortedRows(m1.vocab))

@@ -211,15 +211,15 @@ class InfluxDsv2Spec extends SparkSpec {
     assert(lines(dir).size === 5)
   }
 
-  test("legacy LineProtocolSink: duplicated speculative attempt publishes once") {
+  test("InfluxDsv2Sink: duplicated speculative attempt publishes once") {
     import graft.pipeline._
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
     val dir = Files.createTempDirectory("graft_lp_spec_").toString
-    // 1) A real append through the legacy sink: multi-partition write must
-    //    render every row exactly once and leave no staging behind.
-    val sink = new LineProtocolSink(dir, insertLimit = 2)
+    // 1) A real append through the Sink adapter: multi-partition write
+    //    must render every row exactly once and leave no staging behind.
+    val sink = new InfluxDsv2Sink(dir, insertLimit = 2)
     sink.append(src().repartition(3), "m")
     assert(lines(dir).size === 5)
     // the write's staging namespace is swept (the _staging root may remain

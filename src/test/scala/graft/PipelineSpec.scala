@@ -197,6 +197,31 @@ class PipelineSpec extends SparkSpec {
     // sink got exactly the written rows
     assert(spark.read.parquet(s"$sinkDir/events").count() === 1)
   }
+
+  test("ProgressListener counts graft-influx rows: snapshot equals the ledger") {
+    val t = Timestamp.valueOf("2024-01-01 00:00:00")
+    val dir = Files.createTempDirectory("graft_src_").toString
+    import spark.implicits._
+    (1 to 60).map(i => (i.toLong, if (i % 12 == 0) None else Some(t), i * 0.5))
+      .toDF("event_id", "ts", "value").repartition(3)
+      .write.parquet(s"$dir/events.parquet")
+    (1 to 25).map(i => (t, i.toLong)).toDF("time", "v")
+      .write.parquet(s"$dir/metrics.parquet")
+    val listener = new ProgressListener().register(spark)
+    try {
+      val sinkDir = Files.createTempDirectory("graft_sink_").toString
+      val written = Pipeline.migrate(spark, dir,
+          new InfluxDsv2Sink(sinkDir, insertLimit = 7), Pipeline.defaultPrepare)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(written === Map("events" -> 55L, "metrics" -> 25L))
+      // listener events arrive asynchronously — poll briefly
+      def rows() = listener.snapshot().map { case (k, v) => k -> v._1 }
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (rows() != written && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(rows() === written)
+    } finally listener.unregister(spark)
+  }
 }
 
 object PipelineSpec {

@@ -26,39 +26,23 @@ import graft.Tables
   * overrides the default `spark-warehouse/graft_stores` under the
   * launch dir.
   *
-  * TWO commit protocols, selected by the root's scheme (overridable
-  * with `spark.graft.store.commit` = `rename` | `marker`):
-  *
-  *  - RENAME (default for local/HDFS-like stores with atomic directory
-  *    rename): builds STAGE into a private sibling dir (marker written
-  *    last, inside the staging dir) and PUBLISH with one atomic rename.
-  *    A crash mid-build leaves only an unreferenced staging dir; two
-  *    concurrent builders race on the rename alone — the loser's
-  *    rename fails against the winner's published dir, it discards its
-  *    staging and serves the winner's bytes. A marker-less leftover
-  *    base dir (crash under an older layout) is moved ASIDE atomically
-  *    and only then deleted — never deleted in place — and if the
-  *    moved dir turns out to carry a completion marker (a concurrent
-  *    JVM published between our check and the move), it is moved
-  *    straight back and served: a published layout is never destroyed.
-  *
-  *  - MARKER (default for s3/gs/abfs-style object stores, where
-  *    directory rename is copy+delete and not atomic): each builder
-  *    writes its parts under a UNIQUE `attempt_<...>` prefix inside the
-  *    final base dir (no two builders ever touch the same file), and
-  *    publishing is ONE create-if-absent of the marker file naming the
-  *    winning attempt. The loser's marker create fails, it deletes its
-  *    attempt and serves the winner's. Readers resolve part paths
-  *    through the marker, so a crash mid-build leaves only an
-  *    unreferenced attempt prefix (never a half-readable store). The
-  *    residual window is the conditional CREATE itself, provided by
-  *    `createExclusive` on every store (HDFS namenode lease,
-  *    object-store conditional PUT — S3 If-None-Match — and an O_EXCL
-  *    slot reserve on local file systems, where Hadoop's
-  *    overwrite=false create is only check-then-act); the protocol
-  *    never depends on directory-rename atomicity. This is the
-  *    InfluxTable staged-driver-commit discipline applied to the
-  *    store layout.
+  * ONE commit protocol on every store: each builder writes its parts
+  * under a UNIQUE `attempt_<...>` prefix inside the final base dir (no
+  * two builders ever touch the same file), and publishing is ONE
+  * create-if-absent of the marker file naming the winning attempt
+  * (`publishMarker`). The loser's create fails, it deletes its attempt
+  * and serves the winner's. Readers resolve part paths through the
+  * marker, so a crash mid-build leaves only an unreferenced attempt
+  * prefix (never a half-readable store), and a winner whose parts a
+  * grace-less vacuum swept before the create retracts its marker and
+  * fails loudly. The residual window is the conditional CREATE itself,
+  * provided by `createExclusive` on every store (HDFS namenode lease,
+  * object-store conditional PUT — S3 If-None-Match — and an O_EXCL
+  * slot reserve on local file systems, where Hadoop's overwrite=false
+  * create is only check-then-act); the protocol never depends on
+  * directory-rename atomicity. Layouts written by older engines whose
+  * marker head is `.` (parts at the base dir, published by a directory
+  * rename) keep serving unchanged.
   *
   * Bucketed parts are written with `bucketBy(Buckets, key)` and
   * re-registered in later applications with `CREATE TABLE ...
@@ -81,8 +65,8 @@ object DurableStore {
   val Buckets = 8
 
   /** Completion-marker file name. First line routes the reader:
-    * `.` (rename-mode parts at the base dir), `attempt_<...>`
-    * (marker-mode parts under the named attempt dir), or `manifest`
+    * `attempt_<...>` (parts under the named attempt dir), `.` (parts
+    * at the base dir — layouts published by older engines), or `manifest`
     * (segment-lineage layout — the following `seg_` lines name the
     * ordered delta partitions, resolved by `manifestTables`). A
     * trailing `ts=<millis>.<seq>` line stamps the publish for
@@ -105,9 +89,9 @@ object DurableStore {
     * HDFS/object stores, or a crash mid-write) whose prefix is e.g.
     * `manifest\nseg_a` can never resolve as a complete manifest and
     * silently serve a truncated segment union. The one grandfathered
-    * form is the exact single-line `.` — the pre-round-14 rename-mode
-    * marker standing layouts still carry, which is written inside the
-    * staging dir BEFORE the atomic publish rename and therefore never
+    * form is the exact single-line `.` — the pre-round-14 marker
+    * standing layouts still carry, which older engines wrote inside a
+    * staging dir BEFORE an atomic publish rename, so it is never
     * content-torn on the published side.
     */
   val Marker = "_GRAFT_STORE_COMPLETE"
@@ -197,19 +181,6 @@ object DurableStore {
     s.conf.getOption("spark.graft.store.root")
       .getOrElse(new java.io.File("spark-warehouse/graft_stores")
         .getAbsolutePath)
-
-  /** Commit protocol for the session's store root: explicit conf wins;
-    * otherwise object-store schemes default to `marker`, everything
-    * else (local, HDFS, viewfs — atomic dir rename) to `rename`.
-    */
-  def commitMode(s: SparkSession): String =
-    s.conf.getOption("spark.graft.store.commit").getOrElse {
-      val scheme = Option(new Path(root(s)).toUri.getScheme)
-        .getOrElse("file").toLowerCase
-      if (Set("s3", "s3a", "s3n", "gs", "oss", "cos", "swift",
-          "wasb", "wasbs", "abfs", "abfss").contains(scheme)) "marker"
-      else "rename"
-    }
 
   private def fsOf(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -442,108 +413,63 @@ object DurableStore {
       s.sql(s"DROP TABLE IF EXISTS $st")
     }
 
-  private def newSuffix(fp: String) =
-    s"${fp}_${java.util.UUID.randomUUID().toString.take(8)}"
-
-  /** RENAME protocol: stage dir (marker last, inside), one atomic
-    * directory rename to publish.
+  /** Publish a layout marker — the ONE publish step of every layout:
+    * a `createExclusive` of `marker`, and after a win a re-check that
+    * the files it names still exist (`missing` lists the gone ones).
+    * A grace-less vacuum that ran between writing those files and this
+    * create swept them as debris (nothing referenced them until the
+    * marker existed); a marker naming deleted files would poison the
+    * layout for good — isBuilt true, every read failing, no self-heal —
+    * so the marker is deleted again and the publish fails loudly.
+    * Returns false when a concurrent publisher won.
     */
-  private def publishByRename(s: SparkSession, family: String,
-      fp: String, parts: Seq[Part])(build: => Map[String, DataFrame])
-      : Unit = {
-    val base = basePath(s, family, fp)
-    val f = fsOf(s, base)
-    f.mkdirs(base.getParent)
-    // a marker-less base dir is an unpublished leftover (a crash under
-    // an older layout, or manual tampering): move it ASIDE atomically
-    // and delete the moved dir — never delete in place. If the moved
-    // dir carries a marker after all (a concurrent JVM published
-    // between our check and the move), move it straight back: a
-    // published layout is never destroyed.
-    if (f.exists(base) && !f.exists(markerPath(base))) {
-      val aside = new Path(base.getParent, s".aside_${newSuffix(fp)}")
-      if (f.rename(base, aside)) {
-        if (f.exists(new Path(aside, Marker))) {
-          // ours was the displaced winner; if yet another builder
-          // published meanwhile, the displaced copy is a duplicate
-          if (!f.rename(aside, base)) f.delete(aside, true)
-        } else f.delete(aside, true)
-      }
-      // rename false: base vanished or a winner published under it —
-      // the re-check below serves whatever is there now
-    }
-    if (!f.exists(markerPath(base))) {
-      val stage = new Path(base.getParent, s".stage_${newSuffix(fp)}")
-      val built = build
-      try {
-        writeParts(s, family, fp, parts, built, stage)
-        val out = f.create(new Path(stage, Marker), true)
-        try out.write(
-          s".\n$fmtLine\n${stampLine()}"
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        // pre-check RIGHT before the rename: the Hadoop FileSystem
-        // contract moves src UNDER an existing destination dir (and
-        // returns true), so renaming against an already-published base
-        // would nest our staging dir INSIDE the winner's layout
-        var won = !f.exists(markerPath(base)) && f.rename(stage, base)
-        if (won) {
-          // belt-and-braces for the pre-check's residual window: if a
-          // winner published between the check and the rename, our
-          // "successful" rename was the nesting move — reclaim it
-          val nested = new Path(base, stage.getName)
-          if (f.exists(nested)) { f.delete(nested, true); won = false }
-        }
-        if (!won) {
-          // a concurrent builder published first — serve its bytes
-          require(f.exists(markerPath(base)),
-            s"durable publish rename failed with no winner: $base")
-          if (f.exists(stage)) f.delete(stage, true)
-        }
-      } finally {
-        if (f.exists(stage) && !f.exists(markerPath(base)))
-          f.delete(stage, true)
+  private def publishMarker(f: FileSystem, marker: Path, content: String,
+      what: String)(missing: => Seq[String]): Boolean = {
+    val won = createExclusive(f, marker, content)
+    if (won) {
+      val gone = missing
+      if (gone.nonEmpty) {
+        f.delete(marker, false)
+        sys.error(s"$what raced a vacuum: ${gone.mkString(", ")} " +
+          "gone — marker retracted; retry the publish, and give " +
+          "vacuums that run next to live publishes a grace")
       }
     }
-  }
-
-  /** MARKER protocol: unique attempt prefix inside the final base dir,
-    * publish = one create-if-absent of the marker naming the attempt.
-    */
-  private def publishByMarker(s: SparkSession, family: String,
-      fp: String, parts: Seq[Part])(build: => Map[String, DataFrame])
-      : Unit = {
-    val base = basePath(s, family, fp)
-    val f = fsOf(s, base)
-    val attempt = s"attempt_${newSuffix(fp)}"
-    val built = build
-    val dir = new Path(base, attempt)
-    try {
-      writeParts(s, family, fp, parts, built, dir)
-      // one atomic create-if-absent — the ENTIRE race
-      val won = createExclusive(f, markerPath(base),
-        s"$attempt\n$fmtLine\n${stampLine()}")
-      if (!won) f.delete(dir, true)
-    } finally {
-      if (f.exists(dir) && !f.exists(markerPath(base)))
-        f.delete(dir, true)
-    }
+    won
   }
 
   /** Serve the family's tables from the durable layout, building it
-    * first only if the completion marker is absent. The build body
-    * runs under the `durable_<family>` ledger key; a reload issues
-    * only catalog DDL and a parquet-footer schema read — zero jobs
-    * over the corpus, zero training aggregates (the l122/l123 gate).
+    * first only if the completion marker is absent: the build writes
+    * its parts under a unique attempt prefix and publishes the marker
+    * naming it (a loser deletes its attempt and serves the winner's).
+    * The build body runs under the `durable_<family>` ledger key; a
+    * reload issues only catalog DDL and a parquet-footer schema read —
+    * zero jobs over the corpus, zero training aggregates (the
+    * l122/l123 gate).
     */
   def loadOrBuild(s: SparkSession, family: String, fp: String,
       parts: Seq[Part])(build: => Map[String, DataFrame])
       : Map[String, DataFrame] = synchronized {
     if (!isBuilt(s, family, fp)) StoreBuildLedger.timed(s"durable_$family") {
-      if (commitMode(s) == "marker")
-        publishByMarker(s, family, fp, parts)(build)
-      else
-        publishByRename(s, family, fp, parts)(build)
+      val base = basePath(s, family, fp)
+      val f = fsOf(s, base)
+      val attempt =
+        s"attempt_${fp}_${java.util.UUID.randomUUID().toString.take(8)}"
+      val dir = new Path(base, attempt)
+      val built = build
+      try {
+        writeParts(s, family, fp, parts, built, dir)
+        faultHook("publish_parts_written")
+        val won = publishMarker(f, markerPath(base),
+          s"$attempt\n$fmtLine\n${stampLine()}",
+          s"durable publish for $family/$fp")(
+          parts.map(p => s"$attempt/${p.name}")
+            .filterNot(p => f.exists(new Path(base, p))))
+        if (!won) f.delete(dir, true)
+      } finally {
+        if (f.exists(dir) && !f.exists(markerPath(base)))
+          f.delete(dir, true)
+      }
       require(isBuilt(s, family, fp),
         s"durable publish failed for $family/$fp")
     }
@@ -691,7 +617,7 @@ object DurableStore {
   }
 
   /** The ordered segment list a published manifest names. A complete
-    * layout in the RENAME/MARKER format under a manifest family is a
+    * plain (attempt- or `.`-headed) layout under a manifest family is a
     * retired-format leftover (the lineage predates its round-14
     * manifest migration): refuse loudly — auto-migrating would destroy
     * a layout an old-version reader may still be serving — and name
@@ -847,26 +773,10 @@ object DurableStore {
     val base = basePath(s, family, fp)
     val f = fsOf(s, base)
     f.mkdirs(base)
-    val won = createExclusive(f, markerPath(base),
-      s"manifest\n$fmtLine\n${segs.mkString("\n")}\n${stampLine()}")
-    if (won) {
-      // post-win verification: a vacuum that ran between our
-      // writeSegment calls and this publish may have swept a listed
-      // segment as unreferenced (it WAS unreferenced until the marker
-      // existed). Publishing a manifest naming deleted segments would
-      // poison the layout permanently — isBuilt true, every read
-      // failing, no self-heal — so re-check now and retract the marker
-      // rather than leave broken published state. (A graced vacuum
-      // never sweeps fresh segments; this guards the grace-less one.)
-      val missing = segs.filterNot(g => segmentComplete(s, family, g))
-      if (missing.nonEmpty) {
-        f.delete(markerPath(base), false)
-        sys.error(s"manifest publish for $family/$fp raced a vacuum: " +
-          s"listed segments $missing are gone — marker retracted, " +
-          "rebuild required")
-      }
-    }
-    won
+    publishMarker(f, markerPath(base),
+      s"manifest\n$fmtLine\n${segs.mkString("\n")}\n${stampLine()}",
+      s"manifest publish for $family/$fp")(
+      segs.filterNot(g => segmentComplete(s, family, g)))
   }
 
   /** Serve a manifest lineage's fingerprint, building only if the
@@ -976,29 +886,17 @@ object DurableStore {
       val seg = writeSegment(s, family, parts, merged)
       faultHook("compact_segment_written")
       val next = markerPathGen(base, curGen + 1)
-      val won = createExclusive(f, next,
-        s"manifest\n$fmtLine\n$seg\n$stamp")
+      // the superseded markers stay until the cleanup below, so a
+      // retracted swap leaves readers serving the OLD chain untouched
+      val won = publishMarker(f, next, s"manifest\n$fmtLine\n$seg\n$stamp",
+        s"compaction swap for $family/$fp")(
+        Seq(seg).filterNot(g => segmentComplete(s, family, g)))
       if (!won) {
         // a concurrent compactor swapped first: its chain serves the
         // same content; our merged segment is unreferenced — reclaim
         if (!referencedSegments(s, family).contains(seg))
           f.delete(new Path(famDir(s, family), seg), true)
       } else {
-        // post-win verification (the publishManifest discipline): a
-        // grace-less concurrent vacuum may have swept the merged
-        // segment — unreferenced until this marker existed — between
-        // writeSegment and the create; a generation naming deleted
-        // files would poison every read with no self-heal. Retract it:
-        // the superseded markers still exist (cleanup below has not
-        // run), so readers keep serving the OLD chain untouched — its
-        // segments were reference-protected throughout.
-        if (!segmentComplete(s, family, seg)) {
-          f.delete(next, false)
-          sys.error(s"compaction swap for $family/$fp raced a vacuum: " +
-            s"merged segment $seg is gone — swap retracted, the prior " +
-            "chain still serves; re-run compaction, or run vacuums " +
-            "with a grace next to live maintenance")
-        }
         // generation-resurrection guard (the r15 ADVICE race): a
         // compactor holding a stale curGen can succeed its create of a
         // generation the real winner already minted AND cleaned up
@@ -1061,9 +959,9 @@ object DurableStore {
     * accumulates one layout per corpus fingerprint FOREVER (every
     * append/mutation mints a new fingerprint and orphans the old
     * layout), plus publish debris that no reader will ever resolve —
-    * crashed `.stage_`/`.aside_` siblings in rename mode, and
-    * marker-mode `attempt_` prefixes a marker does not name (a crashed
-    * or losing builder whose cleanup never ran).
+    * `attempt_` prefixes and any other child a layout's marker does not
+    * name (a crashed or losing builder whose cleanup never ran, or a
+    * leftover from before the layout published).
     *
     * Removes, for `family`: (a) all unreferenced debris; (b) when
     * `keep` is non-empty, every COMPLETE layout whose fingerprint is
@@ -1071,7 +969,8 @@ object DurableStore {
     * (typically the current corpus generation and N prior ones, the
     * Maintenance retention discipline). Marker-less fingerprint dirs
     * count as debris (never published, or mid-publish of a builder
-    * that will re-check and rebuild).
+    * whose marker create then retracts and fails loudly —
+    * `publishMarker`).
     *
     * WINDOW-FREE RETENTION (round 15, re-gated round 16): with
     * `graceMillis > 0` the sweep is age-gated on the SUPERSESSION
@@ -1212,9 +1111,9 @@ object DurableStore {
             f.delete(st.getPath, false)
           }
         } else if (aged(st.getPath)) {
-          // .stage_/.aside_ siblings (and any stray file) — debris once
-          // no builder references them: true under the module lock
-          // within this JVM, and past the grace across JVMs
+          // dot-prefixed siblings and stray files — debris once no
+          // builder references them: true under the module lock within
+          // this JVM, and past the grace across JVMs
           debris ::= name
           f.delete(st.getPath, true)
         }
@@ -1237,19 +1136,20 @@ object DurableStore {
                 f.delete(p, false)
               }
             // children of a PUBLISHED layout the marker does not name
-            // are debris: losing/crashed attempts (marker mode) and
-            // staging dirs a loser's rename nested under the winner
-            // (the Hadoop rename-into-existing-dir contract)
+            // are debris: every child but the named attempt and the
+            // marker files (with their `.crc` shadows); a legacy
+            // `.`-headed layout keeps its parts at the base dir (see
+            // `partPrefix`), so there only dot-prefixed children are
             if (lines.head != "manifest") {
-              val pfx =
-                if (lines.head.startsWith("attempt_")) lines.head else "."
+              def isMarkerFile(n: String) = markerGen(n) >= 0 ||
+                (n.startsWith(".") && n.endsWith(".crc") &&
+                  markerGen(n.drop(1).dropRight(4)) >= 0)
               f.listStatus(st.getPath).foreach { sub =>
                 val sn = sub.getPath.getName
-                val orphanAttempt =
-                  sub.isDirectory && sn.startsWith("attempt_") && sn != pfx
-                val nestedStage = sub.isDirectory &&
-                  (sn.startsWith(".stage_") || sn.startsWith(".aside_"))
-                if ((orphanAttempt || nestedStage) && aged(sub.getPath)) {
+                val unnamed = !isMarkerFile(sn) &&
+                  (if (lines.head.startsWith("attempt_")) sn != lines.head
+                   else sn.startsWith("."))
+                if (unnamed && aged(sub.getPath)) {
                   debris ::= s"$name/$sn"
                   f.delete(sub.getPath, true)
                 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+  ShortType}
 
 import graft.functions.VectorFunctions.cosineSim
 import graft.functions.{PqCodebookLocal, PqFunctions}
@@ -41,7 +43,8 @@ object Similarity {
     *
     * Contract (the voteTopK/GroupedTopK contract, documented where the
     * retired window was laxer): `c_id` must be a signed integral id
-    * above Long.MinValue (the -id tie-break encode), and scores must
+    * above Long.MinValue (the -id tie-break encode; a non-integral id
+    * type fails here, at plan-build time), and scores must
     * be non-null finite doubles — cosines of non-null finite vectors
     * are; a null score fails the typed encoder loudly rather than
     * ranking last, and NaN would rank last rather than first.
@@ -49,6 +52,10 @@ object Similarity {
   private def topKPerQuery(scored: DataFrame, scoreCol: String,
       k: Int): DataFrame = {
     val idType = scored.schema("c_id").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType)
+        .contains(idType),
+      s"topKPerQuery: c_id must be an integral id (byte/short/int/" +
+        s"bigint), got ${idType.simpleString}")
     scored.groupBy(col("q_id"))
       .agg(GroupedTopK.topK(k)(col(scoreCol),
         -col("c_id").cast("long")).as("__top"))

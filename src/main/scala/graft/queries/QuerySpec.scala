@@ -43,6 +43,22 @@ object QuerySpec {
   def tempSinkDir(): String =
     java.nio.file.Files.createTempDirectory("graft_sink_").toString
 
+  /** Run `body` against a fresh scratch durable-store root: points
+    * `spark.graft.store.root` at a new temp dir for the body, then
+    * restores the previous setting and deletes the dir.
+    */
+  def withScratchStoreRoot[T](s: SparkSession)(body: String => T): T = {
+    val root = tempSinkDir()
+    val saved = s.conf.getOption("spark.graft.store.root")
+    s.conf.set("spark.graft.store.root", root)
+    try body(root)
+    finally {
+      saved.fold(s.conf.unset("spark.graft.store.root"))(v =>
+        s.conf.set("spark.graft.store.root", v))
+      graft.pipeline.SinkFiles.deleteRecursive(root)
+    }
+  }
+
   /** DuckDB-side rolling-hash fingerprint over `text` — the same
     * left-fold `TextFunctions.rollingHash` computes; shared by every
     * oracle that fingerprints (LlmQueries' splits/sampling/packing and

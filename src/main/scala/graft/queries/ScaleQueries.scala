@@ -418,11 +418,8 @@ object ScaleQueries {
     QuerySpec(
       "s14_store_vacuum",
       "durable-store retention end-to-end (the s06 maintenance discipline applied to the model-store warehouse): two corpus GENERATIONS publish under a scratch family in a private root, debris is planted (a crashed staging sibling and a marker-less fingerprint dir — exactly what a killed builder leaves), vacuum keeps only generation 2 — and the kept layout must then SERVE a reload whose build body is a poisoned tombstone (it would emit zero rows), so n_kept_rows only matches the oracle if the reload came from the persisted files, the stale generation is gone and both debris classes were swept. Census = kept-generation row count + deterministic debris/stale counts + the gone-assert",
-      (s, dir) => {
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { root =>
         val ds = graft.operators.DurableStore
-        val root = QuerySpec.tempSinkDir()
-        val saved = s.conf.getOption("spark.graft.store.root")
-        s.conf.set("spark.graft.store.root", root)
         val parts = Seq(ds.Part("t", None))
         try {
           def gen(fp: String, m: Long) =
@@ -452,9 +449,6 @@ object ScaleQueries {
         } finally {
           Seq("gen1", "gen2").foreach(fp =>
             ds.dropRegistered(s, "vac_demo", fp, parts))
-          saved.fold(s.conf.unset("spark.graft.store.root"))(v =>
-            s.conf.set("spark.graft.store.root", v))
-          graft.pipeline.SinkFiles.deleteRecursive(root)
         }
       },
       Some("""SELECT count(CASE WHEN doc_id % 10 = 2 THEN 1 END)
@@ -465,11 +459,8 @@ object ScaleQueries {
     QuerySpec(
       "s15_store_vacuum_generations",
       "GENERATION-AWARE retention (s14 proved mechanics with caller-enumerated fingerprints; production wants 'keep the newest N'): markers carry a publish stamp (ts=millis.seq, same-millis ties broken by per-JVM sequence), and vacuumKeepLatest(family, n) keeps the n newest COMPLETE layouts by stamp without the caller naming any fingerprint. Two scratch families in a private root prove the two hard cases end-to-end: (a) a plain family publishes three generations in order — keep-latest-2 must retire exactly the oldest, and the kept newest must then SERVE a reload whose build body is a poisoned tombstone (rows match the oracle only if the files survived); (b) a MANIFEST lineage publishes base and child generations — keep-latest-1 retires the base GENERATION but must PIN the base SEGMENT the kept child manifest still lists (reachability is through surviving manifests, the l131 O(delta) layout's retention contract), while sweeping a planted unreferenced complete segment (stale data) and a marker-less half-written one (debris); the kept child must serve the FULL union from disk with a tombstoned build body. Census = kept-generation row counts + deterministic stale/ordering/pinning gates",
-      (s, dir) => {
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { root =>
         val ds = graft.operators.DurableStore
-        val root = QuerySpec.tempSinkDir()
-        val saved = s.conf.getOption("spark.graft.store.root")
-        s.conf.set("spark.graft.store.root", root)
         val parts = Seq(ds.Part("t", None))
         try {
           // (a) plain family: three stamped generations
@@ -525,9 +516,6 @@ object ScaleQueries {
         } finally {
           Seq("gen1", "gen2", "gen3").foreach(fp =>
             ds.dropRegistered(s, "vacgen_plain", fp, parts))
-          saved.fold(s.conf.unset("spark.graft.store.root"))(v =>
-            s.conf.set("spark.graft.store.root", v))
-          graft.pipeline.SinkFiles.deleteRecursive(root)
         }
       },
       Some("""SELECT
@@ -542,11 +530,8 @@ object ScaleQueries {
     QuerySpec(
       "s16_store_vacuum_grace",
       "WINDOW-FREE retention (s14/s15 prove the mechanics but require a maintenance window — deleting a layout a concurrent reader resolved paths through fails its scans mid-flight): vacuum/vacuumKeepLatest(graceMillis) age-gate the sweep on the SUPERSESSION event, the Delta tombstone-retention discipline — an unkept generation sweeps only once the PUBLISH THAT DISPLACED IT from the retention window (the rank-i-minus-n layout's stamp, never its own) is older than the grace, so a reader that resolved it moments before supersession has the whole grace to drain; unreferenced complete segments age from a TOMBSTONE the first observing sweep plants (a compaction's superseded chain has historical mtimes but becomes unreferenced only at the swap), and half-written debris by mtime — which also protects an in-flight builder's complete-but-unpublished segments (the writeSegment->publishManifest window; publishManifest additionally re-verifies and retracts). Proven end-to-end on a scratch family in a private root: three stamped generations with a wide middle-to-newest stamp gap; a CONCURRENT READER resolves the middle one pre-vacuum; a graced keep-latest-1 (cutoff placed strictly between the middle and newest stamps, computed from the layouts' own stamps, biased low so scheduling delay cannot cross it) retires exactly the oldest — its displacing publish (the middle's) is aged out — while the freshly superseded middle SURVIVES even though its OWN publish stamp is also aged out (the discriminator against the retired publish-stamp gate) and the reader still serves its rows (counted AFTER the sweep); planted fresh in-flight state (one complete unreferenced segment — tombstoned, not deleted — and one half-written marker-less dir) survives the same graced pass; then the grace window closes (grace 0) and the leftovers sweep exactly — middle generation + orphan segment as stale, half-written dir as debris — while the kept newest serves from disk with a tombstoned build body. Census = reader/kept row counts + deterministic sweep gates",
-      (s, dir) => {
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { root =>
         val ds = graft.operators.DurableStore
-        val root = QuerySpec.tempSinkDir()
-        val saved = s.conf.getOption("spark.graft.store.root")
-        s.conf.set("spark.graft.store.root", root)
         val fam = "vacgrace"
         val parts = Seq(ds.Part("t", None))
         try {
@@ -611,9 +596,6 @@ object ScaleQueries {
         } finally {
           Seq("genAncient", "genOld", "genNew").foreach(fp =>
             ds.dropRegistered(s, fam, fp, parts))
-          saved.fold(s.conf.unset("spark.graft.store.root"))(v =>
-            s.conf.set("spark.graft.store.root", v))
-          graft.pipeline.SinkFiles.deleteRecursive(root)
         }
       },
       Some("""SELECT
@@ -628,78 +610,69 @@ object ScaleQueries {
     QuerySpec(
       "s17_store_multiwriter_append",
       "OPTIMISTIC MULTI-WRITER APPEND (the composition face the r15 cross-JVM race deliberately left open: there, the losing publisher's delta was DISCARDED — two independent ingesters appending different deltas to one family would silently diverge into sibling fingerprints): the family gains a HEAD pointer (_GRAFT_HEAD.v<k>, content = the fingerprint that IS version k; committing v(k+1) is ONE create-if-absent — the whole CAS, the Delta _delta_log discipline on the marker primitive) and appendManifest runs the commit-retry loop — read head, derive the child fingerprint by COMBINATION (the three fingerprint folds are associative-commutative, so fp(head ∪ delta) needs no scan of the head corpus: O(delta) compute to match the O(delta) write), publish child manifest = head segments ++ delta segment, CAS; a loser re-reads the new head and re-publishes its delta ON TOP. Proven in-query with two genuinely concurrent appender THREADS committing different document slices against one base: whatever the interleaving, the head lands at version 2, BOTH deltas are in the committed line (multiset-exact against base+d2+d3, and the head fingerprint equals the combined union fingerprint — a loser that dropped rows could not forge it), and keep-latest-1 retention (with the automatic head pin) sweeps the intermediate generation while every segment the head lists survives and re-serves from disk. Census = committed-line row count + head version + exactness/commit gates",
-      (s, dir) => {
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { _ =>
         val ds = graft.operators.DurableStore
-        val root = QuerySpec.tempSinkDir()
-        val saved = s.conf.getOption("spark.graft.store.root")
-        s.conf.set("spark.graft.store.root", root)
         val fam = "mwappend"
         val parts = Seq(ds.Part("t", None))
-        try {
-          def slice(m: Long) = Tables.load(s, dir, "documents")
-            .where(col("doc_id") % 10 === m).select(col("doc_id"))
-            .localCheckpoint(eager = true)
-          val base = slice(1L)
-          val d2 = slice(2L)
-          val d3 = slice(3L)
-          val baseFp = ds.frameFingerprint(base, Seq("doc_id"))
-          val segBase = ds.writeSegment(s, fam, parts, Map("t" -> base))
-          ds.loadOrBuildManifest(s, fam, baseFp, parts)(Seq(segBase))
-          val headInit = ds.initHead(s, fam, baseFp)
-          // deltas and their segments are prepared up front on the
-          // main thread: the concurrency under test is the COMMIT
-          // protocol (child-manifest publish + head CAS), pure file
-          // I/O with no Spark jobs inside the racing threads
-          val fp2 = ds.frameFingerprint(d2, Seq("doc_id"))
-          val fp3 = ds.frameFingerprint(d3, Seq("doc_id"))
-          val sg2 = ds.writeSegment(s, fam, parts, Map("t" -> d2))
-          val sg3 = ds.writeSegment(s, fam, parts, Map("t" -> d3))
-          val errs =
-            new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-          def appender(seg: String, fp: String) = new Thread(() =>
-            try { ds.appendManifest(s, fam, seg, fp); () }
-            catch { case t: Throwable => errs.add(t) })
-          val tA = appender(sg2, fp2)
-          val tB = appender(sg3, fp3)
-          tA.start(); tB.start()
-          tA.join(120000); tB.join(120000)
-          require(errs.isEmpty,
-            s"concurrent append failed: ${errs.peek()}")
-          val (vHead, fpHead) = ds.headState(s, fam).getOrElse(
-            sys.error("no committed head after the appends"))
-          // both deltas are in the committed line whatever the
-          // interleaving; a commit that dropped rows could not forge
-          // the combined union fingerprint
-          val unionFp = ds.combineFingerprints(
-            ds.combineFingerprints(baseFp, fp2), fp3)
-          val headOk = vHead == 2L && fpHead == unionFp && headInit
-          val diff = ds.manifestTables(s, fam, fpHead, parts)("t")
+        def slice(m: Long) = Tables.load(s, dir, "documents")
+          .where(col("doc_id") % 10 === m).select(col("doc_id"))
+          .localCheckpoint(eager = true)
+        val base = slice(1L)
+        val d2 = slice(2L)
+        val d3 = slice(3L)
+        val baseFp = ds.frameFingerprint(base, Seq("doc_id"))
+        val segBase = ds.writeSegment(s, fam, parts, Map("t" -> base))
+        ds.loadOrBuildManifest(s, fam, baseFp, parts)(Seq(segBase))
+        val headInit = ds.initHead(s, fam, baseFp)
+        // deltas and their segments are prepared up front on the
+        // main thread: the concurrency under test is the COMMIT
+        // protocol (child-manifest publish + head CAS), pure file
+        // I/O with no Spark jobs inside the racing threads
+        val fp2 = ds.frameFingerprint(d2, Seq("doc_id"))
+        val fp3 = ds.frameFingerprint(d3, Seq("doc_id"))
+        val sg2 = ds.writeSegment(s, fam, parts, Map("t" -> d2))
+        val sg3 = ds.writeSegment(s, fam, parts, Map("t" -> d3))
+        val errs =
+          new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+        def appender(seg: String, fp: String) = new Thread(() =>
+          try { ds.appendManifest(s, fam, seg, fp); () }
+          catch { case t: Throwable => errs.add(t) })
+        val tA = appender(sg2, fp2)
+        val tB = appender(sg3, fp3)
+        tA.start(); tB.start()
+        tA.join(120000); tB.join(120000)
+        require(errs.isEmpty,
+          s"concurrent append failed: ${errs.peek()}")
+        val (vHead, fpHead) = ds.headState(s, fam).getOrElse(
+          sys.error("no committed head after the appends"))
+        // both deltas are in the committed line whatever the
+        // interleaving; a commit that dropped rows could not forge
+        // the combined union fingerprint
+        val unionFp = ds.combineFingerprints(
+          ds.combineFingerprints(baseFp, fp2), fp3)
+        val headOk = vHead == 2L && fpHead == unionFp && headInit
+        val diff = ds.manifestTables(s, fam, fpHead, parts)("t")
+          .groupBy(col("doc_id")).count()
+          .join(base.unionAll(d2).unionAll(d3)
             .groupBy(col("doc_id")).count()
-            .join(base.unionAll(d2).unionAll(d3)
-              .groupBy(col("doc_id")).count()
-              .withColumnRenamed("count", "c2"),
-              Seq("doc_id"), "full_outer")
-            .where(col("count").isNull || col("c2").isNull ||
-              col("count") =!= col("c2"))
-            .count()
-          // retention: keep-latest-1 + the automatic head pin — the
-          // intermediate generation (and a CAS loser's abandoned
-          // off-head sibling, when the race collided) sweep; every
-          // segment the committed line lists survives and the line
-          // re-serves from disk
-          ds.vacuumKeepLatest(s, fam, 1)
-          ds.manifestTables(s, fam, fpHead, parts)("t")
-            .agg(count(lit(1)).as("n_rows"))
-            .select(col("n_rows"),
-              lit(vHead.toInt).as("head_version"),
-              lit(diff == 0L).as("append_exact_ok"),
-              lit(headOk).as("head_commit_ok"))
-            .localCheckpoint(eager = true)
-        } finally {
-          saved.fold(s.conf.unset("spark.graft.store.root"))(v =>
-            s.conf.set("spark.graft.store.root", v))
-          graft.pipeline.SinkFiles.deleteRecursive(root)
-        }
+            .withColumnRenamed("count", "c2"),
+            Seq("doc_id"), "full_outer")
+          .where(col("count").isNull || col("c2").isNull ||
+            col("count") =!= col("c2"))
+          .count()
+        // retention: keep-latest-1 + the automatic head pin — the
+        // intermediate generation (and a CAS loser's abandoned
+        // off-head sibling, when the race collided) sweep; every
+        // segment the committed line lists survives and the line
+        // re-serves from disk
+        ds.vacuumKeepLatest(s, fam, 1)
+        ds.manifestTables(s, fam, fpHead, parts)("t")
+          .agg(count(lit(1)).as("n_rows"))
+          .select(col("n_rows"),
+            lit(vHead.toInt).as("head_version"),
+            lit(diff == 0L).as("append_exact_ok"),
+            lit(headOk).as("head_commit_ok"))
+          .localCheckpoint(eager = true)
       },
       Some("""SELECT
              |  count(CASE WHEN doc_id % 10 IN (1, 2, 3) THEN 1 END)
@@ -711,61 +684,52 @@ object ScaleQueries {
     QuerySpec(
       "s18_store_time_travel",
       "HEAD-LINE HISTORY + TIME TRAVEL (the read faces the s17 commit log already paid for: one _GRAFT_HEAD.v<k> file per committed version IS a DESCRIBE HISTORY/VERSION AS OF substrate, no new write-path state): a base and two appendManifest commits build versions 0..2 of a scratch family; headLineage must list exactly those versions with the COMBINED fingerprints the appends committed (the algebra gate — a lineage that dropped or reordered a commit could not forge the fold); manifestTablesAt(v1) serves the line EXACTLY as of version 1 (multiset-exact against base+delta2, the later delta3 invisible — version addressing, not latest-wins); then keep-latest-1 retention with the automatic head pin retires the old versions and the SAME read must fail LOUDLY (a time-travel read may never silently serve a different version — the Delta vacuumed-log trade re-expressed), while the pinned head still serves all three slices. Census = as-of/head row counts + lineage/exactness/loud-failure gates",
-      (s, dir) => {
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { _ =>
         val ds = graft.operators.DurableStore
-        val root = QuerySpec.tempSinkDir()
-        val saved = s.conf.getOption("spark.graft.store.root")
-        s.conf.set("spark.graft.store.root", root)
         val fam = "timetravel"
         val parts = Seq(ds.Part("t", None))
-        try {
-          def slice(m: Long) = Tables.load(s, dir, "documents")
-            .where(col("doc_id") % 10 === m).select(col("doc_id"))
-            .localCheckpoint(eager = true)
-          val base = slice(1L)
-          val fp0 = ds.frameFingerprint(base, Seq("doc_id"))
-          val seg0 = ds.writeSegment(s, fam, parts, Map("t" -> base))
-          require(ds.publishManifest(s, fam, fp0, Seq(seg0)),
-            "base publish lost a race in a private root")
-          require(ds.initHead(s, fam, fp0), "head init lost a race")
-          def append(m: Long): (Long, String) = {
-            val d = slice(m)
-            val seg = ds.writeSegment(s, fam, parts, Map("t" -> d))
-            ds.appendManifest(s, fam, seg,
-              ds.frameFingerprint(d, Seq("doc_id")))
-          }
-          val (v1, fp1) = append(2L)
-          val (v2, fp2) = append(3L)
-          val lineageOk = (v1, v2) == (1L, 2L) &&
-            ds.headLineage(s, fam) ==
-              Seq((0L, fp0), (1L, fp1), (2L, fp2))
-          // VERSION AS OF 1: base+delta2, the later delta3 invisible
-          val asOf = ds.manifestTablesAt(s, fam, 1L, parts)("t")
-          val nAsOf = asOf.count()
-          val asOfDiff = Gates.mismatches(asOf,
-            slice(1L).unionAll(slice(2L)), "__mm")
-            .collect()(0).getLong(0)
-          // retention sweeps versions 0/1: the as-of read must fail
-          // LOUDLY now, never serve something else
-          ds.vacuumKeepLatest(s, fam, 1)
-          val sweptLoud =
-            try { ds.manifestTablesAt(s, fam, 1L, parts); false }
-            catch { case e: RuntimeException =>
-              e.getMessage.contains("swept by retention") ||
-                e.getMessage.contains("not readable") }
-          val head = ds.manifestTablesAt(s, fam, 2L, parts)("t")
-          head.agg(count(lit(1)).as("n_head_rows"))
-            .select(col("n_head_rows"),
-              lit(nAsOf).as("n_asof_rows"),
-              lit(lineageOk).as("lineage_ok"),
-              lit(asOfDiff == 0L).as("asof_exact_ok"),
-              lit(sweptLoud).as("swept_asof_fails_ok"))
-            .localCheckpoint(eager = true)
-        } finally {
-          saved.fold(s.conf.unset("spark.graft.store.root"))(v =>
-            s.conf.set("spark.graft.store.root", v))
-          graft.pipeline.SinkFiles.deleteRecursive(root)
+        def slice(m: Long) = Tables.load(s, dir, "documents")
+          .where(col("doc_id") % 10 === m).select(col("doc_id"))
+          .localCheckpoint(eager = true)
+        val base = slice(1L)
+        val fp0 = ds.frameFingerprint(base, Seq("doc_id"))
+        val seg0 = ds.writeSegment(s, fam, parts, Map("t" -> base))
+        require(ds.publishManifest(s, fam, fp0, Seq(seg0)),
+          "base publish lost a race in a private root")
+        require(ds.initHead(s, fam, fp0), "head init lost a race")
+        def append(m: Long): (Long, String) = {
+          val d = slice(m)
+          val seg = ds.writeSegment(s, fam, parts, Map("t" -> d))
+          ds.appendManifest(s, fam, seg,
+            ds.frameFingerprint(d, Seq("doc_id")))
         }
+        val (v1, fp1) = append(2L)
+        val (v2, fp2) = append(3L)
+        val lineageOk = (v1, v2) == (1L, 2L) &&
+          ds.headLineage(s, fam) ==
+            Seq((0L, fp0), (1L, fp1), (2L, fp2))
+        // VERSION AS OF 1: base+delta2, the later delta3 invisible
+        val asOf = ds.manifestTablesAt(s, fam, 1L, parts)("t")
+        val nAsOf = asOf.count()
+        val asOfDiff = Gates.mismatches(asOf,
+          slice(1L).unionAll(slice(2L)), "__mm")
+          .collect()(0).getLong(0)
+        // retention sweeps versions 0/1: the as-of read must fail
+        // LOUDLY now, never serve something else
+        ds.vacuumKeepLatest(s, fam, 1)
+        val sweptLoud =
+          try { ds.manifestTablesAt(s, fam, 1L, parts); false }
+          catch { case e: RuntimeException =>
+            e.getMessage.contains("swept by retention") ||
+              e.getMessage.contains("not readable") }
+        val head = ds.manifestTablesAt(s, fam, 2L, parts)("t")
+        head.agg(count(lit(1)).as("n_head_rows"))
+          .select(col("n_head_rows"),
+            lit(nAsOf).as("n_asof_rows"),
+            lit(lineageOk).as("lineage_ok"),
+            lit(asOfDiff == 0L).as("asof_exact_ok"),
+            lit(sweptLoud).as("swept_asof_fails_ok"))
+          .localCheckpoint(eager = true)
       },
       Some("""SELECT
              |  count(CASE WHEN doc_id % 10 IN (1, 2, 3) THEN 1 END)
@@ -779,77 +743,68 @@ object ScaleQueries {
     QuerySpec(
       "s19_store_cdc_batch",
       "CHANGE CAPTURE, batch face (what the reference can only do by re-scanning the whole source and re-sending it, index.js:186-198 — here the commit log that ingest already writes IS the change feed): over the s18 line (base + two appended commits), changesBetween(0, 2) must return EXACTLY the two appended slices (multiset-exact) while its inputFiles stay entirely inside the two delta segments' dirs — the O(delta) read gate: however large the standing corpus, a change read costs the window's appends; the empty window (2, 2] is an empty frame in the part's schema, not an error; an in-place compaction rewriting the chain (content identical, layout merged) must NOT disturb the window — each appended head file names its commit's delta segment, so windows resolve from the commit log without the superseded manifests and stay multiset-exact for as long as the tombstone-graced old segments survive (the live-tail-through-compaction contract); and once retention actually closes the grace (a grace-0 keep-latest sweep) the SAME window must fail LOUDLY — a change read may serve exactly the window or refuse, never a partial or doubled answer — while the compacted head still serves the full line. Census = changed/head row counts + exactness/delta-only/empty/compaction-survival/loud-failure gates",
-      (s, dir) => {
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { _ =>
         val ds = graft.operators.DurableStore
-        val root = QuerySpec.tempSinkDir()
-        val saved = s.conf.getOption("spark.graft.store.root")
-        s.conf.set("spark.graft.store.root", root)
         val fam = "cdc_batch"
         val parts = Seq(ds.Part("t", None))
-        try {
-          def slice(m: Long) = Tables.load(s, dir, "documents")
-            .where(col("doc_id") % 10 === m).select(col("doc_id"))
-            .localCheckpoint(eager = true)
-          val base = slice(1L)
-          val fp0 = ds.frameFingerprint(base, Seq("doc_id"))
-          val seg0 = ds.writeSegment(s, fam, parts, Map("t" -> base))
-          require(ds.publishManifest(s, fam, fp0, Seq(seg0)),
-            "base publish lost a race in a private root")
-          require(ds.initHead(s, fam, fp0), "head init lost a race")
-          def append(m: Long): String = {
-            val d = slice(m)
-            val seg = ds.writeSegment(s, fam, parts, Map("t" -> d))
-            ds.appendManifest(s, fam, seg,
-              ds.frameFingerprint(d, Seq("doc_id")))._2
-          }
-          append(2L)
-          val fpHead = append(3L)
-          val changes = ds.changesBetween(s, fam, 0L, 2L, parts)("t")
-          val nChanged = changes.count()
-          val cdcDiff = Gates.mismatches(changes,
-            slice(2L).unionAll(slice(3L)), "__mm")
-            .collect()(0).getLong(0)
-          // O(delta) read: every input file lives under a segment the
-          // window appended — the base segment is never opened
-          val deltaSegs = ds.changedSegments(s, fam, 0L, 2L).toSet
-          val deltaOnly = changes.inputFiles.nonEmpty &&
-            changes.inputFiles.forall(p =>
-              deltaSegs.exists(seg => p.contains(s"/$fam/$seg/")))
-          val empty = ds.changesBetween(s, fam, 2L, 2L, parts)("t")
-          val emptyOk = empty.count() == 0L &&
-            empty.schema.fieldNames.toSeq == Seq("doc_id")
-          // compaction merges the chain in place — the window must
-          // keep resolving from the commit log, multiset-exact
-          ds.compactManifest(s, fam, fpHead, parts)(identity)
-          val survived = Gates.mismatches(
-            ds.changesBetween(s, fam, 0L, 2L, parts)("t"),
-            slice(2L).unionAll(slice(3L)), "__mm")
-            .collect()(0).getLong(0) == 0L
-          // the grace closes: superseded manifests, head files and
-          // the old segments sweep — the window must now refuse
-          // loudly, never serve a partial or doubled answer
-          ds.vacuumKeepLatest(s, fam, 1)
-          val sweptLoud =
-            try { ds.changedSegments(s, fam, 0L, 2L); false }
-            catch { case e: RuntimeException =>
-              e.getMessage.contains("not readable") ||
-                e.getMessage.contains(
-                  "snapshot read of the current head") }
-          val head = ds.manifestTables(s, fam, fpHead, parts)("t")
-          head.agg(count(lit(1)).as("n_head_rows"))
-            .select(col("n_head_rows"),
-              lit(nChanged).as("n_changed_rows"),
-              lit(cdcDiff == 0L).as("cdc_exact_ok"),
-              lit(deltaOnly).as("delta_only_read_ok"),
-              lit(emptyOk).as("empty_window_ok"),
-              lit(survived).as("cdc_survives_compaction_ok"),
-              lit(sweptLoud).as("swept_window_fails_ok"))
-            .localCheckpoint(eager = true)
-        } finally {
-          saved.fold(s.conf.unset("spark.graft.store.root"))(v =>
-            s.conf.set("spark.graft.store.root", v))
-          graft.pipeline.SinkFiles.deleteRecursive(root)
+        def slice(m: Long) = Tables.load(s, dir, "documents")
+          .where(col("doc_id") % 10 === m).select(col("doc_id"))
+          .localCheckpoint(eager = true)
+        val base = slice(1L)
+        val fp0 = ds.frameFingerprint(base, Seq("doc_id"))
+        val seg0 = ds.writeSegment(s, fam, parts, Map("t" -> base))
+        require(ds.publishManifest(s, fam, fp0, Seq(seg0)),
+          "base publish lost a race in a private root")
+        require(ds.initHead(s, fam, fp0), "head init lost a race")
+        def append(m: Long): String = {
+          val d = slice(m)
+          val seg = ds.writeSegment(s, fam, parts, Map("t" -> d))
+          ds.appendManifest(s, fam, seg,
+            ds.frameFingerprint(d, Seq("doc_id")))._2
         }
+        append(2L)
+        val fpHead = append(3L)
+        val changes = ds.changesBetween(s, fam, 0L, 2L, parts)("t")
+        val nChanged = changes.count()
+        val cdcDiff = Gates.mismatches(changes,
+          slice(2L).unionAll(slice(3L)), "__mm")
+          .collect()(0).getLong(0)
+        // O(delta) read: every input file lives under a segment the
+        // window appended — the base segment is never opened
+        val deltaSegs = ds.changedSegments(s, fam, 0L, 2L).toSet
+        val deltaOnly = changes.inputFiles.nonEmpty &&
+          changes.inputFiles.forall(p =>
+            deltaSegs.exists(seg => p.contains(s"/$fam/$seg/")))
+        val empty = ds.changesBetween(s, fam, 2L, 2L, parts)("t")
+        val emptyOk = empty.count() == 0L &&
+          empty.schema.fieldNames.toSeq == Seq("doc_id")
+        // compaction merges the chain in place — the window must
+        // keep resolving from the commit log, multiset-exact
+        ds.compactManifest(s, fam, fpHead, parts)(identity)
+        val survived = Gates.mismatches(
+          ds.changesBetween(s, fam, 0L, 2L, parts)("t"),
+          slice(2L).unionAll(slice(3L)), "__mm")
+          .collect()(0).getLong(0) == 0L
+        // the grace closes: superseded manifests, head files and
+        // the old segments sweep — the window must now refuse
+        // loudly, never serve a partial or doubled answer
+        ds.vacuumKeepLatest(s, fam, 1)
+        val sweptLoud =
+          try { ds.changedSegments(s, fam, 0L, 2L); false }
+          catch { case e: RuntimeException =>
+            e.getMessage.contains("not readable") ||
+              e.getMessage.contains(
+                "snapshot read of the current head") }
+        val head = ds.manifestTables(s, fam, fpHead, parts)("t")
+        head.agg(count(lit(1)).as("n_head_rows"))
+          .select(col("n_head_rows"),
+            lit(nChanged).as("n_changed_rows"),
+            lit(cdcDiff == 0L).as("cdc_exact_ok"),
+            lit(deltaOnly).as("delta_only_read_ok"),
+            lit(emptyOk).as("empty_window_ok"),
+            lit(survived).as("cdc_survives_compaction_ok"),
+            lit(sweptLoud).as("swept_window_fails_ok"))
+          .localCheckpoint(eager = true)
       },
       Some("""SELECT
              |  count(CASE WHEN doc_id % 10 IN (1, 2, 3) THEN 1 END)

@@ -2395,11 +2395,8 @@ object TimeSeriesQueries {
     QuerySpec(
       "t53_stream_ingest_restart",
       "the RESTART face of the ingest->durable composition — the residual the r15 VERDICT named (t52 covers same-run retries; a driver restart from checkpoint replays the last uncommitted batch into a FRESH JVM whose dedup memory is empty, and without durable state the replay publishes a duplicate segment = duplicate rows in the published union): the batch ledger makes the replay idempotent, KILLED AND RESTARTED FOR REAL. Documents stage as exactly three files and stream maxFilesPerTrigger=1 (three deterministic micro-batches); each batch lands as one segment via writeBatchSegmentOnce; an injected fault kills the query inside foreachBatch of batch 1 AFTER its segment write and ledger record but BEFORE the batch commits to the checkpoint — the exact at-least-once window; a second query restarts from the SAME checkpoint dir, Structured Streaming replays batch 1 under the same id with the same file, and the replay finds the ledger and returns the recorded segment WITHOUT writing (gated: batch 1 was invoked at least twice while the ledger holds exactly one segment per batch); on drain the run publishes manifest = the ledgered segments in batch order — recovered from disk, as a restarted driver must — and a cold resolution serves the union MULTISET-EXACT against a batch read of the same staged files (no duplicate from the replay, nothing lost to the kill); ingest accrues zero build-ledger seconds (never a training job). Census = row/batch counts + replay/dedup/exactness gates",
-      (s, dir) => {
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { _ =>
         val ds = graft.operators.DurableStore
-        val root = QuerySpec.tempSinkDir()
-        val saved = s.conf.getOption("spark.graft.store.root")
-        s.conf.set("spark.graft.store.root", root)
         val fam = "ingest_restart"
         val parts = Seq(ds.Part("t", None))
         val out = java.nio.file.Files
@@ -2472,9 +2469,6 @@ object TimeSeriesQueries {
           ds.dropBatchLedgers(s, fam, runId)
           res
         } finally {
-          saved.fold(s.conf.unset("spark.graft.store.root"))(v =>
-            s.conf.set("spark.graft.store.root", v))
-          graft.pipeline.SinkFiles.deleteRecursive(root)
           graft.pipeline.SinkFiles.deleteRecursive(out)
         }
       },
@@ -2486,11 +2480,8 @@ object TimeSeriesQueries {
     QuerySpec(
       "t54_stream_ingest_headline",
       "the FULL continuous-ingest lifecycle composed from the round-16 primitives — t52/t53 publish each run as a sibling FINGERPRINT, which is right for one writer but leaves the family without a linear history: here the drained batches COMMIT ONTO THE HEAD LINE. Base corpus (documents m<5) publishes as one segment and becomes head v0; the delta (m in 5..7) streams in two deterministic micro-batches, each landing as a ledgered segment (writeBatchSegmentOnce — the t53 restart discipline); on drain each ledgered segment is appended with appendManifest in batch order (child fingerprints derived by COMBINING the per-segment fingerprints read back from the segment's own parquet — the restarted-driver shape: nothing comes from process memory), advancing the head to v2 whose fingerprint must equal the independently computed fingerprint of the whole m<8 slice (a commit that dropped or duplicated rows could not forge the three-fold combination); the 3-segment head chain then crosses the auto-compaction threshold (Maintenance.autoCompactManifest, maxSegments=2) and compacts WITHOUT moving the head (fingerprint identity is content, chains are layout), keep-latest-1 retention with the automatic head pin retires the base and intermediate generations plus the superseded chain segments, ledgers are dropped, and the head line serves MULTISET-EXACT against a batch read of the m<8 slice with zero build-ledger seconds anywhere. Census = served rows + head version + fingerprint-forgery/exactness/maintenance gates",
-      (s, dir) => {
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { root =>
         val ds = graft.operators.DurableStore
-        val root = QuerySpec.tempSinkDir()
-        val saved = s.conf.getOption("spark.graft.store.root")
-        s.conf.set("spark.graft.store.root", root)
         val fam = "ingest_head"
         val parts = Seq(ds.Part("t", None))
         val out = java.nio.file.Files
@@ -2570,9 +2561,6 @@ object TimeSeriesQueries {
                 .as("maintenance_ok"))
             .localCheckpoint(eager = true)
         } finally {
-          saved.fold(s.conf.unset("spark.graft.store.root"))(v =>
-            s.conf.set("spark.graft.store.root", v))
-          graft.pipeline.SinkFiles.deleteRecursive(root)
           graft.pipeline.SinkFiles.deleteRecursive(out)
         }
       },
@@ -2585,73 +2573,64 @@ object TimeSeriesQueries {
     QuerySpec(
       "t55_stream_cdc_tail",
       "STREAMING CHANGE CAPTURE of the head line — the consumer side of t54's producer loop, and the shape the reference cannot express at all (its only change detection is re-scanning the source and re-sending everything, index.js:186-198; a downstream consumer here TAILS the commit log ingest already writes): spark.readStream.format(graft-store) turns the family's head versions into stream OFFSETS, so each micro-batch is one commit window read from ONLY the segments it appended. Proven in-query: base (m<4) publishes and becomes head v0; a snapshot-mode stream's FIRST batch must be the whole line as of stream start (the Delta starting-snapshot semantics, counted per phase through a memory sink); two appendManifest commits then land WHILE THE STREAM RUNS and each drains as EXACTLY its own slice (per-phase sink deltas equal the slice counts — a batch that re-read the standing corpus would surface as duplicates); the drained sink is multiset-exact against a batch read of the m<6 slice, the head sits at v2, and the whole tail accrues zero build-ledger seconds (serving changes is never a training job). Census = total/snapshot/tail row counts + head version + exactness/train-free gates",
-      (s, dir) => {
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { _ =>
         val ds = graft.operators.DurableStore
-        val root = QuerySpec.tempSinkDir()
-        val saved = s.conf.getOption("spark.graft.store.root")
-        s.conf.set("spark.graft.store.root", root)
         val fam = "cdc_tail"
         val parts = Seq(ds.Part("t", None))
         val sink = "t55_cdc_sink"
+        val docs = Tables.load(s, dir, "documents")
+          .select(col("doc_id"))
+        def slice(m: Long) = docs.where(col("doc_id") % 10 === m)
+          .localCheckpoint(eager = true)
+        val base = docs.where(col("doc_id") % 10 < 4)
+          .localCheckpoint(eager = true)
+        val fp0 = ds.frameFingerprint(base, Seq("doc_id"))
+        val seg0 = ds.writeSegment(s, fam, parts, Map("t" -> base))
+        require(ds.publishManifest(s, fam, fp0, Seq(seg0)),
+          "base publish lost a race in a private root")
+        require(ds.initHead(s, fam, fp0), "head init lost a race")
+        s.sql(s"DROP VIEW IF EXISTS $sink")
+        val q = s.readStream.format("graft-store")
+          .option("family", fam).option("part", "t")
+          .option("startingVersion", "snapshot")
+          .load()
+          .writeStream.format("memory").queryName(sink)
+          .outputMode("append").start()
         try {
-          val docs = Tables.load(s, dir, "documents")
-            .select(col("doc_id"))
-          def slice(m: Long) = docs.where(col("doc_id") % 10 === m)
-            .localCheckpoint(eager = true)
-          val base = docs.where(col("doc_id") % 10 < 4)
-            .localCheckpoint(eager = true)
-          val fp0 = ds.frameFingerprint(base, Seq("doc_id"))
-          val seg0 = ds.writeSegment(s, fam, parts, Map("t" -> base))
-          require(ds.publishManifest(s, fam, fp0, Seq(seg0)),
-            "base publish lost a race in a private root")
-          require(ds.initHead(s, fam, fp0), "head init lost a race")
-          s.sql(s"DROP VIEW IF EXISTS $sink")
-          val q = s.readStream.format("graft-store")
-            .option("family", fam).option("part", "t")
-            .option("startingVersion", "snapshot")
-            .load()
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try {
+          q.processAllAvailable()
+          val nSnap = s.table(sink).count()
+          def append(m: Long): Long = {
+            val d = slice(m)
+            val seg = ds.writeSegment(s, fam, parts, Map("t" -> d))
+            ds.appendManifest(s, fam, seg,
+              ds.frameFingerprint(d, Seq("doc_id")))
             q.processAllAvailable()
-            val nSnap = s.table(sink).count()
-            def append(m: Long): Long = {
-              val d = slice(m)
-              val seg = ds.writeSegment(s, fam, parts, Map("t" -> d))
-              ds.appendManifest(s, fam, seg,
-                ds.frameFingerprint(d, Seq("doc_id")))
-              q.processAllAvailable()
-              s.table(sink).count()
-            }
-            // each commit drains as exactly its own slice: the sink
-            // grows by the slice count, never by a corpus re-read
-            val n4 = append(4L)
-            val n5 = append(5L)
-            val tailOk = n4 - nSnap == slice(4L).count() &&
-              n5 - n4 == slice(5L).count()
-            val (vHead, _) = ds.headState(s, fam).getOrElse(
-              sys.error("no head after the tailed appends"))
-            val drained = s.table(sink).localCheckpoint(eager = true)
-            val buildFree = ds.buildSeconds(fam) == 0.0
-            drained.agg(count(lit(1)).as("n_total_rows"))
-              .crossJoin(broadcast(mismatches(drained,
-                docs.where(col("doc_id") % 10 < 6), "__mm")))
-              .select(col("n_total_rows"),
-                lit(nSnap).as("n_snapshot_rows"),
-                lit(n5 - nSnap).as("n_tail_rows"),
-                lit(vHead.toInt).as("head_version"),
-                (col("__mm") === 0 && lit(tailOk))
-                  .as("tail_exact_ok"),
-                lit(buildFree).as("train_free_ok"))
-              .localCheckpoint(eager = true)
-          } finally {
-            q.stop()
-            s.sql(s"DROP VIEW IF EXISTS $sink")
+            s.table(sink).count()
           }
+          // each commit drains as exactly its own slice: the sink
+          // grows by the slice count, never by a corpus re-read
+          val n4 = append(4L)
+          val n5 = append(5L)
+          val tailOk = n4 - nSnap == slice(4L).count() &&
+            n5 - n4 == slice(5L).count()
+          val (vHead, _) = ds.headState(s, fam).getOrElse(
+            sys.error("no head after the tailed appends"))
+          val drained = s.table(sink).localCheckpoint(eager = true)
+          val buildFree = ds.buildSeconds(fam) == 0.0
+          drained.agg(count(lit(1)).as("n_total_rows"))
+            .crossJoin(broadcast(mismatches(drained,
+              docs.where(col("doc_id") % 10 < 6), "__mm")))
+            .select(col("n_total_rows"),
+              lit(nSnap).as("n_snapshot_rows"),
+              lit(n5 - nSnap).as("n_tail_rows"),
+              lit(vHead.toInt).as("head_version"),
+              (col("__mm") === 0 && lit(tailOk))
+                .as("tail_exact_ok"),
+              lit(buildFree).as("train_free_ok"))
+            .localCheckpoint(eager = true)
         } finally {
-          saved.fold(s.conf.unset("spark.graft.store.root"))(v =>
-            s.conf.set("spark.graft.store.root", v))
-          graft.pipeline.SinkFiles.deleteRecursive(root)
+          q.stop()
+          s.sql(s"DROP VIEW IF EXISTS $sink")
         }
       },
       Some("""SELECT count(CASE WHEN doc_id % 10 < 6 THEN 1 END)

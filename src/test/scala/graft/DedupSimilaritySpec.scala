@@ -301,17 +301,21 @@ class DedupSimilaritySpec extends SparkSpec {
         codes = spark.table(s"${pfx}_codes"),
         norms = spark.table(s"${pfx}_norms"),
         candidates = cand, rerank = 8)
-      // plan probe: the serve path must contain ZERO training machinery —
-      // Lloyd rounds are the only code in this module that explodes the
-      // per-centroid t_emb vectors (r17: posexplode itself is no longer a
-      // training marker — the bounded top-k explodes its k-row arrays
-      // with it), so the Lloyd marker must be absent from both optimized
-      // plans, and the candidate plan must actually read the persisted
-      // index tables.
-      val planStr = pq.queryExecution.optimizedPlan.toString +
-        cand.queryExecution.optimizedPlan.toString
-      assert(!planStr.contains("posexplode(t_emb"),
-        "training machinery leaked into the serve path")
+      // plan probe: the serve path must contain ZERO training machinery.
+      // Lloyd rounds explode per-centroid vectors; the serve path's only
+      // generators explode the bounded top-k's `__top` arrays — so every
+      // Generate in both optimized plans must read `__top` and nothing
+      // else, whatever alias a training explode would carry
+      val gens = Seq(pq, cand).flatMap(_.queryExecution.optimizedPlan
+        .collectWithSubqueries {
+          case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+        })
+      assert(gens.nonEmpty, "no top-k explode in the serve plan — the " +
+        "probe is vacuous")
+      val leaked = gens.filterNot(g => g.generator.references.nonEmpty &&
+        g.generator.references.forall(_.name == "__top"))
+      assert(leaked.isEmpty, "training machinery leaked into the serve " +
+        s"path: ${leaked.map(_.generator.sql).mkString(", ")}")
       assert(cand.queryExecution.optimizedPlan.toString.contains(s"${pfx}_lists"),
         "candidates do not read the persisted inverted lists")
       // fidelity gate, the l57 contract: PQ top-10 vs the full-precision
@@ -326,6 +330,43 @@ class DedupSimilaritySpec extends SparkSpec {
       parts.foreach(p => spark.sql(s"DROP TABLE IF EXISTS ${pfx}_$p"))
       graft.pipeline.SinkFiles.deleteRecursive(out)
     }
+  }
+
+  test("topKPerQuery contract: a string or double c_id fails at " +
+      "plan-build time, before any job runs") {
+    import spark.implicits._
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    val emb = Seq(Array(1f, 0f), Array(0f, 1f), Array(1f, 1f))
+    val corpora = Seq(Seq("a", "b", "c").zip(emb).toDF("id", "emb"),
+      Seq(1.0, 2.0, 3.0).zip(emb).toDF("id", "emb"))
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("topk_contract_build", "plan build only")
+      try corpora.foreach { c =>
+        val ex = intercept[IllegalArgumentException](
+          Similarity.bruteForceTopK(c, c, "id", "emb", 1))
+        assert(ex.getMessage.contains("c_id must be an integral id"),
+          ex.getMessage)
+      } finally sc.clearJobGroup()
+      // listener events arrive in order: once a later marker job is
+      // seen, every job the plan builds could have started is too
+      sc.setJobGroup("topk_contract_marker", "listener barrier")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("topk_contract_marker") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("topk_contract_marker"),
+        "the listener never saw the marker job")
+      assert(!groups.contains("topk_contract_build"),
+        "a job ran while building the refused plan")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("asof join: NULL-key left rows match nothing (equi-join semantics)") {

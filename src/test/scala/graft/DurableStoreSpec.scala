@@ -128,7 +128,8 @@ class DurableStoreSpec extends SparkSpec {
   }
 
   test("a marker-less leftover base dir (crash before publish) is " +
-      "cleared and rebuilt through the atomic rename") {
+      "never served: the layout builds once and vacuum sweeps the " +
+      "leftover as debris") {
     import spark.implicits._
     var builds = 0
     val parts = Seq(DurableStore.Part("t", None))
@@ -148,8 +149,12 @@ class DurableStoreSpec extends SparkSpec {
     assert(builds === 1, "marker-less leftovers must trigger a build")
     assert(rows.length === 8)
     assert(new java.io.File(base, "_GRAFT_STORE_COMPLETE").isFile)
-    assert(!new java.io.File(base, "t/garbage").exists(),
-      "the leftover partial content survived the atomic publish")
+    assert(!DurableStore.partLocation(spark, "spec_crash", "fp0", "t")
+      .endsWith("fp0/t"), "the leftover part dir is the served one")
+    // the next vacuum reports the leftover as debris and removes it
+    val rep = DurableStore.vacuum(spark, "spec_crash")
+    assert(rep.debris === Seq("fp0/t") && rep.stale.isEmpty, s"$rep")
+    assert(!new java.io.File(base, "t").exists())
     // and the published layout serves without rebuilding
     DurableStore.dropRegistered(spark, "spec_crash", "fp0", parts)
     assert(sortedRows(lob()("t")) === rows && builds === 1)
@@ -159,75 +164,97 @@ class DurableStoreSpec extends SparkSpec {
       "attempt prefix, publish = create-if-absent marker, reload is " +
       "zero-build with identical rows") {
     import spark.implicits._
-    spark.conf.set("spark.graft.store.commit", "marker")
-    try {
-      var builds = 0
-      val parts = Seq(DurableStore.Part("t", Some("k")))
-      def lob() = DurableStore.loadOrBuild(spark, "spec_marker", "fp0",
-        parts) {
-        builds += 1
-        Map("t" -> (0 until 64).map(i => (i % 8, i.toLong))
-          .toDF("k", "v"))
-      }
-      val first = sortedRows(lob()("t"))
-      assert(builds === 1)
-      // marker names the winning attempt; part files live UNDER it
-      val base = new java.io.File(s"$storeRoot/spec_marker/fp0")
-      val marker = new java.io.File(base, "_GRAFT_STORE_COMPLETE")
-      assert(marker.isFile)
-      val attempt = new String(
-        java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).linesIterator.next()
-      assert(attempt.startsWith("attempt_"), s"marker content: $attempt")
-      assert(new java.io.File(new java.io.File(base, attempt), "t")
-        .isDirectory, "parts must live under the marker's attempt dir")
-      // reload path: zero build seconds, identical rows, bucket spec
-      DurableStore.dropRegistered(spark, "spec_marker", "fp0", parts)
-      val d = delta("spec_marker") {
-        val t = lob()("t")
-        assert(sortedRows(t) === first)
-        val agg = t.groupBy(col("k")).agg(sum(col("v")).as("s"))
-        agg.collect()
-        assert(!agg.queryExecution.executedPlan.toString
-          .contains("Exchange"),
-          "marker-mode reload lost the bucket spec")
-      }
-      assert(builds === 1, "marker-mode reload must not rebuild")
-      assert(d === 0.0, s"marker-mode reload accrued build seconds: $d")
-    } finally spark.conf.unset("spark.graft.store.commit")
+    var builds = 0
+    val parts = Seq(DurableStore.Part("t", Some("k")))
+    def lob() = DurableStore.loadOrBuild(spark, "spec_marker", "fp0",
+      parts) {
+      builds += 1
+      Map("t" -> (0 until 64).map(i => (i % 8, i.toLong))
+        .toDF("k", "v"))
+    }
+    val first = sortedRows(lob()("t"))
+    assert(builds === 1)
+    // marker names the winning attempt; part files live UNDER it
+    val base = new java.io.File(s"$storeRoot/spec_marker/fp0")
+    val marker = new java.io.File(base, "_GRAFT_STORE_COMPLETE")
+    assert(marker.isFile)
+    val attempt = new String(
+      java.nio.file.Files.readAllBytes(marker.toPath),
+      java.nio.charset.StandardCharsets.UTF_8).linesIterator.next()
+    assert(attempt.startsWith("attempt_"), s"marker content: $attempt")
+    assert(new java.io.File(new java.io.File(base, attempt), "t")
+      .isDirectory, "parts must live under the marker's attempt dir")
+    // reload path: zero build seconds, identical rows, bucket spec
+    DurableStore.dropRegistered(spark, "spec_marker", "fp0", parts)
+    val d = delta("spec_marker") {
+      val t = lob()("t")
+      assert(sortedRows(t) === first)
+      val agg = t.groupBy(col("k")).agg(sum(col("v")).as("s"))
+      agg.collect()
+      assert(!agg.queryExecution.executedPlan.toString
+        .contains("Exchange"),
+        "marker-mode reload lost the bucket spec")
+    }
+    assert(builds === 1, "marker-mode reload must not rebuild")
+    assert(d === 0.0, s"marker-mode reload accrued build seconds: $d")
   }
 
-  for (mode <- Seq("rename", "marker"))
-    test(s"$mode mode: a concurrent builder losing the publish race " +
-        "discards its bytes and serves the winner's") {
-      import spark.implicits._
-      spark.conf.set("spark.graft.store.commit", mode)
-      try {
-        val parts = Seq(DurableStore.Part("t", None))
-        val fam = s"spec_race_$mode"
-        // the build body simulates a concurrent JVM publishing FIRST:
-        // a nested loadOrBuild (same family/fp) runs the full publish
-        // protocol before the outer builder's own parts are written —
-        // the outer builder must then lose the race and serve the
-        // winner's bytes, not its own
-        val served = DurableStore.loadOrBuild(spark, fam, "fp0", parts) {
-          DurableStore.loadOrBuild(spark, fam, "fp0", parts) {
-            Map("t" -> Seq((1, "winner")).toDF("k", "who"))
-          }
-          Map("t" -> Seq((1, "loser")).toDF("k", "who"))
-        }
-        val rows = served("t").collect()
-        assert(rows.length === 1 && rows.head.getString(1) === "winner",
-          s"loser's bytes were served: ${rows.mkString}")
-        // and no stray attempt/staging dirs survive next to the layout
-        val leftovers = Option(new java.io.File(s"$storeRoot/$fam")
-            .listFiles()).toSeq.flatten
-          .filter(f => f.getName.startsWith(".stage_") ||
-            f.getName.startsWith(".aside_"))
-        assert(leftovers.isEmpty,
-          s"unreclaimed staging dirs: ${leftovers.mkString(",")}")
-      } finally spark.conf.unset("spark.graft.store.commit")
+  test("marker mode: a concurrent builder losing the publish race " +
+      "discards its bytes and serves the winner's") {
+    import spark.implicits._
+    val parts = Seq(DurableStore.Part("t", None))
+    val fam = "spec_race_marker"
+    // the build body simulates a concurrent JVM publishing FIRST: a
+    // nested loadOrBuild (same family/fp) runs the full publish
+    // protocol before the outer builder's own parts are written — the
+    // outer builder must then lose the race and serve the winner's
+    // bytes, not its own
+    val served = DurableStore.loadOrBuild(spark, fam, "fp0", parts) {
+      DurableStore.loadOrBuild(spark, fam, "fp0", parts) {
+        Map("t" -> Seq((1, "winner")).toDF("k", "who"))
+      }
+      Map("t" -> Seq((1, "loser")).toDF("k", "who"))
     }
+    val rows = served("t").collect()
+    assert(rows.length === 1 && rows.head.getString(1) === "winner",
+      s"loser's bytes were served: ${rows.mkString}")
+    // and the loser's attempt dir did not survive next to the winner's
+    val rep = DurableStore.vacuum(spark, fam)
+    assert(rep.debris.isEmpty && rep.stale.isEmpty,
+      s"unreclaimed loser attempt: $rep")
+  }
+
+  test("a plain publish racing a grace-less vacuum retracts its " +
+      "marker and fails loudly; the next loadOrBuild rebuilds") {
+    import spark.implicits._
+    val fam = "spec_plain_vac_race"
+    val parts = Seq(DurableStore.Part("t", None))
+    var builds = 0
+    def lob() = DurableStore.loadOrBuild(spark, fam, "fp0", parts) {
+      builds += 1
+      Map("t" -> (0 until 6).map(i => (i, s"r$i")).toDF("k", "v"))
+    }
+    // the race, injected at the exact boundary: the attempt's parts
+    // are written but the marker is not — the fingerprint dir is
+    // marker-less, so a grace-less vacuum sweeps it whole as debris
+    DurableStore.faultHook = step =>
+      if (step == "publish_parts_written") {
+        val rep = DurableStore.vacuum(spark, fam)
+        assert(rep.debris === Seq("fp0"), s"$rep")
+      }
+    try {
+      val ex = intercept[RuntimeException](lob())
+      assert(ex.getMessage.contains("raced a vacuum"), ex.getMessage)
+    } finally DurableStore.faultHook = _ => ()
+    assert(!DurableStore.isBuilt(spark, fam, "fp0"),
+      "a marker naming swept parts stayed published")
+    assert(!new java.io.File(
+      s"$storeRoot/$fam/fp0/_GRAFT_STORE_COMPLETE").exists())
+    // the next loadOrBuild rebuilds and serves the right rows
+    assert(sortedRows(lob()("t")) ===
+      (0 until 6).map(i => s"[$i,r$i]").sorted)
+    assert(builds === 2)
+  }
 
   test("vacuum removes publish debris and unkept fingerprints while " +
       "the kept layout still serves") {
@@ -239,10 +266,9 @@ class DurableStoreSpec extends SparkSpec {
       }
     lob("fpA", "keepme")
     lob("fpB", "staleme")
-    // plant debris: a crashed staging sibling, a marker-less fp dir,
-    // an orphan attempt inside the kept layout, and a staging dir a
-    // losing rename nested INSIDE the published layout (the Hadoop
-    // rename-under-existing-dest contract)
+    // plant debris: a dot-prefixed sibling, a marker-less fp dir, an
+    // orphan attempt inside the kept layout, and a dot-prefixed dir
+    // inside it (any child the marker does not name)
     val fam = new java.io.File(s"$storeRoot/spec_vac")
     java.nio.file.Files.createDirectories(
       new java.io.File(fam, ".stage_fpA_dead/t").toPath)
@@ -1201,27 +1227,42 @@ class DurableStoreSpec extends SparkSpec {
     val rep = DurableStore.vacuum(spark, fam)
     assert(rep.debris === Seq("fp0/_GRAFT_STORE_COMPLETE.g1"), s"$rep")
     assert(!torn.exists())
-    // the legacy pre-stamp rename-mode marker — exactly '.' — is
-    // written inside the staging dir BEFORE the atomic publish rename,
-    // so it is never content-torn on the published side; standing
-    // pre-round-14 layouts still carry it and must keep serving
+    // the legacy pre-stamp marker — exactly '.' — was written by
+    // older engines inside a staging dir BEFORE an atomic publish
+    // rename, so it is never content-torn on the published side;
+    // standing layouts still carry it (parts at the base dir) and must
+    // keep serving. Written by hand: this engine never publishes it.
     val fam2 = "spec_legacy_dot"
-    DurableStore.loadOrBuild(spark, fam2, "fpL", parts)(
-      Map("t" -> Seq((7, "legacy")).toDF("k", "v")))
-    val legacyMarker = new java.io.File(
-      s"$storeRoot/$fam2/fpL/_GRAFT_STORE_COMPLETE")
-    rewriteMarker(legacyMarker, ".")
-    DurableStore.dropRegistered(spark, fam2, "fpL", parts)
-    val served = DurableStore.loadOrBuild(spark, fam2, "fpL", parts)(
-      sys.error("legacy '.' marker forced a rebuild"))("t")
-    assert(served.collect().map(_.getString(1)).toSeq === Seq("legacy"))
+    val legacyBase = s"$storeRoot/$fam2/fpL"
+    Seq((7, "legacy")).toDF("k", "v").write.parquet(s"$legacyBase/t")
+    java.nio.file.Files.write(
+      new java.io.File(legacyBase, "_GRAFT_STORE_COMPLETE").toPath,
+      ".".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def serveLegacy(why: String) = DurableStore.loadOrBuild(spark, fam2,
+      "fpL", parts)(sys.error(why))("t")
+      .collect().map(_.getString(1)).toSeq
+    val d = delta(fam2) {
+      assert(serveLegacy("legacy '.' marker forced a rebuild") ===
+        Seq("legacy"))
+    }
+    assert(d === 0.0, s"legacy layout accrued build seconds: $d")
     // and it upgrades in place: next generation, fmt line, sentinel
     // ts=0.0 stamp so it KEEPS sorting as the oldest generation
     assert(DurableStore.upgradeLayoutFormat(spark, fam2, "fpL"))
     assert(DurableStore.publishStampOf(spark, fam2, "fpL") === ((0L, 0L)))
-    assert(DurableStore.loadOrBuild(spark, fam2, "fpL", parts)(
-      sys.error("upgraded legacy layout rebuilt"))("t")
-      .collect().map(_.getString(1)).toSeq === Seq("legacy"))
+    DurableStore.dropRegistered(spark, fam2, "fpL", parts)
+    assert(serveLegacy("upgraded legacy layout rebuilt") === Seq("legacy"))
+    assert(DurableStore.partLocation(spark, fam2, "fpL", "t") ===
+      new org.apache.hadoop.fs.Path(s"$legacyBase/t").toString)
+    // vacuum keeps a legacy layout's base-dir parts and sweeps only its
+    // dot-prefixed children
+    java.nio.file.Files.createDirectories(
+      new java.io.File(legacyBase, ".stage_nested/t").toPath)
+    val repL = DurableStore.vacuum(spark, fam2)
+    assert(repL.debris === Seq("fpL/.stage_nested") && repL.stale.isEmpty,
+      s"$repL")
+    DurableStore.dropRegistered(spark, fam2, "fpL", parts)
+    assert(serveLegacy("vacuumed legacy layout rebuilt") === Seq("legacy"))
   }
 
   test("marker format versioning: a format-1 (round-15) layout serves, " +

@@ -54,14 +54,13 @@ object RaceBarrier {
   }
 }
 
-/** Second-JVM half of the cross-JVM publish race (StoreRaceSpec): for
-  * each commit mode, race the parent spec's JVM on the SAME
-  * family/fingerprint — a REAL second process against a shared store
-  * root, which the in-process race simulations (nested loadOrBuild in
-  * DurableStoreSpec) cannot model because `loadOrBuild`'s
-  * `synchronized` only guards one JVM. Prints one
-  * `RACE_SERVED <family> <tag>` line per mode with the content tag it
-  * ended up serving; exits nonzero on any failure.
+/** Second-JVM half of the cross-JVM publish race (StoreRaceSpec): race
+  * the parent spec's JVM on the SAME family/fingerprint — a REAL
+  * second process against a shared store root, which the in-process
+  * race simulations (nested loadOrBuild in DurableStoreSpec) cannot
+  * model because `loadOrBuild`'s `synchronized` only guards one JVM.
+  * Prints one `RACE_SERVED <family> <tag>` line per race with the
+  * content tag it ended up serving; exits nonzero on any failure.
   *
   * Usage: StoreRaceChild <storeRoot> <barrierDir> <fp>
   */
@@ -71,18 +70,14 @@ object StoreRaceChild {
     val spark = Engine.local(2)
     spark.conf.set("spark.graft.store.root", root)
     import spark.implicits._
-    for (mode <- Seq("rename", "marker")) {
-      spark.conf.set("spark.graft.store.commit", mode)
-      val fam = s"xjvm_$mode"
-      val served = DurableStore.loadOrBuild(spark, fam, fp,
-        Seq(DurableStore.Part("t", None))) {
-        RaceBarrier.sync(barrier, fam, "child")
-        Map("t" -> Seq((1, "child")).toDF("k", "who"))
-      }
-      val who = served("t").collect().map(_.getString(1)).toSeq
-      require(who.length == 1, s"$fam served ${who.length} rows")
-      println(s"RACE_SERVED $fam ${who.head}")
-    }
+    val fam = "xjvm_publish"
+    val who = DurableStore.loadOrBuild(spark, fam, fp,
+      Seq(DurableStore.Part("t", None))) {
+      RaceBarrier.sync(barrier, fam, "child")
+      Map("t" -> Seq((1, "child")).toDF("k", "who"))
+    }("t").collect().map(_.getString(1)).toSeq
+    require(who.length == 1, s"$fam served ${who.length} rows")
+    println(s"RACE_SERVED $fam ${who.head}")
     // cross-JVM INGEST-REPUBLISH race (the t52 composition): the
     // parent publishes a shared BASE generation, then both JVMs write
     // their own delta segment for the SAME child fingerprint and race

@@ -4,16 +4,16 @@ import java.util.concurrent.TimeUnit
 
 import graft.operators.DurableStore
 
-/** The cross-JVM publish race, both commit modes: a REAL second JVM
-  * (StoreRaceChild via ProcessBuilder — the same discipline as the
-  * InfluxTable live-server test) builds the same family/fingerprint
-  * against a shared store root, with a file barrier guaranteeing both
-  * builders hold COMPLETE artifacts before either commits. Asserts,
-  * per mode: exactly one winner published; BOTH JVMs end up serving
-  * the winner's bytes (the loser discarded its own); and no debris
-  * survives — a vacuum sweep finds nothing to reclaim and the layout
-  * still serves. This is the cross-process face the in-process race
-  * simulations (DurableStoreSpec's nested loadOrBuild) cannot model:
+/** The cross-JVM publish race: a REAL second JVM (StoreRaceChild via
+  * ProcessBuilder — the same discipline as the InfluxTable live-server
+  * test) builds the same family/fingerprint against a shared store
+  * root, with a file barrier guaranteeing both builders hold COMPLETE
+  * artifacts before either creates the marker. Asserts: exactly one
+  * winner published; BOTH JVMs end up serving the winner's bytes (the
+  * loser deleted its attempt); and no debris survives — a vacuum sweep
+  * finds nothing to reclaim and the layout still serves. This is the
+  * cross-process face the in-process race simulations
+  * (DurableStoreSpec's nested loadOrBuild) cannot model:
   * `loadOrBuild`'s `synchronized` protects only one JVM, so here the
   * filesystem protocol alone carries the race. Round 15 adds the
   * INGEST-REPUBLISH race (the t52 composition): both JVMs write their
@@ -44,8 +44,8 @@ class StoreRaceSpec extends SparkSpec {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
-  test("cross-JVM publish race, both commit modes: one winner, the " +
-      "loser serves the winner's bytes, no debris") {
+  test("cross-JVM publish race: one winner, the loser serves the " +
+      "winner's bytes, no debris") {
     import spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft_xjvm_root_").toString
@@ -66,18 +66,14 @@ class StoreRaceSpec extends SparkSpec {
     val savedRoot = spark.conf.getOption("spark.graft.store.root")
     try {
       spark.conf.set("spark.graft.store.root", root)
-      val servedTags = for (mode <- Seq("rename", "marker")) yield {
-        spark.conf.set("spark.graft.store.commit", mode)
-        val fam = s"xjvm_$mode"
-        val served = DurableStore.loadOrBuild(spark, fam, fp,
-          Seq(DurableStore.Part("t", None))) {
-          RaceBarrier.sync(barrier, fam, "parent")
-          Map("t" -> Seq((1, "parent")).toDF("k", "who"))
-        }
-        val rows = served("t").collect()
-        assert(rows.length === 1, s"$fam served ${rows.length} rows")
-        fam -> rows.head.getString(1)
-      }
+      val fam = "xjvm_publish"
+      val rows = DurableStore.loadOrBuild(spark, fam, fp,
+        Seq(DurableStore.Part("t", None))) {
+        RaceBarrier.sync(barrier, fam, "parent")
+        Map("t" -> Seq((1, "parent")).toDF("k", "who"))
+      }("t").collect()
+      assert(rows.length === 1, s"$fam served ${rows.length} rows")
+      val tag = rows.head.getString(1)
       // cross-JVM INGEST-REPUBLISH race (the t52 composition, the one
       // in-process simulation cannot model): publish the shared base
       // generation, signal the child, then both JVMs hold a complete
@@ -203,26 +199,24 @@ class StoreRaceSpec extends SparkSpec {
       val childServed = childOut.linesIterator
         .filter(_.startsWith("RACE_SERVED "))
         .map { l =>
-          val Array(_, fam, tag) = l.trim.split(" ")
-          fam -> tag
+          val Array(_, f, t) = l.trim.split(" ")
+          f -> t
         }.toMap
-      servedTags.foreach { case (fam, tag) =>
-        // a real winner, and both JVMs converged on the same bytes
-        assert(Set("parent", "child").contains(tag), s"$fam: $tag")
-        assert(childServed.get(fam) === Some(tag),
-          s"$fam: parent served '$tag', child served " +
-            s"'${childServed.get(fam)}' — the loser kept its own bytes")
-        // no debris: the loser reclaimed its staging/attempt, nothing
-        // for vacuum to sweep, and the layout still serves
-        val rep = DurableStore.vacuum(spark, fam)
-        assert(rep.debris.isEmpty && rep.stale.isEmpty,
-          s"$fam left publish debris: $rep")
-        assert(DurableStore.isBuilt(spark, fam, fp))
-        val again = DurableStore.loadOrBuild(spark, fam, fp,
-          Seq(DurableStore.Part("t", None)))(
-          sys.error("published race layout rebuilt"))
-        assert(again("t").collect().head.getString(1) === tag)
-      }
+      // a real winner, and both JVMs converged on the same bytes
+      assert(Set("parent", "child").contains(tag), s"$fam: $tag")
+      assert(childServed.get(fam) === Some(tag),
+        s"$fam: parent served '$tag', child served " +
+          s"'${childServed.get(fam)}' — the loser kept its own bytes")
+      // no debris: the loser reclaimed its attempt, nothing for vacuum
+      // to sweep, and the layout still serves
+      val rep = DurableStore.vacuum(spark, fam)
+      assert(rep.debris.isEmpty && rep.stale.isEmpty,
+        s"$fam left publish debris: $rep")
+      assert(DurableStore.isBuilt(spark, fam, fp))
+      val again = DurableStore.loadOrBuild(spark, fam, fp,
+        Seq(DurableStore.Part("t", None)))(
+        sys.error("published race layout rebuilt"))
+      assert(again("t").collect().head.getString(1) === tag)
       // the ingest-republish race: exactly one winner's union is
       // served on BOTH sides (base + one delta), the loser reclaimed
       // its unreferenced segment, and the layout is debris-free
@@ -297,12 +291,10 @@ class StoreRaceSpec extends SparkSpec {
         partsM)("t").count() === 13)
     } finally {
       proc.destroyForcibly()
-      spark.conf.unset("spark.graft.store.commit")
       savedRoot.fold(spark.conf.unset("spark.graft.store.root"))(v =>
         spark.conf.set("spark.graft.store.root", v))
-      Seq("xjvm_rename", "xjvm_marker").foreach(fam =>
-        DurableStore.dropRegistered(spark, fam, fp,
-          Seq(DurableStore.Part("t", None))))
+      DurableStore.dropRegistered(spark, "xjvm_publish", fp,
+        Seq(DurableStore.Part("t", None)))
       graft.pipeline.SinkFiles.deleteRecursive(root)
       graft.pipeline.SinkFiles.deleteRecursive(barrier)
     }

@@ -15,6 +15,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 face of the line-protocol sink (SURVEY.md §7.3(c);
   * reference index.js:242-252 `writePoints` / index.js:321-336
@@ -23,29 +24,35 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `.mode("overwrite")` to DSv2 truncate-then-append — the engine-level
   * way to express the reference's emptyseries flag, so the sink composes
   * with everything that speaks the writer API instead of needing the
-  * `graft.pipeline.Sink` trait.
+  * `graft.pipeline.Sink` trait. `writeStream.format("graft-influx")` is
+  * the continuous migration: append mode, or complete mode (a truncate
+  * per micro-batch).
   *
-  * Options: `path` (base dir, required), `measurement` (series name,
-  * required), `timecol` (TimestampType column rendered as the trailing
-  * epoch-ns timestamp; default "time"), `insertlimit` (rows per flush
-  * file = per simulated POST body; default 1000).
+  * Options: `path` (base dir, required for the file transport),
+  * `measurement` (series name, required), `timecol` (TimestampType column
+  * rendered as the trailing epoch-ns timestamp; default "time"),
+  * `insertlimit` (rows per flush = per POST body; default 1000),
+  * `transport` (`file`, the default, or `http`) and the http-only `url`,
+  * `httptimeoutms`, `database`, `rp`, `precision`, `username`,
+  * `password`. A column type the renderer cannot write is refused when
+  * the write is built, before any job runs.
   *
-  * Commit protocol (exactly-once visibility under task retries): each
-  * task attempt stages its flush files under
-  * `<series>/_staging/<writeId>/<attemptDir>/`, named deterministically
-  * `flush-<tag><partition>-<seq>.lp` (tag = epoch for streaming, short write-id for batch). Only the DRIVER-side
-  * commit — with the one committed attempt per partition Spark hands
-  * it — renames staged files into the series dir; abort (task- or
-  * job-level) deletes the staging dir. So a failed/speculative/zombie
-  * attempt's files never become visible (readers filter `_`-prefixed
-  * dirs), a streaming epoch replayed after a checkpoint race rewrites
-  * the SAME final file names (idempotent), and overwrite-truncate runs
-  * at commit time so a failed overwrite job leaves the old series
-  * intact. The rename is per flush file on the driver — O(rows /
-  * insertlimit), no row bytes — the same shape as a parquet commit
-  * protocol; on rename-as-copy object stores a production deployment
-  * would swap `writeFlush` for the actual HTTP POST and retire the file
-  * layer entirely.
+  * One commit protocol for batch writes and streaming epochs
+  * (exactly-once visibility under task retries, see [[InfluxWrite]]):
+  * each task attempt stages its flush files under
+  * `<series>/_staging/<writeId>[/e<epoch>]/<partition>-<task>/`, named
+  * deterministically `flush-<tag>-<partition>-<seq>.lp` (tag = `e<epoch>`
+  * for streaming, a short write id for batch). Only the DRIVER-side commit — with the
+  * one committed attempt per partition Spark hands it — truncates the
+  * series (overwrite, complete mode), then renames the staged files into
+  * the series dir; abort deletes the staging dir. So a
+  * failed/speculative/zombie attempt's files never become visible
+  * (readers filter `_`-prefixed dirs), a streaming epoch replayed after a
+  * checkpoint race rewrites the SAME final file names (idempotent), and a
+  * failed overwrite job or micro-batch leaves the old series intact. The
+  * rename is per flush file on the driver — O(rows / insertlimit), no row
+  * bytes — the same shape as a parquet commit protocol; the http
+  * transport POSTs each flush instead and has nothing to stage.
   */
 final class InfluxDataSource extends TableProvider with DataSourceRegister {
 
@@ -109,7 +116,7 @@ final class InfluxTable(tableSchema: StructType,
         httpUrl).forall(_.isEmpty) && opt("httptimeoutms").isEmpty),
     "graft-influx options url/httptimeoutms/database/rp/precision/" +
       "username/password apply to transport=http only")
-  private def httpEndpoint: Option[HttpEndpoint] = httpUrl.map(u =>
+  private val httpEndpoint: Option[HttpEndpoint] = httpUrl.map(u =>
     HttpEndpoint(u, httpTimeoutMs,
       httpUser.map(usr => (usr, httpPassword.getOrElse(""))),
       Seq("db" -> httpDatabase, "rp" -> httpRp,
@@ -130,9 +137,40 @@ final class InfluxTable(tableSchema: StructType,
     Set(TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
       TableCapability.TRUNCATE).asJava
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new InfluxWriteBuilder(info.schema(), seriesDir, measurement, timeCol,
-      insertLimit, truncateFirst = false, transport, httpEndpoint)
+  /** DSv2 truncate (batch overwrite, streaming complete mode) empties the
+    * series at commit — the reference's emptyseries flag
+    * (index.js:321-336). The http transport cannot truncate a remote
+    * database from here: rejected up front rather than silently appending.
+    */
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val schema = info.schema()
+    InfluxLineProtocol.requireWritable(schema)
+    new WriteBuilder with SupportsTruncate {
+      private var truncateFirst = false
+
+      override def truncate(): WriteBuilder = {
+        require(httpEndpoint.isEmpty,
+          "graft-influx transport=http is append-only; truncate the " +
+            "destination measurement server-side instead of mode(overwrite)")
+        truncateFirst = true
+        this
+      }
+
+      override def build(): Write = new Write {
+        override def supportedCustomMetrics(): Array[CustomMetric] =
+          Array(new InfluxRowsMetric)
+        override def toBatch: BatchWrite = newWrite()
+        override def toStreaming: streaming.StreamingWrite = newWrite()
+      }
+
+      // Driver-side: the file transport captures the session's hadoop
+      // conf for executor-side staging writes.
+      private def newWrite() = new InfluxWrite(schema, measurement, timeCol,
+        insertLimit, truncateFirst, httpEndpoint.fold[FlushTransport](
+          new FileFlushTransport(seriesDir, SinkFiles.captureConf()))(
+          new HttpFlushTransport(_)))
+    }
+  }
 }
 
 /** Everything the http transport needs to address the server: the write
@@ -143,103 +181,116 @@ final class InfluxTable(tableSchema: StructType,
 final case class HttpEndpoint(url: String, timeoutMs: Int,
     auth: Option[(String, String)], params: Seq[(String, String)])
 
-final class InfluxWriteBuilder(schema: StructType, seriesDir: String,
-    measurement: String, timeCol: String, insertLimit: Int,
-    truncateFirst: Boolean, transport: String = "file",
-    endpoint: Option[HttpEndpoint] = None)
-    extends WriteBuilder with SupportsTruncate {
-
-  /** DSv2 truncate (= SaveMode.Overwrite): empty the series, then append —
-    * the reference's emptyseries flag (index.js:321-336). The http
-    * transport cannot truncate a remote database from here: rejected up
-    * front rather than silently appending.
-    */
-  override def truncate(): WriteBuilder = {
-    require(transport != "http",
-      "graft-influx transport=http is append-only; truncate the " +
-        "destination measurement server-side instead of mode(overwrite)")
-    new InfluxWriteBuilder(schema, seriesDir, measurement, timeCol,
-      insertLimit, truncateFirst = true, transport, endpoint)
-  }
-
-  // Driver-side at factory creation: the file transport captures the
-  // session's hadoop conf for executor-side staging writes.
-  private def makeTransport(): FlushTransport = transport match {
-    case "http" => new HttpFlushTransport(endpoint.get)
-    case _ => new FileFlushTransport(SinkFiles.captureConf())
-  }
-
-  override def build(): Write = new Write {
-    override def supportedCustomMetrics(): Array[CustomMetric] =
-      Array(new InfluxRowsMetric)
-
-    override def toBatch: BatchWrite =
-      new InfluxBatchWrite(schema, seriesDir, measurement, timeCol,
-        insertLimit, truncateFirst, makeTransport())
-
-    /** Continuous migration: `writeStream.format("graft-influx")` in
-      * append mode — each micro-batch's tasks stage epoch-tagged flush
-      * files and the epoch commit publishes them. Final names are
-      * deterministic per (epoch, partition, flush-seq), so an epoch
-      * replayed after a failed checkpoint update republishes the same
-      * files instead of duplicating them.
-      */
-    override def toStreaming: streaming.StreamingWrite =
-      new InfluxStreamingWrite(schema, seriesDir, measurement, timeCol,
-        insertLimit, truncateFirst, makeTransport())
-  }
-}
-
 /** Where a rendered flush body lands — the one seam between the sandbox
-  * (file) and production (HTTP POST) forms of the sink. Runs ON THE
-  * EXECUTOR; implementations must be serializable.
+  * (file) and production (HTTP POST) forms of the sink. `deliver` and
+  * `discard` run ON THE EXECUTOR (implementations must be serializable);
+  * the staging steps run on the driver, called by [[InfluxWrite]].
   *
   *   - [[FileFlushTransport]] stages the body as a file under the task
   *     attempt's staging dir; visibility is deferred to the driver-side
-  *     commit rename (exactly-once, see `InfluxCommitProtocol`).
+  *     `publish` (exactly-once).
   *   - [[HttpFlushTransport]] POSTs the body immediately (the reference's
-  *     `writePoints` POST, index.js:242-252). Delivery is AT-LEAST-ONCE
-  *     under task retries/speculation — safe against InfluxDB because a
-  *     line-protocol point is an upsert keyed by (measurement, tagset,
-  *     timestamp): a replayed flush rewrites identical points, so the
-  *     destination state equals once-delivered state. Append-only:
-  *     overwrite mode requires a destination-side truncate and is
-  *     rejected up front.
+  *     `writePoints` POST, index.js:242-252) and stages nothing, so every
+  *     other step is a no-op. Delivery is AT-LEAST-ONCE under task
+  *     retries/speculation — safe against InfluxDB because a line-protocol
+  *     point is an upsert keyed by (measurement, tagset, timestamp): a
+  *     replayed flush rewrites identical points, so the destination state
+  *     equals once-delivered state. Append-only: overwrite mode requires a
+  *     destination-side truncate and is rejected up front.
   */
 sealed trait FlushTransport extends Serializable {
-  /** Deliver one flush body. `attemptDir`/`fileName` name the staged file
-    * for the file transport; the http transport ignores them.
+  /** Deliver one flush body; `attempt` (`<scope>/<partition>-<task>`,
+    * scope = the write id, plus the epoch when streaming) and `fileName`
+    * name the staged file.
     */
-  def deliver(attemptDir: String, fileName: String, body: Array[Byte]): Unit
+  def deliver(attempt: String, fileName: String, body: Array[Byte]): Unit
 
-  /** Whether delivered flushes sit STAGED pending the driver commit
-    * (file) or are already durable at the destination (http).
+  /** Best-effort removal of what was staged under `attempt`: a task
+    * attempt (executor), or a write's or an epoch's scope (driver).
     */
-  def staged: Boolean
+  def discard(attempt: String): Unit
 
-  /** Best-effort cleanup of an aborted attempt's deliveries. */
-  def abortAttempt(attemptDir: String): Unit
+  /** Driver, at factory creation: sweep staging left by a CRASHED earlier
+    * write, whose driver died between task completion and commit/abort.
+    */
+  def sweepStaging(): Unit
+
+  /** Driver, at commit: empty the published series, keeping the staging
+    * the commit is about to publish.
+    */
+  def truncatePublished(): Unit
+
+  /** Driver, at commit: make the committed attempts' flushes visible. */
+  def publish(messages: Array[WriterCommitMessage]): Unit
 }
 
-final class FileFlushTransport(conf: Option[SinkFiles.SerializableHadoopConf])
-    extends FlushTransport {
+/** Stages flush files under `<seriesDir>/_staging/` and publishes them by
+  * rename. One writer per series at a time — the assumption every file
+  * commit protocol makes: `sweepStaging` clears the whole staging root.
+  * Readers never see staging, but orphans are real storage on the object
+  * stores the sink targets.
+  */
+final class FileFlushTransport(seriesDir: String,
+    conf: Option[SerializableConfiguration]) extends FlushTransport {
 
-  override def deliver(attemptDir: String, fileName: String,
+  private def staging = s"$seriesDir/_staging"
+
+  private def fs(p: Path) = SinkFiles.fileSystem(p, conf)
+
+  override def deliver(attempt: String, fileName: String,
       body: Array[Byte]): Unit = {
-    val p = new Path(s"$attemptDir/$fileName")
-    val out = SinkFiles.fileSystem(p, conf).create(p, false)
+    val p = new Path(s"$staging/$attempt/$fileName")
+    val out = fs(p).create(p, false)
     try out.write(body)
     finally out.close()
   }
 
-  override def staged: Boolean = true
-
-  override def abortAttempt(attemptDir: String): Unit =
+  // Best-effort: an abort must not mask the failure that triggered it,
+  // and leftovers are swept by the next write's `sweepStaging`.
+  private def remove(dir: String): Unit =
     try {
-      val p = new Path(attemptDir)
-      val fs = SinkFiles.fileSystem(p, conf)
-      if (fs.exists(p)) fs.delete(p, true)
+      val p = new Path(dir)
+      val f = fs(p)
+      if (f.exists(p)) f.delete(p, true)
     } catch { case _: java.io.IOException => () }
+
+  override def discard(attempt: String): Unit = remove(s"$staging/$attempt")
+
+  override def sweepStaging(): Unit = remove(staging)
+
+  override def truncatePublished(): Unit = {
+    val p = new Path(seriesDir)
+    val f = fs(p)
+    if (f.exists(p))
+      f.listStatus(p).foreach { st =>
+        if (st.getPath.getName != "_staging") f.delete(st.getPath, true)
+      }
+  }
+
+  /** Move each staged file of each committed attempt to
+    * `<seriesDir>/<fileName>`, overwriting a previous copy (epoch replay,
+    * retried commit). Nulls are skipped partitions.
+    */
+  override def publish(messages: Array[WriterCommitMessage]): Unit = {
+    val commits = messages.toSeq.flatMap {
+      case c: InfluxCommit => Some(c)
+      case null => None
+      case other =>
+        throw new IllegalStateException(s"unexpected commit message: $other")
+    }
+    if (commits.nonEmpty) {
+      val root = new Path(seriesDir)
+      val f = fs(root)
+      f.mkdirs(root)
+      for (c <- commits; name <- c.fileNames) {
+        val src = new Path(s"$staging/${c.attempt}/$name")
+        val dst = new Path(s"$seriesDir/$name")
+        if (f.exists(dst)) f.delete(dst, false)
+        if (!f.rename(src, dst))
+          throw new java.io.IOException(s"commit rename failed: $src -> $dst")
+      }
+    }
+  }
 }
 
 /** POSTs each flush to `url`. CAVEAT on the at-least-once safety claim:
@@ -280,7 +331,7 @@ final class HttpFlushTransport(endpoint: HttpEndpoint)
     * serialize to executors, and one connection per insertLimit-sized
     * body matches the reference's `{pool: false}` (index.js:242).
     */
-  override def deliver(attemptDir: String, fileName: String,
+  override def deliver(attempt: String, fileName: String,
       body: Array[Byte]): Unit = {
     val conn = new java.net.URI(effectiveUrl).toURL.openConnection()
       .asInstanceOf[java.net.HttpURLConnection]
@@ -323,205 +374,109 @@ final class HttpFlushTransport(endpoint: HttpEndpoint)
     }.filter(_.nonEmpty)
     catch { case _: java.io.IOException => None }
 
-  override def staged: Boolean = false
-  override def abortAttempt(attemptDir: String): Unit = ()
+  override def discard(attempt: String): Unit = ()
+  override def sweepStaging(): Unit = ()
+  override def truncatePublished(): Unit = ()
+  override def publish(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-/** Staging-dir layout + driver-side publish shared by the batch and
-  * streaming commit paths.
+/** The one graft-influx write, for batch jobs and streaming epochs alike.
+  * Factory creation sweeps stale staging (Spark creates a streaming
+  * factory per micro-batch, so this runs per epoch too). Commit
+  * truncates an overwrite or complete-mode series, publishes the
+  * committed attempts, then sweeps the staging of what it committed,
+  * which also catches failed/zombie attempts that never sent a message.
+  * Truncating at commit, never at start, means a failed job or
+  * micro-batch leaves the series as it was. An epoch commits and aborts
+  * through the same body, scoped to its own staging: under continuous
+  * processing one factory serves every epoch, and later epochs' attempts
+  * are staging while an earlier one commits.
   */
-private[graft] object InfluxCommitProtocol {
+final class InfluxWrite(schema: StructType, measurement: String,
+    timeCol: String, insertLimit: Int, truncateFirst: Boolean,
+    transport: FlushTransport)
+    extends BatchWrite with streaming.StreamingWrite {
 
-  def stagingRoot(seriesDir: String): String = s"$seriesDir/_staging"
+  private val factory = InfluxWriterFactory(schema, measurement, timeCol,
+    insertLimit, transport, java.util.UUID.randomUUID().toString)
 
-  def stagingDir(seriesDir: String, writeId: String): String =
-    s"${stagingRoot(seriesDir)}/$writeId"
+  // Both interfaces default to the coordinator (one committed attempt per
+  // partition); Scala needs the inherited pair resolved here.
+  override def useCommitCoordinator(): Boolean = true
 
-  /** Driver-side publish shared by batch and streaming commits: move
-    * each staged file of each committed attempt to
-    * `<seriesDir>/<finalName>`, overwriting any previous copy (epoch
-    * replay / retried commit), then drop the attempt dir. Callers add
-    * their own wider cleanup (batch: the whole write's staging dir).
-    */
-  /** The staged (file-transport) commits among `messages`: nulls are
-    * skipped partitions, empty attemptDirs are http-transport attempts
-    * (already durable, nothing local to act on), anything else is a bug.
-    */
-  def stagedCommits(messages: Array[WriterCommitMessage]): Seq[InfluxCommit] =
-    messages.toSeq.flatMap {
-      case c: InfluxCommit => if (c.attemptDir.nonEmpty) Some(c) else None
-      case null => None
-      case other =>
-        throw new IllegalStateException(s"unexpected commit message: $other")
-    }
-
-  def publishAttempts(seriesDir: String,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val staged = stagedCommits(messages)
-    if (staged.isEmpty) return // pure-http write: no local series dir at all
-    val root = new Path(seriesDir)
-    val fs = SinkFiles.fileSystem(root)
-    fs.mkdirs(root)
-    staged.foreach { c =>
-      c.fileNames.foreach { name =>
-        val src = new Path(s"${c.attemptDir}/$name")
-        val dst = new Path(s"$seriesDir/$name")
-        if (fs.exists(dst)) fs.delete(dst, false)
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"commit rename failed: $src -> $dst")
-      }
-      SinkFiles.deleteRecursive(c.attemptDir)
-    }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    transport.sweepStaging()
+    factory
   }
-
-  /** Batch commit for the FILE transport: publish, then drop the write's
-    * whole staging dir (sweeping failed/zombie attempts that never sent a
-    * message). `InfluxBatchWrite.commit` inlines the transport.staged
-    * guard around the sweep; this composed form serves direct
-    * protocol-level callers (tests, recovery tooling).
-    */
-  def publish(seriesDir: String, writeId: String,
-      messages: Array[WriterCommitMessage]): Unit = {
-    publishAttempts(seriesDir, messages)
-    SinkFiles.deleteRecursive(stagingDir(seriesDir, writeId))
-  }
-
-  /** Truncate the published series contents without touching `_staging`
-    * (a commit-time overwrite must not delete the files it is about to
-    * publish).
-    */
-  def truncatePublished(seriesDir: String): Unit = {
-    val p = new Path(seriesDir)
-    val fs = SinkFiles.fileSystem(p)
-    if (fs.exists(p)) {
-      fs.listStatus(p).foreach { st =>
-        if (st.getPath.getName != "_staging") fs.delete(st.getPath, true)
-      }
-    }
-  }
-}
-
-final class InfluxStreamingWrite(schema: StructType, seriesDir: String,
-    measurement: String, timeCol: String, insertLimit: Int,
-    truncateFirst: Boolean,
-    // Default evaluated AT CALL TIME on the driver, so a direct
-    // construction (bypassing InfluxWriteBuilder) still captures the
-    // session's hadoop conf for executor-side staging writes.
-    transport: FlushTransport = new FileFlushTransport(SinkFiles.captureConf()))
-    extends streaming.StreamingWrite {
-
-  // One staging namespace per query run; stale staging from a crashed
-  // previous run is cleared at start (no concurrent writers per series —
-  // the same assumption every file commit protocol makes).
-  private val writeId = java.util.UUID.randomUUID().toString
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): streaming.StreamingDataWriterFactory = {
-    // Driver-side at query start (called once per run, before epoch 0).
-    // File transport only — the http transport has no local series dir.
-    if (transport.staged) {
-      if (truncateFirst) SinkFiles.deleteRecursive(seriesDir)
-      else SinkFiles.deleteRecursive(InfluxCommitProtocol.stagingRoot(seriesDir))
-    }
-    // Final names are epoch-keyed with NO writeId: epoch numbering is
-    // monotonic under one checkpoint across restarts, so a restart that
-    // replays the one epoch whose sink commit raced the offset-WAL update
-    // overwrites that epoch's files instead of duplicating them.
-    InfluxStreamingWriterFactory(schema, seriesDir, measurement, timeCol,
-      insertLimit, transport, writeId)
+    transport.sweepStaging()
+    factory
   }
 
-  override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit =
-    // Publish only this epoch's attempts; later epochs of the same run
-    // reuse the staging namespace, so drop attempt dirs — not the root.
-    InfluxCommitProtocol.publishAttempts(seriesDir, messages)
+  private def commitScope(scope: String,
+      messages: Array[WriterCommitMessage]): Unit = {
+    if (truncateFirst) transport.truncatePublished()
+    transport.publish(messages)
+    transport.discard(scope)
+  }
 
-  override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit =
-    // stagedCommits skips http-transport messages (empty attemptDir —
-    // deleteRecursive("") would throw and mask the task failure that
-    // triggered the abort) and null skipped partitions.
-    InfluxCommitProtocol.stagedCommits(messages)
-      .foreach(c => SinkFiles.deleteRecursive(c.attemptDir))
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    commitScope(factory.writeId, messages)
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    transport.discard(factory.writeId)
+
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    commitScope(factory.epochScope(epochId), messages)
+
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    transport.discard(factory.epochScope(epochId))
 }
 
-final case class InfluxStreamingWriterFactory(schema: StructType,
-    seriesDir: String, measurement: String, timeCol: String,
-    insertLimit: Int, transport: FlushTransport,
-    writeId: String) extends streaming.StreamingDataWriterFactory {
+/** One factory for both paths; only the flush-name tag and the staging
+  * scope differ. Batch names carry a short write id, so successive
+  * appends don't collide. Streaming names carry the epoch and NO write
+  * id: epoch numbering is monotonic under one checkpoint across
+  * restarts, so a restart that replays the epoch whose sink commit raced
+  * the offset-WAL update overwrites that epoch's files instead of
+  * duplicating them. Retries within one write or epoch regenerate
+  * identical names either way.
+  */
+final case class InfluxWriterFactory(schema: StructType, measurement: String,
+    timeCol: String, insertLimit: Int, transport: FlushTransport,
+    writeId: String)
+    extends DataWriterFactory with streaming.StreamingDataWriterFactory {
+
+  /** Where epoch `epochId`'s attempts stage, inside the write's own. */
+  def epochScope(epochId: Long): String = s"$writeId/e$epochId"
+
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    writer(writeId, writeId.take(8), partitionId, taskId)
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new InfluxDataWriter(schema, seriesDir, measurement, timeCol,
-      insertLimit, transport, partitionId, taskId, writeId,
-      nameTag = s"e$epochId-")
+    writer(epochScope(epochId), s"e$epochId", partitionId, taskId)
+
+  private def writer(scope: String, tag: String, partitionId: Int, taskId: Long) =
+    new InfluxDataWriter(schema, measurement, timeCol, insertLimit, transport,
+      attempt = s"$scope/$partitionId-$taskId",
+      namePrefix = s"flush-$tag-$partitionId-")
 }
 
-/** Commit message: the attempt's staging dir plus the deterministic
-  * final names of the flush files it wrote (rows for ledger/debug).
+/** Commit message: the attempt's staging key (`<scope>/<attempt key>`)
+  * plus the deterministic final names of the flush files it wrote (rows
+  * for debugging).
   */
-final case class InfluxCommit(attemptDir: String, fileNames: Seq[String],
+final case class InfluxCommit(attempt: String, fileNames: Seq[String],
     rows: Long) extends WriterCommitMessage
-
-final class InfluxBatchWrite(schema: StructType, seriesDir: String,
-    measurement: String, timeCol: String, insertLimit: Int,
-    truncateFirst: Boolean,
-    // Call-time default: direct constructions capture the driver conf too.
-    transport: FlushTransport = new FileFlushTransport(SinkFiles.captureConf()))
-    extends BatchWrite {
-
-  private val writeId = java.util.UUID.randomUUID().toString
-
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    // Driver-side, before any task launches: sweep staging left by a
-    // CRASHED previous write (its driver died between task completion
-    // and commit/abort, so nothing ever cleaned its writeId dir) —
-    // same single-writer-per-series assumption the streaming path and
-    // every file commit protocol make. Readers never see staging, but
-    // orphans are real storage on the object stores the sink targets.
-    if (transport.staged)
-      SinkFiles.deleteRecursive(InfluxCommitProtocol.stagingRoot(seriesDir))
-    InfluxWriterFactory(schema, seriesDir, measurement, timeCol, insertLimit,
-      transport, writeId)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // Overwrite semantics resolve HERE, not at job start: a failed
-    // overwrite leaves the previous series contents untouched.
-    if (truncateFirst) InfluxCommitProtocol.truncatePublished(seriesDir)
-    InfluxCommitProtocol.publishAttempts(seriesDir, messages)
-    // Sweep the write's staging namespace (catches failed/zombie attempts
-    // that never sent a message). File transport only: an http write has
-    // no local footprint — and `seriesDir` may be a placeholder.
-    if (transport.staged)
-      SinkFiles.deleteRecursive(InfluxCommitProtocol.stagingDir(seriesDir, writeId))
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    if (transport.staged)
-      SinkFiles.deleteRecursive(InfluxCommitProtocol.stagingDir(seriesDir, writeId))
-}
-
-final case class InfluxWriterFactory(schema: StructType, seriesDir: String,
-    measurement: String, timeCol: String, insertLimit: Int,
-    transport: FlushTransport,
-    writeId: String) extends DataWriterFactory {
-
-  // Batch final names carry a short writeId so successive APPEND writes
-  // don't collide, while retries within one write (same writeId) still
-  // regenerate identical names.
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new InfluxDataWriter(schema, seriesDir, measurement, timeCol, insertLimit,
-      transport, partitionId, taskId, writeId, nameTag = writeId.take(8) + "-")
-}
 
 /** `graft.pipeline.Sink` adapter over the DSv2 writer, so
   * `Pipeline.migrate` (the reference's whole-catalog orchestration)
   * composes with the `format("graft-influx")` path unchanged: append maps
-  * to a DSv2 append, truncate to the recursive series delete the DSv2
-  * truncate also uses.
+  * to a DSv2 append, truncate to a recursive delete of the series dir
+  * (no write is in flight when the pipeline truncates).
   */
 final class InfluxDsv2Sink(baseDir: String, insertLimit: Int = 1000,
     timeCol: String = "time") extends Sink {
@@ -550,59 +505,47 @@ object InfluxRowsMetric {
   val Description = "graft-influx rows written"
 }
 
-/** Runs ON THE EXECUTOR: buffers rendered lines and STAGES one flush file
-  * per `insertLimit` rows — the moral equivalent of one POST body
-  * (reference index.js:209-232 re-chunks pages into insertlimit-sized
-  * writePoints calls). Files land under the attempt's staging dir with
-  * deterministic final names `flush-<tag><partition>-<seq>.lp` (tag = epoch for streaming, short write-id for batch);
-  * only the driver-side commit makes them visible, and `abort` removes
-  * the attempt dir, so retried/speculative attempts cannot leave
-  * duplicates behind.
+/** Runs ON THE EXECUTOR: buffers rendered lines and delivers one flush
+  * per `insertLimit` rows — one POST body (reference index.js:209-232
+  * re-chunks pages into insertlimit-sized writePoints calls). The file
+  * transport stages each flush under `attempt` with a deterministic final
+  * name `<namePrefix><seq>.lp`; only the driver-side commit makes them
+  * visible, and `abort` discards the attempt, so retried/speculative
+  * attempts cannot leave duplicates behind.
   */
-final class InfluxDataWriter(schema: StructType, seriesDir: String,
-    measurement: String, timeCol: String, insertLimit: Int,
-    transport: FlushTransport, partitionId: Int,
-    taskId: Long, writeId: String, nameTag: String = "")
+final class InfluxDataWriter(schema: StructType, measurement: String,
+    timeCol: String, insertLimit: Int, transport: FlushTransport,
+    attempt: String, namePrefix: String)
     extends DataWriter[InternalRow] {
 
-  private val attemptDir =
-    s"${InfluxCommitProtocol.stagingDir(seriesDir, writeId)}/$nameTag$partitionId-$taskId"
-
+  private val render = InfluxLineProtocol.renderInternal(measurement, schema, timeCol)
   private val buf = new ArrayBuffer[String](insertLimit)
-  private var flushSeq = 0
   private val names = new ArrayBuffer[String]()
   private var rows = 0L
 
   override def write(row: InternalRow): Unit = {
-    buf += InfluxLineProtocol.renderInternal(measurement, schema, timeCol, row)
+    buf += render(row)
     rows += 1
     if (buf.size >= insertLimit) flush()
   }
 
   private def flush(): Unit = if (buf.nonEmpty) {
-    val name = s"flush-$nameTag$partitionId-$flushSeq.lp"
-    flushSeq += 1
-    transport.deliver(attemptDir, name,
+    val name = s"$namePrefix${names.size}.lp"
+    transport.deliver(attempt, name,
       buf.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    if (transport.staged) names += name
+    names += name
     buf.clear()
   }
 
   override def commit(): WriterCommitMessage = {
     flush()
-    // http transport: already durable at the destination — nothing staged
-    // for the driver to publish (empty attemptDir marks that).
-    if (transport.staged) InfluxCommit(attemptDir, names.toSeq, rows)
-    else InfluxCommit("", Nil, rows)
+    InfluxCommit(attempt, names.toSeq, rows)
   }
 
   override def abort(): Unit = {
     buf.clear()
-    // Best-effort: remove this attempt's staged files (job-level abort
-    // sweeps the whole staging dir for attempts that never got here).
-    // The file transport carries the captured driver conf — executors
-    // have no active session; http has nothing to clean.
-    transport.abortAttempt(attemptDir)
+    // the job-level abort sweeps attempts that never got here
+    transport.discard(attempt)
   }
 
   override def currentMetricsValues(): Array[CustomTaskMetric] =

@@ -14,8 +14,10 @@ import graft.sources.Catalog
   * (index.js:25-54) minus the falsy-merge quirk (SURVEY.md §4.4.1: the
   * reference ignores `false`/`0` overrides; a typed config can't).
   *
-  *   - `insertLimit` (index.js:51, default 100): sink flush batch size;
-  *     only meaningful for row-protocol sinks.
+  *   - `insertLimit` (index.js:51, default 100): the reference's sink
+  *     flush batch size. Nothing here reads it: each sink takes its own
+  *     (`InfluxDsv2Sink(baseDir, insertLimit)`, `MicroBatchSink`). Kept
+  *     because benchmark code constructs the field.
   *   - `limit` (index.js:50, default 2 — the code value, not the README's
   *     4; SURVEY.md §4.4.2): bounded cross-table concurrency.
   *   - `emptySeries` (index.js:52, default false): truncate destination

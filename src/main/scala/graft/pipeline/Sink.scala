@@ -3,6 +3,9 @@ package graft.pipeline
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Destination abstraction for the migration pipeline — the Spark face of
   * the reference's InfluxDB client surface: append a table's rows to a
@@ -83,39 +86,22 @@ final class ParquetSink(baseDir: String, partitionCols: Seq[String] = Nil)
   */
 object SinkFiles {
 
-  /** Serializable carrier for the driver's Hadoop configuration, so
+  /** The driver's Hadoop conf wrapped for shipping to executors, so
     * executor-side filesystem work (graft-influx flushes) sees the
     * session's `spark.hadoop.*` settings — object-store credentials,
-    * endpoints — instead of a bare `new Configuration()`. (Spark has its
-    * own SerializableConfiguration, but it is `private[spark]`.)
+    * endpoints — instead of a bare `new Configuration()`. None when no
+    * session is active at capture time (plain-JVM library use).
     */
-  final class SerializableHadoopConf(@transient private var conf: Configuration)
-      extends Serializable {
-    def value: Configuration = conf
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      conf.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      conf = new Configuration(false)
-      conf.readFields(in)
-    }
-  }
-
-  /** The driver's Hadoop conf wrapped for shipping to executors; None when
-    * no session is active at capture time (plain-JVM library use).
-    */
-  def captureConf(): Option[SerializableHadoopConf] =
+  def captureConf(): Option[SerializableConfiguration] =
     SparkSession.getActiveSession
-      .map(s => new SerializableHadoopConf(s.sparkContext.hadoopConfiguration))
+      .map(s => new SerializableConfiguration(s.sparkContext.hadoopConfiguration))
 
   /** Resolve the filesystem for `p`: a conf captured on the driver if the
     * caller shipped one, else the active session's conf (driver side),
     * else a default conf (last resort — loses `spark.hadoop.*` settings).
     */
   def fileSystem(p: Path,
-      captured: Option[SerializableHadoopConf] = None): org.apache.hadoop.fs.FileSystem =
+      captured: Option[SerializableConfiguration] = None): org.apache.hadoop.fs.FileSystem =
     p.getFileSystem(captured.map(_.value)
       .orElse(SparkSession.getActiveSession.map(_.sparkContext.hadoopConfiguration))
       .getOrElse(new Configuration()))
@@ -242,38 +228,53 @@ object InfluxLineProtocol {
       schema.fieldNames.indexOf(timeCol))
   }
 
-  /** Render one InternalRow (the DSv2 writer path — no Row conversion in
-    * the per-row hot loop): internal values are mapped to the JVM types
-    * `renderField` speaks; TimestampType's internal epoch-µs long becomes
-    * full-precision ns.
+  /** The column types the DSv2 writer renders, each with its read from
+    * an InternalRow to the JVM value `renderField` speaks (TimestampType's
+    * internal epoch-µs long becomes a full-precision Timestamp). One list
+    * for `renderInternal` and `requireWritable`, so the write-build check
+    * and the per-row render cannot disagree. NullType values are always
+    * null, so its columns are skipped like any null field.
     */
-  def renderInternal(measurement: String,
-      schema: org.apache.spark.sql.types.StructType, timeCol: String,
-      row: org.apache.spark.sql.catalyst.InternalRow): String = {
-    import org.apache.spark.sql.types._
-    def jvm(i: Int): Any =
-      if (row.isNullAt(i)) null
-      else schema(i).dataType match {
-        case LongType => row.getLong(i)
-        case IntegerType => row.getInt(i)
-        case DoubleType => row.getDouble(i)
-        case FloatType => row.getFloat(i)
-        case BooleanType => row.getBoolean(i)
-        case StringType => row.getUTF8String(i).toString
-        case TimestampType =>
-          val us = row.getLong(i)
-          val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-          t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-          t
-        case ShortType => row.getShort(i).toLong
-        case ByteType => row.getByte(i).toLong
-        case DateType => row.getInt(i).toLong
-        case dt: DecimalType => row.getDecimal(i, dt.precision, dt.scale).toDouble
-        case dt =>
-          throw new IllegalArgumentException(
-            s"graft-influx cannot render column '${schema(i).name}' of type $dt")
-      }
-    assemble(measurement, schema.length, schema.fieldNames(_), jvm,
-      schema.fieldNames.indexOf(timeCol))
+  private val internalValue: PartialFunction[DataType, (InternalRow, Int) => Any] = {
+    case LongType => _.getLong(_)
+    case IntegerType => _.getInt(_)
+    case DoubleType => _.getDouble(_)
+    case FloatType => _.getFloat(_)
+    case BooleanType => _.getBoolean(_)
+    case StringType => _.getUTF8String(_).toString
+    case TimestampType => (row, i) =>
+      val us = row.getLong(i)
+      val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
+      t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+      t
+    case ShortType => _.getShort(_).toLong
+    case ByteType => _.getByte(_).toLong
+    case DateType => _.getInt(_).toLong
+    case dt: DecimalType => _.getDecimal(_, dt.precision, dt.scale).toDouble
+    case NullType => (_, _) => null
+  }
+
+  /** Refuse, before any job runs, a schema with a column the DSv2 writer
+    * cannot render (a failure per row inside a task would come after
+    * earlier flushes were already delivered).
+    */
+  def requireWritable(schema: StructType): Unit =
+    schema.fields.find(f => !internalValue.isDefinedAt(f.dataType)).foreach { f =>
+      throw new IllegalArgumentException(
+        s"graft-influx cannot render column '${f.name}' of type ${f.dataType}")
+    }
+
+  /** The renderer for InternalRows of `schema` (the DSv2 writer path — no
+    * Row conversion in the per-row hot loop; each column's read and the
+    * field names are resolved once, not per row). The schema has passed
+    * `requireWritable`.
+    */
+  def renderInternal(measurement: String, schema: StructType,
+      timeCol: String): InternalRow => String = {
+    val names = schema.fieldNames
+    val reads = schema.fields.map(f => internalValue(f.dataType))
+    val timeIdx = names.indexOf(timeCol)
+    row => assemble(measurement, names.length, names(_),
+      i => if (row.isNullAt(i)) null else reads(i)(row, i), timeIdx)
   }
 }

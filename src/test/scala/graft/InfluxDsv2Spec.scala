@@ -3,7 +3,11 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import graft.pipeline.{FileFlushTransport, InfluxWrite}
 
 /** DSv2 line-protocol sink (SURVEY §7.3(c)): append/truncate semantics
   * through the writer API, flush-file batching, and spec escaping.
@@ -23,6 +27,25 @@ class InfluxDsv2Spec extends SparkSpec {
 
   private def lines(dir: String): Seq[String] =
     spark.read.text(s"$dir/m").collect().map(_.getString(0)).toSeq.sorted
+
+  /** What a write left under the series' staging root (the root itself
+    * may remain as an empty dir — readers skip `_`-prefixed paths).
+    */
+  private def leftInStaging(seriesDir: String): Seq[java.io.File] =
+    Option(new java.io.File(s"$seriesDir/_staging").listFiles())
+      .map(_.toSeq).getOrElse(Nil)
+
+  /** The real graft-influx write over the file transport, for driving
+    * task attempts and commits by hand.
+    */
+  private def fileWrite(seriesDir: String, insertLimit: Int) =
+    new InfluxWrite(StructType(Seq(StructField("id", LongType),
+        StructField("name", StringType))), "m", "time", insertLimit,
+      truncateFirst = false, new FileFlushTransport(seriesDir, None))
+
+  private val onePartition = new PhysicalWriteInfo {
+    override def numPartitions(): Int = 1
+  }
 
   test("append mode appends; overwrite mode truncates to one copy") {
     val dir = Files.createTempDirectory("graft_dsv2_").toString
@@ -132,17 +155,13 @@ class InfluxDsv2Spec extends SparkSpec {
   test("zombie task attempt leaves no visible lines (commit publishes only the committed attempt)") {
     import graft.pipeline._
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
     val dir = Files.createTempDirectory("graft_dsv2_retry_").toString
     val seriesDir = s"$dir/m"
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("name", StringType)))
-    val writeId = "w1"
+    val write = fileWrite(seriesDir, insertLimit = 2)
+    val factory = write.createBatchWriterFactory(onePartition)
     def runAttempt(taskId: Long, tag: String): InfluxCommit = {
-      val w = new InfluxDataWriter(schema, seriesDir, "m", "time", 2,
-        new FileFlushTransport(None), partitionId = 0, taskId = taskId,
-        writeId = writeId)
+      val w = factory.createWriter(0, taskId)
       (1 to 5).foreach(i => w.write(InternalRow(i.toLong,
         UTF8String.fromString(s"$tag$i"))))
       w.commit().asInstanceOf[InfluxCommit]
@@ -153,40 +172,37 @@ class InfluxDsv2Spec extends SparkSpec {
     assert(zombie.fileNames.size === 3)
     // Attempt 2 (the retry Spark actually commits) stages the same rows.
     val committed = runAttempt(101L, "row")
-    // Driver-side publish with ONLY the committed attempt's message.
-    InfluxCommitProtocol.publish(seriesDir, writeId, Array(committed))
+    // Driver-side commit with ONLY the committed attempt's message.
+    write.commit(Array[WriterCommitMessage](committed))
     val got = lines(dir)
     assert(got.size === 5, got.mkString("|"))
     assert(got.forall(_.contains("name=\"row")), got.mkString("|"))
     // the zombie's staged files are swept with the write's staging dir
-    assert(!new java.io.File(s"$seriesDir/_staging/$writeId").exists())
+    assert(!new java.io.File(s"$seriesDir/_staging/${zombie.attempt}").exists())
+    assert(leftInStaging(seriesDir).isEmpty, leftInStaging(seriesDir).mkString(","))
   }
 
   test("epoch replay republishes the same file names (no duplicates)") {
     import graft.pipeline._
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
     val dir = Files.createTempDirectory("graft_dsv2_replay_").toString
     val seriesDir = s"$dir/m"
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("name", StringType)))
-    def stageEpoch(taskId: Long): InfluxCommit = {
-      val w = new InfluxDataWriter(schema, seriesDir, "m", "time", 10,
-        new FileFlushTransport(None), partitionId = 0, taskId = taskId,
-        writeId = "w1", nameTag = "e7-")
+    // One run of the query: epoch 7's one task stages 4 rows and the
+    // epoch commits.
+    def runEpoch7(taskId: Long): Unit = {
+      val write = fileWrite(seriesDir, insertLimit = 10)
+      val w = write.createStreamingWriterFactory(onePartition)
+        .createWriter(0, taskId, 7L)
       (1 to 4).foreach(i => w.write(InternalRow(i.toLong,
         UTF8String.fromString(s"v$i"))))
-      w.commit().asInstanceOf[InfluxCommit]
+      write.commit(7L, Array[WriterCommitMessage](w.commit()))
     }
-    val sw = new InfluxStreamingWrite(schema, seriesDir, "m", "time", 10,
-      truncateFirst = false)
-    sw.commit(7L, Array[org.apache.spark.sql.connector.write.WriterCommitMessage](
-      stageEpoch(1L)))
+    runEpoch7(1L)
     assert(lines(dir).size === 4)
-    // The checkpoint update raced a failure: epoch 7 re-runs end to end.
-    sw.commit(7L, Array[org.apache.spark.sql.connector.write.WriterCommitMessage](
-      stageEpoch(2L)))
+    // The checkpoint update raced a failure: the restarted query (a new
+    // write) re-runs epoch 7 end to end.
+    runEpoch7(2L)
     assert(lines(dir).size === 4) // same final names overwritten, not added
   }
 
@@ -211,10 +227,135 @@ class InfluxDsv2Spec extends SparkSpec {
     assert(lines(dir).size === 5)
   }
 
+  test("complete mode: a failed micro-batch leaves the last published output; " +
+      "a successful one leaves only its own complete output") {
+    import spark.implicits._
+    val srcDir = Files.createTempDirectory("graft_dsv2_cm_src_").toString
+    val dir = Files.createTempDirectory("graft_dsv2_cm_").toString
+    def addFile(name: String, rows: Seq[(String, Long)]): Unit =
+      Files.write(java.nio.file.Paths.get(srcDir, name), rows
+        .map { case (k, v) => s"""{"k":"$k","v":$v}""" }
+        .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val boom = udf((v: Long) => {
+      if (v == 666L && InfluxDsv2Spec.failing.get())
+        throw new RuntimeException("boom")
+      true
+    })
+    def run(): Unit = {
+      val q = spark.readStream.schema("k STRING, v BIGINT").json(srcDir)
+        .filter(boom($"v"))
+        .groupBy($"k").agg(sum($"v").as("total"))
+        .writeStream.format("graft-influx")
+        .option("path", dir).option("measurement", "m")
+        .option("checkpointLocation", s"$dir/_ckpt")
+        .outputMode("complete")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally q.stop()
+    }
+    addFile("a.json", Seq("a" -> 1L, "a" -> 2L, "b" -> 10L))
+    run() // epoch 0
+    val epoch0 = Seq("m k=\"a\",total=3i", "m k=\"b\",total=10i")
+    assert(lines(dir) === epoch0)
+    addFile("b.json", Seq("a" -> 4L, "b" -> 666L))
+    InfluxDsv2Spec.failing.set(true)
+    try intercept[Exception](run()) // epoch 1's task throws
+    finally InfluxDsv2Spec.failing.set(false)
+    assert(lines(dir) === epoch0)
+    run() // epoch 1 replays from the checkpoint and succeeds
+    assert(lines(dir) === Seq("m k=\"a\",total=7i", "m k=\"b\",total=676i"))
+  }
+
+  test("continuous trigger: an epoch commit publishes its own staging and " +
+      "leaves later epochs' in-flight attempts alone") {
+    val dir = Files.createTempDirectory("graft_dsv2_cont_").toString
+    def epochs(): Set[String] =
+      Option(new java.io.File(s"$dir/m").listFiles()).map(_.toSeq).getOrElse(Nil)
+        .map(_.getName).filter(_.endsWith(".lp")).map(_.split("-")(1)).toSet
+    val q = spark.readStream.format("rate").option("rowsPerSecond", "100")
+      .option("numPartitions", "1").load()
+      .writeStream.format("graft-influx")
+      .option("path", dir).option("measurement", "m")
+      .option("timecol", "timestamp").option("insertlimit", "20")
+      .option("checkpointLocation", s"$dir/_ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.Continuous("200 milliseconds"))
+      .start()
+    try {
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (epochs().size < 3 && q.exception.isEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(100)
+      assert(q.exception.isEmpty, q.exception)
+    } finally q.stop()
+    assert(epochs().size >= 3, epochs())
+    // every published line is one source row, published once
+    val ls = lines(dir)
+    assert(ls.nonEmpty && ls.distinct.size === ls.size)
+  }
+
+  test("a column type the renderer cannot write is refused when the write " +
+      "is built: no job starts, no POST is sent; a NullType column writes") {
+    val frame = src().withColumn("ntz", col("time").cast("timestamp_ntz"))
+    def refused(e: Exception): Unit =
+      assert(e.getMessage.contains("'ntz'") &&
+        e.getMessage.contains("TimestampNTZType"), e.getMessage)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft_dsv2_types_").toString
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("influx_types_build", "write build only")
+      try refused(intercept[IllegalArgumentException] {
+        frame.write.format("graft-influx")
+          .option("path", dir).option("measurement", "m")
+          .mode("append").save()
+      }) finally sc.clearJobGroup()
+      // listener events arrive in order: once a later marker job is seen,
+      // every job the refused write could have started is seen too
+      sc.setJobGroup("influx_types_marker", "listener barrier")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("influx_types_marker") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("influx_types_marker"),
+        "the listener never saw the marker job")
+      assert(!groups.contains("influx_types_build"),
+        "a job ran while building the refused write")
+    } finally sc.removeSparkListener(listener)
+    val posts = new java.util.concurrent.atomic.AtomicInteger()
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/write", (ex: com.sun.net.httpserver.HttpExchange) => {
+      ex.getRequestBody.readAllBytes()
+      posts.incrementAndGet()
+      ex.sendResponseHeaders(204, -1)
+      ex.close()
+    })
+    server.start()
+    try refused(intercept[IllegalArgumentException] {
+      frame.write.format("graft-influx")
+        .option("measurement", "m").option("insertlimit", "2")
+        .option("transport", "http")
+        .option("url", s"http://127.0.0.1:${server.getAddress.getPort}/write")
+        .mode("append").save()
+    }) finally server.stop(0)
+    assert(posts.get() === 0)
+    // NullType values are always null: the column is accepted and skipped
+    src().withColumn("nothing", lit(null)).write.format("graft-influx")
+      .option("path", dir).option("measurement", "m")
+      .mode("append").save()
+    val ls = lines(dir)
+    assert(ls.size === 5 && !ls.exists(_.contains("nothing")), ls.mkString("|"))
+  }
+
   test("InfluxDsv2Sink: duplicated speculative attempt publishes once") {
     import graft.pipeline._
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
     val dir = Files.createTempDirectory("graft_lp_spec_").toString
     // 1) A real append through the Sink adapter: multi-partition write
@@ -224,30 +365,26 @@ class InfluxDsv2Spec extends SparkSpec {
     assert(lines(dir).size === 5)
     // the write's staging namespace is swept (the _staging root may remain
     // as an empty dir — readers skip _-prefixed paths)
-    val staged = Option(new java.io.File(s"$dir/m/_staging").listFiles())
-      .map(_.toSeq).getOrElse(Nil)
+    val staged = leftInStaging(s"$dir/m")
     assert(staged.isEmpty, staged.mkString(","))
     // 2) The speculation scenario clusterDefaults enables: TWO attempts of
     //    the same partition run to completion (same writeId — one write),
     //    Spark commits only the winner. The loser's staged flushes must
     //    never become visible and must be swept by the job-level publish.
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("name", StringType)))
+    val write = fileWrite(s"$dir/spec", insertLimit = 2)
+    val factory = write.createBatchWriterFactory(onePartition)
     def attempt(taskId: Long): InfluxCommit = {
-      val w = new InfluxDataWriter(schema, s"$dir/spec", "spec", "time", 2,
-        new FileFlushTransport(None), partitionId = 0, taskId = taskId,
-        writeId = "w-spec")
+      val w = factory.createWriter(0, taskId)
       (1 to 5).foreach(i => w.write(InternalRow(i.toLong,
         UTF8String.fromString(s"v$i"))))
       w.commit().asInstanceOf[InfluxCommit]
     }
     val winner = attempt(1L)
     attempt(2L) // the speculative duplicate — finishes, is never committed
-    InfluxCommitProtocol.publish(s"$dir/spec", "w-spec", Array(winner))
+    write.commit(Array[WriterCommitMessage](winner))
     val got = spark.read.text(s"$dir/spec").collect().map(_.getString(0))
     assert(got.length === 5, got.mkString("|")) // once, not twice
-    val specStaged = Option(new java.io.File(s"$dir/spec/_staging").listFiles())
-      .map(_.toSeq).getOrElse(Nil)
+    val specStaged = leftInStaging(s"$dir/spec")
     assert(specStaged.isEmpty, specStaged.mkString(",")) // loser swept
   }
 
@@ -378,4 +515,9 @@ class InfluxDsv2Spec extends SparkSpec {
     }
     assert(e2.getMessage.contains("path"), e2.getMessage)
   }
+}
+
+object InfluxDsv2Spec {
+  /** Arms the complete-mode test's throwing filter (tasks run in this JVM). */
+  val failing = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 
@@ -443,9 +444,9 @@ object DurableStore {
     * its parts under a unique attempt prefix and publishes the marker
     * naming it (a loser deletes its attempt and serves the winner's).
     * The build body runs under the `durable_<family>` ledger key; a
-    * reload issues only catalog DDL and a parquet-footer schema read —
-    * zero jobs over the corpus, zero training aggregates (the
-    * l122/l123 gate).
+    * reload issues only catalog DDL and a parquet-footer schema read
+    * (once per part dir per JVM) — zero jobs over the corpus, zero
+    * training aggregates (the l122/l123 gate).
     */
   def loadOrBuild(s: SparkSession, family: String, fp: String,
       parts: Seq[Part])(build: => Map[String, DataFrame])
@@ -475,8 +476,10 @@ object DurableStore {
     }
     parts.map { p =>
       val t = tableName(family, fp, p.name)
-      if (!s.catalog.tableExists(t))
-        register(s, t, partLocation(s, family, fp, p.name), family, fp, p)
+      if (!s.catalog.tableExists(t)) {
+        val loc = partLocation(s, family, fp, p.name)
+        register(s, t, loc, p, partSchema(s, family, fp, p, Seq("" -> loc)))
+      }
       p.name -> s.table(t)
     }.toMap
   }
@@ -496,16 +499,13 @@ object DurableStore {
         s"once with DurableStore.vacuum(s, \"$family\", keep = " +
         "Set(\"-\")) (or delete the fingerprint dir) and rebuild")
 
-  /** Re-register an existing part dir as an external table, restoring
-    * the bucket spec so downstream equi-joins stay exchange-free. The
-    * schema comes from the parquet footers (a metadata read, not a
-    * scan) and must match the part's declared columns; the files keep
-    * Spark's bucket-id naming, which the scan recovers.
+  /** Re-register an existing part dir as an external table in its
+    * resolved (`partSchema`) schema, restoring the bucket spec so
+    * downstream equi-joins stay exchange-free; the files keep Spark's
+    * bucket-id naming, which the scan recovers.
     */
   private def register(s: SparkSession, table: String, path: String,
-      family: String, fp: String, p: Part): Unit = {
-    val schema = s.read.parquet(path).schema
-    requireLayout(family, fp, p, schema.fieldNames.toSeq)
+      p: Part, schema: StructType): Unit = {
     val ddl = schema.toDDL
     val cluster = p.bucket
       .map(k => s"CLUSTERED BY ($k) INTO $Buckets BUCKETS")
@@ -595,17 +595,13 @@ object DurableStore {
       java.util.UUID.randomUUID().toString.replace("-", "").take(12)
     val dir = new Path(fam, seg)
     val written = parts.filter(p => built.contains(p.name))
-    // a writer emitting other columns than its part declares is a bug:
-    // refuse it here, and spare this segment the read-time footer check
+    // a writer emitting other columns than its part declares is a bug
     written.foreach(p =>
       requireLayout(family, seg, p, built(p.name).columns.toSeq))
     writeParts(s, family, seg, written, built, dir)
     require(createExclusive(f, new Path(dir, Marker),
       s".\n$fmtLine\n${stampLine()}"),
       s"fresh segment $seg already carried a marker — UUID collision?")
-    written.foreach(p =>
-      if (p.cols.nonEmpty)
-        checkedSegmentParts.add(new Path(dir, p.name).toString))
     seg
   }
 
@@ -694,8 +690,10 @@ object DurableStore {
 
   /** Resolve a published manifest layout's parts: each is the UNION of
     * the listed segments' part dirs (segments lacking the part are
-    * skipped — frozen artifacts live only in the base segment). A
-    * footer-driven read, zero jobs over the data.
+    * skipped — frozen artifacts live only in the base segment), read in
+    * the schema `partSchema` resolved. Segments are immutable, so only
+    * the first call that sees a segment reads its footers (one Spark
+    * job per part dir); every later call starts no job at all.
     *
     * BUCKET RECOVERY: a part carried by exactly ONE segment (a base
     * generation's frozen artifact, or any part after `compactManifest`
@@ -709,52 +707,62 @@ object DurableStore {
     */
   def manifestTables(s: SparkSession, family: String, fp: String,
       parts: Seq[Part]): Map[String, DataFrame] = {
-    val fam = famDir(s, family)
-    val f = fsOf(s, fam)
     val segs = manifestSegments(s, family, fp)
     parts.map { p =>
-      val carrying = segs
-        .filter(seg => f.exists(new Path(fam, new Path(seg, p.name))))
-      require(carrying.nonEmpty,
+      val copies = segmentCopies(s, family, segs, p.name)
+      require(copies.nonEmpty,
         s"manifest $family/$fp lists no segment carrying part ${p.name}")
-      val dirs = carrying
-        .map(seg => new Path(fam, new Path(seg, p.name)).toString)
-      carrying.zip(dirs).foreach { case (seg, dir) =>
-        checkSegmentPart(s, family, fp, p, seg, dir) }
+      val schema = partSchema(s, family, fp, p, copies)
       val df =
-        if (carrying.size == 1 && p.bucket.isDefined) {
-          val t = tableName(family, fp, s"${carrying.head}_${p.name}")
-          if (!s.catalog.tableExists(t))
-            register(s, t, dirs.head, family, fp, p)
+        if (copies.size == 1 && p.bucket.isDefined) {
+          val (seg, dir) = copies.head
+          val t = tableName(family, fp, s"${seg}_${p.name}")
+          if (!s.catalog.tableExists(t)) register(s, t, dir, p, schema)
           s.table(t)
-        } else s.read.parquet(dirs: _*)
+        } else s.read.schema(schema).parquet(copies.map(_._2): _*)
       p.name -> df
     }.toMap
   }
 
-  /** Segment part dirs whose columns passed `requireLayout`. Segments
-    * are immutable, so each is checked once per JVM and a serve pays no
-    * footer read for it afterwards.
+  /** Footer schema of each part dir this JVM resolved (None: no data
+    * files). Part dirs — segment copies and published attempts — are
+    * immutable once written, and a footer read is a Spark job.
     */
-  private val checkedSegmentParts =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val partDirSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, Option[StructType]]()
 
-  /** Check ONE segment's copy of a part: a multi-segment union infers
-    * its schema from a single footer, so a retired-layout segment
-    * among current ones would otherwise read back null-filled.
+  /** The ONE schema resolver of every persisted part read: the schema
+    * of part `p` over its `copies` (segment -> dir; "" for a plain
+    * layout's part dir). Each dir's footer is read once per JVM
+    * (`partDirSchemas`), and every call checks each copy against the
+    * part's declared columns — a set comparison, no I/O — because a
+    * multi-dir read takes ONE footer's schema, so a retired-layout
+    * copy next to current ones would otherwise read back null-filled.
+    * Returns the schema Spark's own inference would pick for the
+    * multi-dir read: the first data file's, in path order.
     */
-  private def checkSegmentPart(s: SparkSession, family: String,
-      fp: String, p: Part, seg: String, dir: String): Unit =
-    if (p.cols.nonEmpty && !checkedSegmentParts.contains(dir)) {
-      val found =
-        try s.read.parquet(dir).schema.fieldNames.toSeq
-        catch {
-          // no data files: no rows to misread
-          case _: org.apache.spark.sql.AnalysisException => p.cols
-        }
-      requireLayout(family, fp, p, found, seg)
-      checkedSegmentParts.add(dir)
+  private def partSchema(s: SparkSession, family: String, fp: String,
+      p: Part, copies: Seq[(String, String)]): StructType = {
+    val found = copies.map { case (seg, dir) =>
+      val schema = Option(partDirSchemas.get(dir)).getOrElse {
+        val read =
+          try Some(s.read.parquet(dir).schema)
+          catch {
+            // no data files: no rows to misread
+            case e: AnalysisException
+                if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+          }
+        partDirSchemas.put(dir, read)
+        read
+      }
+      schema.foreach(sc =>
+        requireLayout(family, fp, p, sc.fieldNames.toSeq, seg))
+      dir -> schema
     }
+    found.sortBy(_._1).collectFirst { case (_, Some(sc)) => sc }
+      // no copy holds a data file: Spark's own inference error
+      .getOrElse(s.read.parquet(copies.map(_._2): _*).schema)
+  }
 
   /** Publish an explicit ordered segment list as `fp`'s manifest: ONE
     * create-if-absent of the manifest marker. Returns false when a
@@ -1785,19 +1793,33 @@ object DurableStore {
     * only in the base segment).
     */
   def segmentPartDirs(s: SparkSession, family: String,
-      segs: Seq[String], part: String): Seq[String] = {
+      segs: Seq[String], part: String): Seq[String] =
+    segmentCopies(s, family, segs, part).map(_._2)
+
+  /** `segmentPartDirs`, each dir with the segment carrying it. */
+  private def segmentCopies(s: SparkSession, family: String,
+      segs: Seq[String], part: String): Seq[(String, String)] = {
     val fam = famDir(s, family)
     val f = fsOf(s, fam)
-    segs.map(seg => new Path(fam, new Path(seg, part)))
-      .filter(f.exists).map(_.toString)
+    segs.map(seg => seg -> new Path(fam, new Path(seg, part)))
+      .filter(c => f.exists(c._2)).map(c => c._1 -> c._2.toString)
   }
+
+  /** The schema of one segment copy of part `p` (a `segmentPartDirs`
+    * dir), through the memoised, layout-checked resolver every
+    * manifest read uses.
+    */
+  def segmentPartSchema(s: SparkSession, family: String, fp: String,
+      p: Part, dir: String): StructType =
+    partSchema(s, family, fp, p, Seq(new Path(dir).getParent.getName -> dir))
 
   /** CHANGE CAPTURE, batch face: per part, the rows the line gained
     * in the window (vFrom, vTo] — read from ONLY the delta segments
     * (O(delta) I/O however large the standing corpus; an s19 gate
-    * pins `inputFiles` to the delta dirs). A part no delta segment
-    * carries changed nothing: an EMPTY frame in the part's own
-    * schema, never an error.
+    * pins `inputFiles` to the delta dirs), each copy layout-checked
+    * like a serve's (a retired-layout delta is refused, never
+    * null-filled). A part no delta segment carries changed nothing:
+    * an EMPTY frame in the part's own schema, never an error.
     */
   def changesBetween(s: SparkSession, family: String, vFrom: Long,
       vTo: Long, parts: Seq[Part]): Map[String, DataFrame] = {
@@ -1805,18 +1827,20 @@ object DurableStore {
     val fpTo = requireHeadFpAt(s, family, vTo, "change capture")
     val all = manifestSegments(s, family, fpTo)
     parts.map { p =>
-      val dirs = segmentPartDirs(s, family, delta, p.name)
+      val copies = segmentCopies(s, family, delta, p.name)
       val df =
-        if (dirs.nonEmpty) s.read.parquet(dirs: _*)
+        if (copies.nonEmpty) s.read
+          .schema(partSchema(s, family, fpTo, p, copies))
+          .parquet(copies.map(_._2): _*)
         else {
-          // schema from the serving chain's footers (metadata read)
+          // schema from the serving chain's first copy
           val carrying = segmentPartDirs(s, family, all, p.name)
           require(carrying.nonEmpty,
             s"change capture: no segment of $family/$fpTo carries " +
               s"part ${p.name}")
-          val schema = s.read.parquet(carrying.head).schema
           s.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+            new java.util.ArrayList[org.apache.spark.sql.Row](),
+            segmentPartSchema(s, family, fpTo, p, carrying.head))
         }
       p.name -> df
     }.toMap

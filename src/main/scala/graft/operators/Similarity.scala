@@ -37,19 +37,19 @@ object Similarity {
     * the r16 voteTopK lesson applied to the ranking tier). Output rows
     * are IDENTICAL to
     * `row_number().over(partitionBy(q_id).orderBy(score desc, c_id)) <= k`
-    * — scores carry through the typed aggregator bit-exactly and the
-    * rank is the position in its descending order, so hash-compared
-    * consumers (l06 et al.) are unaffected.
+    * — scores carry through the aggregate bit-exactly and the rank is
+    * the position in its descending order, so hash-compared consumers
+    * (l06 et al.) are unaffected.
     *
     * Contract (the voteTopK/GroupedTopK contract, documented where the
     * retired window was laxer): `c_id` must be a signed integral id
     * above Long.MinValue (the -id tie-break encode; a non-integral id
-    * type fails here, at plan-build time), and scores must
-    * be non-null finite doubles — cosines of non-null finite vectors
-    * are; a null score fails the typed encoder loudly rather than
-    * ranking last, and NaN would rank last rather than first.
+    * type fails here, at plan-build time). Scores follow Spark SQL's
+    * double order, as the window does: NaN ranks first, -0.0 ties with
+    * 0.0; a null score fails the aggregate loudly (the window would
+    * rank it last).
     */
-  private def topKPerQuery(scored: DataFrame, scoreCol: String,
+  private[graft] def topKPerQuery(scored: DataFrame, scoreCol: String,
       k: Int): DataFrame = {
     val idType = scored.schema("c_id").dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType)
@@ -1017,9 +1017,9 @@ object Similarity {
       k: Int): DataFrame = {
     // contract (same as topKPerQuery's): b_id is a signed integral id
     // above Long.MinValue (explicit cast — a non-numeric id column must
-    // fail analysis loudly, not coerce) and cos is non-null finite
-    // (cosines of non-null finite vectors are; the typed aggregator
-    // would fail a null loudly rather than rank it last)
+    // fail analysis loudly, not coerce) and cos is non-null (cosines of
+    // non-null vectors are; GroupedTopK fails a null loudly rather than
+    // rank it, and ranks NaN first as the SQL order does)
     val top = scored.groupBy(col("a_id"), col("a_label"))
       .agg(GroupedTopK.topK(k)(col("cos"), -col("b_id").cast("long"))
         .as("__top"))

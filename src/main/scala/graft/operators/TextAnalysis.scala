@@ -299,9 +299,7 @@ object TextAnalysis {
     docs.select(col(stratumCol).as("stratum"), col(idCol).as("doc_id"),
         TextFunctions.rollingHash(col(textCol)).as("fp"))
       // null text never sampled (it has no fingerprint) — same contract
-      // as temperatureResample; without this, the typed aggregator would
-      // silently coerce a null fp to 0.0 and rank it FIRST while a SQL
-      // window ranks nulls last.
+      // as temperatureResample; GroupedTopK refuses a null fp loudly.
       .where(col("fp").isNotNull)
       .groupBy(col("stratum"))
       .agg(GroupedTopK.topK(quota)(-col("fp").cast("double"), -col("doc_id"))

@@ -622,7 +622,7 @@ object RelationalQueries {
 
     QuerySpec(
       "r30_grouped_topk",
-      "grouped top-k via a typed Aggregator UDAF (map-side combinable: O(groups*k) shuffled, vs a window's full sort)",
+      "grouped top-k via the native GroupedTopK aggregate (map-side combinable: O(groups*k) shuffled, vs a window's full sort)",
       (s, dir) => Tables.load(s, dir, "orders")
         .groupBy(col("o_orderpriority"))
         .agg(graft.operators.GroupedTopK.topK(2)(

@@ -84,9 +84,10 @@ object StoreCdcProvider {
     parameters.getOrElse(key, sys.error(
       s"graft-store stream: option '$key' is required"))
 
-  /** The part's schema from the CURRENT head chain's parquet footers
-    * (a metadata read, not a scan) — the schema every batch of the
-    * stream serves.
+  /** The part's schema from the CURRENT head chain's first copy of it,
+    * through the durable store's memoised segment resolver (a footer
+    * read at most once per JVM) — the schema every batch of the stream
+    * serves.
     */
   private def partSchema(s: ClassicSession,
       parameters: Map[String, String]): StructType = {
@@ -99,7 +100,8 @@ object StoreCdcProvider {
       DurableStore.manifestSegments(s, family, fp), part)
     require(dirs.nonEmpty,
       s"graft-store stream: no segment of $family/$fp carries part $part")
-    s.read.parquet(dirs.head).schema
+    DurableStore.segmentPartSchema(s, family, fp,
+      DurableStore.Part(part, None), dirs.head)
   }
 }
 

@@ -335,38 +335,17 @@ class DedupSimilaritySpec extends SparkSpec {
   test("topKPerQuery contract: a string or double c_id fails at " +
       "plan-build time, before any job runs") {
     import spark.implicits._
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(Option(e.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
     val emb = Seq(Array(1f, 0f), Array(0f, 1f), Array(1f, 1f))
     val corpora = Seq(Seq("a", "b", "c").zip(emb).toDF("id", "emb"),
       Seq(1.0, 2.0, 3.0).zip(emb).toDF("id", "emb"))
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("topk_contract_build", "plan build only")
-      try corpora.foreach { c =>
+    assert(jobsStarted {
+      corpora.foreach { c =>
         val ex = intercept[IllegalArgumentException](
           Similarity.bruteForceTopK(c, c, "id", "emb", 1))
         assert(ex.getMessage.contains("c_id must be an integral id"),
           ex.getMessage)
-      } finally sc.clearJobGroup()
-      // listener events arrive in order: once a later marker job is
-      // seen, every job the plan builds could have started is too
-      sc.setJobGroup("topk_contract_marker", "listener barrier")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("topk_contract_marker") &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-      assert(groups.contains("topk_contract_marker"),
-        "the listener never saw the marker job")
-      assert(!groups.contains("topk_contract_build"),
-        "a job ran while building the refused plan")
-    } finally sc.removeSparkListener(listener)
+      }
+    } === 0, "a job ran while building the refused plan")
   }
 
   test("asof join: NULL-key left rows match nothing (equi-join semantics)") {

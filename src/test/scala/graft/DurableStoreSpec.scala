@@ -564,6 +564,77 @@ class DurableStoreSpec extends SparkSpec {
     assert(err.contains("spec_layout/fp0 part t has columns (a, c)"), err)
   }
 
+  test("manifestTables resolves each immutable segment once: over a " +
+      "3-segment manifest the second call starts zero Spark jobs and " +
+      "serves the same rows") {
+    import spark.implicits._
+    val fam = "spec_zero_job"
+    val parts = Seq(DurableStore.Part("t", None, Seq("k", "v")),
+      DurableStore.Part("m", Some("k"), Seq("k", "w")))
+    def t(lo: Int, hi: Int) =
+      (lo until hi).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    val segs = DurableStore.writeSegment(spark, fam, parts, Map(
+      "t" -> t(0, 4), "m" -> Seq((1L, 2.0)).toDF("k", "w"))) +:
+      Seq(t(4, 7), t(7, 9)).map(d =>
+        DurableStore.writeSegment(spark, fam, parts, Map("t" -> d)))
+    assert(DurableStore.publishManifest(spark, fam, "fp3", segs))
+    var first: Map[String, DataFrame] = null
+    // the first call reads each fresh segment copy's footers
+    assert(jobsStarted {
+      first = DurableStore.manifestTables(spark, fam, "fp3", parts)
+    } > 0)
+    var second: Map[String, DataFrame] = null
+    assert(jobsStarted {
+      second = DurableStore.manifestTables(spark, fam, "fp3", parts)
+    } === 0)
+    assert(sortedRows(second("t")) === sortedRows(first("t")))
+    assert(sortedRows(second("t")) === sortedRows(t(0, 9)))
+    assert(sortedRows(second("m")) === Seq("[1,2.0]"))
+  }
+
+  test("changesBetween refuses a retired-layout delta segment: a " +
+      "pre-r17 codes (c_id, blk, code) delta never reads back " +
+      "null-filled") {
+    import spark.implicits._
+    val fam = "spec_cdc_layout"
+    val parts = Seq(DurableStore.Part("codes", Some("c_id"),
+      Seq("c_id", "codes")))
+    val unchecked = parts.map(_.copy(cols = Nil))
+    def codes(lo: Long, hi: Long) =
+      (lo until hi).map(i => (i, Array(i.toInt, 7))).toDF("c_id", "codes")
+    def fp(df: DataFrame) = DurableStore.frameFingerprint(df, Seq("c_id"))
+    val base = codes(0, 4)
+    DurableStore.loadOrBuildBase(spark, fam, fp(base), parts)(
+      Map("codes" -> base))
+    assert(DurableStore.initHead(spark, fam, fp(base)))
+    val d1 = codes(4, 6)
+    DurableStore.appendManifest(spark, fam,
+      DurableStore.writeSegment(spark, fam, parts, Map("codes" -> d1)),
+      fp(d1))
+    // the pre-r17 writer: one row per (c_id, blk), no codes array
+    val d2 = codes(6, 8).select(col("c_id"),
+      posexplode(col("codes")).as(Seq("blk", "code")))
+    val oldSeg = DurableStore.writeSegment(spark, fam, unchecked,
+      Map("codes" -> d2))
+    assert(DurableStore.appendManifest(spark, fam, oldSeg, fp(d2))._1
+      === 2L)
+    // positive control: the unchecked union takes ONE footer's schema,
+    // so the retired delta's rows lose their codes
+    val loose = DurableStore.changesBetween(spark, fam, 0L, 2L,
+      unchecked)("codes")
+    assert(!loose.columns.contains("codes") ||
+      loose.where(col("codes").isNull).count() > 0,
+      "positive control: the unchecked union should misread codes")
+    val err = intercept[IllegalArgumentException](
+      DurableStore.changesBetween(spark, fam, 0L, 2L, parts)).getMessage
+    Seq(s"segment $oldSeg", "part codes", "has columns (c_id, blk, code)",
+        "DurableStore.vacuum(s, \"spec_cdc_layout\"")
+      .foreach(w => assert(err.contains(w), err))
+    // a window holding only the current-layout delta still serves
+    assert(sortedRows(DurableStore.changesBetween(spark, fam, 0L, 1L,
+      parts)("codes").select("c_id")) === Seq("[4]", "[5]"))
+  }
+
   test("incremental LM lineage: merged counts equal a full-corpus " +
       "retrain integer-for-integer; the published update reloads " +
       "zero-build") {

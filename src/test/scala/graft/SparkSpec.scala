@@ -9,6 +9,33 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Spark jobs `body` starts, counted by a job-group listener; a
+    * later marker job is the barrier for the listener's ordered events.
+    */
+  def jobsStarted(body: => Unit): Int = {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("jobs_started_body", "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("jobs_started_marker", "listener barrier")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("jobs_started_marker") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("jobs_started_marker"),
+        "the listener never saw the marker job")
+      groups.toArray.count(_ == "jobs_started_body")
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

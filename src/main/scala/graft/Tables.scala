@@ -1,6 +1,15 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table loaders over a scale-factor directory of parquet files.
   *
@@ -9,6 +18,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * collections): a namespace of named tables. In production this would be
   * the MongoDB Spark connector; for the harness each "collection" is one
   * parquet file under the scale-factor dir (TESTDATA.md).
+  *
+  * A parquet table's schema is read from ONE footer on the driver
+  * (`footerSchema`, the file Spark's own inference picks), so a load
+  * starts no Spark job; Spark's inference runs a footer job even for a
+  * single file, and it sat on every migrated collection's path.
   */
 object Tables {
   /** All fixture tables (TESTDATA.md). */
@@ -18,13 +32,6 @@ object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark has no native
-    * type for ([PARQUET_TYPE_ILLEGAL]). We read nanos as long
-    * (`spark.sql.legacy.parquet.nanosAsLong`) and convert to TimestampType
-    * via integer division ns -> us. Integer `div`, not `/`: a double
-    * division would round (ns-since-epoch > 2^53). The fixture values are
-    * us-grained, so the conversion is lossless.
-    */
   /** Config key that swaps every table load from the parquet fixtures to
     * the MongoDB Spark connector — the production source of a mongo2x
     * engine (reference: index.js:99-105 opens the live DB). The swap is
@@ -80,29 +87,30 @@ object Tables {
     * Mongo change-stream source behind the same column contract.
     */
   def loadStream(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    if (!spark.conf.getOption(key).contains("true")) spark.conf.set(key, "true")
+    readNanosAsLong(spark)
     val p = path(dir, name)
     // The fixture "table" is a single parquet file; the streaming file
     // source accepts a directory or a GLOB, not a bare file path — wrap
     // the file name in a brace-glob and anchor basePath at the parent.
     val df = spark.readStream
-      .schema(spark.read.parquet(p).schema)
+      .schema(footerSchema(spark, p).getOrElse(spark.read.parquet(p).schema))
       .option("basePath", dir)
       .parquet(s"$dir/{$name.parquet}")
     normalizeTs(df)
   }
 
   /** Normalize the fixture `ts` column to TimestampType (µs, UTC instant)
-    * regardless of how the generator wrote it: TIMESTAMP(NANOS) parquet
-    * arrives as LongType under `nanosAsLong` (ns -> µs integer div);
+    * regardless of how the generator wrote it: TIMESTAMP(NANOS) parquet,
+    * which Spark has no type for ([PARQUET_TYPE_ILLEGAL]), arrives as
+    * LongType under `nanosAsLong` (ns -> µs integer `div`, not `/`: a
+    * double division would round ns-since-epoch > 2^53);
     * TIMESTAMP(MICROS, isAdjustedToUTC=false) arrives as TimestampNTZType
     * (cast reinterprets the wall-clock in the session timezone — UTC by
     * the Engine contract, so the µs value is unchanged and matches
     * DuckDB's naive read of the same file). Event-time streaming,
     * unix_micros(), and the influx sink all require plain TimestampType.
     */
-  private def normalizeTs(df: DataFrame): DataFrame =
+  private[graft] def normalizeTs(df: DataFrame): DataFrame =
     df.schema.find(_.name == "ts").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.LongType) =>
         df.withColumn("ts", org.apache.spark.sql.functions.expr(
@@ -122,10 +130,58 @@ object Tables {
     }
 
   private def loadParquet(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Guarded set: avoid re-writing session conf (and invalidating cached
-    // plans) on every table load.
+    readNanosAsLong(spark)
+    val p = path(dir, name)
+    normalizeTs(footerSchema(spark, p)
+      .fold(spark.read.parquet(p))(spark.read.schema(_).parquet(p)))
+  }
+
+  // Guarded set: avoid re-writing session conf (and invalidating cached
+  // plans) on every table load.
+  private def readNanosAsLong(spark: SparkSession): Unit = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     if (!spark.conf.getOption(key).contains("true")) spark.conf.set(key, "true")
-    normalizeTs(spark.read.parquet(path(dir, name)))
+  }
+
+  /** The schema Spark's parquet inference gives `p` (schema merging off),
+    * read on the driver from the one footer that inference reads: list
+    * `p` with the file index's hidden-name rule (`_`/`.` prefixes, but
+    * not the `_common_metadata`/`_metadata` summaries), sort by path, and
+    * take `_common_metadata`, else `_metadata`, else the first data file.
+    * The footer converts under the session's parquet conf
+    * (`nanosAsLong` included) exactly as inference does. None — the
+    * caller falls back to Spark's inference and its errors — for a glob,
+    * a layout with subdirectories (partitioned), no data file, schema
+    * merging on, or a footer that does not read.
+    */
+  private[graft] def footerSchema(spark: SparkSession, p: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled || p.exists("{}[]*?\\".contains(_))) None
+    else try {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val root = new Path(p)
+      val listed = root.getFileSystem(hadoopConf).listStatus(root).filter { st =>
+        val n = st.getPath.getName
+        val hidden = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")
+        !hidden || n.startsWith("_common_metadata") || n.startsWith("_metadata")
+      }
+      if (listed.exists(_.isDirectory)) None
+      else {
+        val files = listed.sortBy(_.getPath.toString)
+        val summaries = Seq("_common_metadata", "_metadata")
+        summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+          .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+          .map { f =>
+            val reader = ParquetFileReader.open(
+              HadoopInputFile.fromStatus(f, hadoopConf),
+              HadoopReadOptions.builder(hadoopConf)
+                .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+            val footer = try reader.getFooter finally reader.close()
+            ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+              new ParquetToSparkSchemaConverter(conf))
+          }
+      }
+    } catch { case NonFatal(_) => None }
   }
 }

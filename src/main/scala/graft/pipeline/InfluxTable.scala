@@ -1,12 +1,13 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, StandardOpenOption}
 import java.util
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -187,8 +188,9 @@ final case class HttpEndpoint(url: String, timeoutMs: Int,
   * the staging steps run on the driver, called by [[InfluxWrite]].
   *
   *   - [[FileFlushTransport]] stages the body as a file under the task
-  *     attempt's staging dir; visibility is deferred to the driver-side
-  *     `publish` (exactly-once).
+  *     attempt's staging dir (locally one plain `java.nio` write: no
+  *     forked `chmod`, no `.crc`); visibility is deferred to the
+  *     driver-side `publish` (exactly-once).
   *   - [[HttpFlushTransport]] POSTs the body immediately (the reference's
   *     `writePoints` POST, index.js:242-252) and stages nothing, so every
   *     other step is a no-op. Delivery is AT-LEAST-ONCE under task
@@ -224,9 +226,10 @@ sealed trait FlushTransport extends Serializable {
   def publish(messages: Array[WriterCommitMessage]): Unit
 }
 
-/** Stages flush files under `<seriesDir>/_staging/` and publishes them by
-  * rename. One writer per series at a time — the assumption every file
-  * commit protocol makes: `sweepStaging` clears the whole staging root.
+/** Stages flush files under `<seriesDir>/_staging/` (see `deliver`) and
+  * publishes them by rename. One writer per series at a time — the
+  * assumption every file commit protocol makes: `sweepStaging` clears
+  * the whole staging root.
   * Readers never see staging, but orphans are real storage on the object
   * stores the sink targets.
   */
@@ -237,12 +240,31 @@ final class FileFlushTransport(seriesDir: String,
 
   private def fs(p: Path) = SinkFiles.fileSystem(p, conf)
 
+  /** Create-new, never overwrite: a task attempt stages each name once.
+    * On the local filesystem the file is one plain `java.nio` write.
+    * Hadoop's local `create` sets the file's permission on every call,
+    * and without libhadoop (Spark ships none) each set forks a `chmod`
+    * process, twice per flush with the checksum sidecar: about 3 ms a
+    * fork, which dominated the flush. The nio file has the JVM's default
+    * mode (0666 minus the process umask, 0644 under the default) and no
+    * `.crc`, which `ChecksumFileSystem` reads without verification;
+    * `publish` still renames through the checksummed filesystem, which
+    * drops a stale `.crc` left at the destination. Every other
+    * filesystem stages through its own `create`.
+    */
   override def deliver(attempt: String, fileName: String,
       body: Array[Byte]): Unit = {
     val p = new Path(s"$staging/$attempt/$fileName")
-    val out = fs(p).create(p, false)
-    try out.write(body)
-    finally out.close()
+    fs(p) match {
+      case local: LocalFileSystem =>
+        val f = local.pathToFile(p).toPath
+        Files.createDirectories(f.getParent)
+        Files.write(f, body, StandardOpenOption.CREATE_NEW)
+      case other =>
+        val out = other.create(p, false)
+        try out.write(body)
+        finally out.close()
+    }
   }
 
   // Best-effort: an abort must not mask the failure that triggered it,

@@ -201,14 +201,16 @@ object InfluxLineProtocol {
     case other => Some("\"" + escapeFieldString(other.toString) + "\"")
   }
 
-  /** Shared line assembly: `names(i)`/`value(i)` over `n` columns, with
-    * `timeIdx` (or -1) rendered as the trailing ns timestamp.
+  /** Shared line assembly: `keys(i)`/`value(i)` per column, with
+    * `timeIdx` (or -1) rendered as the trailing ns timestamp. The
+    * measurement and the keys arrive escaped: they are the same on every
+    * row, so a renderer escapes them once.
     */
-  private def assemble(measurement: String, n: Int, names: Int => String,
+  private def assemble(measurement: String, keys: Array[String],
       value: Int => Any, timeIdx: Int): String = {
-    val fields = (0 until n).iterator
+    val fields = keys.indices.iterator
       .filter(_ != timeIdx)
-      .flatMap(i => renderField(value(i)).map(v => s"${escapeKey(names(i))}=$v"))
+      .flatMap(i => renderField(value(i)).map(v => s"${keys(i)}=$v"))
       .mkString(",")
     val ts = timeIdx match {
       case -1 => ""
@@ -218,14 +220,14 @@ object InfluxLineProtocol {
         case other => " " + other
       }
     }
-    s"${escapeMeasurement(measurement)} $fields$ts"
+    s"$measurement $fields$ts"
   }
 
   /** Render one row; `timeCol` (TimestampType) becomes the ns timestamp. */
   def render(measurement: String, row: Row, timeCol: String = "time"): String = {
-    val schema = row.schema
-    assemble(measurement, schema.length, schema.fieldNames(_), row.get(_),
-      schema.fieldNames.indexOf(timeCol))
+    val names = row.schema.fieldNames
+    assemble(escapeMeasurement(measurement), names.map(escapeKey), row.get(_),
+      names.indexOf(timeCol))
   }
 
   /** The column types the DSv2 writer renders, each with its read from
@@ -266,15 +268,17 @@ object InfluxLineProtocol {
 
   /** The renderer for InternalRows of `schema` (the DSv2 writer path — no
     * Row conversion in the per-row hot loop; each column's read and the
-    * field names are resolved once, not per row). The schema has passed
-    * `requireWritable`.
+    * escaped measurement and field keys are resolved once, not per row).
+    * The schema has passed `requireWritable`.
     */
   def renderInternal(measurement: String, schema: StructType,
       timeCol: String): InternalRow => String = {
     val names = schema.fieldNames
+    val keys = names.map(escapeKey)
+    val escaped = escapeMeasurement(measurement)
     val reads = schema.fields.map(f => internalValue(f.dataType))
     val timeIdx = names.indexOf(timeCol)
-    row => assemble(measurement, names.length, names(_),
+    row => assemble(escaped, keys,
       i => if (row.isNullAt(i)) null else reads(i)(row, i), timeIdx)
   }
 }

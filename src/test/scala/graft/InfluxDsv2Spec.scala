@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -73,13 +75,29 @@ class InfluxDsv2Spec extends SparkSpec {
     assert(ls.exists(_.contains("name=\"beta \\\"q\\\"\"")))
   }
 
+  test("measurement and field keys are spec-escaped, the same bytes as the " +
+      "row renderer") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_dsv2_keys_").toString
+    val df = Seq((1L, "v", 2.5, Timestamp.valueOf("2024-01-01 00:00:00.000001")))
+      .toDF("a b", "c,d", "e=f", "time").repartition(1)
+    df.write.format("graft-influx")
+      .option("path", dir).option("measurement", "m x,y").mode("append").save()
+    val seriesDir = new java.io.File(s"$dir/m x,y")
+    val got = seriesDir.listFiles().filter(_.getName.endsWith(".lp")).toSeq
+      .flatMap(f => Files.readAllLines(f.toPath).asScala)
+    assert(got === Seq("m\\ x\\,y a\\ b=1i,c\\,d=\"v\",e\\=f=2.5 1704067200000001000"))
+    assert(got === df.collect().toSeq.map(r =>
+      graft.pipeline.InfluxLineProtocol.render("m x,y", r)))
+  }
+
   test("insertlimit bounds each flush file (one simulated POST per file)") {
     val dir = Files.createTempDirectory("graft_dsv2_").toString
     src().write.format("graft-influx")
       .option("path", dir).option("measurement", "m")
       .option("insertlimit", "2")
       .mode("overwrite").save()
-    // local-FS Hadoop writes .crc shadows; only the .lp flushes count
+    // only the .lp flushes count
     val files = new java.io.File(s"$dir/m").listFiles().map(_.getName)
       .filter(_.endsWith(".lp")).sorted
     assert(files.length === 3, files.mkString(","))  // 2 + 2 + 1 rows
@@ -204,6 +222,95 @@ class InfluxDsv2Spec extends SparkSpec {
     // write) re-runs epoch 7 end to end.
     runEpoch7(2L)
     assert(lines(dir).size === 4) // same final names overwritten, not added
+  }
+
+  /** Every `.crc` checksum sidecar under `dir`, staging included. */
+  private def crcFiles(dir: String): Seq[String] = {
+    val walk = Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".crc")).toSeq
+    finally walk.close()
+  }
+
+  test("local staging is a plain write: no .crc in staging or the series, " +
+      "flush names and line counts unchanged") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val dir = Files.createTempDirectory("graft_dsv2_plain_").toString
+    val seriesDir = s"$dir/m"
+    val write = fileWrite(seriesDir, insertLimit = 2)
+    val w = write.createBatchWriterFactory(onePartition).createWriter(0, 1L)
+    (1 to 5).foreach(i => w.write(InternalRow(i.toLong,
+      UTF8String.fromString(s"v$i"))))
+    val msg = w.commit().asInstanceOf[graft.pipeline.InfluxCommit]
+    val staged = new java.io.File(s"$seriesDir/_staging/${msg.attempt}")
+      .listFiles().map(_.getName).sorted.toSeq
+    assert(staged === msg.fileNames.sorted, staged.mkString(","))
+    assert(crcFiles(dir).isEmpty, crcFiles(dir).mkString(","))
+    write.commit(Array[WriterCommitMessage](msg))
+    val published = new java.io.File(seriesDir).listFiles()
+      .filter(_.isFile).map(_.getName).sorted.toSeq
+    assert(published === msg.fileNames.sorted, published.mkString(","))
+    assert(published.forall(_.matches("flush-[0-9a-f]{8}-0-[0-9]+\\.lp")),
+      published.mkString(","))
+    assert(published.map(n => Files.readAllLines(
+      java.nio.file.Paths.get(seriesDir, n)).size) === Seq(2, 2, 1))
+    assert(crcFiles(dir).isEmpty, crcFiles(dir).mkString(","))
+    assert(lines(dir).size === 5)
+  }
+
+  test("delivering the same staged name twice fails (create-new)") {
+    val dir = Files.createTempDirectory("graft_dsv2_twice_").toString
+    val t = new FileFlushTransport(s"$dir/m", None)
+    val body = "m id=1i\n".getBytes("UTF-8")
+    t.deliver("w/0-1", "flush-w-0-0.lp", body)
+    intercept[java.io.IOException](t.deliver("w/0-1", "flush-w-0-0.lp", body))
+    assert(new String(Files.readAllBytes(java.nio.file.Paths.get(
+      s"$dir/m/_staging/w/0-1/flush-w-0-0.lp")), "UTF-8") === "m id=1i\n")
+  }
+
+  test("republishing over a flush published with a .crc drops the stale " +
+      "checksum; the series reads back clean") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val dir = Files.createTempDirectory("graft_dsv2_stalecrc_").toString
+    val seriesDir = s"$dir/m"
+    // A flush of epoch 7 as a checksummed Hadoop create publishes it:
+    // the file plus its `.crc` sidecar, over different bytes.
+    val old = new Path(s"$seriesDir/flush-e7-0-0.lp")
+    val out = graft.pipeline.SinkFiles.fileSystem(old).create(old, false)
+    try out.write("m id=99i,name=\"stale line of another length\"\n".getBytes("UTF-8"))
+    finally out.close()
+    assert(new java.io.File(s"$seriesDir/.flush-e7-0-0.lp.crc").exists())
+    // Epoch 7 replays and publishes the same name from a plain staged file.
+    val write = fileWrite(seriesDir, insertLimit = 10)
+    val w = write.createStreamingWriterFactory(onePartition).createWriter(0, 1L, 7L)
+    (1 to 4).foreach(i => w.write(InternalRow(i.toLong,
+      UTF8String.fromString(s"v$i"))))
+    write.commit(7L, Array[WriterCommitMessage](w.commit()))
+    assert(crcFiles(dir).isEmpty, crcFiles(dir).mkString(","))
+    val got = lines(dir)
+    assert(got.size === 4, got.mkString("|"))
+    assert(got.forall(_.contains("name=\"v")), got.mkString("|"))
+  }
+
+  test("a non-local Hadoop FileSystem still stages through FileSystem.create") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${CreateCountingFs.scheme}.impl", classOf[CreateCountingFs].getName)
+    val dir = Files.createTempDirectory("graft_dsv2_nonlocal_").toString
+    val write = new InfluxWrite(StructType(Seq(StructField("id", LongType),
+        StructField("name", StringType))), "m", "time", 2,
+      truncateFirst = false,
+      new FileFlushTransport(s"${CreateCountingFs.scheme}://$dir/m", None))
+    val before = CreateCountingFs.creates.get
+    val w = write.createBatchWriterFactory(onePartition).createWriter(0, 1L)
+    (1 to 5).foreach(i => w.write(InternalRow(i.toLong,
+      UTF8String.fromString(s"v$i"))))
+    write.commit(Array[WriterCommitMessage](w.commit()))
+    assert(CreateCountingFs.creates.get - before === 3) // 2 + 2 + 1 rows
+    assert(lines(dir).size === 5)
   }
 
   test("failed overwrite leaves the old series intact (truncate at commit, not start)") {
@@ -520,4 +627,25 @@ class InfluxDsv2Spec extends SparkSpec {
 object InfluxDsv2Spec {
   /** Arms the complete-mode test's throwing filter (tasks run in this JVM). */
   val failing = new java.util.concurrent.atomic.AtomicBoolean(false)
+}
+
+/** A FileSystem that is not Hadoop's `LocalFileSystem` (the raw local
+  * one under its own scheme) and counts `create` calls, so a test can
+  * see the file transport stage through `FileSystem.create` there.
+  */
+final class CreateCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${CreateCountingFs.scheme}:///")
+
+  // the overload `create(path, overwrite)` reaches
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    CreateCountingFs.creates.incrementAndGet()
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object CreateCountingFs {
+  val scheme = "graftcount"
+  val creates = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, GraftBridge, SparkSession}
 
 /** Session factory — the engine's `connect` analogue (reference:
   * index.js:81-109 builds its two clients; here one SparkSession carries
@@ -8,8 +8,10 @@ import org.apache.spark.sql.SparkSession
   * so Verify/Bench/tests and library users agree:
   *
   *   - UTC session timezone (the fixtures' and oracle's contract).
-  *   - `nanosAsLong` for the TIMESTAMP(NANOS) parquet fixtures
-  *     (graft.Tables.load converts ns -> µs losslessly).
+  *   - `nanosAsLong`, so a TIMESTAMP(NANOS) parquet source loads (the
+  *     fixtures are TIMESTAMP(MICROS)): graft.Tables.load converts
+  *     ns -> µs losslessly, and refuses such a file on a session
+  *     without the key.
   *   - AQE on (default in Spark 4.x) with skew-join handling: at 100 TB,
   *     runtime re-planning — not hand-tuned hints — is what picks
   *     broadcast vs shuffle joins and splits skewed partitions.
@@ -38,6 +40,32 @@ object Engine {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Run `body` on a clone of `s` that carries `conf`, so the override
+    * reaches only the plans built inside the body: a session's conf is
+    * shared by every thread planning on it, and `Pipeline.migrate` plans
+    * up to `limit` collections at once on the caller's own session. The
+    * one place the engine writes session conf.
+    *
+    * The clone shares `s`'s SparkContext and cache and starts from a
+    * copy of its conf, temp views and functions. A temp view or memory
+    * sink registered inside lives on the clone only, so read it inside.
+    * A Dataset the body returns is rebound onto `s`; a lazy one plans
+    * its later actions under `s`'s conf, so materialize inside whatever
+    * must run under the override. An empty `conf` runs `body(s)`.
+    */
+  def scoped[T](s: SparkSession, conf: Map[String, String])(
+      body: SparkSession => T): T =
+    if (conf.isEmpty) body(s)
+    else {
+      val c = GraftBridge.cloneSession(s)
+      conf.foreach { case (k, v) => c.conf.set(k, v) }
+      body(c) match {
+        case d: Dataset[_] if d.sparkSession eq c =>
+          GraftBridge.rebind(d, s).asInstanceOf[T]
+        case r => r
+      }
+    }
 
   /** Harness entry: local[cpus] with matching shuffle width. */
   def local(cpus: Int): SparkSession = session(s"local[$cpus]", cpus)

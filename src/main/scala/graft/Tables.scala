@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
@@ -7,8 +8,11 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Fixture-table loaders over a scale-factor directory of parquet files.
@@ -87,7 +91,6 @@ object Tables {
     * Mongo change-stream source behind the same column contract.
     */
   def loadStream(spark: SparkSession, dir: String, name: String): DataFrame = {
-    readNanosAsLong(spark)
     val p = path(dir, name)
     // The fixture "table" is a single parquet file; the streaming file
     // source accepts a directory or a GLOB, not a bare file path — wrap
@@ -130,17 +133,9 @@ object Tables {
     }
 
   private def loadParquet(spark: SparkSession, dir: String, name: String): DataFrame = {
-    readNanosAsLong(spark)
     val p = path(dir, name)
     normalizeTs(footerSchema(spark, p)
       .fold(spark.read.parquet(p))(spark.read.schema(_).parquet(p)))
-  }
-
-  // Guarded set: avoid re-writing session conf (and invalidating cached
-  // plans) on every table load.
-  private def readNanosAsLong(spark: SparkSession): Unit = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    if (!spark.conf.getOption(key).contains("true")) spark.conf.set(key, "true")
   }
 
   /** The schema Spark's parquet inference gives `p` (schema merging off),
@@ -148,11 +143,13 @@ object Tables {
     * `p` with the file index's hidden-name rule (`_`/`.` prefixes, but
     * not the `_common_metadata`/`_metadata` summaries), sort by path, and
     * take `_common_metadata`, else `_metadata`, else the first data file.
-    * The footer converts under the session's parquet conf
-    * (`nanosAsLong` included) exactly as inference does. None — the
-    * caller falls back to Spark's inference and its errors — for a glob,
-    * a layout with subdirectories (partitioned), no data file, schema
-    * merging on, or a footer that does not read.
+    * The footer converts under the session's parquet conf exactly as
+    * inference does. A TIMESTAMP(NANOS) column on a session without
+    * `nanosAsLong` (which `Engine.session` sets; a load never writes
+    * conf) fails here, naming the key. None — the caller falls back to
+    * Spark's inference and its errors — for a glob, a layout with
+    * subdirectories (partitioned), no data file, schema merging on, or
+    * a footer that does not read.
     */
   private[graft] def footerSchema(spark: SparkSession, p: String): Option[StructType] = {
     val conf = spark.sessionState.conf
@@ -178,10 +175,25 @@ object Tables {
               HadoopReadOptions.builder(hadoopConf)
                 .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
             val footer = try reader.getFooter finally reader.close()
+            if (!conf.legacyParquetNanosAsLong && hasNanos(footer.getFileMetaData.getSchema))
+              throw new NanosWithoutConf(p)
             ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
               new ParquetToSparkSchemaConverter(conf))
           }
       }
-    } catch { case NonFatal(_) => None }
+    } catch {
+      case e: NanosWithoutConf => throw e
+      case NonFatal(_) => None
+    }
   }
+
+  private def hasNanos(schema: MessageType): Boolean =
+    schema.getColumns.asScala.exists(_.getPrimitiveType.getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+      case _ => false
+    })
+
+  private final class NanosWithoutConf(p: String) extends IllegalArgumentException(
+    s"$p has a TIMESTAMP(NANOS) column, which loads only under " +
+      s"${SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key}=true (Engine.session sets it)")
 }

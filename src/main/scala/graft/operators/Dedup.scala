@@ -521,11 +521,9 @@ object Dedup {
     // (measured 25 s vs 7 s on the LSH pair graph at sf0.1). The eager
     // localCheckpoint also truncates the wide lineage so no round can
     // ever re-plan through the pair join.
-    val directed = pairs
+    val directed0 = pairs
       .select(col("a_id").as("src"), col("b_id").as("dst"))
       .localCheckpoint(eager = true)
-    val edges = directed
-      .union(directed.select(col("dst").as("src"), col("src").as("dst")))
     // The loop below runs tens of rounds over a label table that is tiny
     // relative to the corpus (one row per paired node), so its cost is
     // per-round plan/codegen/job-dispatch, not data. Shrink the shuffle
@@ -537,14 +535,14 @@ object Dedup {
     // has no stats for the checkpointed edge list, so every round's
     // labels-x-edges join falls back to a shuffle join instead of AQE's
     // runtime broadcast conversion). The edge list above already
-    // materialized under the session's full conf. Conf is
-    // session-global, so save/restore — components() callers are
-    // sequential by contract.
-    val spark = pairs.sparkSession
-    val confKeys = Seq("spark.sql.shuffle.partitions")
-    val saved = confKeys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    // materialized under the session's full conf; the loop runs on a
+    // scoped session, so a job planned meanwhile on the caller's keeps
+    // its width.
+    graft.Engine.scoped(pairs.sparkSession,
+        Map("spark.sql.shuffle.partitions" -> "8")) { c =>
+    val directed = org.apache.spark.sql.GraftBridge.rebind(directed0, c)
+    val edges = directed
+      .union(directed.select(col("dst").as("src"), col("src").as("dst")))
     // Hash-to-min seeding: each node starts at min(self, neighbors) —
     // one shuffle-aggregate, the same cost the bare distinct() init paid,
     // but for the clique/star components a near-dup pair graph is mostly
@@ -634,15 +632,10 @@ object Dedup {
           "diameter exceeds the cap; raise maxIters (labels would be " +
           "silently wrong: keeper/dropped decisions need the true minimum)")
     }
-    // Safe to restore before the caller's first action: every round's
-    // labels were materialized into cache by the in-loop convergence
-    // action, so the returned frame only reads cached blocks.
+    // Every round's labels were materialized by the in-loop convergence
+    // action, so the returned frame (rebound onto the caller's session)
+    // only reads checkpointed blocks.
     labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
   }
 

@@ -167,13 +167,6 @@ object Doremi {
         sum(bitlen(col("ctx_f") + col("v_f"))
           - bitlen(col("pair_f") + 1L)).as("self_bits"))
 
-  /** `scoredBits` keyed by source — `domainWeights`' scoring subtree. */
-  private[graft] def sourceBits(docs: DataFrame, idCol: String,
-      textCol: String, groupCol: String, refPred: Column): DataFrame =
-    scoredBits(trainJoint(docs, idCol, textCol, groupCol, refPred),
-        "source")
-      .withColumnRenamed("key", "source")
-
   def domainWeights(docs: DataFrame, idCol: String, textCol: String,
       groupCol: String, refPred: Column): DataFrame =
     domainWeightsFrom(

@@ -77,13 +77,6 @@ object MixtureModelStore {
     DurableStore.Part("ctx", Some("prev"), Seq("prev", "ctx_f", "ctx_r")),
     DurableStore.Part("vocab", None, Seq("v_f", "v_r")))
 
-  /** Durable layout of DSIR's trained importance table (<= DsirBuckets
-    * rows — the l110 writer's spec).
-    */
-  val DsirFamily = "dsir_imp"
-  val DsirParts: Seq[DurableStore.Part] =
-    Seq(DurableStore.Part("imp", None, Seq("bkt", "imp")))
-
   /** Load-or-build the DURABLE joint count tables (pc, ctx, vocab):
     * count training runs in the first application ever to see this
     * corpus (the raw training job lives HERE — the shared cache's
@@ -100,14 +93,6 @@ object MixtureModelStore {
     }
     (t("pc"), t("ctx"), t("vocab"))
   }
-
-  /** Load-or-build the DURABLE DSIR importance table. */
-  def durableDsirImportance(s: SparkSession, dir: String,
-      fp: String): DataFrame =
-    DurableStore.loadOrBuild(s, DsirFamily, fp, DsirParts) {
-      Map("imp" -> Dsir.importanceTableFrom(sharedDsirBuckets(s, dir),
-        DsirBuckets))
-    }("imp")
 
   /** The INCREMENTAL durable lineage of the DSIR family — EXACT like
     * the LM one (l132): the trained state's mergeable form is the

@@ -336,29 +336,13 @@ object NgramLm {
     * every element_at inside the lambda, O(tokens²) per document.
     * T28Probe measured the two together as a 10x difference.
     */
-  private def foldBits(serve: ServeModel, toks: Column,
+  private[graft] def foldBits(serve: ServeModel, toks: Column,
       fin: (Column, Column) => Column): Column =
     aggregate(pairBitsArr(serve, toks),
       struct(lit(0L).as("s"), lit(0L).as("c")),
       (acc, b) => struct((acc.getField("s") + b).as("s"),
         (acc.getField("c") + lit(1L)).as("c")),
       acc => fin(acc.getField("s"), acc.getField("c")))
-
-  /** Per-ROW surprisal over a token array against the collected model:
-    * nested map-literal lookups of precomputed bits, no join, no
-    * aggregation — streaming-safe anywhere a column is. Yields a
-    * struct (n_scored, total_bits, bpt); total_bits/bpt are NULL for
-    * < 2 tokens, exactly `surprisalBits`' contract (the two paths are
-    * equal row-for-row; NgramLmSpec pins it). Extract ONE field per
-    * projection where possible — see `foldBits` — or use
-    * `surprisalBandLocal` for the band-census shape.
-    */
-  def surprisalBitsLocal(serve: ServeModel, toks: Column): Column =
-    foldBits(serve, toks, (s, c) => {
-      val total = when(c > 0, s)
-      struct(c.as("n_scored"), total.as("total_bits"),
-        (total.cast("double") / c).as("bpt"))
-    })
 
   /** The perplexity BAND of one document (floor bits-per-token; NULL
     * under 2 tokens) as a single scalar column — the band-census serve

@@ -119,13 +119,6 @@ object OpqModelStore {
       Opq.OpqModel(mat(t("rot")), err, cb))
   }
 
-  /** The rotation matrix alone (the l116 index-build input). */
-  def durableRotation(s: SparkSession, dir: String,
-      fp: String): Array[Array[Double]] = {
-    val t = durableTables(s, dir, fp)
-    StoreBuildLedger.timed("opq_rotation")(reconstruct(t))._2.rotation
-  }
-
   /** Drop every in-memory artifact (the fresh-application simulation
     * of the durable-reload gates).
     */

@@ -26,7 +26,9 @@ import graft.sources.Catalog
   *   - `queryLimit` (index.js:47, default 100k rows/page): the reference's
   *     read-page size existed only to bound single-process memory; the
   *     Spark analogue is input-split sizing, so when set it becomes
-  *     `spark.sql.files.maxPartitionBytes` (bytes) for the migration.
+  *     `spark.sql.files.maxPartitionBytes` (bytes) for the migration's
+  *     own reads only: `migrate` plans them on a scoped session
+  *     (`Engine.scoped`), and the caller's session keeps its conf.
   */
 final case class PipelineConfig(
     insertLimit: Int = 100,
@@ -135,16 +137,12 @@ object Pipeline {
       sink: Sink,
       prepare: String => DataFrame => DataFrame = defaultPrepare,
       config: PipelineConfig = PipelineConfig()): DataFrame = {
-    // Split-size override is scoped to THIS migration: snapshot the conf
-    // and restore it in the finally below, so the reduced split size does
-    // not silently apply to every later query on the shared session.
-    val savedSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    config.queryLimit.foreach(b =>
-      spark.conf.set("spark.sql.files.maxPartitionBytes", b.toString))
     val tables = Catalog.nonSystem(Catalog.listTables(srcDir), config.systemMarker)
     val pool = Executors.newFixedThreadPool(math.max(1, config.limit))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
+    val split = config.queryLimit
+      .map(b => "spark.sql.files.maxPartitionBytes" -> b.toString).toMap
+    val reports = try graft.Engine.scoped(spark, split) { scoped =>
       val futures = tables.map { name =>
         Future {
           spark.sparkContext.setJobDescription(s"migrate $name")
@@ -164,7 +162,7 @@ object Pipeline {
               // double-count it, so an unmarked table is re-done as
               // delete-then-rewrite (truncate also clears any stale marker).
               if (config.resume) sink.truncate(name)
-              val r = migrateTable(spark, srcDir, name, prepare(name), sink, config)
+              val r = migrateTable(scoped, srcDir, name, prepare(name), sink, config)
               sink.markDone(name)
               // per-collection completion line (index.js:271-272), gated by
               // the reference's `logging` flag (index.js:49)
@@ -180,15 +178,9 @@ object Pipeline {
           }
         }
       }
-      val reports = Await.result(Future.sequence(futures), Duration.Inf).flatten
-      import spark.implicits._
-      reports.sortBy(_.table_name).toDF()
-    } finally {
-      pool.shutdown()
-      if (config.queryLimit.isDefined) savedSplit match {
-        case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
-        case None => spark.conf.unset("spark.sql.files.maxPartitionBytes")
-      }
-    }
+      Await.result(Future.sequence(futures), Duration.Inf).flatten
+    } finally pool.shutdown()
+    import spark.implicits._
+    reports.sortBy(_.table_name).toDF()
   }
 }

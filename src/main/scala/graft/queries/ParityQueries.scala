@@ -310,7 +310,7 @@ object ParityQueries {
     QuerySpec(
       "p13_manifest_migrate",
       "MANIFEST-BACKED migration sink — the reference pipeline composed with the durable segment tier: the reference re-migrates by FULL RESCAN + rewrite (its only delta story is truncate-everything, index.js:186-198, 321-336; p07/p12 reproduce that contract), where a standing deployment wants O(delta) — so here each migration run lands as an immutable SEGMENT of a per-series manifest family and a re-migration writes ONLY the source rows not yet in the sink. Day 1 migrates the base slice as one segment/generation; day 2's re-migration DISCOVERS its delta against the already-migrated sink itself (left_anti on the row identity — the l56 incremental-dedup shape lifted to the pipeline level; the sink side is the bucketed single-segment registration, so at 100 TB the anti-join co-locates on the sink's bucket key instead of shuffling the corpus) and publishes base segments + one delta segment under the grown corpus's fingerprint — one create-if-absent marker, zero data movement. Retention is vacuumKeepLatest: the base GENERATION retires while its SEGMENT stays pinned through the kept child manifest (reachability, the s15 contract). Gates, in-query and hash-enforced: (1) O(delta) WRITE on the sink — the published manifest is exactly base + one delta and the base segment's files are path+length+mtime-untouched (Gates.writeODeltaOk, the l131 discipline); (2) retention pinned the base segment while retiring its generation with zero debris; (3) the sink serves the FULL union from disk with a TOMBSTONED build body (rows match the oracle only if the persisted segments served). Census = base/delta row counts + union aggregate invariants over the served sink",
-      (s, dir) => QuerySpec.withScratchStoreRoot(s) { _ =>
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { (s, _) =>
         val ds = graft.operators.DurableStore
         val fam = "mig_events"
         // bucketed on the row identity: the re-migration's anti-join

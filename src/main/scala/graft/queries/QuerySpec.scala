@@ -17,9 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - Array folds (dot products, rolling hashes) are sequential left-folds in
   *     DOUBLE/BIGINT on both sides (Spark sequential accumulate == DuckDB
   *     `list_reduce`).
-  *   - `events.ts` is parquet timestamp[ns]; Spark reads µs. Oracle SQL always
-  *     wraps it in `CAST(ts AS TIMESTAMP)` (the stored values are µs-grained,
-  *     so the cast is lossless).
+  *   - `events.ts` is a naive parquet TIMESTAMP(MICROS). Oracle SQL always
+  *     wraps it in `CAST(ts AS TIMESTAMP)` (lossless at µs grain).
   *   - Top-k is always fully tie-broken by a unique key.
   */
 final case class QuerySpec(
@@ -43,20 +42,17 @@ object QuerySpec {
   def tempSinkDir(): String =
     java.nio.file.Files.createTempDirectory("graft_sink_").toString
 
-  /** Run `body` against a fresh scratch durable-store root: points
-    * `spark.graft.store.root` at a new temp dir for the body, then
-    * restores the previous setting and deletes the dir.
+  /** Run `body` against a fresh scratch durable-store root: the body
+    * gets a session scoped (`Engine.scoped`) to `spark.graft.store.root`
+    * = a new temp dir, which is deleted afterwards, so a frame the body
+    * returns must not read the store lazily (checkpoint it).
     */
-  def withScratchStoreRoot[T](s: SparkSession)(body: String => T): T = {
+  def withScratchStoreRoot[T](s: SparkSession)(
+      body: (SparkSession, String) => T): T = {
     val root = tempSinkDir()
-    val saved = s.conf.getOption("spark.graft.store.root")
-    s.conf.set("spark.graft.store.root", root)
-    try body(root)
-    finally {
-      saved.fold(s.conf.unset("spark.graft.store.root"))(v =>
-        s.conf.set("spark.graft.store.root", v))
-      graft.pipeline.SinkFiles.deleteRecursive(root)
-    }
+    try graft.Engine.scoped(s, Map("spark.graft.store.root" -> root))(
+      body(_, root))
+    finally graft.pipeline.SinkFiles.deleteRecursive(root)
   }
 
   /** DuckDB-side rolling-hash fingerprint over `text` — the same

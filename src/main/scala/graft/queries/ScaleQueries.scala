@@ -58,21 +58,14 @@ object ScaleQueries {
           sortCol = Some("custkey"))
         Bucketing.writeBucketed(ord, "graft_s02_ord", "custkey", 8,
           sortCol = Some("custkey"))
-        // Disable broadcast while PLANNING the join so the no-Exchange
+        // bucketedJoin hints a sort-merge join, so the no-Exchange
         // assertion exercises the shuffle path bucketing is meant to
-        // eliminate (a broadcast join has no Exchange trivially).
-        val key = "spark.sql.autoBroadcastJoinThreshold"
-        val prev = s.conf.get(key)
-        val joined =
-          try {
-            s.conf.set(key, "-1")
-            val j = Bucketing.bucketedJoin(
-              s, "graft_s02_cust", "graft_s02_ord", "custkey")
-            val plan = j.queryExecution.executedPlan.toString
-            require(!plan.contains("Exchange"),
-              s"bucketed join should not shuffle:\n$plan")
-            j
-          } finally s.conf.set(key, prev)
+        // eliminate (a broadcast join would carry a BroadcastExchange).
+        val joined = Bucketing.bucketedJoin(
+          s, "graft_s02_cust", "graft_s02_ord", "custkey")
+        val plan = joined.queryExecution.executedPlan.toString
+        require(!plan.contains("Exchange"),
+          s"bucketed join should not shuffle:\n$plan")
         // The aggregate on top shuffles on c_mktsegment as usual — the
         // lever removes the JOIN's two fact-table exchanges, not the
         // final small-cardinality agg.
@@ -418,7 +411,7 @@ object ScaleQueries {
     QuerySpec(
       "s14_store_vacuum",
       "durable-store retention end-to-end (the s06 maintenance discipline applied to the model-store warehouse): two corpus GENERATIONS publish under a scratch family in a private root, debris is planted (a crashed staging sibling and a marker-less fingerprint dir — exactly what a killed builder leaves), vacuum keeps only generation 2 — and the kept layout must then SERVE a reload whose build body is a poisoned tombstone (it would emit zero rows), so n_kept_rows only matches the oracle if the reload came from the persisted files, the stale generation is gone and both debris classes were swept. Census = kept-generation row count + deterministic debris/stale counts + the gone-assert",
-      (s, dir) => QuerySpec.withScratchStoreRoot(s) { root =>
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { (s, root) =>
         val ds = graft.operators.DurableStore
         val parts = Seq(ds.Part("t", None))
         try {
@@ -459,7 +452,7 @@ object ScaleQueries {
     QuerySpec(
       "s15_store_vacuum_generations",
       "GENERATION-AWARE retention (s14 proved mechanics with caller-enumerated fingerprints; production wants 'keep the newest N'): markers carry a publish stamp (ts=millis.seq, same-millis ties broken by per-JVM sequence), and vacuumKeepLatest(family, n) keeps the n newest COMPLETE layouts by stamp without the caller naming any fingerprint. Two scratch families in a private root prove the two hard cases end-to-end: (a) a plain family publishes three generations in order — keep-latest-2 must retire exactly the oldest, and the kept newest must then SERVE a reload whose build body is a poisoned tombstone (rows match the oracle only if the files survived); (b) a MANIFEST lineage publishes base and child generations — keep-latest-1 retires the base GENERATION but must PIN the base SEGMENT the kept child manifest still lists (reachability is through surviving manifests, the l131 O(delta) layout's retention contract), while sweeping a planted unreferenced complete segment (stale data) and a marker-less half-written one (debris); the kept child must serve the FULL union from disk with a tombstoned build body. Census = kept-generation row counts + deterministic stale/ordering/pinning gates",
-      (s, dir) => QuerySpec.withScratchStoreRoot(s) { root =>
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { (s, root) =>
         val ds = graft.operators.DurableStore
         val parts = Seq(ds.Part("t", None))
         try {
@@ -530,7 +523,7 @@ object ScaleQueries {
     QuerySpec(
       "s16_store_vacuum_grace",
       "WINDOW-FREE retention (s14/s15 prove the mechanics but require a maintenance window — deleting a layout a concurrent reader resolved paths through fails its scans mid-flight): vacuum/vacuumKeepLatest(graceMillis) age-gate the sweep on the SUPERSESSION event, the Delta tombstone-retention discipline — an unkept generation sweeps only once the PUBLISH THAT DISPLACED IT from the retention window (the rank-i-minus-n layout's stamp, never its own) is older than the grace, so a reader that resolved it moments before supersession has the whole grace to drain; unreferenced complete segments age from a TOMBSTONE the first observing sweep plants (a compaction's superseded chain has historical mtimes but becomes unreferenced only at the swap), and half-written debris by mtime — which also protects an in-flight builder's complete-but-unpublished segments (the writeSegment->publishManifest window; publishManifest additionally re-verifies and retracts). Proven end-to-end on a scratch family in a private root: three stamped generations with a wide middle-to-newest stamp gap; a CONCURRENT READER resolves the middle one pre-vacuum; a graced keep-latest-1 (cutoff placed strictly between the middle and newest stamps, computed from the layouts' own stamps, biased low so scheduling delay cannot cross it) retires exactly the oldest — its displacing publish (the middle's) is aged out — while the freshly superseded middle SURVIVES even though its OWN publish stamp is also aged out (the discriminator against the retired publish-stamp gate) and the reader still serves its rows (counted AFTER the sweep); planted fresh in-flight state (one complete unreferenced segment — tombstoned, not deleted — and one half-written marker-less dir) survives the same graced pass; then the grace window closes (grace 0) and the leftovers sweep exactly — middle generation + orphan segment as stale, half-written dir as debris — while the kept newest serves from disk with a tombstoned build body. Census = reader/kept row counts + deterministic sweep gates",
-      (s, dir) => QuerySpec.withScratchStoreRoot(s) { root =>
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { (s, root) =>
         val ds = graft.operators.DurableStore
         val fam = "vacgrace"
         val parts = Seq(ds.Part("t", None))
@@ -610,7 +603,7 @@ object ScaleQueries {
     QuerySpec(
       "s17_store_multiwriter_append",
       "OPTIMISTIC MULTI-WRITER APPEND (the composition face the r15 cross-JVM race deliberately left open: there, the losing publisher's delta was DISCARDED — two independent ingesters appending different deltas to one family would silently diverge into sibling fingerprints): the family gains a HEAD pointer (_GRAFT_HEAD.v<k>, content = the fingerprint that IS version k; committing v(k+1) is ONE create-if-absent — the whole CAS, the Delta _delta_log discipline on the marker primitive) and appendManifest runs the commit-retry loop — read head, derive the child fingerprint by COMBINATION (the three fingerprint folds are associative-commutative, so fp(head ∪ delta) needs no scan of the head corpus: O(delta) compute to match the O(delta) write), publish child manifest = head segments ++ delta segment, CAS; a loser re-reads the new head and re-publishes its delta ON TOP. Proven in-query with two genuinely concurrent appender THREADS committing different document slices against one base: whatever the interleaving, the head lands at version 2, BOTH deltas are in the committed line (multiset-exact against base+d2+d3, and the head fingerprint equals the combined union fingerprint — a loser that dropped rows could not forge it), and keep-latest-1 retention (with the automatic head pin) sweeps the intermediate generation while every segment the head lists survives and re-serves from disk. Census = committed-line row count + head version + exactness/commit gates",
-      (s, dir) => QuerySpec.withScratchStoreRoot(s) { _ =>
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { (s, _) =>
         val ds = graft.operators.DurableStore
         val fam = "mwappend"
         val parts = Seq(ds.Part("t", None))
@@ -684,7 +677,7 @@ object ScaleQueries {
     QuerySpec(
       "s18_store_time_travel",
       "HEAD-LINE HISTORY + TIME TRAVEL (the read faces the s17 commit log already paid for: one _GRAFT_HEAD.v<k> file per committed version IS a DESCRIBE HISTORY/VERSION AS OF substrate, no new write-path state): a base and two appendManifest commits build versions 0..2 of a scratch family; headLineage must list exactly those versions with the COMBINED fingerprints the appends committed (the algebra gate — a lineage that dropped or reordered a commit could not forge the fold); manifestTablesAt(v1) serves the line EXACTLY as of version 1 (multiset-exact against base+delta2, the later delta3 invisible — version addressing, not latest-wins); then keep-latest-1 retention with the automatic head pin retires the old versions and the SAME read must fail LOUDLY (a time-travel read may never silently serve a different version — the Delta vacuumed-log trade re-expressed), while the pinned head still serves all three slices. Census = as-of/head row counts + lineage/exactness/loud-failure gates",
-      (s, dir) => QuerySpec.withScratchStoreRoot(s) { _ =>
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { (s, _) =>
         val ds = graft.operators.DurableStore
         val fam = "timetravel"
         val parts = Seq(ds.Part("t", None))
@@ -743,7 +736,7 @@ object ScaleQueries {
     QuerySpec(
       "s19_store_cdc_batch",
       "CHANGE CAPTURE, batch face (what the reference can only do by re-scanning the whole source and re-sending it, index.js:186-198 — here the commit log that ingest already writes IS the change feed): over the s18 line (base + two appended commits), changesBetween(0, 2) must return EXACTLY the two appended slices (multiset-exact) while its inputFiles stay entirely inside the two delta segments' dirs — the O(delta) read gate: however large the standing corpus, a change read costs the window's appends; the empty window (2, 2] is an empty frame in the part's schema, not an error; an in-place compaction rewriting the chain (content identical, layout merged) must NOT disturb the window — each appended head file names its commit's delta segment, so windows resolve from the commit log without the superseded manifests and stay multiset-exact for as long as the tombstone-graced old segments survive (the live-tail-through-compaction contract); and once retention actually closes the grace (a grace-0 keep-latest sweep) the SAME window must fail LOUDLY — a change read may serve exactly the window or refuse, never a partial or doubled answer — while the compacted head still serves the full line. Census = changed/head row counts + exactness/delta-only/empty/compaction-survival/loud-failure gates",
-      (s, dir) => QuerySpec.withScratchStoreRoot(s) { _ =>
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { (s, _) =>
         val ds = graft.operators.DurableStore
         val fam = "cdc_batch"
         val parts = Seq(ds.Part("t", None))

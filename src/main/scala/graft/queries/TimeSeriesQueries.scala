@@ -34,7 +34,7 @@ object TimeSeriesQueries {
     * only (the aggregate results are small); production plans point the
     * same writeStream at a real sink.
     */
-  private[queries] def runBounded(s: org.apache.spark.sql.SparkSession,
+  private[graft] def runBounded(s: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.DataFrame, name: String, mode: String,
       statePartitions: Option[Int] = None,
       extraConf: Map[String, String] = Map.empty)
@@ -43,26 +43,23 @@ object TimeSeriesQueries {
     // query START (into the checkpoint); every state store instance pays
     // per-batch snapshot/delta file IO, and a stream-stream join keeps
     // FOUR stores per partition — size the partition count to the state
-    // volume, exactly as a production job would, and restore after start.
-    // extraConf covers the same start-pinned class of settings (e.g. the
-    // state store provider transformWithState requires).
+    // volume, exactly as a production job would. extraConf covers the
+    // same start-pinned class of settings (e.g. the state store provider
+    // transformWithState requires). The stream starts from a scoped
+    // session, so a job planned meanwhile on `s` keeps its width.
     val overrides = statePartitions
       .map(n => "spark.sql.shuffle.partitions" -> n.toString).toMap ++
       extraConf
-    val prev = overrides.keys.map(k => k -> s.conf.getOption(k)).toMap
-    val q =
-      try {
-        overrides.foreach { case (k, v) => s.conf.set(k, v) }
-        plan.writeStream.format("memory").queryName(name)
-          .outputMode(mode)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      } finally prev.foreach { case (k, vOpt) =>
-        vOpt.fold(s.conf.unset(k))(v => s.conf.set(k, v))
-      }
-    q.awaitTermination()
-    q.stop() // deregister so re-runs in the same session can reuse the name
-    s.table(name)
+    graft.Engine.scoped(s, overrides) { c =>
+      val q = org.apache.spark.sql.GraftBridge.rebind(plan, c)
+        .writeStream.format("memory").queryName(name)
+        .outputMode(mode)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      q.stop() // deregister so re-runs in the same session can reuse the name
+      c.table(name)
+    }
   }
 
   val specs: Seq[QuerySpec] = Seq(
@@ -2395,7 +2392,7 @@ object TimeSeriesQueries {
     QuerySpec(
       "t53_stream_ingest_restart",
       "the RESTART face of the ingest->durable composition — the residual the r15 VERDICT named (t52 covers same-run retries; a driver restart from checkpoint replays the last uncommitted batch into a FRESH JVM whose dedup memory is empty, and without durable state the replay publishes a duplicate segment = duplicate rows in the published union): the batch ledger makes the replay idempotent, KILLED AND RESTARTED FOR REAL. Documents stage as exactly three files and stream maxFilesPerTrigger=1 (three deterministic micro-batches); each batch lands as one segment via writeBatchSegmentOnce; an injected fault kills the query inside foreachBatch of batch 1 AFTER its segment write and ledger record but BEFORE the batch commits to the checkpoint — the exact at-least-once window; a second query restarts from the SAME checkpoint dir, Structured Streaming replays batch 1 under the same id with the same file, and the replay finds the ledger and returns the recorded segment WITHOUT writing (gated: batch 1 was invoked at least twice while the ledger holds exactly one segment per batch); on drain the run publishes manifest = the ledgered segments in batch order — recovered from disk, as a restarted driver must — and a cold resolution serves the union MULTISET-EXACT against a batch read of the same staged files (no duplicate from the replay, nothing lost to the kill); ingest accrues zero build-ledger seconds (never a training job). Census = row/batch counts + replay/dedup/exactness gates",
-      (s, dir) => QuerySpec.withScratchStoreRoot(s) { _ =>
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { (s, _) =>
         val ds = graft.operators.DurableStore
         val fam = "ingest_restart"
         val parts = Seq(ds.Part("t", None))
@@ -2480,7 +2477,7 @@ object TimeSeriesQueries {
     QuerySpec(
       "t54_stream_ingest_headline",
       "the FULL continuous-ingest lifecycle composed from the round-16 primitives — t52/t53 publish each run as a sibling FINGERPRINT, which is right for one writer but leaves the family without a linear history: here the drained batches COMMIT ONTO THE HEAD LINE. Base corpus (documents m<5) publishes as one segment and becomes head v0; the delta (m in 5..7) streams in two deterministic micro-batches, each landing as a ledgered segment (writeBatchSegmentOnce — the t53 restart discipline); on drain each ledgered segment is appended with appendManifest in batch order (child fingerprints derived by COMBINING the per-segment fingerprints read back from the segment's own parquet — the restarted-driver shape: nothing comes from process memory), advancing the head to v2 whose fingerprint must equal the independently computed fingerprint of the whole m<8 slice (a commit that dropped or duplicated rows could not forge the three-fold combination); the 3-segment head chain then crosses the auto-compaction threshold (Maintenance.autoCompactManifest, maxSegments=2) and compacts WITHOUT moving the head (fingerprint identity is content, chains are layout), keep-latest-1 retention with the automatic head pin retires the base and intermediate generations plus the superseded chain segments, ledgers are dropped, and the head line serves MULTISET-EXACT against a batch read of the m<8 slice with zero build-ledger seconds anywhere. Census = served rows + head version + fingerprint-forgery/exactness/maintenance gates",
-      (s, dir) => QuerySpec.withScratchStoreRoot(s) { root =>
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { (s, root) =>
         val ds = graft.operators.DurableStore
         val fam = "ingest_head"
         val parts = Seq(ds.Part("t", None))
@@ -2573,7 +2570,7 @@ object TimeSeriesQueries {
     QuerySpec(
       "t55_stream_cdc_tail",
       "STREAMING CHANGE CAPTURE of the head line — the consumer side of t54's producer loop, and the shape the reference cannot express at all (its only change detection is re-scanning the source and re-sending everything, index.js:186-198; a downstream consumer here TAILS the commit log ingest already writes): spark.readStream.format(graft-store) turns the family's head versions into stream OFFSETS, so each micro-batch is one commit window read from ONLY the segments it appended. Proven in-query: base (m<4) publishes and becomes head v0; a snapshot-mode stream's FIRST batch must be the whole line as of stream start (the Delta starting-snapshot semantics, counted per phase through a memory sink); two appendManifest commits then land WHILE THE STREAM RUNS and each drains as EXACTLY its own slice (per-phase sink deltas equal the slice counts — a batch that re-read the standing corpus would surface as duplicates); the drained sink is multiset-exact against a batch read of the m<6 slice, the head sits at v2, and the whole tail accrues zero build-ledger seconds (serving changes is never a training job). Census = total/snapshot/tail row counts + head version + exactness/train-free gates",
-      (s, dir) => QuerySpec.withScratchStoreRoot(s) { _ =>
+      (s, dir) => QuerySpec.withScratchStoreRoot(s) { (s, _) =>
         val ds = graft.operators.DurableStore
         val fam = "cdc_tail"
         val parts = Seq(ds.Part("t", None))

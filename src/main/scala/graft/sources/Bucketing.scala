@@ -24,11 +24,12 @@ object Bucketing {
     sortCol.fold(w)(c => w.sortBy(c)).saveAsTable(table)
   }
 
-  /** Join two same-bucketed tables on their bucket key. The physical plan
-    * contains no Exchange for either input (verified by
-    * `BucketingSpec`).
+  /** Join two same-bucketed tables on their bucket key. The `merge` hint
+    * keeps the co-located sort-merge join even when one side is small
+    * enough to broadcast, so the physical plan contains no Exchange for
+    * either input (verified by `ScaleToolsSpec` and s02).
     */
   def bucketedJoin(spark: SparkSession, leftTable: String,
       rightTable: String, key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
+    spark.table(leftTable).hint("merge").join(spark.table(rightTable), key)
 }

@@ -21,4 +21,19 @@ object GraftBridge {
   def ofRows(s: classic.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : DataFrame = classic.Dataset.ofRows(s, plan)
+
+  /** Bridge into `private[sql] classic.SparkSession.cloneSession`: a
+    * session sharing `s`'s SparkContext, cache and shared state, with a
+    * copy of its conf, temp views and registered functions.
+    */
+  def cloneSession(s: SparkSession): SparkSession =
+    s.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `d`'s analyzed plan as a Dataset of session `s` (the `ofRows`
+    * shape, keeping `d`'s encoder): later plans built on the result
+    * read `s`'s conf.
+    */
+  def rebind[T](d: Dataset[T], s: SparkSession): Dataset[T] =
+    ofRows(s.asInstanceOf[classic.SparkSession], d.queryExecution.analyzed)
+      .as(d.encoder)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Doremi
@@ -11,6 +12,13 @@ import graft.operators.Doremi
 class DoremiSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** `scoredBits` keyed by source: `domainWeights`' scoring subtree. */
+  private def sourceBits(docs: DataFrame, refPred: Column): DataFrame =
+    Doremi.scoredBits(
+        Doremi.trainJoint(docs, "doc_id", "text", "source", refPred),
+        "source")
+      .withColumnRenamed("key", "source")
 
   private def bitlen(x: Long): Int =
     math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(x))
@@ -203,8 +211,7 @@ class DoremiSpec extends SparkSpec {
         sum("self_bits").as("sb"))
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val sb = graft.operators.Doremi.sourceBits(docs, "doc_id", "text",
-        "source", col("doc_id") % 7 === 0)
+    val sb = sourceBits(docs, col("doc_id") % 7 === 0)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(pd === sb)
@@ -284,8 +291,7 @@ class DoremiSpec extends SparkSpec {
     // scoring side (pre-checkpoint): pair/context tables reach the pair
     // stream as broadcast hash joins — never shuffled joins — with
     // exactly one BNLJ (the one-row vocab attach)
-    val scoring = Doremi.sourceBits(docs, "doc_id", "text", "source",
-        col("doc_id") % 3 === 0)
+    val scoring = sourceBits(docs, col("doc_id") % 3 === 0)
       .queryExecution.executedPlan.toString
     assert(scoring.contains("BroadcastHashJoin"), s"plan:\n$scoring")
     assert(!scoring.contains("SortMergeJoin"), s"plan:\n$scoring")

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{DeflateDictStore, DupSpanStore, DurableStore,
-  MixtureModelStore, NbModelStore, NgramModelStore, OpqModelStore,
-  StoreBuildLedger}
+import graft.operators.{DeflateDictStore, Dsir, DupSpanStore,
+  DurableStore, MixtureModelStore, NbModelStore, NgramModelStore,
+  OpqModelStore, StoreBuildLedger}
 
 /** The durable-store contract (the l122/l123 gates, unit-faced): a
   * family's artifacts live at a fixed path keyed by a corpus content
@@ -74,6 +74,19 @@ class DurableStoreSpec extends SparkSpec {
     val crc = new java.io.File(f.getParentFile, s".${f.getName}.crc")
     if (crc.exists()) assert(crc.delete())
   }
+
+  /** A durable family over DSIR's trained importance table (<=
+    * DsirBuckets rows), built from the mixture store's bucket frame.
+    */
+  private val DsirFamily = "dsir_imp"
+  private val DsirParts = Seq(DurableStore.Part("imp", None, Seq("bkt", "imp")))
+
+  private def durableDsirImportance(fp: String): DataFrame =
+    DurableStore.loadOrBuild(spark, DsirFamily, fp, DsirParts) {
+      Map("imp" -> Dsir.importanceTableFrom(
+        MixtureModelStore.sharedDsirBuckets(spark, fixtureDir),
+        MixtureModelStore.DsirBuckets))
+    }("imp")
 
   private def delta(family: String)(body: => Unit): Double = {
     val before = DurableStore.buildSeconds(family)
@@ -362,16 +375,14 @@ class DurableStoreSpec extends SparkSpec {
     val fp = DurableStore.documentsFp(spark, fixtureDir)
     val (pc1, ctx1, v1) =
       MixtureModelStore.durableJointCounts(spark, fixtureDir, fp)
-    val imp1 = MixtureModelStore
-      .durableDsirImportance(spark, fixtureDir, fp)
+    val imp1 = durableDsirImportance(fp)
     val (pcR, ctxR, vR, impR) =
       (sortedRows(pc1), sortedRows(ctx1), sortedRows(v1),
         sortedRows(imp1))
     MixtureModelStore.evictAll()
     DurableStore.dropRegistered(spark, MixtureModelStore.JointFamily,
       fp, MixtureModelStore.JointParts)
-    DurableStore.dropRegistered(spark, MixtureModelStore.DsirFamily,
-      fp, MixtureModelStore.DsirParts)
+    DurableStore.dropRegistered(spark, DsirFamily, fp, DsirParts)
     val dj = delta(MixtureModelStore.JointFamily) {
       val (pc2, ctx2, v2) =
         MixtureModelStore.durableJointCounts(spark, fixtureDir, fp)
@@ -379,9 +390,8 @@ class DurableStoreSpec extends SparkSpec {
       assert(sortedRows(ctx2) === ctxR)
       assert(sortedRows(v2) === vR)
     }
-    val dd = delta(MixtureModelStore.DsirFamily) {
-      assert(sortedRows(MixtureModelStore
-        .durableDsirImportance(spark, fixtureDir, fp)) === impR)
+    val dd = delta(DsirFamily) {
+      assert(sortedRows(durableDsirImportance(fp)) === impR)
     }
     assert(dj === 0.0, s"joint reload accrued build seconds: $dj")
     assert(dd === 0.0, s"DSIR reload accrued build seconds: $dd")
@@ -390,12 +400,12 @@ class DurableStoreSpec extends SparkSpec {
   test("OPQ family: durable reload is zero-build with the identical " +
       "rotation matrix") {
     val fp = DurableStore.embeddingsFp(spark, fixtureDir)
-    val r1 = OpqModelStore.durableRotation(spark, fixtureDir, fp)
+    val r1 = OpqModelStore.shared(spark, fixtureDir)._2.rotation
     OpqModelStore.evictAll()
     DurableStore.dropRegistered(spark, OpqModelStore.DurableFamily, fp,
       OpqModelStore.DurableParts)
     val d = delta(OpqModelStore.DurableFamily) {
-      val r2 = OpqModelStore.durableRotation(spark, fixtureDir, fp)
+      val r2 = OpqModelStore.shared(spark, fixtureDir)._2.rotation
       assert(r2.length === r1.length)
       assert(r1.zip(r2).forall { case (a, b) =>
         java.util.Arrays.equals(a, b) },

@@ -1,0 +1,89 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicBoolean
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
+
+import graft.queries.TimeSeriesQueries
+
+/** `Engine.scoped` is the one way the engine overrides session conf: the
+  * override reaches the plans built inside the body and nothing planned
+  * on the caller's session, even while the body runs.
+  */
+class EngineSpec extends SparkSpec {
+
+  private val sf = "/root/testdata/sf0.001" // the TESTDATA.md fixtures
+  private val width = "spark.sql.shuffle.partitions"
+
+  /** The partition counts of the shuffles `df` plans. */
+  private def shuffleWidths(df: DataFrame): Seq[Int] =
+    (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect { case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions }
+
+  private def grouped(s: org.apache.spark.sql.SparkSession): DataFrame =
+    s.range(100).groupBy(col("id") % 7).count()
+
+  test("only Engine.scala writes session conf in src/main") {
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val writers = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Engine.scala")
+      .filter { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        src.contains(".conf.set(") || src.contains(".conf.unset(")
+      }.toSeq
+    assert(writers.isEmpty, s"session conf written outside Engine: ${writers.mkString(", ")}")
+  }
+
+  test("scoped: the body sees the override, the parent never does") {
+    val parent = spark.conf.get(width)
+    val scoped = (parent.toInt + 3).toString
+    val back = Engine.scoped(spark, Map(width -> scoped)) { c =>
+      assert(c.conf.get(width) === scoped)
+      assert(spark.conf.get(width) === parent)
+      assert(shuffleWidths(grouped(c)) === Seq(scoped.toInt))
+      // a parent-session plan built inside the body keeps the parent's width
+      assert(shuffleWidths(grouped(spark)) === Seq(parent.toInt))
+      grouped(c).localCheckpoint(eager = true)
+    }
+    assert(spark.conf.get(width) === parent)
+    assert(back.sparkSession eq spark, "a returned frame stays bound to the clone")
+    assert(back.agg(sum("count")).head().getLong(0) === 100L)
+    // a lazy returned frame plans under the caller's conf
+    val lazyBack = Engine.scoped(spark, Map(width -> scoped))(grouped)
+    assert(shuffleWidths(lazyBack) === Seq(parent.toInt))
+    // no override: the body runs on the caller's own session
+    assert(Engine.scoped(spark, Map.empty)(identity) eq spark)
+  }
+
+  test("runBounded pins the stream's state width without touching the " +
+      "session a concurrent job plans on") {
+    val parent = spark.conf.get(width)
+    val seen = new ConcurrentLinkedQueue[String]()
+    val done = new AtomicBoolean(false)
+    val poller = new Thread(() =>
+      while (!done.get()) {
+        val w = spark.conf.get(width)
+        if (w != parent) seen.add(w)
+        Thread.sleep(1)
+      })
+    poller.start()
+    val counts =
+      try (1 to 20).map { i =>
+        TimeSeriesQueries.runBounded(spark, Tables.loadStream(spark, sf, "region"),
+          s"engine_spec_bounded_$i", "append", statePartitions = Some(8)).count()
+      } finally { done.set(true); poller.join() }
+    assert(counts.forall(_ == 5L), counts)
+    assert(seen.isEmpty,
+      s"the parent session read ${seen.size} overridden widths: ${seen.asScala.toSet}")
+  }
+}

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bpe, NgramLm}
@@ -9,6 +10,17 @@ import graft.operators.{Bpe, NgramLm}
   * checks fixture equality; these pin the arguments behind it.
   */
 class NgramLmSpec extends SparkSpec {
+
+  /** Per-row surprisal struct (n_scored, total_bits, bpt) from the
+    * collected model's fold: the reference the join path must equal.
+    */
+  private def surprisalBitsLocal(serve: NgramLm.ServeModel,
+      toks: Column): Column =
+    NgramLm.foldBits(serve, toks, (s, c) => {
+      val total = when(c > 0, s)
+      struct(c.as("n_scored"), total.as("total_bits"),
+        (total.cast("double") / c).as("bpt"))
+    })
 
   private def docsDF(texts: Seq[String]) = {
     import spark.implicits._
@@ -186,7 +198,7 @@ class NgramLmSpec extends SparkSpec {
         .select(col("doc_id"),
           graft.functions.TextFunctions.tokens(col("text")).as("toks"))
         .select(col("doc_id"),
-          NgramLm.surprisalBitsLocal(serve, col("toks")).as("sc"))
+          surprisalBitsLocal(serve, col("toks")).as("sc"))
         .select(col("doc_id"), col("sc.n_scored"), col("sc.total_bits"),
           col("sc.bpt"))
         .collect()
@@ -255,7 +267,7 @@ class NgramLmSpec extends SparkSpec {
     assert(serve.unseenBits === 0)
     val fold = docs
       .select(graft.functions.TextFunctions.tokens(col("text")).as("toks"))
-      .select(NgramLm.surprisalBitsLocal(serve, col("toks")).as("sc"))
+      .select(surprisalBitsLocal(serve, col("toks")).as("sc"))
       .select(col("sc.n_scored"), col("sc.total_bits")).collect().head
     assert(fold.getLong(0) === 2L && fold.getLong(1) === 0L)
   }

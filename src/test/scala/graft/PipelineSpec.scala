@@ -178,6 +178,36 @@ class PipelineSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
+  test("queryLimit splits the migration's reads and leaves the caller's " +
+      "session conf alone") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val src = Files.createTempDirectory("graft_qlimit_").toString
+    Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.001/lineitem.parquet"),
+      java.nio.file.Paths.get(s"$src/lineitem.parquet"))
+    val before = spark.conf.getOption(key)
+    val sinkSaw = new ConcurrentLinkedQueue[Option[String]]()
+    val sink = new Sink {
+      override def truncate(table: String): Unit = ()
+      override def append(df: DataFrame, table: String): Unit = {
+        sinkSaw.add(spark.conf.getOption(key)) // the caller's session
+        noopSink.append(df, table)
+      }
+    }
+    val prepared = new ConcurrentLinkedQueue[(String, Int)]()
+    val ledger = Pipeline.migrate(spark, src, sink,
+      name => df => {
+        prepared.add(df.sparkSession.conf.get(key) -> df.rdd.getNumPartitions)
+        Pipeline.defaultPrepare(name)(df)
+      },
+      PipelineConfig(queryLimit = Some(16384L), logging = false)).collect()
+    assert(ledger.map(_.getString(0)).toSeq === Seq("lineitem"))
+    assert(sinkSaw.asScala.toSeq === Seq(before))
+    assert(spark.conf.getOption(key) === before)
+    val (limit, partitions) = prepared.asScala.toSeq match { case Seq(p) => p }
+    assert(limit === "16384")
+    assert(partitions > 1, s"a 16 KiB split limit read lineitem as $partitions partition")
+  }
+
   test("migrate runs all non-system tables and reports a sorted ledger") {
     val t = Timestamp.valueOf("2024-01-01 00:00:00")
     val dir = Files.createTempDirectory("graft_src_").toString

@@ -79,15 +79,12 @@ class ScaleToolsSpec extends SparkSpec {
     }
     Bucketing.writeBucketed(a, "graft_bkt_a", "id", 4, sortCol = Some("id"))
     Bucketing.writeBucketed(b, "graft_bkt_b", "id", 4, sortCol = Some("id"))
+    // 100-row sides would broadcast; the join's merge hint keeps the
+    // sort-merge join, which needs a shuffle unless bucketing removes it
     val joined = Bucketing.bucketedJoin(spark, "graft_bkt_a", "graft_bkt_b", "id")
-    // disable broadcast so the join would otherwise need a shuffle
-    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val plan = Bucketing.bucketedJoin(spark, "graft_bkt_a", "graft_bkt_b", "id")
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
+    assert(plan.contains("SortMergeJoin"), plan)
     assert(joined.count() === 100)
   }
 }

@@ -20,15 +20,17 @@ class TablesSpec extends SparkSpec {
 
   test("every fixture table loads with the schema Spark's inference gives") {
     Tables.all.foreach { n =>
-      val loaded = Tables.load(spark, sf, n) // also sets nanosAsLong
+      val loaded = Tables.load(spark, sf, n)
       val inferred = spark.read.parquet(Tables.path(sf, n))
       assert(Tables.footerSchema(spark, Tables.path(sf, n)).isDefined, n)
       assert(loaded.schema === Tables.normalizeTs(inferred).schema, n)
     }
   }
 
-  test("a TIMESTAMP(NANOS) column reads as long under nanosAsLong, then as " +
-      "a µs timestamp, as with Spark's inference") {
+  private val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** A one-row table whose `ts` is TIMESTAMP(NANOS); returns (base, path). */
+  private def nanosTable(): (String, String) = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
@@ -43,11 +45,32 @@ class TablesSpec extends SparkSpec {
     try w.write(new SimpleGroupFactory(schema).newGroup()
       .append("event_id", 1L).append("ts", 1704067200000001000L))
     finally w.close()
-    val loaded = Tables.load(spark, base, "t")
-    assert(Tables.footerSchema(spark, p).map(_("ts").dataType) === Some(LongType))
-    assert(loaded.schema === Tables.normalizeTs(spark.read.parquet(p)).schema)
-    assert(loaded.schema("ts").dataType === TimestampType)
-    assert(loaded.selectExpr("unix_micros(ts)").head().getLong(0) === 1704067200000001L)
+    (base, p)
+  }
+
+  test("a TIMESTAMP(NANOS) column reads as long under nanosAsLong, then as " +
+      "a µs timestamp, as with Spark's inference") {
+    val (base, p) = nanosTable()
+    Engine.scoped(spark, Map(nanosKey -> "true")) { s =>
+      val loaded = Tables.load(s, base, "t")
+      assert(Tables.footerSchema(s, p).map(_("ts").dataType) === Some(LongType))
+      assert(loaded.schema === Tables.normalizeTs(s.read.parquet(p)).schema)
+      assert(loaded.schema("ts").dataType === TimestampType)
+      assert(loaded.selectExpr("unix_micros(ts)").head().getLong(0) === 1704067200000001L)
+    }
+  }
+
+  test("a TIMESTAMP(NANOS) column on a session without nanosAsLong fails " +
+      "loudly, naming the key, and the load writes no conf") {
+    val (base, _) = nanosTable()
+    assert(!spark.conf.getOption(nanosKey).contains("true"),
+      "an earlier load wrote nanosAsLong onto the session")
+    Seq[() => Any](() => Tables.load(spark, base, "t"),
+        () => Tables.loadStream(spark, base, "t")).foreach { load =>
+      val e = intercept[IllegalArgumentException](load())
+      assert(e.getMessage.contains(nanosKey), e.getMessage)
+      assert(!spark.conf.getOption(nanosKey).contains("true"))
+    }
   }
 
   test("a load or a stream start runs no Spark job") {

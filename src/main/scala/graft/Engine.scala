@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Dataset, GraftBridge, SparkSession}
 
+import graft.streaming.LocalCheckpointFileManager
+
 /** Session factory — the engine's `connect` analogue (reference:
   * index.js:81-109 builds its two clients; here one SparkSession carries
   * both "connections"). Centralizes the configuration the engine expects
@@ -19,23 +21,44 @@ import org.apache.spark.sql.{Dataset, GraftBridge, SparkSession}
   *     (a local harness wants cores, not the 200 default; a cluster
   *     deployment would size to ~2-3x total executor cores or rely on
   *     AQE coalescing).
+  *   - graft.streaming.LocalCheckpointFileManager as the streaming
+  *     checkpoint writer: Spark's own manager writes each local
+  *     checkpoint file with forked `chmod`s, and the three files of a
+  *     micro-batch were about half of the micro-batch loop.
+  *   - A bounded job history (100 jobs, stages and SQL executions): the
+  *     UI is off, and Spark's 1000-entry default only grew the driver's
+  *     heap with each micro-batch.
   */
 object Engine {
+
+  /** The settings every engine session carries (`session` adds the
+    * master and the shuffle width).
+    */
+  private[graft] val settings: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // Runtime bloom-filter semi-join reduction (off by default): inject
+    // a bloom filter built from the dim side into the fact scan, so a
+    // selective join prunes shuffle input at the source — the
+    // Spark-native form of the classic bloom-prune pattern.
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.ui.enabled" -> "false",
+    // Headless history: Spark keeps 1000 finished jobs, stages and SQL
+    // executions for its UI whether or not the UI runs. A micro-batch
+    // is one of each, about 10 KB of live heap (plans/pr10/), so a faster
+    // stream held more heap until 1000. Nothing in the engine reads them.
+    "spark.ui.retainedJobs" -> "100",
+    "spark.ui.retainedStages" -> "100",
+    "spark.sql.ui.retainedExecutions" -> "100",
+    LocalCheckpointFileManager.ClassKey -> classOf[LocalCheckpointFileManager].getName)
 
   def session(master: String, shufflePartitions: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Runtime bloom-filter semi-join reduction (off by default): inject
-      // a bloom filter built from the dim side into the fact scan, so a
-      // selective join prunes shuffle input at the source — the
-      // Spark-native form of the classic bloom-prune pattern.
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.ui.enabled", "false")
+      .config(settings)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

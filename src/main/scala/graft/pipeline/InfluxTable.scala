@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, StandardOpenOption}
 import java.util
 
 import scala.collection.mutable.ArrayBuffer
@@ -241,30 +240,20 @@ final class FileFlushTransport(seriesDir: String,
   private def fs(p: Path) = SinkFiles.fileSystem(p, conf)
 
   /** Create-new, never overwrite: a task attempt stages each name once.
-    * On the local filesystem the file is one plain `java.nio` write.
-    * Hadoop's local `create` sets the file's permission on every call,
-    * and without libhadoop (Spark ships none) each set forks a `chmod`
-    * process, twice per flush with the checksum sidecar: about 3 ms a
-    * fork, which dominated the flush. The nio file has the JVM's default
-    * mode (0666 minus the process umask, 0644 under the default) and no
-    * `.crc`, which `ChecksumFileSystem` reads without verification;
-    * `publish` still renames through the checksummed filesystem, which
-    * drops a stale `.crc` left at the destination. Every other
-    * filesystem stages through its own `create`.
+    * Locally that is one plain `java.nio` write ([[SinkFiles.createLocal]]:
+    * no forked `chmod`, no `.crc`); `publish` still renames through the
+    * checksummed filesystem, which drops a stale `.crc` left at the
+    * destination. Every other filesystem stages through its own `create`.
     */
   override def deliver(attempt: String, fileName: String,
       body: Array[Byte]): Unit = {
     val p = new Path(s"$staging/$attempt/$fileName")
-    fs(p) match {
-      case local: LocalFileSystem =>
-        val f = local.pathToFile(p).toPath
-        Files.createDirectories(f.getParent)
-        Files.write(f, body, StandardOpenOption.CREATE_NEW)
-      case other =>
-        val out = other.create(p, false)
-        try out.write(body)
-        finally out.close()
+    val out = fs(p) match {
+      case local: LocalFileSystem => SinkFiles.createLocal(local.pathToFile(p).toPath)
+      case other => other.create(p, false)
     }
+    try out.write(body)
+    finally out.close()
   }
 
   // Best-effort: an abort must not mask the failure that triggered it,

@@ -1,5 +1,8 @@
 package graft.pipeline
 
+import java.io.{BufferedOutputStream, OutputStream}
+import java.nio.file.{Files, StandardOpenOption}
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
@@ -105,6 +108,20 @@ object SinkFiles {
     p.getFileSystem(captured.map(_.value)
       .orElse(SparkSession.getActiveSession.map(_.sparkContext.hadoopConfiguration))
       .getOrElse(new Configuration()))
+
+  /** The engine's one fork-free local write: create `f` new with
+    * `java.nio`, parent dirs included, behind a buffer. Hadoop's local
+    * `create` sets the file's permission on every call, and without
+    * libhadoop (Spark ships none) each set forks a `chmod` process, twice
+    * per file with the checksum sidecar: about 3 ms a fork. The nio file
+    * has the JVM's default mode (0666 minus the process umask, 0644 under
+    * the default) and no `.crc`, which `ChecksumFileSystem` and
+    * `FileContext`'s `LocalFs` read without verification.
+    */
+  def createLocal(f: java.nio.file.Path): OutputStream = {
+    Files.createDirectories(f.getParent)
+    new BufferedOutputStream(Files.newOutputStream(f, StandardOpenOption.CREATE_NEW))
+  }
 
   /** Recursively delete `dir` and assert it is gone (FileSystem.delete
     * returning false on a still-existing path would otherwise let the

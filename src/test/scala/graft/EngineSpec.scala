@@ -5,12 +5,17 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 
 import graft.queries.TimeSeriesQueries
+import graft.streaming.LocalCheckpointFileManager
 
 /** `Engine.scoped` is the one way the engine overrides session conf: the
   * override reaches the plans built inside the body and nothing planned
@@ -85,5 +90,36 @@ class EngineSpec extends SparkSpec {
     assert(counts.forall(_ == 5L), counts)
     assert(seen.isEmpty,
       s"the parent session read ${seen.size} overridden widths: ${seen.asScala.toSet}")
+  }
+
+  test("a local checkpoint on an Engine-configured session resolves to " +
+      "the engine's checkpoint manager") {
+    // Engine.session's own settings, as far as a live session takes them
+    // (static ones and core ones, such as the UI history caps, apply at
+    // boot only).
+    val live = spark // a started session has registered Spark's static keys
+    val runtime = Engine.settings.filter { case (k, _) =>
+      k.startsWith("spark.sql.") && !SQLConf.isStaticConfigKey(k)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("engine_spec_ckpt_")
+    Engine.scoped(live, runtime) { s =>
+      val hadoop = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.newHadoopConf()
+      val fm = CheckpointFileManager.create(new Path(dir.toUri), hadoop)
+      assert(fm.isInstanceOf[LocalCheckpointFileManager], fm.getClass)
+      val out = fm.createAtomic(new Path(dir.resolve("probe").toUri), false)
+      try assert(!out.isInstanceOf[CheckpointFileManager.RenameBasedFSDataOutputStream])
+      finally out.cancel()
+      val q = Tables.loadStream(s, sf, "region").writeStream.format("noop")
+        .option("checkpointLocation", dir.resolve("ckpt").toString)
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+    }
+    // Spark's own manager leaves a .crc beside each checkpoint file.
+    val walk = java.nio.file.Files.walk(dir)
+    val names = try walk.iterator().asScala.map(_.getFileName.toString).toSeq
+      finally walk.close()
+    assert(names.contains("0") &&
+      !names.exists(n => n.startsWith(".") && n.endsWith(".crc")), names)
   }
 }

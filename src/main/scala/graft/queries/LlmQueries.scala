@@ -311,6 +311,27 @@ object LlmQueries {
           keepBit * 2 + col("is_dup"))))
   }
 
+  /** l61's recall card: semantic pairs found vs the exact all-pairs
+    * twin, >= 85%. Semantic pairs are exact-verified, so sem is a
+    * subset of exact and hits == |sem|.
+    */
+  private[queries] def semRecallCard(exactPairs: org.apache.spark.sql.DataFrame,
+      semPairs: org.apache.spark.sql.DataFrame) =
+    Gates.recall(exactPairs, semPairs, Seq("a_id", "b_id"), 85, "n_exact",
+      "recall_ok")
+
+  /** l62's prune card: the docs the semantic components drop vs those
+    * the exact-pair components drop (derived by contracting the exact
+    * pairs through the sem labels), >= 85%.
+    */
+  private[queries] def pruneCard(semLbl: org.apache.spark.sql.DataFrame,
+      exactPairs: org.apache.spark.sql.DataFrame) = {
+    def dropped(lbl: org.apache.spark.sql.DataFrame) =
+      lbl.where(col("cluster_id") =!= col("doc_id"))
+    Gates.recall(dropped(Dedup.coarsenedComponents(semLbl, exactPairs)),
+      dropped(semLbl), Seq("doc_id"), 85, "n_exact_dropped", "prune_ok")
+  }
+
   /** The l72 persisted-artifact write shape shared by the model-store
     * serve queries (l107-l110): save a frame as a catalog table at a
     * run-unique name under the query's staging dir, bucketed on the
@@ -631,21 +652,11 @@ object LlmQueries {
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
         val q = e.where(col("vec_id") % 25 === 0)
-        // One pass over each side: a full-outer join carries presence
-        // markers so n_exact and the hit count come out of a single
-        // aggregate (separate count jobs would recompute the top-k
-        // plans once per count).
-        val exact = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 10)
-          .select(col("q_id"), col("c_id"), lit(1).as("__e"))
-        val approx = Similarity.lshTopK(s, q, e, "vec_id", "embedding", 10,
-            bits = 4, tables = 4)
-          .select(col("q_id"), col("c_id"), lit(1).as("__a"))
-        exact.join(approx, Seq("q_id", "c_id"), "full_outer")
-          .agg(count(col("__e")).as("n_exact"),
-            count(when(col("__e").isNotNull && col("__a").isNotNull, 1))
-              .as("__n_hit"))
-          .select(col("n_exact"),
-            (col("__n_hit") * 100 >= col("n_exact") * 35).as("recall_ok"))
+        Gates.recall(
+          Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 10),
+          Similarity.lshTopK(s, q, e, "vec_id", "embedding", 10,
+            bits = 4, tables = 4),
+          Seq("q_id", "c_id"), 35, "n_exact", "recall_ok")
       },
       Some(s"""SELECT count(*) AS n_exact, TRUE AS recall_ok
               |FROM ($cosineTopkOracle) x""".stripMargin)),
@@ -656,16 +667,10 @@ object LlmQueries {
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
         val q = e.where(col("vec_id") % 25 === 0)
-        val exact = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 10)
-          .select(col("q_id"), col("c_id"), lit(1).as("__e"))
-        val approx = Similarity.ivfTopK(s, q, e, "vec_id", "embedding", 10)
-          .select(col("q_id"), col("c_id"), lit(1).as("__a"))
-        exact.join(approx, Seq("q_id", "c_id"), "full_outer")
-          .agg(count(col("__e")).as("n_exact"),
-            count(when(col("__e").isNotNull && col("__a").isNotNull, 1))
-              .as("__n_hit"))
-          .select(col("n_exact"),
-            (col("__n_hit") * 100 >= col("n_exact") * 40).as("recall_ok"))
+        Gates.recall(
+          Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 10),
+          Similarity.ivfTopK(s, q, e, "vec_id", "embedding", 10),
+          Seq("q_id", "c_id"), 40, "n_exact", "recall_ok")
       },
       Some(s"""SELECT count(*) AS n_exact, TRUE AS recall_ok
               |FROM ($cosineTopkOracle) x""".stripMargin)),
@@ -675,21 +680,14 @@ object LlmQueries {
       "precision/recall gate for l04: simhashPairs vs the exact Jaccard pairs — recall >= 40% (measured 0.49-0.56) and precision >= 95% (measured 1.0); oracle = exact pair count + literal trues",
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents")
-        // One pass over the exact pair join and one over the sketch
-        // (full-outer + markers + single agg): separate count jobs would
-        // run the expensive exact-Jaccard self-join once per count.
-        val truth = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5)
-          .select(col("a_id"), col("b_id"), lit(1).as("__t"))
-        val pred = Dedup.simhashPairs(docs, "doc_id", "text")
-          .select(col("a_id"), col("b_id"), lit(1).as("__p"))
-        truth.join(pred, Seq("a_id", "b_id"), "full_outer")
-          .agg(count(col("__t")).as("n_truth"),
-            count(col("__p")).as("__n_pred"),
-            count(when(col("__t").isNotNull && col("__p").isNotNull, 1))
-              .as("__n_hit"))
+        // One pass over the exact pair join and one over the sketch:
+        // separate count jobs would run the expensive exact-Jaccard
+        // self-join once per count.
+        Gates.overlap(Dedup.jaccardPairs(docs, "doc_id", "text", 0.5),
+            Dedup.simhashPairs(docs, "doc_id", "text"), Seq("a_id", "b_id"))
           .select(col("n_truth"),
-            (col("__n_hit") * 100 >= col("n_truth") * 40).as("recall_ok"),
-            (col("__n_hit") * 100 >= col("__n_pred") * 95).as("precision_ok"))
+            (col("n_hit") * 100 >= col("n_truth") * 40).as("recall_ok"),
+            (col("n_hit") * 100 >= col("n_pred") * 95).as("precision_ok"))
       },
       Some(s"""SELECT count(*) AS n_truth, TRUE AS recall_ok,
               |  TRUE AS precision_ok
@@ -700,17 +698,10 @@ object LlmQueries {
       "the l21 bits-vs-corpus dial made driver-visible: same LSH near-dup pipeline at 6 bits x 10 tables (64 vs 16 buckets/table -> ~4x smaller candidate volume) traded for a bounded recall dip — measured 0.97-1.0 across sf, gated at >= 90% of the exact pair set",
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
-        val exact = SemDedupStore.sharedExactPairs(s, dir)
-          .select(col("a_id"), col("b_id"), lit(1).as("__e"))
-        val scaled = Similarity.lshNearDupPairs(e, "vec_id", "embedding", 0.4,
-            bits = 6, tables = 10)
-          .select(col("a_id"), col("b_id"), lit(1).as("__a"))
-        exact.join(scaled, Seq("a_id", "b_id"), "full_outer")
-          .agg(count(col("__e")).as("n_exact"),
-            count(when(col("__e").isNotNull && col("__a").isNotNull, 1))
-              .as("__n_hit"))
-          .select(col("n_exact"),
-            (col("__n_hit") * 100 >= col("n_exact") * 90).as("recall_ok"))
+        Gates.recall(SemDedupStore.sharedExactPairs(s, dir),
+          Similarity.lshNearDupPairs(e, "vec_id", "embedding", 0.4,
+            bits = 6, tables = 10),
+          Seq("a_id", "b_id"), 90, "n_exact", "recall_ok")
       },
       Some(s"""SELECT count(*) AS n_exact, TRUE AS recall_ok
               |FROM (${embedPairsOracle(0.4)}) x""".stripMargin)),
@@ -1353,16 +1344,10 @@ object LlmQueries {
             .cast("array<float>").as("embedding"))
         val q = e.where(col("vec_id") % 25 === 0)
         val qzq = qz.where(col("vec_id") % 25 === 0)
-        val exact = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 10)
-          .select(col("q_id"), col("c_id"), lit(1).as("__e"))
-        val quant = Similarity.bruteForceTopK(qzq, qz, "vec_id", "embedding", 10)
-          .select(col("q_id"), col("c_id"), lit(1).as("__q"))
-        exact.join(quant, Seq("q_id", "c_id"), "full_outer")
-          .agg(count(col("__e")).as("n_exact"),
-            count(when(col("__e").isNotNull && col("__q").isNotNull, 1))
-              .as("__n_hit"))
-          .select(col("n_exact"),
-            (col("__n_hit") * 100 >= col("n_exact") * 80).as("quant_ok"))
+        Gates.recall(
+          Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 10),
+          Similarity.bruteForceTopK(qzq, qz, "vec_id", "embedding", 10),
+          Seq("q_id", "c_id"), 80, "n_exact", "quant_ok")
       },
       Some(s"""SELECT count(*) AS n_exact, TRUE AS quant_ok
               |FROM ($cosineTopkOracle) x""".stripMargin)),
@@ -1559,19 +1544,13 @@ object LlmQueries {
         val cand = Similarity.ivfCandidates(s, q, e, "vec_id", "embedding",
             nCentroids = 8, nProbe = 6, trainIters = 0)
           .localCheckpoint(eager = true)
-        val ivf = Similarity.ivfTopK(s, q, e, "vec_id", "embedding", 10,
-            nCentroids = 8, nProbe = 6, candidatesOpt = Some(cand))
-          .select(col("q_id"), col("c_id"), lit(1).as("__i"))
-        val pq = Similarity.pqTopK(s, q, e, "vec_id", "embedding", 10,
+        Gates.recall(
+          Similarity.ivfTopK(s, q, e, "vec_id", "embedding", 10,
+            nCentroids = 8, nProbe = 6, candidatesOpt = Some(cand)),
+          Similarity.pqTopK(s, q, e, "vec_id", "embedding", 10,
             m = 16, nCodes = 64, trainIters = 1, nCentroids = 8,
-            nProbe = 6, rerank = 8, candidatesOpt = Some(cand))
-          .select(col("q_id"), col("c_id"), lit(1).as("__p"))
-        ivf.join(pq, Seq("q_id", "c_id"), "full_outer")
-          .agg(count(col("__i")).as("n_ivf"),
-            count(when(col("__i").isNotNull && col("__p").isNotNull, 1))
-              .as("__n_hit"))
-          .select(col("n_ivf"),
-            (col("__n_hit") * 100 >= col("n_ivf") * 90).as("pq_ok"))
+            nProbe = 6, rerank = 8, candidatesOpt = Some(cand)),
+          Seq("q_id", "c_id"), 90, "n_ivf", "pq_ok")
       },
       Some("""SELECT 10 * count(*) AS n_ivf, TRUE AS pq_ok
              |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
@@ -1612,23 +1591,11 @@ object LlmQueries {
       "l61_semantic_dedup",
       "SemDeDup-style semantic dedup (public recipe, Abbas et al. 2023): k-means-partition the embedding space (8 clusters, 1 Lloyd round, IVF coarse-quantizer machinery), soft-assign each vector to its 3 nearest clusters (multi-probe), pair cluster-cohabitants, exact-verify only candidates — sum-over-clusters cost instead of O(n^2), precision 1.0 by construction; recall gate vs the exact all-pairs twin (l05): cluster-found pairs >= 85% of exact pairs (measured 0.946-0.955 across sf); oracle = exact pair count + literal true",
       (s, dir) => {
-        // One pass over each side (the l22 pattern): full-outer join
-        // carries presence markers so n_exact and the hit count come out
-        // of a single aggregate. Semantic pairs are exact-verified, so
-        // sem is a subset of exact and hits == |sem|. Both frames come
-        // from the family's standing build (SemDedupStore) — the dedup
-        // ledger is a standing table in a production pipeline, shared
-        // here by l05/l30/l61/l62/l99.
-        val exact = SemDedupStore.sharedExactPairs(s, dir)
-          .select(col("a_id"), col("b_id"), lit(1).as("__e"))
-        val sem = SemDedupStore.sharedSemPairs(s, dir)
-          .select(col("a_id"), col("b_id"), lit(1).as("__s"))
-        exact.join(sem, Seq("a_id", "b_id"), "full_outer")
-          .agg(count(col("__e")).as("n_exact"),
-            count(when(col("__e").isNotNull && col("__s").isNotNull, 1))
-              .as("__n_hit"))
-          .select(col("n_exact"),
-            (col("__n_hit") * 100 >= col("n_exact") * 85).as("recall_ok"))
+        // Both frames come from the family's standing build
+        // (SemDedupStore) — the dedup ledger is a standing table in a
+        // production pipeline, shared here by l05/l30/l61/l62/l99.
+        semRecallCard(SemDedupStore.sharedExactPairs(s, dir),
+          SemDedupStore.sharedSemPairs(s, dir))
       },
       Some(s"""SELECT count(*) AS n_exact, TRUE AS recall_ok
               |FROM (${embedPairsOracle(0.4)}) x""".stripMargin)),
@@ -1646,18 +1613,7 @@ object LlmQueries {
         // crossing-edge graph — couple of rounds instead of a second
         // 16-20-round pass. Pairs and labels come from the standing
         // build (SemDedupStore), shared with l05/l30/l61/l99.
-        val semLbl = SemDedupStore.sharedSemLabels(s, dir)
-        def asDropped(lbl: org.apache.spark.sql.DataFrame, mark: String) =
-          lbl.where(col("cluster_id") =!= col("doc_id"))
-            .select(col("doc_id"), lit(1).as(mark))
-        asDropped(Dedup.coarsenedComponents(semLbl, exactPairs), "__e")
-          .join(asDropped(semLbl, "__s"), Seq("doc_id"), "full_outer")
-          .agg(count(col("__e")).as("n_exact_dropped"),
-            count(when(col("__e").isNotNull && col("__s").isNotNull, 1))
-              .as("__n_hit"))
-          .select(col("n_exact_dropped"),
-            (col("__n_hit") * 100 >= col("n_exact_dropped") * 85)
-              .as("prune_ok"))
+        pruneCard(SemDedupStore.sharedSemLabels(s, dir), exactPairs)
       },
       Some(s"""WITH RECURSIVE p AS (
               |  SELECT a_id, b_id FROM (${embedPairsOracle(0.4)}) z),
@@ -1930,23 +1886,16 @@ object LlmQueries {
             .localCheckpoint(eager = true)
           val ivf = Similarity.ivfTopK(s, q, e, "vec_id", "embedding", 10,
               candidatesOpt = Some(cand))
-            .select(col("q_id"), col("c_id"), lit(1).as("__i"))
           val pq = Similarity.pqTopKFromIndex(q, e, "vec_id", "embedding",
               10, m = graft.operators.AnnIndexStore.DefaultM,
               codebook = s.table(s"${pfx}_codebook"),
               codes = s.table(s"${pfx}_codes"),
               norms = s.table(s"${pfx}_norms"),
               candidates = cand, rerank = 8)
-            .select(col("q_id"), col("c_id"), lit(1).as("__p"))
           // localCheckpoint before the finally drops the tables the plan
           // reads (the l60 materialize-then-drop contract; distributed,
           // never through the driver).
-          ivf.join(pq, Seq("q_id", "c_id"), "full_outer")
-            .agg(count(col("__i")).as("n_ivf"),
-              count(when(col("__i").isNotNull && col("__p").isNotNull, 1))
-                .as("__n_hit"))
-            .select(col("n_ivf"),
-              (col("__n_hit") * 100 >= col("n_ivf") * 90).as("pq_ok"))
+          Gates.recall(ivf, pq, Seq("q_id", "c_id"), 90, "n_ivf", "pq_ok")
             .localCheckpoint(eager = true)
         } finally {
           parts.foreach(p => s.sql(s"DROP TABLE IF EXISTS ${pfx}_$p"))
@@ -3467,18 +3416,8 @@ object LlmQueries {
         val e = Tables.load(s, dir, "embeddings")
         val exactPairs = SemDedupStore.sharedExactPairs(s, dir)
         val semLbl = SemDedupStore.sharedSemLabels(s, dir)
-        def asDropped(lbl: org.apache.spark.sql.DataFrame, mark: String) =
-          lbl.where(col("cluster_id") =!= col("doc_id"))
-            .select(col("doc_id"), lit(1).as(mark))
-        val recall =
-          asDropped(Dedup.coarsenedComponents(semLbl, exactPairs), "__e")
-            .join(asDropped(semLbl, "__s"), Seq("doc_id"), "full_outer")
-            .agg(count(col("__e")).as("n_exact_dropped"),
-              count(when(col("__e").isNotNull && col("__s").isNotNull, 1))
-                .as("__n_hit"))
-            .select(col("n_exact_dropped"),
-              (col("__n_hit") * 100 >= col("n_exact_dropped") * 85)
-                .as("sem_recall_ok"))
+        val recall = pruneCard(semLbl, exactPairs)
+          .withColumnRenamed("prune_ok", "sem_recall_ok")
         val survivors = e.join(
           semLbl.where(col("cluster_id") =!= col("doc_id"))
             .select(col("doc_id").as("vec_id")),
@@ -3772,35 +3711,23 @@ object LlmQueries {
               whiten = false), x => x.cast("float")).as("embedding"))
           .localCheckpoint(eager = true)
         val isQ = col("vec_id") % 25 === 0
-        def topkSet(corpus: org.apache.spark.sql.DataFrame, mark: String) =
+        def topkSet(corpus: org.apache.spark.sql.DataFrame) =
           Similarity.bruteForceTopK(corpus.where(isQ), corpus,
               "vec_id", "embedding", 10)
-            .select(col("q_id"), col("c_id"), lit(1).as(mark))
-        val rotInv = topkSet(e, "__o")
-          .join(topkSet(rot, "__r"), Seq("q_id", "c_id"), "full_outer")
-          .agg(count(col("__o")).as("n_exact"),
-            count(when(col("__o").isNotNull && col("__r").isNotNull, 1))
-              .as("__n_hit"))
-          .select(col("n_exact"),
-            (col("__n_hit") * 100 >= col("n_exact") * 95)
-              .as("rot_invariant_ok"))
+        val rotInv = Gates.recall(topkSet(e), topkSet(rot),
+          Seq("q_id", "c_id"), 95, "n_exact", "rot_invariant_ok")
         val q = rot.where(isQ)
         val cand = Similarity.ivfCandidates(s, q, rot, "vec_id",
             "embedding", nCentroids = 8, nProbe = 6, trainIters = 0)
           .localCheckpoint(eager = true)
-        val ivf = Similarity.ivfTopK(s, q, rot, "vec_id", "embedding", 10,
-            nCentroids = 8, nProbe = 6, candidatesOpt = Some(cand))
-          .select(col("q_id"), col("c_id"), lit(1).as("__i"))
-        val pq = Similarity.pqTopK(s, q, rot, "vec_id", "embedding", 10,
-            m = 16, nCodes = 64, trainIters = 1, nCentroids = 8,
-            nProbe = 6, rerank = 8, candidatesOpt = Some(cand))
-          .select(col("q_id"), col("c_id"), lit(1).as("__p"))
-        val pqGate = ivf.join(pq, Seq("q_id", "c_id"), "full_outer")
-          .agg(count(col("__i")).as("__n_ivf"),
-            count(when(col("__i").isNotNull && col("__p").isNotNull, 1))
-              .as("__n_hit2"))
-          .select((col("__n_hit2") * 100 >= col("__n_ivf") * 90)
-            .as("pq_rot_ok"))
+        val pqGate = Gates.recall(
+            Similarity.ivfTopK(s, q, rot, "vec_id", "embedding", 10,
+              nCentroids = 8, nProbe = 6, candidatesOpt = Some(cand)),
+            Similarity.pqTopK(s, q, rot, "vec_id", "embedding", 10,
+              m = 16, nCodes = 64, trainIters = 1, nCentroids = 8,
+              nProbe = 6, rerank = 8, candidatesOpt = Some(cand)),
+            Seq("q_id", "c_id"), 90, "__n_ivf", "pq_rot_ok")
+          .drop("__n_ivf")
         rotInv.crossJoin(pqGate)
       },
       Some("""SELECT 10 * count(*) AS n_exact, TRUE AS rot_invariant_ok,
@@ -4075,18 +4002,15 @@ object LlmQueries {
           val cand = Similarity.ivfCandidates(s, q, rc, "vec_id",
               "embedding", nCentroids = 8, nProbe = 6, trainIters = 0)
             .localCheckpoint(eager = true)
-          val ivf = Similarity.ivfTopK(s, q, rc, "vec_id", "embedding",
-              10, nCentroids = 8, nProbe = 6,
-              candidatesOpt = Some(cand))
-            .select(col("q_id"), col("c_id"), lit(1).as("__i"))
-          val pq = Similarity.pqTopK(s, q, rc, "vec_id", "embedding",
-              10, m = 16, nCodes = 64, trainIters = 1, nCentroids = 8,
-              nProbe = 6, rerank = 1, candidatesOpt = Some(cand))
-            .select(col("q_id"), col("c_id"), lit(1).as("__p"))
-          ivf.join(pq, Seq("q_id", "c_id"), "full_outer")
-            .agg(count(col("__i")).as("n_ivf"),
-              count(when(col("__i").isNotNull && col("__p").isNotNull,
-                1)).as(mark))
+          Gates.overlap(
+              Similarity.ivfTopK(s, q, rc, "vec_id", "embedding",
+                10, nCentroids = 8, nProbe = 6,
+                candidatesOpt = Some(cand)),
+              Similarity.pqTopK(s, q, rc, "vec_id", "embedding",
+                10, m = 16, nCodes = 64, trainIters = 1, nCentroids = 8,
+                nProbe = 6, rerank = 1, candidatesOpt = Some(cand)),
+              Seq("q_id", "c_id"))
+            .select(col("n_truth").as("n_ivf"), col("n_hit").as(mark))
         }
         val a0 = adcHits(pca.axes, "__h_pca")
         val a1 = adcHits(opq.rotation, "__h_opq").drop("n_ivf")
@@ -4136,20 +4060,13 @@ object LlmQueries {
             .localCheckpoint(eager = true)
           val ivf = Similarity.ivfTopK(s, q, rot, "vec_id", "embedding",
               10, candidatesOpt = Some(cand))
-            .select(col("q_id"), col("c_id"), lit(1).as("__i"))
           val pq = Similarity.pqTopKFromIndex(q, rot, "vec_id",
               "embedding", 10, m = graft.operators.OpqModelStore.M,
               codebook = s.table(s"${pfx}_codebook"),
               codes = s.table(s"${pfx}_codes"),
               norms = s.table(s"${pfx}_norms"),
               candidates = cand, rerank = 8)
-            .select(col("q_id"), col("c_id"), lit(1).as("__p"))
-          ivf.join(pq, Seq("q_id", "c_id"), "full_outer")
-            .agg(count(col("__i")).as("n_ivf"),
-              count(when(col("__i").isNotNull && col("__p").isNotNull,
-                1)).as("__n_hit"))
-            .select(col("n_ivf"),
-              (col("__n_hit") * 100 >= col("n_ivf") * 90).as("pq_ok"))
+          Gates.recall(ivf, pq, Seq("q_id", "c_id"), 90, "n_ivf", "pq_ok")
             .localCheckpoint(eager = true)
         } finally {
           parts.foreach(p => s.sql(s"DROP TABLE IF EXISTS ${pfx}_$p"))
@@ -4585,7 +4502,6 @@ object LlmQueries {
         val cand = candDf.localCheckpoint(eager = true)
         val ivf = Similarity.ivfTopK(s, q, e, "vec_id", "embedding", 10,
             candidatesOpt = Some(cand))
-          .select(col("q_id"), col("c_id"), lit(1).as("__i"))
         val pq = Similarity.pqTopKFromIndex(q, e, "vec_id", "embedding",
           10, m = st.DefaultM, codebook = idx.codebook,
           codes = idx.codes, norms = idx.norms, candidates = cand,
@@ -4603,15 +4519,9 @@ object LlmQueries {
             "norms" -> pqTables)
           .forall { case (p, ts) =>
             ts.contains(ds.registeredName(st.DurableFamily, fp, p)) }
-        ivf.join(pq.select(col("q_id"), col("c_id"), lit(1).as("__p")),
-            Seq("q_id", "c_id"), "full_outer")
-          .agg(count(col("__i")).as("n_ivf"),
-            count(when(col("__i").isNotNull && col("__p").isNotNull, 1))
-              .as("__n_hit"))
-          .select(col("n_ivf"),
-            (col("__n_hit") * 100 >= col("n_ivf") * 90).as("pq_ok"),
-            lit(buildFree).as("reload_build_free_ok"),
-            lit(fromStore).as("serve_reads_store_ok"))
+        Gates.recall(ivf, pq, Seq("q_id", "c_id"), 90, "n_ivf", "pq_ok")
+          .withColumn("reload_build_free_ok", lit(buildFree))
+          .withColumn("serve_reads_store_ok", lit(fromStore))
       },
       gatedOracle("l72_ann_index_serve",
         Seq("reload_build_free_ok", "serve_reads_store_ok"))),
@@ -4634,28 +4544,9 @@ object LlmQueries {
         // l61's recall card over the RAW reloaded pair table (catalog
         // leaves visible — a checkpoint would hide them)
         val exactPairs = st.sharedExactPairs(s, dir)
-        val recall = exactPairs
-          .select(col("a_id"), col("b_id"), lit(1).as("__e"))
-          .join(semP.select(col("a_id"), col("b_id"), lit(1).as("__s")),
-            Seq("a_id", "b_id"), "full_outer")
-          .agg(count(col("__e")).as("n_exact"),
-            count(when(col("__e").isNotNull && col("__s").isNotNull, 1))
-              .as("__n_hit"))
-          .select(col("n_exact"),
-            (col("__n_hit") * 100 >= col("n_exact") * 85).as("recall_ok"))
+        val recall = semRecallCard(exactPairs, semP)
         // l62's prune card over the RAW reloaded label table
-        def asDropped(lbl: org.apache.spark.sql.DataFrame, mark: String) =
-          lbl.where(col("cluster_id") =!= col("doc_id"))
-            .select(col("doc_id"), lit(1).as(mark))
-        val prune = asDropped(
-            Dedup.coarsenedComponents(semL, exactPairs), "__e")
-          .join(asDropped(semL, "__s"), Seq("doc_id"), "full_outer")
-          .agg(count(col("__e")).as("n_exact_dropped"),
-            count(when(col("__e").isNotNull && col("__s").isNotNull, 1))
-              .as("__n_hit"))
-          .select(col("n_exact_dropped"),
-            (col("__n_hit") * 100 >= col("n_exact_dropped") * 85)
-              .as("prune_ok"))
+        val prune = pruneCard(semL, exactPairs)
         val fromStore = Seq(
             "pairs" -> catalogLeaves(recall),
             "labels" -> catalogLeaves(prune))

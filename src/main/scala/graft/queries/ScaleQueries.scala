@@ -644,15 +644,10 @@ object ScaleQueries {
         val unionFp = ds.combineFingerprints(
           ds.combineFingerprints(baseFp, fp2), fp3)
         val headOk = vHead == 2L && fpHead == unionFp && headInit
-        val diff = ds.manifestTables(s, fam, fpHead, parts)("t")
-          .groupBy(col("doc_id")).count()
-          .join(base.unionAll(d2).unionAll(d3)
-            .groupBy(col("doc_id")).count()
-            .withColumnRenamed("count", "c2"),
-            Seq("doc_id"), "full_outer")
-          .where(col("count").isNull || col("c2").isNull ||
-            col("count") =!= col("c2"))
-          .count()
+        val diff = Gates.mismatches(
+            ds.manifestTables(s, fam, fpHead, parts)("t"),
+            base.unionAll(d2).unionAll(d3), "n")
+          .head().getLong(0)
         // retention: keep-latest-1 + the automatic head pin — the
         // intermediate generation (and a CAS loser's abandoned
         // off-head sibling, when the race collided) sweep; every

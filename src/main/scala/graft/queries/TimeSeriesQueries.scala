@@ -698,7 +698,7 @@ object TimeSeriesQueries {
               // the serve meta is already boot-collected above — don't
               // re-pay the codebook collect per arm (r17)
               cbLocalOpt = Some(meta.cb))
-            .select(col("q_id"), col("c_id"), lit(1).as("__b"))
+            .select(col("q_id"), col("c_id"))
             .localCheckpoint(eager = true)
         }(scala.concurrent.ExecutionContext.global)
         val emitted = runBounded(s, served, "t22_stream_ann_serve_mem",
@@ -706,15 +706,11 @@ object TimeSeriesQueries {
         val streamTop = emitted.groupBy(col("q_id"))
           .agg(max_by(col("topk"), col("n_seen")).as("topk"))
           .select(col("q_id"), explode(col("topk")).as("p"))
-          .select(col("q_id"), col("p._2").as("c_id"), lit(1).as("__s"))
+          .select(col("q_id"), col("p._2").as("c_id"))
         val batchTop = scala.concurrent.Await.result(batchTopF,
           scala.concurrent.duration.Duration.Inf)
-        streamTop.join(batchTop, Seq("q_id", "c_id"), "full_outer")
-          .agg(count(col("__b")).as("n_topk"),
-            count(when(col("__b").isNotNull && col("__s").isNotNull, 1))
-              .as("__hit"))
-          .select(col("n_topk"),
-            (col("__hit") * 100 >= col("n_topk") * 90).as("stream_ok"))
+        Gates.recall(batchTop, streamTop, Seq("q_id", "c_id"), 90,
+          "n_topk", "stream_ok")
       },
       Some("""SELECT 10 * count(*) AS n_topk, TRUE AS stream_ok
              |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
@@ -1761,8 +1757,8 @@ object TimeSeriesQueries {
               struct(col("thr_cos").as("a"), (-col("thr_id")).as("b")))
         val batch = scored.join(broadcast(thr), Seq("cent_id"), "left")
           .groupBy(col("cent_id"))
-          .agg(count(lit(1)).as("n_b"),
-            count(when(core(col("proto_cos"), col("doc_id")), 1)).as("c_b"))
+          .agg(count(lit(1)).as("n"),
+            count(when(core(col("proto_cos"), col("doc_id")), 1)).as("c"))
         val centsLocal = cents.collect()
           .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq)
           .sortBy(_._1).toSeq
@@ -1773,15 +1769,12 @@ object TimeSeriesQueries {
             (-col("__a.nc")).as("proto_cos"))
           .join(broadcast(thr), Seq("cent_id"), "left")
           .groupBy(col("cent_id"))
-          .agg(count(lit(1)).as("n_s"),
-            count(when(core(col("proto_cos"), col("vec_id")), 1)).as("c_s"))
+          .agg(count(lit(1)).as("n"),
+            count(when(core(col("proto_cos"), col("vec_id")), 1)).as("c"))
         val emitted = runBounded(s, decisions, "t40_stream_d4_mem",
           "complete", statePartitions = Some(8))
-        emitted.join(batch, Seq("cent_id"), "full_outer")
-          .agg(sum(col("n_s")).as("n_vecs"),
-            every(col("n_s").isNotNull && col("n_b").isNotNull &&
-              col("n_s") === col("n_b") && col("c_s") === col("c_b"))
-              .as("census_match"))
+        Gates.censusMatch(emitted, batch, Seq("cent_id"), "n", "n_vecs",
+          "census_match")
       },
       Some("SELECT count(*) AS n_vecs, TRUE AS census_match FROM embeddings")),
 
@@ -1797,16 +1790,14 @@ object TimeSeriesQueries {
               whiten = true),
             lit(0.0), (acc, x) => acc + x * x))
         val batch = e.select(band.as("band"))
-          .groupBy(col("band")).agg(count(lit(1)).as("n_b"))
+          .groupBy(col("band")).agg(count(lit(1)).as("n"))
         val census = Tables.loadStream(s, dir, "embeddings")
           .select(band.as("band"))
-          .groupBy(col("band")).agg(count(lit(1)).as("n_s"))
+          .groupBy(col("band")).agg(count(lit(1)).as("n"))
         val emitted = runBounded(s, census, "t41_stream_pca_mem",
           "complete", statePartitions = Some(8))
-        emitted.join(batch, Seq("band"), "full_outer")
-          .agg(sum(col("n_s")).as("n_vecs"),
-            every(col("n_s").isNotNull && col("n_b").isNotNull &&
-              col("n_s") === col("n_b")).as("census_match"))
+        Gates.censusMatch(emitted, batch, Seq("band"), "n", "n_vecs",
+          "census_match")
       },
       Some("SELECT count(*) AS n_vecs, TRUE AS census_match FROM embeddings")),
 
@@ -1922,14 +1913,10 @@ object TimeSeriesQueries {
       "the streaming ingest face of l114's compressibility funnel — the template-spam alarm live at ingest (a crawl suddenly dominated by one boilerplate family moves the low-ratio bands before any token heuristic reacts): the document stream runs through the same batched one-Deflater-per-batch codec (stateless narrow transform, streaming-legal) and a complete-mode per-ratio-decile census accumulates (state = one row per band). Deflate bytes are not SQL-replayable (the l114 contract), so the oracle-checkable gate is EXACT AGREEMENT with the batch census over the same corpus — band-for-band identical doc counts and byte masses (deflate at a fixed level is a pure function of the input bytes, so stream and batch must agree bit-for-bit) — plus the SQL-exact total doc count",
       (s, dir) => {
         val TA = graft.operators.TextAnalysis
-        // band coalesced to a -1 sentinel (ratio_bp >= 0, so no real
-        // band collides): the NULL band (empty/NULL-text docs) must
-        // MATCH ITSELF across the stream/batch equi-join below — a
-        // nullable join key would leave both sides unmatched and fail
-        // the gate even when the censuses agree
+        // the NULL band holds the empty/NULL-text docs; censusMatch
+        // joins null-safe, so it matches itself
         def census(pd: org.apache.spark.sql.DataFrame) = pd
-          .groupBy(coalesce((col("ratio_bp") / 1000).cast("long"),
-            lit(-1L)).as("band"))
+          .groupBy((col("ratio_bp") / 1000).cast("long").as("band"))
           .agg(count(lit(1)).as("n_docs"), sum(col("len_in")).as("b_in"))
         val batch = census(TA.deflateRatio(
             Tables.load(s, dir, "documents"), "doc_id", "text"))
@@ -1938,17 +1925,8 @@ object TimeSeriesQueries {
           census(TA.deflateRatio(
             Tables.loadStream(s, dir, "documents"), "doc_id", "text")),
           "t46_stream_deflate_mem", "complete", statePartitions = Some(4))
-        val st = streamed.select(col("band"),
-          col("n_docs").as("__sn"), col("b_in").as("__sb"))
-        val bt = batch.select(col("band"),
-          col("n_docs").as("__bn"), col("b_in").as("__bb"))
-        // coalesce(false): a band present on only ONE side must fail
-        // the gate, not vanish into every()'s null-skipping
-        st.join(bt, Seq("band"), "full_outer")
-          .agg(sum(col("__sn")).as("n_docs"),
-            every(coalesce(col("__sn") === col("__bn") &&
-                col("__sb") === col("__bb"), lit(false)))
-              .as("stream_eq_batch_ok"))
+        Gates.censusMatch(streamed, batch, Seq("band"), "n_docs", "n_docs",
+          "stream_eq_batch_ok")
       },
       Some("""SELECT count(*) AS n_docs, TRUE AS stream_eq_batch_ok
              |FROM documents""".stripMargin)),
@@ -1996,13 +1974,10 @@ object TimeSeriesQueries {
       (s, dir) => {
         val TA = graft.operators.TextAnalysis
         val dicts = graft.operators.DeflateDictStore.sharedDicts(s, dir)
-        // NULL band (empty/NULL text) coalesced to a sentinel below
-        // every real band (gain bands can be negative, so -1 would
-        // collide): both sides must match it, not drop it (t46's
-        // nullable-join-key lesson)
+        // the NULL band (empty/NULL text) matches itself: censusMatch
+        // joins null-safe
         def census(pd: org.apache.spark.sql.DataFrame) = pd
-          .groupBy(coalesce(floor(col("dict_gain_bp") / 1000),
-            lit(-1000L)).as("band"))
+          .groupBy(floor(col("dict_gain_bp") / 1000).as("band"))
           .agg(count(lit(1)).as("n_docs"), sum(col("len_in")).as("b_in"),
             sum(col("len_out_dict")).as("b_dict"))
         val batch = census(TA.deflateDictRatio(
@@ -2015,18 +1990,8 @@ object TimeSeriesQueries {
             "source", dicts)),
           "t48_stream_dict_deflate_mem", "complete",
           statePartitions = Some(4))
-        val st = streamed.select(col("band"), col("n_docs").as("__sn"),
-          col("b_in").as("__sb"), col("b_dict").as("__sd"))
-        val bt = batch.select(col("band"), col("n_docs").as("__bn"),
-          col("b_in").as("__bb"), col("b_dict").as("__bd"))
-        // coalesce(false): a band present on only ONE side must fail
-        // the gate, not vanish into every()'s null-skipping
-        st.join(bt, Seq("band"), "full_outer")
-          .agg(sum(col("__sn")).as("n_docs"),
-            every(coalesce(col("__sn") === col("__bn") &&
-                col("__sb") === col("__bb") &&
-                col("__sd") === col("__bd"), lit(false)))
-              .as("stream_eq_batch_ok"))
+        Gates.censusMatch(streamed, batch, Seq("band"), "n_docs", "n_docs",
+          "stream_eq_batch_ok")
       },
       Some("""SELECT count(*) AS n_docs, TRUE AS stream_eq_batch_ok
              |FROM documents""".stripMargin)),
@@ -2119,7 +2084,7 @@ object TimeSeriesQueries {
               // reloaded tables (ledgered under ann_serve) — the batch
               // arm reuses it instead of re-collecting (r17)
               cbLocalOpt = Some(meta.cb))
-            .select(col("q_id"), col("c_id"), lit(1).as("__b"))
+            .select(col("q_id"), col("c_id"))
             .localCheckpoint(eager = true)
         }(scala.concurrent.ExecutionContext.global)
         val emitted = runBounded(s, served, "t50_stream_cold_boot_mem",
@@ -2133,15 +2098,11 @@ object TimeSeriesQueries {
         val streamTop = emitted.groupBy(col("q_id"))
           .agg(max_by(col("topk"), col("n_seen")).as("topk"))
           .select(col("q_id"), explode(col("topk")).as("p"))
-          .select(col("q_id"), col("p._2").as("c_id"), lit(1).as("__s"))
-        streamTop.join(batchTop, Seq("q_id", "c_id"), "full_outer")
-          .agg(count(col("__b")).as("n_topk"),
-            count(when(col("__b").isNotNull && col("__s").isNotNull, 1))
-              .as("__hit"))
-          .select(col("n_topk"),
-            (col("__hit") * 100 >= col("n_topk") * 90).as("stream_ok"),
-            lit(buildFree).as("cold_boot_build_free_ok"),
-            lit(trainFree).as("cold_boot_train_free_ok"))
+          .select(col("q_id"), col("p._2").as("c_id"))
+        Gates.recall(batchTop, streamTop, Seq("q_id", "c_id"), 90,
+            "n_topk", "stream_ok")
+          .withColumn("cold_boot_build_free_ok", lit(buildFree))
+          .withColumn("cold_boot_train_free_ok", lit(trainFree))
       },
       Some("""SELECT 10 * count(*) AS n_topk, TRUE AS stream_ok,
              |  TRUE AS cold_boot_build_free_ok,
@@ -2263,7 +2224,7 @@ object TimeSeriesQueries {
               candidates = S.indexCandidates(qB, "vec_id", "embedding",
                 cent, lR, nProbe = 6),
               rerank = 0)
-            .select(col("q_id"), col("c_id"), lit(1).as("__b"))
+            .select(col("q_id"), col("c_id"))
             .localCheckpoint(eager = true)
           (lR, cR, nR, batchTop)
         }(scala.concurrent.ExecutionContext.global)
@@ -2348,12 +2309,9 @@ object TimeSeriesQueries {
         val streamTop = emitted.groupBy(col("q_id"))
           .agg(max_by(col("topk"), col("n_seen")).as("topk"))
           .select(col("q_id"), explode(col("topk")).as("p"))
-          .select(col("q_id"), col("p._2").as("c_id"), lit(1).as("__s"))
-        val res = streamTop
-          .join(batchTop, Seq("q_id", "c_id"), "full_outer")
-          .agg(count(col("__b")).as("n_topk"),
-            count(when(col("__b").isNotNull && col("__s").isNotNull, 1))
-              .as("__hit"))
+          .select(col("q_id"), col("p._2").as("c_id"))
+        val res = Gates.recall(batchTop, streamTop, Seq("q_id", "c_id"), 90,
+            "n_topk", "stream_ok")
           .crossJoin(broadcast(
             e.agg(count(when(col("vec_id") % 5 =!= 0, 1)).as("n_base"),
               count(when(col("vec_id") % 5 === 0, 1)).as("n_streamed"))))
@@ -2363,8 +2321,7 @@ object TimeSeriesQueries {
           .crossJoin(broadcast(mismatches(t("codes"), cR, "__mc")))
           .crossJoin(broadcast(mismatches(t("norms"), nR, "__mn")))
           .select(col("n_base"), col("n_streamed"), col("n_indexed"),
-            col("n_topk"),
-            (col("__hit") * 100 >= col("n_topk") * 90).as("stream_ok"),
+            col("n_topk"), col("stream_ok"),
             (col("__ml") === 0 && col("__mc") === 0 &&
               col("__mn") === 0 &&
               col("n_indexed") === col("n_base") + col("n_streamed"))

@@ -249,7 +249,7 @@ object LlmQueries {
     * total_bits, bpt) per-doc score frame (checkpointed once, shared
     * by the three sections).
     */
-  private def cardOf(pd0: org.apache.spark.sql.DataFrame)
+  private[queries] def cardOf(pd0: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     cardSections(pd0.localCheckpoint(eager = true))
 
@@ -291,7 +291,7 @@ object LlmQueries {
     * is_dup). Checkpoints the frame once; all five sections read the
     * checkpoint.
     */
-  private def nbCardOf(pd0: org.apache.spark.sql.DataFrame)
+  private[queries] def nbCardOf(pd0: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val pd = pd0.localCheckpoint(eager = true)
     def census(tag: String, key: org.apache.spark.sql.Column) = pd
@@ -338,7 +338,7 @@ object LlmQueries {
     * serve join key when one exists — so a count table that outgrew
     * broadcast would still join shuffle-free on the index side.
     */
-  private def saveStoreTable(out: String, pfx: String,
+  private[queries] def saveStoreTable(out: String, pfx: String,
       df: org.apache.spark.sql.DataFrame, part: String,
       bucket: Option[String]): Unit = {
     val w0 = df.write.mode("overwrite").option("path", s"$out/$part")
@@ -3740,1152 +3740,18 @@ object LlmQueries {
     * (l107-l110 persist the standing model and re-derive the same
     * frame from the persisted tables — same oracle, same hash).
     */
-  private def oracleOf(name: String): Option[String] =
+  private[queries] def oracleOf(name: String): Option[String] =
     baseSpecs.find(_.name == name)
       .getOrElse(sys.error(s"oracleOf: no base spec named $name")).oracle
 
-  /** The persisted-model-store serve tier — l72's standing-pipeline
-    * discipline applied to the NON-vector model families: each query
-    * writes its family's trained artifacts as catalog tables ONCE (the
-    * one-time build job, artifacts from the application-wide store so
-    * sibling queries share the training), then serves the family's
-    * full output reading ONLY the persisted tables — the serve plan
-    * contains zero training aggregates (ModelStoreSpec plan-probes
-    * this: no clean-slice filter, no count aggregate producing model
-    * columns), which is what a real standing pipeline runs daily.
-    * Output and oracle are the training twin's verbatim: persistence
-    * must be hash-invisible.
+  /** Registry order drives Bench's lines and BenchSteady: the base
+    * tier, then each family object in turn. Lazy because the family
+    * objects read `baseSpecs` back through `oracleOf`, so the first
+    * one touched must not see a half-built `specs`.
     */
-  private val storeServeSpecs: Seq[QuerySpec] = Seq(
-
-    QuerySpec(
-      "l107_lm_store_serve",
-      "l83's add-one bigram LM served from PERSISTED count tables — the standing-pipeline face of NgramModelStore: the shared build's pair/context/vocab tables are written as catalog tables once (pair/context bucketed on prev, so a count table that outgrew broadcast would still join shuffle-free), then the whole corpus is scored and the band/top/bottom card emitted reading ONLY the persisted tables — the serve plan contains no clean-slice filter and no model-count aggregate (plan-probed in ModelStoreSpec). Hash-exact against l83's oracle: persistence is invisible to the scores",
-      (s, dir) => {
-        val out = QuerySpec.tempSinkDir()
-        val pfx = "graft_lmstore_" +
-          new java.io.File(out).getName.stripPrefix("graft_sink_")
-        val parts = Seq("pairs", "ctx", "vocab")
-        try {
-          val m = graft.operators.NgramModelStore.sharedBigram(s, dir, 2)
-          saveStoreTable(out, pfx, m.pairCounts, "pairs", Some("prev"))
-          saveStoreTable(out, pfx, m.ctxCounts, "ctx", Some("prev"))
-          saveStoreTable(out, pfx, m.vocab, "vocab", None)
-          val served = NgramLm.BigramModel(s.table(s"${pfx}_pairs"),
-            s.table(s"${pfx}_ctx"), s.table(s"${pfx}_vocab"))
-          // cardOf eagerly checkpoints the per-doc frame, so the card
-          // sections read the checkpoint, never the dropped tables
-          cardOf(NgramLm.surprisalBits(
-            Tables.load(s, dir, "documents"), "doc_id", "text", served, 2))
-        } finally {
-          parts.foreach(p => s.sql(s"DROP TABLE IF EXISTS ${pfx}_$p"))
-          graft.pipeline.SinkFiles.deleteRecursive(out)
-        }
-      },
-      oracleOf("l83_lm_perplexity")),
-
-    QuerySpec(
-      "l108_nb_store_serve",
-      "l90's dedup-bootstrapped boilerplate classifier served from PERSISTED tables — the standing-pipeline face of NbModelStore: the shared build's feature-count table, totals row AND the winnow label frame are written as catalog tables once, then every document's margin card (bands, extremes, keep census, confusion census) is emitted reading ONLY the persisted tables — no winnowing expression, no feature-count aggregate anywhere in the serve plan (plan-probed in ModelStoreSpec). Hash-exact against l90's oracle",
-      (s, dir) => {
-        val out = QuerySpec.tempSinkDir()
-        val pfx = "graft_nbstore_" +
-          new java.io.File(out).getName.stripPrefix("graft_sink_")
-        val parts = Seq("feat", "totals", "labels")
-        try {
-          val (labeled, model) =
-            graft.operators.NbModelStore.sharedBoilerplateModel(s, dir)
-          saveStoreTable(out, pfx, model.featCounts, "feat",
-            Some("feat"))
-          saveStoreTable(out, pfx, model.totals, "totals", None)
-          saveStoreTable(out, pfx, labeled, "labels", None)
-          val served = NbClassifier.NbModel(s.table(s"${pfx}_feat"),
-            s.table(s"${pfx}_totals"))
-          // nbCardOf eagerly checkpoints before the finally drops
-          nbCardOf(NbClassifier
-            .marginBits(Tables.load(s, dir, "documents"), "doc_id",
-              "text", served, NbClassifier.bigramFeats)
-            .join(broadcast(s.table(s"${pfx}_labels")), Seq("doc_id"),
-              "left")
-            .select(col("doc_id"), col("n_scored"), col("total_bits"),
-              col("bpt"), coalesce(col("is_dup"), lit(0L)).as("is_dup")))
-        } finally {
-          parts.foreach(p => s.sql(s"DROP TABLE IF EXISTS ${pfx}_$p"))
-          graft.pipeline.SinkFiles.deleteRecursive(out)
-        }
-      },
-      oracleOf("l90_nb_quality_filter")),
-
-    QuerySpec(
-      "l109_doremi_store_serve",
-      "l95's DoReMi domain-weight ledger served from PERSISTED joint count tables — the standing-pipeline face of MixtureModelStore: the shared joint proxy+reference bigram counts (pc/ctx bucketed on prev, one-row vocab) are written as catalog tables once; the serve side re-derives only the pair-occurrence SCORING INPUT from the documents (a per-row function of the corpus, like every scorer's explode) and computes the full weight ledger against the persisted counts — zero count-training aggregates in the serve plan (plan-probed in ModelStoreSpec). Hash-exact against l95's oracle",
-      (s, dir) => {
-        val out = QuerySpec.tempSinkDir()
-        val pfx = "graft_dmstore_" +
-          new java.io.File(out).getName.stripPrefix("graft_sink_")
-        val parts = Seq("pc", "ctx", "vocab")
-        try {
-          val jl0 = graft.operators.MixtureModelStore.sharedJoint(s, dir)
-          saveStoreTable(out, pfx, jl0.pc, "pc", Some("prev"))
-          saveStoreTable(out, pfx, jl0.ctx, "ctx", Some("prev"))
-          saveStoreTable(out, pfx, jl0.vocab, "vocab", None)
-          val docs = Tables.load(s, dir, "documents")
-          val served = graft.operators.Doremi.JointLm(
-            graft.operators.Doremi.pairsFrame(docs, "doc_id", "text",
-              "source", graft.operators.MixtureModelStore.cleanSlicePred),
-            s.table(s"${pfx}_pc"), s.table(s"${pfx}_ctx"),
-            s.table(s"${pfx}_vocab"))
-          graft.operators.Doremi.domainWeightsFrom(served, docs, "source")
-            .localCheckpoint(eager = true)
-        } finally {
-          parts.foreach(p => s.sql(s"DROP TABLE IF EXISTS ${pfx}_$p"))
-          graft.pipeline.SinkFiles.deleteRecursive(out)
-        }
-      },
-      oracleOf("l95_doremi_weights")),
-
-    QuerySpec(
-      "l110_dsir_store_serve",
-      "l94's DSIR importance resampling served from a PERSISTED importance table — the standing-pipeline face of the DSIR half of MixtureModelStore: the <=4096-row (bkt, imp) table is trained once from the shared bucket frame and written as a catalog table; the serve side scores, thresholds and selects against the persisted weights only (dsirResampleFromTable — the plan contains no importance-training aggregate, plan-probed in ModelStoreSpec). Hash-exact against l94's oracle",
-      (s, dir) => {
-        val out = QuerySpec.tempSinkDir()
-        val pfx = "graft_dsstore_" +
-          new java.io.File(out).getName.stripPrefix("graft_sink_")
-        val parts = Seq("imp")
-        try {
-          val docs = Tables.load(s, dir, "documents")
-          val bucketed =
-            graft.operators.MixtureModelStore.sharedDsirBuckets(s, dir)
-          saveStoreTable(out, pfx,
-            graft.operators.Dsir.importanceTableFrom(bucketed,
-              graft.operators.MixtureModelStore.DsirBuckets),
-            "imp", None)
-          graft.operators.Dsir.dsirResampleFromTable(docs, "doc_id",
-              "text", "source", bucketed, s.table(s"${pfx}_imp"))
-            .localCheckpoint(eager = true)
-        } finally {
-          parts.foreach(p => s.sql(s"DROP TABLE IF EXISTS ${pfx}_$p"))
-          graft.pipeline.SinkFiles.deleteRecursive(out)
-        }
-      },
-      oracleOf("l94_dsir_select"))
-  )
-
-  /** The REAL-audio codec tier (the WAV rung the image tier's l66/l71/
-    * l85 contract extends to): genuine RIFF/WAV PCM synthesized per
-    * row, decoded back through the in-JDK javax.sound.sampled codec.
-    */
-  private val audioSpecs: Seq[QuerySpec] = Seq(
-
-    QuerySpec(
-      "l111_audio_decode_real",
-      "REAL audio codec through the batched multimodal shape under the PRODUCTION quarantine contract (the l85 discipline applied to the WAV tier): per doc a genuine RIFF/WAV file is written via javax.sound.sampled.AudioSystem (16-bit mono PCM square wave; id-derived sample rate / length / amplitude — the oracle contract), every doc_id%13=0 header is deterministically poisoned (RIFF magic zeroed), and the quarantine decode tier recovers sample_rate and n_samples from the real header and peak_amp by scanning the real PCM payload — emitting (format='corrupt', NULL meta) for exactly the poisoned rows. The oracle replays the synthesis formulas and the poison predicate, so the hash only matches if the codec round-trip is byte-exact AND quarantine catches exactly the corrupted rows",
-      (s, dir) => Multimodal.decodeAudioQuarantine(
-        Multimodal.corruptBlobs(
-          FixtureBlobStore.shared(s, dir, "wav"),
-          "doc_id", modulo = 13),
-        "doc_id"),
-      Some("""SELECT doc_id,
-             |  CASE WHEN doc_id % 13 = 0 THEN NULL
-             |    ELSE CAST(8000 + (doc_id % 4) * 4000 AS INT)
-             |    END AS sample_rate,
-             |  CASE WHEN doc_id % 13 = 0 THEN NULL
-             |    ELSE CAST(40 + doc_id % 60 AS BIGINT) END AS n_samples,
-             |  CASE WHEN doc_id % 13 = 0 THEN NULL
-             |    ELSE CAST(1000 + (doc_id * 7) % 9000 AS BIGINT)
-             |    END AS peak_amp,
-             |  CASE WHEN doc_id % 13 = 0 THEN 'corrupt'
-             |    ELSE 'wave' END AS format
-             |FROM documents""".stripMargin)),
-
-    QuerySpec(
-      "l117_audio_features",
-      "REAL audio feature extraction — the feature-extract rung of the audio tier (decode / feature-extract / resize, the multimodal contract): per genuine WAV blob the frame count, peak amplitude AND zero-crossing count (ZCR — the standard integer audio descriptor, the pre-spectral speech/noise discriminator), all scanned from the decoded 16-bit PCM payload in the batched shape. For the square-wave fixture the crossings are EXACTLY floor((n_samples-1)/half_period), so the oracle replays the full formula chain — a strictly stronger payload check than l111's peak: the hash only matches if the SIGN of every decoded sample is byte-correct",
-      (s, dir) => Multimodal.audioFeaturesBatched(
-        FixtureBlobStore.shared(s, dir, "wav"), "doc_id"),
-      Some("""SELECT doc_id,
-             |  CAST(40 + doc_id % 60 AS BIGINT) AS n_samples,
-             |  CAST(1000 + (doc_id * 7) % 9000 AS BIGINT) AS peak_amp,
-             |  CAST((40 + doc_id % 60 - 1) // (4 + doc_id % 8)
-             |    AS BIGINT) AS zero_crossings
-             |FROM documents""".stripMargin)),
-
-    QuerySpec(
-      "l118_audio_resample",
-      "REAL audio resample — the resize rung of the audio tier, and unlike the image tier's metadata-only resize this transforms the actual blob: every WAV is decoded, decimated by 2 (every other sample kept), RE-ENCODED as a genuine half-rate WAV through the same in-JDK codec, and the downstream decode pass reads the re-encoded bytes back — so the hash verifies the whole decode -> transform -> encode -> decode round-trip. The oracle replays the arithmetic: rate' = rate/2, n' = ceil(n/2), and the peak survives decimation exactly because sample 0 (always +amplitude by the fixture contract) is always kept",
-      (s, dir) => Multimodal.decodeAudioBatched(
-        Multimodal.resampleWav(
-          FixtureBlobStore.shared(s, dir, "wav"),
-          "doc_id", stride = 2),
-        "doc_id"),
-      Some("""SELECT doc_id,
-             |  CAST((8000 + (doc_id % 4) * 4000) // 2 AS INT)
-             |    AS sample_rate,
-             |  CAST((40 + doc_id % 60 + 1) // 2 AS BIGINT) AS n_samples,
-             |  CAST(1000 + (doc_id * 7) % 9000 AS BIGINT) AS peak_amp,
-             |  'wave' AS format
-             |FROM documents""".stripMargin)),
-
-    QuerySpec(
-      "l119_video_decode_real",
-      "REAL video codec tier — MJPEG-in-AVI (the container ships no video codec, but MJPEG needs none beyond the JPEG codec javax.imageio provides): per doc a spec-shaped RIFF/AVI file is written around 2+id%4 genuine JPEG frames (l66's dimension formulas), every doc_id%17=0 header is poisoned (RIFF magic zeroed), and the quarantine tier DEMUXES the container with a generic RIFF chunk walker (no writer-layout assumptions), decodes EVERY frame through the real JPEG codec, cross-checks the container's dwTotalFrames claim against the demuxed chunk count, and enforces uniform frame dims — a container whose metadata lies must quarantine, not pass. The oracle replays the synthesis formulas and poison predicate: the hash only matches if demux + frame decode + consistency checks are exact on every row",
-      (s, dir) => Multimodal.decodeVideoQuarantine(
-        Multimodal.corruptBlobs(
-          FixtureBlobStore.shared(s, dir, "avi"),
-          "doc_id", modulo = 17),
-        "doc_id"),
-      Some("""SELECT doc_id,
-             |  CASE WHEN doc_id % 17 = 0 THEN NULL
-             |    ELSE CAST(2 + doc_id % 4 AS INT) END AS n_frames,
-             |  CASE WHEN doc_id % 17 = 0 THEN NULL
-             |    ELSE CAST(8 + doc_id % 16 AS INT) END AS width,
-             |  CASE WHEN doc_id % 17 = 0 THEN NULL
-             |    ELSE CAST(8 + (doc_id * 3) % 16 AS INT) END AS height,
-             |  CASE WHEN doc_id % 17 = 0 THEN 'corrupt'
-             |    ELSE 'mjpeg' END AS format
-             |FROM documents""".stripMargin)),
-
-    QuerySpec(
-      "l120_video_frame_sample",
-      "REAL frame sampling over the MJPEG tier — the l14 generator upgraded from arithmetic to actual demux+decode: every 2nd frame of each AVI is extracted from the container and decoded through the real JPEG codec (skipped frames are NEVER decoded — the point of sampling at 100 TB), one row per sampled frame with its genuinely decoded dimensions. The oracle enumerates the sampled indices from the synthesis formulas, so the hash only matches if the demuxer walks the chunk sequence in exact order",
-      (s, dir) => Multimodal.sampleVideoFramesBatched(
-        FixtureBlobStore.shared(s, dir, "avi"), "doc_id", stride = 2),
-      Some("""SELECT doc_id,
-             |  CAST(unnest(range(0, 2 + doc_id % 4, 2)) AS INT)
-             |    AS frame_idx,
-             |  CAST(8 + doc_id % 16 AS INT) AS width,
-             |  CAST(8 + (doc_id * 3) % 16 AS INT) AS height
-             |FROM documents""".stripMargin)),
-
-    QuerySpec(
-      "l121_video_resize",
-      "REAL video resize — the resize rung of the video tier, transforming the actual blob (the l118 audio discipline applied to MJPEG): every AVI is demuxed, every frame decoded through the real JPEG codec, scaled to half dimensions through a real AWT raster draw, re-encoded as a genuine JPEG, and a NEW spec-shaped AVI is rebuilt with truthful metadata — then the downstream decode pass (demux + frame decode + dwTotalFrames cross-check + uniformity gate) reads the rebuilt container. The oracle's halved-dimension arithmetic only matches if the whole demux -> decode -> scale -> encode -> remux -> decode chain is exact on every frame of every row",
-      (s, dir) => Multimodal.decodeVideoBatched(
-        Multimodal.resizeVideo(
-          FixtureBlobStore.shared(s, dir, "avi"),
-          "doc_id", num = 1, den = 2),
-        "doc_id"),
-      Some("""SELECT doc_id,
-             |  CAST(2 + doc_id % 4 AS INT) AS n_frames,
-             |  CAST((8 + doc_id % 16) // 2 AS INT) AS width,
-             |  CAST((8 + (doc_id * 3) % 16) // 2 AS INT) AS height,
-             |  'mjpeg' AS format
-             |FROM documents""".stripMargin))
-  )
-
-  /** The trained-rotation OPQ refinement (finishing what l106's PCA
-    * baseline started — Ge et al. 2013's alternating OPQ_NP).
-    */
-  private val opqSpecs: Seq[QuerySpec] = Seq(
-
-    QuerySpec(
-      "l112_opq_refine",
-      "TRAINED-rotation OPQ — the alternating refinement of Ge et al. 2013 §4 seeded by l106's PCA rotation (their R0): 4 iterations of { warm-started Lloyd codebook round under R; encode; closed-form orthogonal Procrustes re-fit of R from the (vector, reconstruction) pairing } — each iteration two treeAggregate passes with one driver sync each (the l80 argmax sync-point shape; state O(model) per partition, nothing corpus-sized moves). THREE gates: (1) the in-sample quantization-error trace is monotonically non-increasing (the coordinate-descent guarantee the warm start preserves — OpqSpec property-pins it on arbitrary data), (2) the final error improves on the PCA-seeded first iteration's, (3) the trained rotation's PURE-ADC top-10 agreement (rerank=1 — the rerank wash that l106's fidelity gate allows would mask exactly the quantization quality OPQ improves) with the full-precision ranking of the same candidates is >= the PCA rotation's at the identical budget (same candidate machinery, same m/nCodes/iters, both reported as the gate's two sides). Oracle = deterministic query-count arithmetic + literal true",
-      (s, dir) => {
-        val e = Tables.load(s, dir, "embeddings")
-        // the rotation is a standing artifact (OpqModelStore — trained
-        // once per corpus, shared with l116's rotated index build)
-        val (pca, opq) = graft.operators.OpqModelStore.shared(s, dir)
-        val monotone = opq.errTrace.toSeq.sliding(2).forall {
-          case Seq(a, b) => b <= a * (1.0 + 1e-9) + 1e-12
-          case _ => true
-        }
-        val improved =
-          opq.errTrace.last <= opq.errTrace.head * (1.0 + 1e-12)
-        val isQ = col("vec_id") % 25 === 0
-        def adcHits(rot: Array[Array[Double]], mark: String) = {
-          val rc = e.select(col("vec_id"),
-              graft.operators.Opq.rotateExpr(rot, col("embedding"))
-                .as("embedding"))
-            .localCheckpoint(eager = true)
-          val q = rc.where(isQ)
-          val cand = Similarity.ivfCandidates(s, q, rc, "vec_id",
-              "embedding", nCentroids = 8, nProbe = 6, trainIters = 0)
-            .localCheckpoint(eager = true)
-          Gates.overlap(
-              Similarity.ivfTopK(s, q, rc, "vec_id", "embedding",
-                10, nCentroids = 8, nProbe = 6,
-                candidatesOpt = Some(cand)),
-              Similarity.pqTopK(s, q, rc, "vec_id", "embedding",
-                10, m = 16, nCodes = 64, trainIters = 1, nCentroids = 8,
-                nProbe = 6, rerank = 1, candidatesOpt = Some(cand)),
-              Seq("q_id", "c_id"))
-            .select(col("n_truth").as("n_ivf"), col("n_hit").as(mark))
-        }
-        val a0 = adcHits(pca.axes, "__h_pca")
-        val a1 = adcHits(opq.rotation, "__h_opq").drop("n_ivf")
-        a0.crossJoin(a1)
-          .select(col("n_ivf"), lit(monotone).as("monotone_ok"),
-            lit(improved).as("err_improved_ok"),
-            (col("__h_opq") >= col("__h_pca")).as("opq_ge_pca_ok"))
-      },
-      Some("""SELECT 10 * count(*) AS n_ivf, TRUE AS monotone_ok,
-             |  TRUE AS err_improved_ok, TRUE AS opq_ge_pca_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    QuerySpec(
-      "l116_opq_index_serve",
-      "the OPQ rotation in its PRODUCTION seat — l72's persisted-index serve contract run in the TRAINED rotated space (what 'the production share is one rotation pass at index-build time' means, made executable): the standing OpqModelStore rotation (shared with l112 — trained once per corpus) rotates the corpus as an index-BUILD pass, the full IVF-PQ index is built over the rotated vectors and persisted as bucketed tables, and the daily serve answers ROTATED queries (the same rotateExpr applied query-side — a real OPQ server rotates each incoming query vector before probing) with zero training jobs: broadcast-probe persisted centroids, equi-join persisted lists, ADC-rank with persisted codebook/codes/norms, k*8 full-precision re-rank. Gate = l72's fidelity contract verbatim, now over compaction-aligned codes: rotated-PQ top-10 agreement with the rotated full-precision ranking of the same candidates >= 90%. Oracle = candidate-completeness count + literal true",
-      (s, dir) => {
-        val out = QuerySpec.tempSinkDir()
-        val pfx = "graft_opqann_" +
-          new java.io.File(out).getName.stripPrefix("graft_sink_")
-        val parts = Seq("cent", "lists", "codebook", "codes", "norms")
-        try {
-          val (_, opq) = graft.operators.OpqModelStore.shared(s, dir)
-          // index BUILD: rotate (the one-time OPQ pass) then train/
-          // encode/persist — the l72 shape over the rotated corpus
-          val rot = Tables.load(s, dir, "embeddings")
-            .select(col("vec_id"),
-              graft.operators.Opq.rotateExpr(opq.rotation,
-                col("embedding")).as("embedding"))
-            .localCheckpoint(eager = true)
-          val idx = Similarity.buildAnnIndex(rot, "vec_id", "embedding",
-            nCentroids = 8, trainIters = 0,
-            m = graft.operators.OpqModelStore.M,
-            nCodes = graft.operators.OpqModelStore.NCodes,
-            pqTrainIters = 1)
-          saveStoreTable(out, pfx, idx.centroids, "cent", None)
-          saveStoreTable(out, pfx, idx.lists, "lists", Some("cent_id"))
-          saveStoreTable(out, pfx, idx.codebook, "codebook", None)
-          saveStoreTable(out, pfx, idx.codes, "codes", Some("c_id"))
-          saveStoreTable(out, pfx, idx.norms, "norms", Some("c_id"))
-          // daily SERVE: incoming queries are rotated per row (the OPQ
-          // server's query-side pass) and answered from the persisted
-          // tables only
-          val q = rot.where(col("vec_id") % 25 === 0)
-          val cand = Similarity.indexCandidates(q, "vec_id", "embedding",
-              s.table(s"${pfx}_cent"), s.table(s"${pfx}_lists"),
-              nProbe = 6)
-            .localCheckpoint(eager = true)
-          val ivf = Similarity.ivfTopK(s, q, rot, "vec_id", "embedding",
-              10, candidatesOpt = Some(cand))
-          val pq = Similarity.pqTopKFromIndex(q, rot, "vec_id",
-              "embedding", 10, m = graft.operators.OpqModelStore.M,
-              codebook = s.table(s"${pfx}_codebook"),
-              codes = s.table(s"${pfx}_codes"),
-              norms = s.table(s"${pfx}_norms"),
-              candidates = cand, rerank = 8)
-          Gates.recall(ivf, pq, Seq("q_id", "c_id"), 90, "n_ivf", "pq_ok")
-            .localCheckpoint(eager = true)
-        } finally {
-          parts.foreach(p => s.sql(s"DROP TABLE IF EXISTS ${pfx}_$p"))
-          graft.pipeline.SinkFiles.deleteRecursive(out)
-        }
-      },
-      Some("""SELECT 10 * count(*) AS n_ivf, TRUE AS pq_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin))
-  )
-
-  /** Incremental cluster-label maintenance (l82's update≡rebuild
-    * contract applied to the dedup components).
-    */
-  private val ccUpdateSpecs: Seq[QuerySpec] = Seq(
-
-    QuerySpec(
-      "l113_cc_update",
-      "INCREMENTAL component maintenance — l82's update≡rebuild contract applied to the near-dup cluster labels (the standing labels l56/l58 decide membership against were recomputed from scratch per run until now): the corpus's exact winnowing pair graph (l89's frame, ONE checkpointed computation) is split into the standing base (neither endpoint in the daily batch doc_id%5=0) and the batch edges (any endpoint in it); updateComponents relabels ONLY the components the batch edges touch — contract batch edges through the standing labels (the componentsFromRefined lemma with the base graph as the refining subgraph: every base edge lies inside one standing cluster, so composed min-labels are exact, and an untouched cluster can never be rewritten, it misses the relabel join structurally — DedupSimilaritySpec property-pins both equality and untouched-identity on arbitrary graphs). Gate: the updated labels EXACTLY equal a full recompute over the union graph — zero multiset mismatches (each side grouped on all columns with a count, full-outer-joined; the l82 discipline). Oracle = the winnow pair graph's deterministic node count + literal true",
-      (s, dir) => {
-        val pairs = Dedup.winnowPairs(
-            Tables.load(s, dir, "documents"), "doc_id", "text",
-            k = 4, w = 5, minShared = 2, dfCap = 64)
-          .localCheckpoint(eager = true)
-        val touchesBatch = col("a_id") % 5 === 0 || col("b_id") % 5 === 0
-        val standing = Dedup.components(pairs.where(!touchesBatch))
-          .localCheckpoint(eager = true)
-        val updated = Dedup.updateComponents(standing,
-          pairs.where(touchesBatch))
-        val full = Dedup.components(pairs)
-        val ug = updated.groupBy(col("doc_id"), col("cluster_id"))
-          .agg(count(lit(1)).as("__cu"))
-        val fg = full.groupBy(col("doc_id"), col("cluster_id"))
-          .agg(count(lit(1)).as("__cf"))
-        ug.join(fg, Seq("doc_id", "cluster_id"), "full_outer")
-          .agg(count(when(col("__cf").isNotNull, 1)).as("n_nodes"),
-            sum(when(col("__cu").isNull || col("__cf").isNull ||
-                col("__cu") =!= col("__cf"), 1L).otherwise(0L))
-              .as("__mism"))
-          .select(col("n_nodes"),
-            (col("__mism") === 0).as("update_eq_rebuild_ok"))
-      },
-      Some("""WITH tk AS (
-             |  SELECT doc_id, string_split(trim(text), ' ') AS t
-             |  FROM documents),
-             |gh AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(t) >= 4 THEN
-             |      [list_reduce([unicode(c) for c in
-             |          regexp_split_to_array(
-             |            array_to_string(t[i:i+3], ' '), '')],
-             |        (a, b) -> (CAST(a AS BIGINT) * 31 + b) % 1000000007)
-             |       for i in range(1, len(t) - 2)]
-             |    ELSE CAST([] AS BIGINT[]) END AS gh
-             |  FROM tk),
-             |fpt AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(gh) >= 5 THEN
-             |      list_distinct([list_min(gh[j:j+4])
-             |                     for j in range(1, len(gh) - 3)])
-             |    WHEN len(gh) > 0 THEN [list_min(gh)]
-             |    ELSE CAST([] AS BIGINT[]) END AS fps
-             |  FROM gh),
-             |ex AS (SELECT doc_id, unnest(fps) AS fp FROM fpt),
-             |cold AS (
-             |  SELECT fp FROM ex GROUP BY 1
-             |  HAVING count(*) BETWEEN 2 AND 64),
-             |po AS (SELECT ex.doc_id, ex.fp FROM ex JOIN cold USING (fp)),
-             |pr AS (
-             |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-             |  FROM po a JOIN po b ON a.fp = b.fp AND a.doc_id < b.doc_id
-             |  GROUP BY 1, 2 HAVING count(*) >= 2),
-             |lab AS (
-             |  SELECT DISTINCT doc_id FROM (
-             |    SELECT a_id AS doc_id FROM pr
-             |    UNION ALL SELECT b_id FROM pr))
-             |SELECT count(*) AS n_nodes,
-             |  TRUE AS update_eq_rebuild_ok
-             |FROM lab""".stripMargin))
-  )
-
-  /** The deflate compressibility quality signal (RefinedWeb/Gopher's
-    * compression-ratio heuristic), under the l80 gating contract:
-    * deflate output is deterministic per JDK but not SQL-replayable,
-    * so the census (l114) is rows-only and its gates live in the
-    * oracle-checked twin (l115) plus DeflateSpec's plain-Scala
-    * reference equivalence.
-    */
-  private val deflateSpecs: Seq[QuerySpec] = Seq(
-
-    QuerySpec(
-      "l114_deflate_census",
-      "compression-ratio funnel census — the RefinedWeb/Gopher compressibility heuristic the quality funnel still lacked (extremely compressible = repetitive template/boilerplate spam, incompressible = binary junk; the signal is orthogonal to the token-ratio heuristics of l09): per doc the java.util.zip.Deflater output size at FIXED level 6 over the UTF-8 bytes, banded by ratio decile — per band the doc count, token mass and byte mass, i.e. the l35-style ledger of what a compressibility filter at any banded threshold keeps/drops. ONE Deflater per batch reset between rows (the multimodal batched-codec shape). ROWS-ONLY BY CONTRACT (the l04/l80 tier): deflate bytes are a pure deterministic function of input + JDK but not SQL-replayable; the frame is gated by l115's oracle-checked bounds/mass twin over the SAME scored frame machinery and DeflateSpec's ScalaCheck equivalence against a per-row fresh-Deflater reference (pinning that batch-level reuse leaks no state)",
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        TextAnalysis.deflateBandCensus(
-          TextAnalysis.deflateRatio(d, "doc_id", "text"),
-          d, "doc_id", "text")
-      },
-      None),
-
-    QuerySpec(
-      "l115_deflate_gate",
-      "l114's oracle-checked gate twin (the l80 discipline): over the same per-doc deflate frame, the input-side masses are SQL-exact — doc count and total UTF-8 byte mass (DuckDB strlen counts bytes) — and the deflate-side columns enter only as gated booleans: every output fits zlib's compressBound envelope (deflate can expand stored blocks, never past bound), every non-empty input produced bytes, and the corpus contains genuinely compressible documents (min ratio < 1.0 — natural-language text at level 6 always clears this). The hash only matches if the batched codec produced sane output for EVERY row at this sf",
-      (s, dir) => {
-        val pd = TextAnalysis.deflateRatio(
-            Tables.load(s, dir, "documents"), "doc_id", "text")
-          .localCheckpoint(eager = true)
-        pd.agg(count(lit(1)).as("n_docs"),
-          sum(col("len_in")).as("bytes_in"),
-          every(col("len_out") <=
-            TextAnalysis.deflateBound(col("len_in"))).as("bound_ok"),
-          every(col("len_out") > 0 || col("len_in") === 0)
-            .as("positive_ok"),
-          (min(col("ratio_bp")) < 10000).as("some_compression_ok"))
-      },
-      Some("""SELECT count(*) AS n_docs,
-             |  CAST(coalesce(sum(strlen(text)), 0) AS BIGINT)
-             |    AS bytes_in,
-             |  TRUE AS bound_ok, TRUE AS positive_ok,
-             |  TRUE AS some_compression_ok
-             |FROM documents""".stripMargin)),
-
-    QuerySpec(
-      "l126_dict_deflate_census",
-      "dictionary-trained compression near-dup — the deflate tier's second rung (l114 measures SELF-redundancy; seeding the Deflater with the source's hot-passage preset dictionary measures FAMILY-redundancy: a doc whose ratio improves sharply against its source's dictionary shares template text with the source even when its own deflate ratio is unremarkable — the cheap complement of the l90 classifier for boilerplate deflate-alone misses): per-source dictionaries trained ONCE (DeflateDictStore: top-64 df>=2 word 6-grams, hottest last, 32 KiB clamp — a driver-bounded boot artifact, broadcast), each doc compressed WITH and WITHOUT its dictionary by the same one-Deflater-per-batch codec, censused per dict-gain decile band (gain_bp = ratio_bp - dict_ratio_bp; NULL band = empty/NULL text). ROWS-ONLY by the l114 contract: deflate bytes are deterministic but not SQL-replayable; gated by l127's oracle-checked twin over the same frame plus DeflateSpec's fresh-Deflater dictionary properties (including that reset() clears the dictionary between rows) and t48's band-for-band stream==batch equality",
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        TextAnalysis.deflateDictRatio(d, "doc_id", "text", "source",
-            graft.operators.DeflateDictStore.sharedDicts(s, dir))
-          .groupBy(coalesce(floor(col("dict_gain_bp") / 1000),
-            lit(-1000L)).as("band"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("len_in")).as("bytes_in"),
-            sum(col("len_out_dict")).as("bytes_out_dict"))
-      },
-      None),
-
-    QuerySpec(
-      "l127_dict_deflate_gate",
-      "l126's oracle-checked gate twin (the l115 discipline): over the same per-doc dict-deflate frame the input-side masses are SQL-exact (doc count, UTF-8 byte mass) and the codec columns enter as gated booleans — every dictionary output fits the compressBound envelope (a preset dictionary cannot breach the stored-block bound), every non-empty input produced bytes on both arms, the gain definition is consistent (len_out_dict <= len_out exactly when gain >= 0 at the bp floor... gated as: gain > 0 implies len_out_dict < len_out), and the dictionary STRICTLY helped at least one document (the fixture's template families guarantee a hot-passage hit). The hash only matches if the dictionary codec behaved sanely on every row at this sf",
-      (s, dir) => {
-        // consumed exactly once by the aggregate — no checkpoint: the
-        // mapPartitions output streams straight into the fold
-        val pd = TextAnalysis.deflateDictRatio(
-            Tables.load(s, dir, "documents"), "doc_id", "text", "source",
-            graft.operators.DeflateDictStore.sharedDicts(s, dir))
-        pd.agg(count(lit(1)).as("n_docs"),
-          sum(col("len_in")).as("bytes_in"),
-          every(col("len_out_dict") <=
-            TextAnalysis.deflateBound(col("len_in"))).as("dict_bound_ok"),
-          every((col("len_out_dict") > 0 && col("len_out") > 0) ||
-            col("len_in") === 0).as("dict_positive_ok"),
-          every(coalesce(col("dict_gain_bp") <= 0, lit(true)) ||
-            col("len_out_dict") < col("len_out")).as("gain_consistent_ok"),
-          (min(col("len_out_dict") - col("len_out")) < 0)
-            .as("dict_helps_somewhere_ok"))
-      },
-      Some("""SELECT count(*) AS n_docs,
-             |  CAST(coalesce(sum(strlen(text)), 0) AS BIGINT)
-             |    AS bytes_in,
-             |  TRUE AS dict_bound_ok, TRUE AS dict_positive_ok,
-             |  TRUE AS gain_consistent_ok, TRUE AS dict_helps_somewhere_ok
-             |FROM documents""".stripMargin))
-  )
-
-  /** The EXACT-SUBSTRING dedup tier beyond l77's 12-word cap — the
-    * suffix-ranking method of the deduplicating-training-data line of
-    * work, Spark-first: prefix-doubling rank ladders + binary descent
-    * (Dedup.maximalDupSpans), exact at ANY span length in log-many
-    * rounds over the duplicated mass only. The fixture documents are
-    * <= 100 tokens, so the ORACLE can brute-force every k — the whole
-    * unbounded path is hash-gated at every sf, no rows-only contract
-    * needed; DedupSimilaritySpec adds a plain-Scala suffix-LCP
-    * reference on arbitrary corpora and the clamp-to-12 equality with
-    * l77.
-    */
-  private val exactSubstrSpecs: Seq[QuerySpec] = Seq(
-
-    QuerySpec(
-      "l124_exact_substr_spans",
-      "per-position EXACT maximal duplicated spans, uncapped (the substring-dedup removal input: every token position starting a >=6-word sequence that occurs in >=2 documents, with the TRUE maximal extent — a wall-to-wall duplicate reports its full length): prefix-doubling rank ladders bracket each span in [L, 2L), binary descent with the overlap-identity document-frequency test resolves it exactly; every shuffle after round 0 keys on long ranks, every stage is proportional to the duplicated mass. The oracle brute-forces every k (feasible only because fixture docs are short), so the hash gates the entire ladder+descent machine position-for-position",
-      (s, dir) => graft.operators.DupSpanStore.sharedSpans(s, dir),
-      Some("""WITH toks AS (
-             |  SELECT doc_id, string_split(trim(text), ' ') AS t
-             |  FROM documents
-             |  WHERE len(string_split(trim(text), ' ')) >= 6),
-             |e AS (
-             |  SELECT doc_id, k, i, array_to_string(t[i:i+k-1], ' ') AS g
-             |  FROM toks, unnest(range(6, len(t) + 1)) AS uk(k),
-             |       unnest(range(1, len(t) - k + 2)) AS ui(i)),
-             |hot AS (
-             |  SELECT k, g FROM e GROUP BY k, g
-             |  HAVING count(DISTINCT doc_id) >= 2),
-             |d AS (SELECT e.doc_id, e.i, e.k FROM e JOIN hot USING (k, g))
-             |SELECT doc_id, CAST(i - 1 AS BIGINT) AS i,
-             |  CAST(max(k) AS BIGINT) AS span
-             |FROM d GROUP BY doc_id, i""".stripMargin)),
-
-    QuerySpec(
-      "l128_dup_scrub_keep_one",
-      "repeated-passage removal with KEEP-ONE semantics — the substring-dedup line's canonical form, completing the scrub family (l59 removes EVERY occurrence of a shared passage; the published method keeps exactly one copy in the corpus, preserving the information while killing the repetition): per hot 6-gram the (doc_id, position)-minimal occurrence is canonical and survives, every other occurrence's cover drops; tokens inside overlapping canonical/non-canonical covers drop (coverage semantics, documented). One positional explode feeds the df aggregate and a single row_number window partitioned by the gram (the canonical pick costs no extra join); rebuild is the per-row indexed filter. The oracle replays the identical canonical rule with a window, so the hash gates cover selection, the keep-one exception AND the rebuilt text byte-for-byte",
-      (s, dir) => Dedup.scrubDupKeepOne(
-        Tables.load(s, dir, "documents"), "doc_id", "text"),
-      Some("""WITH toks AS (
-             |  SELECT doc_id, string_split(trim(text), ' ') AS t
-             |  FROM documents),
-             |ps0 AS (
-             |  SELECT doc_id, t, unnest(range(1, len(t) - 4)) AS i
-             |  FROM toks WHERE len(t) >= 6),
-             |ps AS (
-             |  SELECT doc_id, i, array_to_string(t[i:i+5], ' ') AS g
-             |  FROM ps0),
-             |hot AS (
-             |  SELECT g FROM ps GROUP BY g
-             |  HAVING count(DISTINCT doc_id) >= 2),
-             |h AS (
-             |  SELECT ps.doc_id, ps.i,
-             |    ROW_NUMBER() OVER (PARTITION BY ps.g
-             |      ORDER BY ps.doc_id, ps.i) AS rn
-             |  FROM ps JOIN hot USING (g)),
-             |cov AS (
-             |  SELECT DISTINCT doc_id, i + off AS p
-             |  FROM h, range(0, 6) o(off) WHERE rn > 1),
-             |pos0 AS (
-             |  SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS p
-             |  FROM toks),
-             |pos AS (
-             |  SELECT doc_id, p, t[p] AS tok FROM pos0),
-             |kept AS (
-             |  SELECT pos.doc_id,
-             |    string_agg(tok, ' ' ORDER BY pos.p) AS clean_text,
-             |    count(*) AS n_kept
-             |  FROM pos LEFT JOIN cov
-             |    ON pos.doc_id = cov.doc_id AND pos.p = cov.p
-             |  WHERE cov.p IS NULL
-             |  GROUP BY pos.doc_id)
-             |SELECT toks.doc_id,
-             |  coalesce(kept.clean_text, '') AS clean_text,
-             |  CAST(len(toks.t) - coalesce(kept.n_kept, 0) AS INT)
-             |    AS n_removed
-             |FROM toks LEFT JOIN kept ON toks.doc_id = kept.doc_id"""
-        .stripMargin)),
-
-    QuerySpec(
-      "l129_span_scrub_keep_one",
-      "SPAN-granularity keep-one removal — the published ExactSubstr REMOVAL semantics, driven by l124's maximal spans (l128 decides canonicals per fixed 6-gram, so one long shared passage is 35 independent decisions whose canonicals can scatter; here each MAXIMAL duplicated span is ONE decision: per distinct span text the (doc_id, position)-minimal occurrence survives, every other occurrence's full [i, i+span) cover drops, survivors re-join in order — inside the minimal document the whole run survives because its sub-spans all rank first). The spans are the durable DupSpanStore artifact, so the removal pass is a join against a standing table, never a ladder rebuild; one row_number window over the span text picks canonicals (per-group rows = duplicated mass); the rebuild is the shared per-row indexed filter. The oracle brute-forces maximal spans at every k, replays the identical canonical rule and rebuilds text — the hash gates span selection, the keep-one exception AND the rebuilt text byte-for-byte; DedupSimilaritySpec adds the clamp gate: spans clamped to k=6 reproduce l128 exactly",
-      (s, dir) => Dedup.scrubSpansKeepOne(
-        Tables.load(s, dir, "documents"), "doc_id", "text",
-        graft.operators.DupSpanStore.sharedSpans(s, dir)),
-      Some("""WITH toks AS (
-             |  SELECT doc_id, string_split(trim(text), ' ') AS t
-             |  FROM documents),
-             |tl AS (SELECT doc_id, t FROM toks WHERE len(t) >= 6),
-             |e AS (
-             |  SELECT doc_id, k, i, array_to_string(t[i:i+k-1], ' ') AS g
-             |  FROM tl, unnest(range(6, len(t) + 1)) AS uk(k),
-             |       unnest(range(1, len(t) - k + 2)) AS ui(i)),
-             |hot AS (
-             |  SELECT k, g FROM e GROUP BY k, g
-             |  HAVING count(DISTINCT doc_id) >= 2),
-             |d AS (
-             |  SELECT e.doc_id, e.i, e.k, e.g
-             |  FROM e JOIN hot USING (k, g)),
-             |mx AS (
-             |  SELECT doc_id, i, max(k) AS span FROM d GROUP BY doc_id, i),
-             |occ AS (
-             |  SELECT d.doc_id, d.i, d.k AS span, d.g
-             |  FROM d JOIN mx
-             |    ON d.doc_id = mx.doc_id AND d.i = mx.i AND d.k = mx.span),
-             |r AS (
-             |  SELECT doc_id, i, span,
-             |    ROW_NUMBER() OVER (PARTITION BY g
-             |      ORDER BY doc_id, i) AS rn
-             |  FROM occ),
-             |cov AS (
-             |  SELECT DISTINCT r.doc_id, r.i + off AS p
-             |  FROM r, unnest(range(0, r.span)) AS o(off)
-             |  WHERE r.rn > 1),
-             |pos0 AS (
-             |  SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS p
-             |  FROM toks),
-             |pos AS (
-             |  SELECT doc_id, p, t[p] AS tok FROM pos0),
-             |kept AS (
-             |  SELECT pos.doc_id,
-             |    string_agg(tok, ' ' ORDER BY pos.p) AS clean_text,
-             |    count(*) AS n_kept
-             |  FROM pos LEFT JOIN cov
-             |    ON pos.doc_id = cov.doc_id AND pos.p = cov.p
-             |  WHERE cov.p IS NULL
-             |  GROUP BY pos.doc_id)
-             |SELECT toks.doc_id,
-             |  coalesce(kept.clean_text, '') AS clean_text,
-             |  CAST(len(toks.t) - coalesce(kept.n_kept, 0) AS INT)
-             |    AS n_removed
-             |FROM toks LEFT JOIN kept ON toks.doc_id = kept.doc_id"""
-        .stripMargin)),
-
-    QuerySpec(
-      "l125_exact_substr_census",
-      "l77's duplicate-span census with the cap REMOVED — per document the duplicated-start count and the TRUE maximal cross-document span (the memorization-risk number a capped census understates on near-whole-document duplicates): the same ladder+descent machine aggregated per doc; n_dup_starts must equal l77's (same prune) while max_span is exact at any length. Oracle = the unbounded brute force",
-      (s, dir) => Dedup.censusOfSpans(
-        graft.operators.DupSpanStore.sharedSpans(s, dir)),
-      Some("""WITH toks AS (
-             |  SELECT doc_id, string_split(trim(text), ' ') AS t
-             |  FROM documents
-             |  WHERE len(string_split(trim(text), ' ')) >= 6),
-             |e AS (
-             |  SELECT doc_id, k, i, array_to_string(t[i:i+k-1], ' ') AS g
-             |  FROM toks, unnest(range(6, len(t) + 1)) AS uk(k),
-             |       unnest(range(1, len(t) - k + 2)) AS ui(i)),
-             |hot AS (
-             |  SELECT k, g FROM e GROUP BY k, g
-             |  HAVING count(DISTINCT doc_id) >= 2),
-             |d AS (SELECT e.doc_id, e.i, e.k FROM e JOIN hot USING (k, g))
-             |SELECT doc_id, count(DISTINCT i) AS n_dup_starts,
-             |  CAST(max(k) AS BIGINT) AS max_span
-             |FROM d GROUP BY doc_id ORDER BY doc_id""".stripMargin))
-  )
-
-  /** Wrap a registered twin's oracle with literal-TRUE gate columns
-    * (the durable-reload contract: output is the twin's verbatim PLUS
-    * in-query booleans the hash gate forces to TRUE).
-    */
-  private def gatedOracle(base: String,
-      gateCols: Seq[String]): Option[String] =
-    oracleOf(base).map(sql =>
-      s"SELECT q.*, ${gateCols.map(c => s"TRUE AS $c").mkString(", ")}" +
-        s" FROM (\n$sql\n) q")
-
-  /** Catalog-table leaves of a frame's optimized plan (lowercased) —
-    * the "serve actually reads the persisted tables" probe.
-    */
-  private def catalogLeaves(df: org.apache.spark.sql.DataFrame)
-      : Set[String] =
-    df.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.catalogTable.map(_.identifier.table.toLowerCase)
-    }.flatten.toSet
-
-  /** The DURABLE store tier (the rung above l107-l110/l116's
-    * hash-invisible persistence): the standing stores get a fixed
-    * on-disk layout keyed by a corpus content fingerprint, and these
-    * queries prove the contract end-to-end — build (or reload) the
-    * layout, EVICT every in-memory artifact and registered table to
-    * simulate a brand-new application, reload, and gate in-query that
-    * the reload paid ZERO build seconds (StoreBuildLedger) and that
-    * the serve plan reads the persisted tables with zero training
-    * aggregates. Output and oracle are the training twin's plus the
-    * literal gate booleans, so the driver's hash gate enforces the
-    * zero-rebuild contract at every sf.
-    */
-  private val durableStoreSpecs: Seq[QuerySpec] = Seq(
-
-    QuerySpec(
-      "l122_lm_durable_serve",
-      "l83's bigram LM served from the DURABLE store — the second-application contract l107's per-run tables couldn't prove: the count tables live at a fixed warehouse path keyed by the corpus content fingerprint (the l27 hash discipline lifted to the corpus — a changed corpus invalidates, a byte-identical one reuses), and the query (a) load-or-builds, (b) evicts the in-memory NgramModelStore AND drops the registered catalog tables (external — files stay), then (c) reloads and serves the full l83 card. Gates, in-query and hash-enforced: the reload accrued ZERO StoreBuildLedger seconds under durable_lm_bigram (no training or write job ran), and the serve plan carries no training aggregate (the ModelStoreSpec probe, inlined). Hash-exact against l83's oracle plus the literal gate columns: durability must be invisible to the scores and free for every application after the first",
-      (s, dir) => {
-        val st = graft.operators.NgramModelStore
-        val ds = graft.operators.DurableStore
-        val fp = ds.documentsFp(s, dir)
-        // (a) first touch builds the layout iff NO application ever saw
-        // this corpus; otherwise this is already a durable reload
-        st.durableBigram(s, dir, fp)
-        // (b) fresh-application simulation — the BIGRAM cache only:
-        // that is the artifact the durable layout holds; the derived
-        // backoff/KN caches were built from still-valid checkpointed
-        // frames and clearing them would only make sibling queries
-        // re-pay derived builds (ledger noise), proving nothing
-        st.evictBigram()
-        ds.dropRegistered(s, st.DurableFamily, fp, st.DurableParts)
-        // (c) the reload must be build-free and training-free
-        val before = ds.buildSeconds(st.DurableFamily)
-        val served = st.durableBigram(s, dir, fp)
-        val buildFree = ds.buildSeconds(st.DurableFamily) == before
-        // re-seed the shared cache with the reloaded tables so sibling
-        // LM queries serve the durable store instead of retraining
-        st.seedBigram(s, dir, served)
-        def trainAggs(df: org.apache.spark.sql.DataFrame): Set[String] =
-          df.queryExecution.optimizedPlan.collect {
-            case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
-              a.aggregateExpressions.map(_.name)
-          }.flatten.toSet.intersect(Set("pair_c", "ctx_c", "v"))
-        val scored = NgramLm.surprisalBits(
-          Tables.load(s, dir, "documents"), "doc_id", "text", served, 2)
-        val planClean = trainAggs(scored).isEmpty
-        // POSITIVE CONTROL for the name-anchored probe: the same probe
-        // over a TRAIN-INLINE plan (lazy aggregates, never executed —
-        // optimizedPlan triggers analysis only, zero jobs) MUST trip,
-        // so a rename of the training columns cannot make the serve
-        // gate silently vacuous
-        val inline = NgramLm.trainBigram(
-          Tables.load(s, dir, "documents").where(col("doc_id") % 7 === 0),
-          "text", 2)
-        val probeArmed = trainAggs(NgramLm.surprisalBits(
-          Tables.load(s, dir, "documents"), "doc_id", "text", inline, 2))
-          .nonEmpty
-        cardOf(scored)
-          .withColumn("reload_build_free_ok", lit(buildFree))
-          .withColumn("serve_plan_clean_ok", lit(planClean))
-          .withColumn("probe_armed_ok", lit(probeArmed))
-      },
-      gatedOracle("l83_lm_perplexity",
-        Seq("reload_build_free_ok", "serve_plan_clean_ok",
-          "probe_armed_ok"))),
-
-    QuerySpec(
-      "l123_ann_durable_serve",
-      "l72's IVF-PQ serve from the DURABLE index store — the vector-side second-application contract: the five index tables (lists/codes/norms bucketed on their join keys, centroids/codebook boot tables) live at a fixed path keyed by the embeddings content fingerprint; the query build-or-loads, evicts AnnIndexStore and the registered tables, reloads, and serves l72's full probe -> ADC -> rerank -> fidelity-gate pipeline. Gates, in-query and hash-enforced: zero StoreBuildLedger seconds accrued by the reload, AND the candidate/ADC plans' catalog leaves are exactly the re-registered durable tables (the serve reads the store, not a retrain — bucket specs survive re-registration, so the index-side joins stay exchange-free, plan-probed in DurableStoreSpec). Oracle = l72's plus the literal gate columns",
-      (s, dir) => {
-        val st = graft.operators.AnnIndexStore
-        val ds = graft.operators.DurableStore
-        val fp = ds.embeddingsFp(s, dir)
-        st.durableIndex(s, dir, fp)
-        // evict the INDEX cache only — the durable layout's artifact;
-        // the serve-meta cache derives from still-valid checkpointed
-        // frames and clearing it would just make t22 re-collect (the
-        // full fresh-boot shape is t50's contract, which pays its own
-        // boot)
-        st.evictIndex()
-        ds.dropRegistered(s, st.DurableFamily, fp, st.DurableParts)
-        val before = ds.buildSeconds(st.DurableFamily)
-        val idx = st.durableIndex(s, dir, fp)
-        val buildFree = ds.buildSeconds(st.DurableFamily) == before
-        // re-seed the shared cache with the reloaded tables so sibling
-        // ANN queries serve the durable store instead of rebuilding
-        st.seedIndex(s, dir, idx)
-        val e = Tables.load(s, dir, "embeddings")
-        val q = e.where(col("vec_id") % 25 === 0)
-        val candDf = Similarity.indexCandidates(q, "vec_id", "embedding",
-          idx.centroids, idx.lists, nProbe = 6)
-        val candTables = catalogLeaves(candDf)
-        val cand = candDf.localCheckpoint(eager = true)
-        val ivf = Similarity.ivfTopK(s, q, e, "vec_id", "embedding", 10,
-            candidatesOpt = Some(cand))
-        val pq = Similarity.pqTopKFromIndex(q, e, "vec_id", "embedding",
-          10, m = st.DefaultM, codebook = idx.codebook,
-          codes = idx.codes, norms = idx.norms, candidates = cand,
-          rerank = 8)
-        val pqTables = catalogLeaves(pq)
-        // r16: pqTopKFromIndex boot-collects the codebook (the
-        // collectServeMeta discipline), so the registered codebook table
-        // is consumed at plan-build time and no longer appears as a leaf
-        // of the pq plan — probe the frame the collect reads instead;
-        // codes/norms stay in-plan leaves
-        val cbTables = catalogLeaves(idx.codebook)
-        val fromStore = Seq(
-            "cent" -> candTables, "lists" -> candTables,
-            "codebook" -> cbTables, "codes" -> pqTables,
-            "norms" -> pqTables)
-          .forall { case (p, ts) =>
-            ts.contains(ds.registeredName(st.DurableFamily, fp, p)) }
-        Gates.recall(ivf, pq, Seq("q_id", "c_id"), 90, "n_ivf", "pq_ok")
-          .withColumn("reload_build_free_ok", lit(buildFree))
-          .withColumn("serve_reads_store_ok", lit(fromStore))
-      },
-      gatedOracle("l72_ann_index_serve",
-        Seq("reload_build_free_ok", "serve_reads_store_ok"))),
-
-    QuerySpec(
-      "l130_semdedup_durable_serve",
-      "the semantic-dedup family served from the DURABLE store — the last standing build that still re-ran per application (semdedup pairs + component labels, ~6 s at sf0.1 on every run): the two tables (pairs bucketed on a_id, labels on doc_id) live at a fixed path keyed by the embeddings content fingerprint; the query build-or-loads, evicts the SEMANTIC caches (the exact all-pairs twin survives — it is the gate baseline, in-memory by design) and the registered tables, reloads, re-seeds the shared store for sibling consumers (l61/l62/l99), and serves BOTH user-facing cards over the reloaded tables: l61's recall census (cluster-found pairs vs the exact twin) and l62's dropped-set census (coarsened exact components vs semantic components). Durability also PINS the clustering draw: the persisted pair set is one fixed recall-valid draw every consumer shares, instead of a fresh shuffled-double kmeans per application. Gates, in-query and hash-enforced: zero StoreBuildLedger seconds accrued by the reload, and both card plans' catalog leaves include the re-registered durable tables. Oracle = l61's + l62's oracles cross-joined plus the literal gate columns",
-      (s, dir) => {
-        val st = SemDedupStore
-        val ds = graft.operators.DurableStore
-        val fp = ds.embeddingsFp(s, dir)
-        st.durableSem(s, dir, fp)
-        st.evictSem()
-        ds.dropRegistered(s, st.DurableFamily, fp, st.DurableParts)
-        val before = ds.buildSeconds(st.DurableFamily)
-        val t = st.durableSem(s, dir, fp)
-        val buildFree = ds.buildSeconds(st.DurableFamily) == before
-        val semP = t("pairs")
-        val semL = t("labels")
-        // l61's recall card over the RAW reloaded pair table (catalog
-        // leaves visible — a checkpoint would hide them)
-        val exactPairs = st.sharedExactPairs(s, dir)
-        val recall = semRecallCard(exactPairs, semP)
-        // l62's prune card over the RAW reloaded label table
-        val prune = pruneCard(semL, exactPairs)
-        val fromStore = Seq(
-            "pairs" -> catalogLeaves(recall),
-            "labels" -> catalogLeaves(prune))
-          .forall { case (p, ls) =>
-            ls.contains(ds.registeredName(st.DurableFamily, fp, p)) }
-        // re-seed the shared caches so sibling consumers serve the
-        // durable tables instead of silently rebuilding
-        st.sharedSemPairs(s, dir)
-        st.sharedSemLabels(s, dir)
-        recall.crossJoin(broadcast(prune))
-          .select(col("n_exact"), col("recall_ok"),
-            col("n_exact_dropped"), col("prune_ok"),
-            lit(buildFree).as("reload_build_free_ok"),
-            lit(fromStore).as("serve_reads_store_ok"))
-      },
-      (oracleOf("l61_semantic_dedup"), oracleOf("l62_semantic_prune"))
-        match {
-          case (Some(a), Some(b)) => Some(
-            s"""SELECT a.n_exact, a.recall_ok, b.n_exact_dropped,
-               |  b.prune_ok, TRUE AS reload_build_free_ok,
-               |  TRUE AS serve_reads_store_ok
-               |FROM (
-               |$a
-               |) a CROSS JOIN (
-               |$b
-               |) b""".stripMargin)
-          case _ => None
-        }),
-
-    QuerySpec(
-      "l131_ann_durable_update",
-      "INCREMENTAL durable-store maintenance at O(delta) WRITE cost — the daily-append economics the fingerprint-keyed layout alone cannot give: the ann_index_inc lineage is a MANIFEST family — the one-time base training build is a single segment (all five parts); each append is assigned + PQ-encoded against the frozen centroids/codebook (per-row functions, zero Lloyd machinery — l82's update face) and written as ONE delta segment holding only the delta's lists/codes/norms, and the publish is ONE create-if-absent manifest marker naming base segments + delta (the marker-commit discipline — no renames, object-store-safe). Readers union the listed segments, so the frozen model resolves from the base segment through every descendant manifest and is never duplicated; centroid drift is a periodic jump back to the retrain (ann_index) lineage, which is also the compaction story when the segment list grows long. Gates, in-query and hash-enforced: (1) the RELOADED updated tables are multiset-equal (all columns + per-row count, l82's discipline) to a frozen-artifact rebuild over the union corpus, across lists, codes AND norms, with every old and new vector indexed; (2) re-serving the new fingerprint accrues ZERO build seconds — the published update is durable, a re-run day costs zero jobs; (3) the WRITE-AMPLIFICATION gate: the child manifest is exactly base segments + ONE delta segment and every standing segment's files are byte-for-byte untouched (path+length+mtime) — the append wrote O(delta), not a corpus copy (the l122 zero-build discipline applied to writes). Oracle = deterministic counts + literal true",
-      (s, dir) => {
-        val S = Similarity
-        val st = graft.operators.AnnIndexStore
-        val ds = graft.operators.DurableStore
-        val e = Tables.load(s, dir, "embeddings")
-        val base = e.where(col("vec_id") % 5 =!= 0)
-        val delta = e.where(col("vec_id") % 5 === 0)
-        val baseFp = ds.frameFingerprint(base, Seq("vec_id", "embedding"))
-        val newFp = ds.frameFingerprint(e, Seq("vec_id", "embedding"))
-        // the standing base layout: one-time training build per
-        // base-corpus lifetime (a single-segment manifest)
-        val baseIdx = st.durableIncBase(s, base, baseFp,
-          "vec_id", "embedding")
-        // write-amp snapshot BEFORE the append touches the family
-        val statsBefore = Gates.manifestStats(s, st.IncFamily, baseFp)
-        // the daily append: delta-only encode against the frozen
-        // artifacts, one delta segment + one manifest marker
-        st.durableUpdateTo(s, baseFp, newFp, delta,
-          "vec_id", "embedding")
-        // gate 2: the published update is itself durable — a re-serve
-        // pays zero build seconds (no session-scoped state to clear:
-        // every manifest read resolves marker + footers from disk)
-        val before = ds.buildSeconds(st.IncFamily)
-        val reloaded = st.durableUpdateTo(s, baseFp, newFp, delta,
-          "vec_id", "embedding")
-        val buildFree = ds.buildSeconds(st.IncFamily) == before
-        // gate 3: O(delta) write — child manifest = base + 1 segment,
-        // standing segment files untouched
-        val odeltaOk = Gates.writeODeltaOk(s, st.IncFamily, baseFp,
-          newFp, statsBefore)
-        // gate 1: the RELOADED tables multiset-equal a frozen-artifact
-        // rebuild over the union (per-row determinism, l82's compare:
-        // Gates.mismatches — multiplicity differences fail too)
-        val (lR, cR, nR) = S.assignEncode(baseIdx.centroids,
-          baseIdx.codebook, e, "vec_id", "embedding",
-          m = st.DefaultM)
-        e.agg(count(when(col("vec_id") % 5 =!= 0, 1)).as("n_base"),
-            count(when(col("vec_id") % 5 === 0, 1)).as("n_added"))
-          .crossJoin(broadcast(
-            reloaded.lists.agg(count(lit(1)).as("n_indexed"))))
-          .crossJoin(broadcast(mismatches(reloaded.lists, lR, "__ml")))
-          .crossJoin(broadcast(mismatches(reloaded.codes, cR, "__mc")))
-          .crossJoin(broadcast(mismatches(reloaded.norms, nR, "__mn")))
-          .select(col("n_base"), col("n_added"), col("n_indexed"),
-            (col("__ml") === 0 && col("__mc") === 0 && col("__mn") === 0 &&
-              col("n_indexed") === col("n_base") + col("n_added"))
-              .as("update_ok"),
-            lit(buildFree).as("reload_build_free_ok"),
-            lit(odeltaOk).as("write_odelta_ok"))
-      },
-      Some("""SELECT
-             |  count(CASE WHEN vec_id % 5 <> 0 THEN 1 END) AS n_base,
-             |  count(CASE WHEN vec_id % 5 = 0 THEN 1 END) AS n_added,
-             |  count(*) AS n_indexed,
-             |  TRUE AS update_ok,
-             |  TRUE AS reload_build_free_ok,
-             |  TRUE AS write_odelta_ok
-             |FROM embeddings""".stripMargin)),
-
-    QuerySpec(
-      "l132_lm_durable_update",
-      "incremental durable maintenance of the LM family at O(delta) WRITE cost — the EXACT counterpart of l131's frozen-model approximation: count tables are additive over disjoint document sets (bigram pairs never cross document boundaries), so the lineage is a MANIFEST family whose append writes ONE segment holding only the DELTA batch's own counts and token set (the standing segments are never copied — the write-amp gate pins path+length+mtime); the merge moved to READ time — incModelOf folds the segment union with one vocab-bounded groupBy-sum and a distinct (the LSM merge-on-read trade; compaction = the retrain family's single layout) — and equals a full-corpus retrain INTEGER-FOR-INTEGER. The gate is the strongest available: the merged model serves l83's entire perplexity card (per-doc surprisal over the whole corpus, band census, top/bottom-10) against l83's own oracle, which trains on the full corpus — the hash matches only if every merged count and the merged vocab scalar are exactly the retrained ones. Plus the durability gate (re-serving the new fingerprint accrues zero build seconds) and the O(delta)-write gate. Oracle = l83's plus the literal gate columns",
-      (s, dir) => {
-        val st = graft.operators.NgramModelStore
-        val ds = graft.operators.DurableStore
-        val docs = Tables.load(s, dir, "documents")
-        val base = docs.where(col("doc_id") % 5 =!= 0)
-        val delta = docs.where(col("doc_id") % 5 === 0)
-        val baseFp = ds.frameFingerprint(base, Seq("doc_id", "text"))
-        val newFp = ds.frameFingerprint(docs, Seq("doc_id", "text"))
-        // one-time base training build, then the delta-only append
-        st.durableIncBase(s, base, baseFp)
-        val statsBefore = Gates.manifestStats(s, st.IncFamily, baseFp)
-        st.durableIncUpdateTo(s, baseFp, newFp, delta)
-        // durability gate: the published update re-serves build-free
-        val before = ds.buildSeconds(st.IncFamily)
-        val t = st.durableIncUpdateTo(s, baseFp, newFp, delta)
-        val buildFree = ds.buildSeconds(st.IncFamily) == before
-        val odeltaOk = Gates.writeODeltaOk(s, st.IncFamily, baseFp,
-          newFp, statsBefore)
-        // serve the FULL l83 card from the merged model — the hash
-        // against l83's full-corpus-trained oracle IS the
-        // update == retrain equality gate, integer-exact
-        val scored = NgramLm.surprisalBits(docs, "doc_id", "text",
-          st.incModelOf(t), 2)
-        cardOf(scored)
-          .withColumn("reload_build_free_ok", lit(buildFree))
-          .withColumn("write_odelta_ok", lit(odeltaOk))
-      },
-      gatedOracle("l83_lm_perplexity",
-        Seq("reload_build_free_ok", "write_odelta_ok"))),
-
-    QuerySpec(
-      "l133_dsir_durable_update",
-      "incremental durable maintenance of the DSIR family at O(delta) WRITE cost — the third additive lineage (l132's LM discipline applied to importance resampling): DSIR's trained state in mergeable form is the per-bucket class-count table (bkt, ct, cr — <= 4096 rows), additive over disjoint document sets, so the MANIFEST append hashes, counts and WRITES only the DELTA batch (one <= 4096-row segment; the standing segments untouched, write-amp-gated); the merge moved to read time (dsirIncCountsOf, one bucket-bounded groupBy-sum over the segment union) and re-deriving the importance projection (totals from the counts, add-one smoothed quantized log-ratio) equals a full-corpus retrain INTEGER-FOR-INTEGER. Gate: the merged importance table serves l94's entire resampling ledger (per-source acceptance, thresholds, selection census) against l94's own full-corpus-trained oracle — hash-exact — plus the zero-build re-serve and O(delta)-write gates. The <= 4096-row importance artifact is checkpointed before serving (the l110 boot discipline)",
-      (s, dir) => {
-        val st = graft.operators.MixtureModelStore
-        val ds = graft.operators.DurableStore
-        val D = graft.operators.Dsir
-        val docs = Tables.load(s, dir, "documents")
-        val base = docs.where(col("doc_id") % 5 =!= 0)
-        val delta = docs.where(col("doc_id") % 5 === 0)
-        val baseFp = ds.frameFingerprint(base, Seq("doc_id", "text"))
-        val newFp = ds.frameFingerprint(docs, Seq("doc_id", "text"))
-        st.durableDsirIncBase(s, base, baseFp)
-        val statsBefore = Gates.manifestStats(s, st.DsirIncFamily, baseFp)
-        st.durableDsirIncUpdateTo(s, baseFp, newFp, delta)
-        val before = ds.buildSeconds(st.DsirIncFamily)
-        val t = st.durableDsirIncUpdateTo(s, baseFp, newFp, delta)
-        val buildFree = ds.buildSeconds(st.DsirIncFamily) == before
-        val odeltaOk = Gates.writeODeltaOk(s, st.DsirIncFamily, baseFp,
-          newFp, statsBefore)
-        val imp = D.importanceFromCounts(st.dsirIncCountsOf(t),
-            st.DsirBuckets)
-          .localCheckpoint(eager = true)
-        // the per-doc bucket frame is the serve INPUT (per-application
-        // by the l110 contract), shared with l94/t35/l98
-        val bucketed = st.sharedDsirBuckets(s, dir)
-        D.dsirResampleFromTable(docs, "doc_id", "text", "source",
-            bucketed, imp)
-          .withColumn("reload_build_free_ok", lit(buildFree))
-          .withColumn("write_odelta_ok", lit(odeltaOk))
-      },
-      gatedOracle("l94_dsir_select",
-        Seq("reload_build_free_ok", "write_odelta_ok"))),
-
-    QuerySpec(
-      "l134_semdedup_durable_update",
-      "incremental durable maintenance of the SEMANTIC family at O(delta) WRITE cost — the fourth lineage, frozen-model like l131's ANN one: the base MANIFEST segment holds one trained centroid draw with its assignment and pair tables; each append assigns ONLY the delta against the frozen centroids, verifies only delta-touching candidates (delta-vs-cohabitants, old-new and new-new; old-old pairs are the standing segments' rows — unchanged under a frozen assignment), and WRITES only the delta's assignment + verified pairs as one new segment (publish = one manifest marker naming base + delta; the standing segments byte-untouched, write-amp-gated). Component labels left the persisted parts — not additive (one new pair can merge two standing components) — and derive at read time from the merged pair graph (incLabelsOf, pair-bounded, never corpus-bounded). Gates, in-query and hash-enforced: the RELOADED assignment AND pair unions are multiset-equal (all columns + per-row multiplicity; cosines compare bitwise — per-row fold arithmetic on both paths) to a frozen-centroid rebuild over the union, a re-serve of the new fingerprint accrues zero build seconds, and the append wrote O(delta). Centroid drift is a periodic retrain — the semdedup family's fresh build, one conf away. Oracle = deterministic counts + literal true",
-      (s, dir) => {
-        val st = SemDedupStore
-        val ds = graft.operators.DurableStore
-        val S = Similarity
-        val e = Tables.load(s, dir, "embeddings")
-        val base = e.where(col("vec_id") % 5 =!= 0)
-        val delta = e.where(col("vec_id") % 5 === 0)
-        val baseFp = ds.frameFingerprint(base, Seq("vec_id", "embedding"))
-        val newFp = ds.frameFingerprint(e, Seq("vec_id", "embedding"))
-        val baseT = st.durableSemIncBase(s, base, baseFp)
-        val statsBefore = Gates.manifestStats(s, st.IncFamily, baseFp)
-        st.durableSemIncUpdateTo(s, baseFp, newFp, delta, e)
-        val before = ds.buildSeconds(st.IncFamily)
-        val t = st.durableSemIncUpdateTo(s, baseFp, newFp, delta, e)
-        val buildFree = ds.buildSeconds(st.IncFamily) == before
-        val odeltaOk = Gates.writeODeltaOk(s, st.IncFamily, baseFp,
-          newFp, statsBefore)
-        // frozen-centroid rebuild over the union — the equivalence base
-        val assignR = S.semanticAssign(e, "vec_id", "embedding",
-          baseT("cents"), probes = 3).localCheckpoint(eager = true)
-        val pairsR = S.semanticPairsFromAssign(assignR, e, "vec_id",
-          "embedding", st.Threshold)
-        e.agg(count(when(col("vec_id") % 5 =!= 0, 1)).as("n_base"),
-            count(when(col("vec_id") % 5 === 0, 1)).as("n_added"))
-          .crossJoin(broadcast(mismatches(t("assign"), assignR, "__ma")))
-          .crossJoin(broadcast(mismatches(t("pairs"), pairsR, "__mp")))
-          .select(col("n_base"), col("n_added"),
-            (col("__ma") === 0 && col("__mp") === 0).as("update_ok"),
-            lit(buildFree).as("reload_build_free_ok"),
-            lit(odeltaOk).as("write_odelta_ok"))
-      },
-      Some("""SELECT
-             |  count(CASE WHEN vec_id % 5 <> 0 THEN 1 END) AS n_base,
-             |  count(CASE WHEN vec_id % 5 = 0 THEN 1 END) AS n_added,
-             |  TRUE AS update_ok,
-             |  TRUE AS reload_build_free_ok,
-             |  TRUE AS write_odelta_ok
-             |FROM embeddings""".stripMargin)),
-
-    QuerySpec(
-      "l135_nb_durable_update",
-      "incremental durable maintenance of the CLASSIFIER family at O(delta) WRITE cost — the fifth lineage, EXACT like the LM one because NB training is ONE feature-count aggregate, additive over disjoint LABELED batches: each append featurizes, counts and writes only the delta batch's own (feat, pos_c, neg_c) rows as one manifest segment; nbIncModelOf merges on read (one vocab-bounded groupBy-sum) and re-derives the totals row and smoothing vocabulary V from the merged table exactly as trainNb does, so merged == full-corpus retrain integer-for-integer. The contract boundary is stated, not hidden: additivity is about the COUNT aggregate GIVEN per-batch labels — the labeling itself is the upstream standing-dedup artifact (the l124/l125 persisted band index discovers new-vs-old pairs O(delta); a flipped label re-enters as a correction batch), here the durable nb_model family's winnow label frame, and the lineage fingerprint hashes doc_id+text+is_dup so a changed label assignment invalidates the layout. Gate, the strongest available: the merged model serves l90's ENTIRE margin card (bands, extremes, keep census, confusion census vs the dedup labels) against l90's own full-corpus-trained oracle — hash-exact — plus the zero-build re-serve and O(delta)-write gates. Oracle = l90's plus the literal gate columns",
-      (s, dir) => {
-        val st = graft.operators.NbModelStore
-        val ds = graft.operators.DurableStore
-        val d = Tables.load(s, dir, "documents")
-        // the upstream label assignment: the standing dedup pass's
-        // boilerplate frame (durable nb_model family — a reload on
-        // warm machines, never retrained here)
-        val (labeled, _) = st.sharedBoilerplateModel(s, dir)
-        val lab = d.join(broadcast(labeled), Seq("doc_id"), "left")
-          .select(col("doc_id"), col("text"),
-            coalesce(col("is_dup"), lit(0L)).as("is_dup"))
-        val base = lab.where(col("doc_id") % 5 =!= 0)
-        val delta = lab.where(col("doc_id") % 5 === 0)
-        val baseFp = st.labeledFp(base)
-        val newFp = st.labeledFp(lab)
-        st.durableNbIncBase(s, base, baseFp)
-        val statsBefore = Gates.manifestStats(s, st.IncFamily, baseFp)
-        st.durableNbIncUpdateTo(s, baseFp, newFp, delta)
-        val before = ds.buildSeconds(st.IncFamily)
-        val t = st.durableNbIncUpdateTo(s, baseFp, newFp, delta)
-        val buildFree = ds.buildSeconds(st.IncFamily) == before
-        val odeltaOk = Gates.writeODeltaOk(s, st.IncFamily, baseFp,
-          newFp, statsBefore)
-        // serve l90's FULL card from the merged counts — the hash
-        // against l90's full-corpus-trained oracle IS update == retrain
-        nbCardOf(NbClassifier
-          .marginBits(d, "doc_id", "text", st.nbIncModelOf(t),
-            NbClassifier.bigramFeats)
-          .join(broadcast(labeled), Seq("doc_id"), "left")
-          .select(col("doc_id"), col("n_scored"), col("total_bits"),
-            col("bpt"), coalesce(col("is_dup"), lit(0L)).as("is_dup")))
-          .withColumn("reload_build_free_ok", lit(buildFree))
-          .withColumn("write_odelta_ok", lit(odeltaOk))
-      },
-      gatedOracle("l90_nb_quality_filter",
-        Seq("reload_build_free_ok", "write_odelta_ok"))),
-
-    QuerySpec(
-      "l136_doremi_durable_update",
-      "incremental durable maintenance of the JOINT proxy+reference model (DoReMi/RHO's trained state) at O(delta) WRITE cost — the sixth lineage, EXACT: the joint pair-count table (prev, cur, pair_f, pair_r) is additive over disjoint document sets (pairs never cross documents; is_r is a per-row function of doc_id%7), and the vocab scalars' mergeable form is the distinct (tok, is_r) set (counts don't merge across appends, sets do — the l132 toks discipline). Each append explodes, counts and writes only the DELTA batch (one segment: its pair counts + its token set); jointIncModelOf merges on read (vocab-bounded groupBy-sum + distinct) and re-derives ctx and the vocab row exactly as trainJoint does. Gate, the strongest available: the merged model serves l95's ENTIRE DoReMi weight ledger (per-source n_docs/n_pairs/ref_bits/self_bits/excess/weight_bp — the mean-anchored clipped excess and the piecewise-linear base-2 exponential all downstream of the merged counts) against l95's own full-corpus-trained oracle — hash-exact, BIGINT end to end — plus the zero-build re-serve and O(delta)-write gates. Scale: the scoring input (pair occurrences) is per-corpus-row serve work re-derived per batch (the l109 contract); the merged count tables broadcast. Oracle = l95's plus the literal gate columns",
-      (s, dir) => {
-        val st = graft.operators.MixtureModelStore
-        val ds = graft.operators.DurableStore
-        val docs = Tables.load(s, dir, "documents")
-        val base = docs.where(col("doc_id") % 5 =!= 0)
-        val delta = docs.where(col("doc_id") % 5 === 0)
-        val baseFp = ds.frameFingerprint(base, Seq("doc_id", "text"))
-        val newFp = ds.frameFingerprint(docs, Seq("doc_id", "text"))
-        st.durableJointIncBase(s, base, baseFp)
-        val statsBefore = Gates.manifestStats(s, st.JointIncFamily,
-          baseFp)
-        st.durableJointIncUpdateTo(s, baseFp, newFp, delta)
-        val before = ds.buildSeconds(st.JointIncFamily)
-        val t = st.durableJointIncUpdateTo(s, baseFp, newFp, delta)
-        val buildFree = ds.buildSeconds(st.JointIncFamily) == before
-        val odeltaOk = Gates.writeODeltaOk(s, st.JointIncFamily,
-          baseFp, newFp, statsBefore)
-        // serve l95's FULL ledger from the merged counts; the scoring
-        // input re-derives from the documents (per-row serve work)
-        val jl = st.jointIncModelOf(t,
-          graft.operators.Doremi.pairsFrame(docs, "doc_id", "text",
-            "source", st.cleanSlicePred))
-        graft.operators.Doremi.domainWeightsFrom(jl, docs, "source")
-          .withColumn("reload_build_free_ok", lit(buildFree))
-          .withColumn("write_odelta_ok", lit(odeltaOk))
-      },
-      gatedOracle("l95_doremi_weights",
-        Seq("reload_build_free_ok", "write_odelta_ok"))),
-
-    QuerySpec(
-      "l137_lm_durable_compact",
-      "COMPACTION of a manifest lineage — the maintenance face the O(delta)-write layout defers (every append adds a segment; merge-on-read pays one groupBy-sum per serve over the growing chain — the LSM trade): compactInc reads the fingerprint's segment union, applies EXACTLY the merge incModelOf performs at read time (pair counts groupBy-summed, token sets distinct'ed — serving semantics preserved by construction), writes ONE merged segment and swaps the manifest to name just it — the swap is CRASH-ATOMIC (round 15: the new chain publishes as the next marker GENERATION via one create-if-absent; readers resolve the highest complete marker, so a kill anywhere serves either the old or the new chain, never an unbuilt fingerprint — DurableStoreSpec's kill-at-every-interleaving spec) and STAMP-NEUTRAL (the original ts= publish stamp carries through verbatim, so compaction cannot promote an old generation past newer ones under retention); content is unchanged, so the fingerprint stays the fingerprint and the superseded chain segments become vacuum stale data while the BASE generation's segment survives through its own manifest. Runs its OWN chain of the lineage under a sibling family (lm_bigram_inc_c): fingerprints are content-keyed and split-agnostic, so any chain whose union is the full corpus converges on the SAME fingerprint as l132's — and l132's write-amplification gate needs its chain UNCOMPACTED; the sibling family is exactly what a second independent deployment rooted at the same warehouse would be. Gates, in-query and hash-enforced: (1) after compaction the manifest names exactly ONE fresh segment; (2) compaction accrued ZERO durable-build seconds — it is bounded maintenance I/O over vocab-sized tables (ledgered under compact_lm_bigram_inc), never a training job; (3) a family vacuum sweeps exactly the superseded chain segments as stale with zero debris, and every base-manifest segment survives; (4) the lineage's OWN loader then serves l83's ENTIRE perplexity card from the compacted layout hash-identical to a full-corpus retrain (l83's oracle — the strongest read-semantics-preserved proof available); (5) BUCKET RECOVERY, plan-probed: the compacted single-segment part re-registers CLUSTERED BY prev and the merge-on-read aggregate plans with ZERO Exchange reading the registered table — compaction recovers the exchange-free serve the multi-segment union trades away. Deterministic on re-runs: a warm run re-compacts the single compacted segment and sweeps its predecessor. Oracle = l83's plus the literal gate columns",
-      (s, dir) => {
-        val st = graft.operators.NgramModelStore
-        val ds = graft.operators.DurableStore
-        // the compaction chain's OWN family: content fingerprints are
-        // split-agnostic, so this chain's full-corpus fingerprint
-        // equals l132's — compacting l132's manifest would break its
-        // (deliberately uncompacted) write-amplification gate
-        val fam = "lm_bigram_inc_c"
-        val docs = Tables.load(s, dir, "documents")
-        val base = docs.where(col("doc_id") % 3 =!= 0)
-        val delta = docs.where(col("doc_id") % 3 === 0)
-        val baseFp = ds.frameFingerprint(base, Seq("doc_id", "text"))
-        val newFp = ds.frameFingerprint(docs, Seq("doc_id", "text"))
-        st.durableIncBase(s, base, baseFp, fam)
-        st.durableIncUpdateTo(s, baseFp, newFp, delta, fam)
-        val segsBefore = ds.manifestSegments(s, fam, newFp)
-        // compaction must never train: the durable build key stays
-        // frozen (its own cost ledgers under compact_lm_bigram_inc_c)
-        val buildBefore = ds.buildSeconds(fam)
-        st.compactInc(s, newFp, fam)
-        val segsAfter = ds.manifestSegments(s, fam, newFp)
-        val compactOk = segsAfter.size == 1 &&
-          !segsBefore.contains(segsAfter.head)
-        val trainFree = ds.buildSeconds(fam) == buildBefore
-        // exactly the superseded chain segments sweep as stale; the
-        // base generation's segment survives through ITS manifest
-        val baseSegs = ds.manifestSegments(s, fam, baseFp).toSet
-        val rep = ds.vacuum(s, fam)
-        val sweptOk = rep.debris.isEmpty &&
-          rep.stale.toSet == segsBefore.toSet -- baseSegs &&
-          baseSegs.forall(g => ds.segmentComplete(s, fam, g))
-        // serve l83's FULL card through the lineage's own loader over
-        // the compacted layout (a pure reload) — the hash against
-        // l83's full-corpus-trained oracle proves read semantics
-        // survived the layout contraction integer-for-integer
-        val t = st.durableIncUpdateTo(s, baseFp, newFp, delta, fam)
-        // gate 5 (round 15 — BUCKET RECOVERY, plan-probed): compaction
-        // collapsed the chain to one segment, so manifestTables
-        // re-registered the bucketed pairs part CLUSTERED BY prev; the
-        // merge-on-read aggregate (groupBy prev,cur — a SUPERSET of
-        // the bucket key, so the bucket hash-partitioning satisfies
-        // its distribution) must plan with ZERO Exchange and read the
-        // registered catalog table — the exchange-free serve the
-        // multi-segment union forfeits is recovered by compaction
-        val mergedPairs = st.incModelOf(t).pairCounts
-        val segNow = ds.manifestSegments(s, fam, newFp).head
-        val bucketOk = !mergedPairs.queryExecution.executedPlan
-          .toString.contains("Exchange") &&
-          catalogLeaves(mergedPairs).contains(ds.registeredName(fam,
-            newFp, s"${segNow}_pairs").toLowerCase)
-        cardOf(NgramLm.surprisalBits(docs, "doc_id", "text",
-            st.incModelOf(t), 2))
-          .withColumn("compact_single_segment_ok", lit(compactOk))
-          .withColumn("compact_train_free_ok", lit(trainFree))
-          .withColumn("superseded_swept_ok", lit(sweptOk))
-          .withColumn("compact_bucket_serve_ok", lit(bucketOk))
-      },
-      gatedOracle("l83_lm_perplexity",
-        Seq("compact_single_segment_ok", "compact_train_free_ok",
-          "superseded_swept_ok", "compact_bucket_serve_ok")))
-  )
-
-  val specs: Seq[QuerySpec] =
-    baseSpecs ++ storeServeSpecs ++ audioSpecs ++ opqSpecs ++
-      ccUpdateSpecs ++ deflateSpecs ++ exactSubstrSpecs ++
-      durableStoreSpecs
+  lazy val specs: Seq[QuerySpec] =
+    baseSpecs ++ LlmStoreServeQueries.specs ++ LlmAudioQueries.specs ++
+      LlmOpqQueries.specs ++ LlmCcUpdateQueries.specs ++
+      LlmDeflateQueries.specs ++ LlmExactSubstrQueries.specs ++
+      LlmDurableStoreQueries.specs
 }

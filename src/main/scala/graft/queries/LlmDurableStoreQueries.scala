@@ -328,7 +328,7 @@ object LlmDurableStoreQueries {
 
     QuerySpec(
       "l134_semdedup_durable_update",
-      "incremental durable maintenance of the SEMANTIC family at O(delta) WRITE cost — the fourth lineage, frozen-model like l131's ANN one: the base MANIFEST segment holds one trained centroid draw with its assignment and pair tables; each append assigns ONLY the delta against the frozen centroids, verifies only delta-touching candidates (delta-vs-cohabitants, old-new and new-new; old-old pairs are the standing segments' rows — unchanged under a frozen assignment), and WRITES only the delta's assignment + verified pairs as one new segment (publish = one manifest marker naming base + delta; the standing segments byte-untouched, write-amp-gated). Component labels left the persisted parts — not additive (one new pair can merge two standing components) — and derive at read time from the merged pair graph (incLabelsOf, pair-bounded, never corpus-bounded). Gates, in-query and hash-enforced: the RELOADED assignment AND pair unions are multiset-equal (all columns + per-row multiplicity; cosines compare bitwise — per-row fold arithmetic on both paths) to a frozen-centroid rebuild over the union, a re-serve of the new fingerprint accrues zero build seconds, and the append wrote O(delta). Centroid drift is a periodic retrain — the semdedup family's fresh build, one conf away. Oracle = deterministic counts + literal true",
+      "incremental durable maintenance of the SEMANTIC family at O(delta) WRITE cost — the fourth lineage, frozen-model like l131's ANN one: the base MANIFEST segment holds one trained centroid draw with its assignment and pair tables; each append assigns ONLY the delta against the frozen centroids, verifies only delta-touching candidates (delta-vs-cohabitants, old-new and new-new; old-old pairs are the standing segments' rows — unchanged under a frozen assignment), and WRITES only the delta's assignment + verified pairs as one new segment (publish = one manifest marker naming base + delta; the standing segments byte-untouched, write-amp-gated). Component labels left the persisted parts — not additive (one new pair can merge two standing components) — and derive at read time from the merged pair graph (incLabelsOf, pair-bounded, never corpus-bounded). Gates, in-query and hash-enforced: the RELOADED assignment AND pair unions are multiset-equal (all columns + per-row multiplicity; cosines compare by value — per-row fold arithmetic on both paths) to a frozen-centroid rebuild over the union, a re-serve of the new fingerprint accrues zero build seconds, and the append wrote O(delta). Centroid drift is a periodic retrain — the semdedup family's fresh build, one conf away. Oracle = deterministic counts + literal true",
       (s, dir) => {
         val st = SemDedupStore
         val ds = graft.operators.DurableStore

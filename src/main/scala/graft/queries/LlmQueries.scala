@@ -680,9 +680,6 @@ object LlmQueries {
       "precision/recall gate for l04: simhashPairs vs the exact Jaccard pairs — recall >= 40% (measured 0.49-0.56) and precision >= 95% (measured 1.0); oracle = exact pair count + literal trues",
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents")
-        // One pass over the exact pair join and one over the sketch:
-        // separate count jobs would run the expensive exact-Jaccard
-        // self-join once per count.
         Gates.overlap(Dedup.jaccardPairs(docs, "doc_id", "text", 0.5),
             Dedup.simhashPairs(docs, "doc_id", "text"), Seq("a_id", "b_id"))
           .select(col("n_truth"),
@@ -2254,8 +2251,7 @@ object LlmQueries {
           e, "vec_id", "embedding",
           m = graft.operators.AnnIndexStore.DefaultM)
         // exact MULTISET-compare on ALL columns (Gates.mismatches —
-        // duplicate-row multiplicity differences fail too; floats
-        // compare bitwise)
+        // duplicate-row multiplicity differences fail too)
         e.agg(count(when(col("vec_id") % 5 =!= 0, 1)).as("n_base"),
             count(when(col("vec_id") % 5 === 0, 1)).as("n_added"))
           .crossJoin(broadcast(

@@ -3,7 +3,8 @@ package graft
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
@@ -139,51 +140,66 @@ object Tables {
   }
 
   /** The schema Spark's parquet inference gives `p` (schema merging off),
-    * read on the driver from the one footer that inference reads: list
-    * `p` with the file index's hidden-name rule (`_`/`.` prefixes, but
-    * not the `_common_metadata`/`_metadata` summaries), sort by path, and
-    * take `_common_metadata`, else `_metadata`, else the first data file.
-    * The footer converts under the session's parquet conf exactly as
-    * inference does. A TIMESTAMP(NANOS) column on a session without
-    * `nanosAsLong` (which `Engine.session` sets; a load never writes
-    * conf) fails here, naming the key. None — the caller falls back to
-    * Spark's inference and its errors — for a glob, a layout with
-    * subdirectories (partitioned), no data file, schema merging on, or
-    * a footer that does not read.
+    * read on the driver by `strictFooterSchema`. None — the caller falls
+    * back to Spark's inference and its errors — for a glob, schema
+    * merging on, no data file, a layout with subdirectories
+    * (partitioned), or a footer that does not read. A TIMESTAMP(NANOS)
+    * column on a session without `nanosAsLong` (which `Engine.session`
+    * sets; a load never writes conf) fails here, naming the key.
     */
-  private[graft] def footerSchema(spark: SparkSession, p: String): Option[StructType] = {
-    val conf = spark.sessionState.conf
-    if (conf.isParquetSchemaMergingEnabled || p.exists("{}[]*?\\".contains(_))) None
-    else try {
-      val hadoopConf = spark.sessionState.newHadoopConf()
-      val root = new Path(p)
-      val listed = root.getFileSystem(hadoopConf).listStatus(root).filter { st =>
-        val n = st.getPath.getName
-        val hidden = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
-          n.endsWith("._COPYING_")
-        !hidden || n.startsWith("_common_metadata") || n.startsWith("_metadata")
-      }
-      if (listed.exists(_.isDirectory)) None
-      else {
-        val files = listed.sortBy(_.getPath.toString)
-        val summaries = Seq("_common_metadata", "_metadata")
-        summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
-          .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
-          .map { f =>
-            val reader = ParquetFileReader.open(
-              HadoopInputFile.fromStatus(f, hadoopConf),
-              HadoopReadOptions.builder(hadoopConf)
-                .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
-            val footer = try reader.getFooter finally reader.close()
-            if (!conf.legacyParquetNanosAsLong && hasNanos(footer.getFileMetaData.getSchema))
-              throw new NanosWithoutConf(p)
-            ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-              new ParquetToSparkSchemaConverter(conf))
-          }
-      }
-    } catch {
+  private[graft] def footerSchema(spark: SparkSession, p: String): Option[StructType] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+        p.exists("{}[]*?\\".contains(_))) None
+    else try strictFooterSchema(spark, p) catch {
       case e: NanosWithoutConf => throw e
       case NonFatal(_) => None
+    }
+
+  /** The file whose footer Spark's inference reads for `p`: `p`'s
+    * entries under the file index's hidden-name rule (`_`/`.` prefixes,
+    * but not the `_common_metadata`/`_metadata` summaries), sorted by
+    * path; `_common_metadata`, else `_metadata`, else the first data
+    * file. None = no data file. A subdirectory (a partitioned layout,
+    * whose schema the footer does not hold) fails. Reads no conf.
+    */
+  private def footerFile(hadoopConf: Configuration, p: String): Option[FileStatus] = {
+    val root = new Path(p)
+    val listed = root.getFileSystem(hadoopConf).listStatus(root).filter { st =>
+      val n = st.getPath.getName
+      val hidden = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")
+      !hidden || n.startsWith("_common_metadata") || n.startsWith("_metadata")
+    }
+    require(!listed.exists(_.isDirectory), s"$p holds subdirectories")
+    val files = listed.sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+  }
+
+  /** The Spark schema of `p`'s `footerFile`, read on the driver (no Spark
+    * job) and converted under the session's parquet conf exactly as
+    * inference converts it. None = no data file. Strict: a footer that
+    * does not read fails, naming `p` and the file.
+    */
+  private[graft] def strictFooterSchema(spark: SparkSession, p: String): Option[StructType] = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val conf = spark.sessionState.conf
+    footerFile(hadoopConf, p).map { f =>
+      val footer =
+        try {
+          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hadoopConf),
+            HadoopReadOptions.builder(hadoopConf)
+              .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+          try reader.getFooter finally reader.close()
+        } catch {
+          case NonFatal(e) => throw new java.io.IOException(
+            s"unreadable parquet footer in $p: ${f.getPath}", e)
+        }
+      if (!conf.legacyParquetNanosAsLong && hasNanos(footer.getFileMetaData.getSchema))
+        throw new NanosWithoutConf(p)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+        new ParquetToSparkSchemaConverter(conf))
     }
   }
 

@@ -77,11 +77,13 @@ object AnnIndexStore {
     */
   val DurableFamily = "ann_index"
   val DurableParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("cent", None, Seq("cent_id", "cent_emb")),
-    DurableStore.Part("lists", Some("cent_id"), Seq("c_id", "cent_id")),
-    DurableStore.Part("codebook", None, Seq("blk", "code", "cent")),
-    DurableStore.Part("codes", Some("c_id"), Seq("c_id", "codes")),
-    DurableStore.Part("norms", Some("c_id"), Seq("c_id", "c_norm")))
+    DurableStore.Part("cent", None, "cent_id BIGINT, cent_emb ARRAY<FLOAT>"),
+    DurableStore.Part("lists", Some("cent_id"), "c_id BIGINT, cent_id BIGINT"),
+    DurableStore.Part("codebook", None,
+      "blk INT, code BIGINT, cent ARRAY<FLOAT>"),
+    DurableStore.Part("codes", Some("c_id"),
+      "c_id BIGINT, codes ARRAY<BIGINT>"),
+    DurableStore.Part("norms", Some("c_id"), "c_id BIGINT, c_norm DOUBLE"))
 
   /** Load-or-build the DURABLE index: later applications (and the
     * post-evict reload inside one) serve the five tables with zero

@@ -22,7 +22,7 @@ object DeflateDictStore {
   /** Durable layout: one (source, dict) table — sources-bounded. */
   val DurableFamily = "deflate_dicts"
   val DurableParts: Seq[DurableStore.Part] =
-    Seq(DurableStore.Part("dicts", None, Seq("source", "dict")))
+    Seq(DurableStore.Part("dicts", None, "source STRING, dict BINARY"))
 
   /** The fingerprint hashes source TOO: dictionaries are trained PER
     * SOURCE, so a re-bucketed source assignment over identical texts

@@ -40,7 +40,7 @@ object DupSpanStore {
   val DurableFamily = "dup_spans"
   val DurableParts: Seq[DurableStore.Part] =
     Seq(DurableStore.Part("spans", Some("doc_id"),
-      Seq("doc_id", "i", "span")))
+      "doc_id BIGINT, i BIGINT, span BIGINT"))
 
   /** The in-memory cache's MISS path goes through the durable layout:
     * the ladder+descent machine runs only if NO application ever saw

@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -54,13 +54,21 @@ import graft.Tables
   */
 object DurableStore {
 
-  /** One persisted table of a family's layout. `cols` names the
-    * columns the engine's writer produces; every load compares the
-    * persisted part against them and refuses a different layout
-    * (empty = an ad-hoc part, unchecked).
+  /** One persisted table of a family's layout. `schema` is the one the
+    * engine's writer produces, in its column order: every write and
+    * every load compares the part's columns against it, name -> type
+    * (nullability and column order aside), and refuses a different
+    * layout; every read of the part takes it as its schema. Empty = an
+    * ad-hoc part, unchecked, read in its first data file's schema.
     */
   final case class Part(name: String, bucket: Option[String],
-      cols: Seq[String] = Nil)
+      schema: StructType = new StructType())
+
+  object Part {
+    /** A part whose schema is declared in DDL (`"c_id BIGINT, ..."`). */
+    def apply(name: String, bucket: Option[String], ddl: String): Part =
+      Part(name, bucket, StructType.fromDDL(ddl))
+  }
 
   /** Bucket width shared by writer and re-registration DDL. */
   val Buckets = 8
@@ -297,11 +305,19 @@ object DurableStore {
     */
   private def markerCandidates(f: FileSystem, base: Path)
       : Seq[(Long, Path)] =
-    if (!f.exists(base)) Nil
-    else f.listStatus(base).toSeq.map(_.getPath)
+    listed(f, base).map(_.getPath)
       .map(p => (markerGen(p.getName), p))
       .filter(_._1 >= 0)
       .sortBy(-_._1)
+
+  /** `dir`'s entries (none when it does not exist). */
+  private def listed(f: FileSystem, dir: Path): Seq[FileStatus] =
+    if (f.exists(dir)) f.listStatus(dir).toSeq else Nil
+
+  /** A fingerprint dir among a family dir's entries. */
+  private def isLayoutDir(st: FileStatus): Boolean =
+    st.isDirectory && !st.getPath.getName.startsWith(".") &&
+      !st.getPath.getName.startsWith("seg_")
 
   /** True iff the family's durable layout for `fp` is complete on disk
     * (i.e. `loadOrBuild` would reload instead of building).
@@ -311,55 +327,59 @@ object DurableStore {
     markerCandidates(fsOf(s, base), base).nonEmpty
   }
 
-  /** Full marker content (short-read-safe: loops to EOF — a single
-    * read() may return a prefix on any FileSystem).
+  /** THE reader of every control file — marker, head, batch ledger:
+    * its lines, read in full. None when the file is torn RIGHT NOW
+    * (`markerComplete`) or unreadable: it may vanish between list and
+    * read (a concurrent compaction or sweep deleting it) or be
+    * mid-write (ChecksumFileSystem throws EOF/Checksum on a file whose
+    * crc shadow lags the content); callers skip it, fall back or retry.
+    * A `fmt=` newer than this engine's fails loudly
+    * (`requireKnownFormat`).
     */
-  private def readFully(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray,
-        java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
+  private[graft] def controlLines(f: FileSystem,
+      p: Path): Option[Seq[String]] = {
+    val lines =
+      try {
+        val in = f.open(p)
+        try Some(new String(in.readAllBytes(),
+          java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSeq)
+        finally in.close()
+      } catch { case _: java.io.IOException => None }
+    lines.filter(markerComplete).map { ls =>
+      requireKnownFormat(ls, p.toString)
+      ls
+    }
   }
 
-  /** Marker lines of the layout's EFFECTIVE marker: the highest
-    * generation whose content is complete. A torn candidate (created
-    * but its content not yet visible — the HDFS create/write/close
-    * window, or a crashed compaction swap) falls back to the next
-    * generation down, so a mid-swap reader serves the previous chain
-    * instead of failing. Only when NO candidate is readable (a fresh
-    * publish whose content lags) does the read retry briefly and then
-    * fail loudly — never silently resolve to the base dir.
+  /** The layout's EFFECTIVE marker: the highest generation whose
+    * content is complete, (generation, lines). A torn candidate
+    * (created but its content not yet visible — the HDFS
+    * create/write/close window, or a crashed compaction swap) falls
+    * back to the next generation down, so a mid-swap reader serves the
+    * previous chain instead of failing.
+    */
+  private def effectiveMarker(f: FileSystem,
+      base: Path): Option[(Long, Seq[String])] =
+    markerCandidates(f, base).iterator
+      .flatMap { case (g, p) => controlLines(f, p).map(g -> _) }
+      .nextOption()
+
+  /** The effective marker's lines. Only when NO candidate is readable
+    * (a fresh publish whose content lags) does the read retry briefly
+    * — never silently resolving to the base dir.
     */
   private def tryMarkerLines(s: SparkSession, base: Path,
       retries: Int): Option[Seq[String]] = {
     val f = fsOf(s, base)
-    def resolve(): Option[Seq[String]] =
-      markerCandidates(f, base).iterator
-        .flatMap { case (_, p) =>
-          // a candidate may vanish between list and read (a concurrent
-          // compaction deleting the superseded generation) or be
-          // mid-write (ChecksumFileSystem throws EOF/Checksum on a
-          // file whose crc shadow lags the content): either way it is
-          // torn RIGHT NOW — skip it; resolution falls back or retries
-          try Some(readFully(f, p).linesIterator.toSeq)
-          catch { case _: java.io.IOException => None }
-        }
-        .find(markerComplete)
-        .map { lines => requireKnownFormat(lines, base.toString); lines }
     var tries = 0
-    var r = resolve()
+    var r = effectiveMarker(f, base)
     while (r.isEmpty && tries < retries &&
         markerCandidates(f, base).nonEmpty) {
       Thread.sleep(50)
       tries += 1
-      r = resolve()
+      r = effectiveMarker(f, base)
     }
-    r
+    r.map(_._2)
   }
 
   private def markerLines(s: SparkSession, base: Path): Seq[String] = {
@@ -400,12 +420,15 @@ object DurableStore {
 
   /** Write every part's files under `dir` (bucketBy requires
     * saveAsTable, so each part goes through a throwaway staging table
-    * whose metadata is dropped immediately — only the files matter).
+    * whose metadata is dropped immediately — only the files matter). A
+    * writer producing another layout than its part declares is a bug:
+    * refused before a file is written.
     */
   private def writeParts(s: SparkSession, family: String, fp: String,
       parts: Seq[Part], built: Map[String, DataFrame],
       dir: Path): Unit =
     parts.foreach { p =>
+      requireLayout(family, fp, p, built(p.name).schema)
       val st = s"${tableName(family, fp, p.name)}_stage"
       s.sql(s"DROP TABLE IF EXISTS $st")
       val w = built(p.name).write.mode("overwrite")
@@ -444,9 +467,9 @@ object DurableStore {
     * its parts under a unique attempt prefix and publishes the marker
     * naming it (a loser deletes its attempt and serves the winner's).
     * The build body runs under the `durable_<family>` ledger key; a
-    * reload issues only catalog DDL and a parquet-footer schema read
-    * (once per part dir per JVM) — zero jobs over the corpus, zero
-    * training aggregates (the l122/l123 gate).
+    * reload issues only catalog DDL and a driver-side footer read (once
+    * per part dir per JVM) — zero Spark jobs, zero training aggregates
+    * (the l122/l123 gate).
     */
   def loadOrBuild(s: SparkSession, family: String, fp: String,
       parts: Seq[Part])(build: => Map[String, DataFrame])
@@ -484,20 +507,24 @@ object DurableStore {
     }.toMap
   }
 
-  /** Refuse a persisted part whose columns differ from the ones this
-    * engine writes: parquet resolves columns by name, so a retired
+  /** Refuse a part whose columns differ, name -> type, from the ones
+    * this engine writes: parquet resolves columns by name, so a retired
     * layout would otherwise load with the missing columns null-filled
-    * and serve silently wrong answers.
+    * (or a changed type misread) and serve silently wrong answers.
+    * Nullability and column order are not part of the layout.
     */
   private def requireLayout(family: String, fp: String, p: Part,
-      found: Seq[String], seg: String = ""): Unit =
-    require(p.cols.isEmpty || found.toSet == p.cols.toSet,
+      found: StructType, seg: String = ""): Unit = {
+    def cols(t: StructType) =
+      t.map(c => s"${c.name} ${c.dataType.catalogString}")
+    require(p.schema.isEmpty || cols(found).toSet == cols(p.schema).toSet,
       s"$family/$fp${if (seg.isEmpty) "" else s" (segment $seg)"} part " +
-        s"${p.name} has columns ${found.mkString("(", ", ", ")")} but " +
-        s"this engine reads ${p.cols.mkString("(", ", ", ")")} — a " +
-        "layout written by another engine version; sweep the family " +
-        s"once with DurableStore.vacuum(s, \"$family\", keep = " +
+        s"${p.name} has columns ${cols(found).mkString("(", ", ", ")")} " +
+        s"but this engine reads ${cols(p.schema).mkString("(", ", ", ")")}" +
+        " — a layout written by another engine version; sweep the " +
+        s"family once with DurableStore.vacuum(s, \"$family\", keep = " +
         "Set(\"-\")) (or delete the fingerprint dir) and rebuild")
+  }
 
   /** Re-register an existing part dir as an external table in its
     * resolved (`partSchema`) schema, restoring the bucket spec so
@@ -594,11 +621,8 @@ object DurableStore {
     val seg = "seg_" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(12)
     val dir = new Path(fam, seg)
-    val written = parts.filter(p => built.contains(p.name))
-    // a writer emitting other columns than its part declares is a bug
-    written.foreach(p =>
-      requireLayout(family, seg, p, built(p.name).columns.toSeq))
-    writeParts(s, family, seg, written, built, dir)
+    writeParts(s, family, seg, parts.filter(p => built.contains(p.name)),
+      built, dir)
     require(createExclusive(f, new Path(dir, Marker),
       s".\n$fmtLine\n${stampLine()}"),
       s"fresh segment $seg already carried a marker — UUID collision?")
@@ -659,41 +683,24 @@ object DurableStore {
       family: String): Set[String] = {
     val fam = famDir(s, family)
     val f = fsOf(s, fam)
-    if (!f.exists(fam)) return Set.empty
-    val children = f.listStatus(fam).toSeq
-    val fromManifests = children
-      .filter(st => st.isDirectory && !st.getPath.getName.startsWith(".")
-        && !st.getPath.getName.startsWith("seg_"))
-      .flatMap { st =>
-        // a torn/unreadable marker contributes nothing: its layout is
-        // unserveable debris (vacuum classifies it; an abort here would
-        // take the whole sweep down with it — the r14 ADVICE fix)
-        tryMarkerLines(s, st.getPath, retries = 3) match {
-          case Some(lines) if lines.head == "manifest" =>
-            lines.filter(_.startsWith("seg_"))
-          case _ => Nil
-        }
-      }
-    val fromLedgers = children
-      .filter(st => !st.isDirectory &&
-        st.getPath.getName.startsWith(BatchLedgerPrefix))
-      .flatMap { st =>
-        try {
-          val lines = readFully(f, st.getPath).linesIterator.toSeq
-          if (markerComplete(lines) && lines.head.startsWith("seg_"))
-            Some(lines.head)
-          else None
-        } catch { case _: java.io.IOException => None }
-      }
-    (fromManifests ++ fromLedgers).toSet
+    listed(f, fam).flatMap { st =>
+      // a torn/unreadable marker contributes nothing: its layout is
+      // unserveable debris (vacuum classifies it; an abort here would
+      // take the whole sweep down with it — the r14 ADVICE fix)
+      if (isLayoutDir(st)) tryMarkerLines(s, st.getPath, retries = 3)
+        .filter(_.head == "manifest").toSeq
+        .flatMap(_.filter(_.startsWith("seg_")))
+      else if (isLedger(st)) ledgerSegment(f, st.getPath)
+      else Nil
+    }.toSet
   }
 
   /** Resolve a published manifest layout's parts: each is the UNION of
     * the listed segments' part dirs (segments lacking the part are
     * skipped — frozen artifacts live only in the base segment), read in
-    * the schema `partSchema` resolved. Segments are immutable, so only
-    * the first call that sees a segment reads its footers (one Spark
-    * job per part dir); every later call starts no job at all.
+    * the part's declared schema (`partSchema`). No call starts a Spark
+    * job: the first call that sees a segment reads its footers on the
+    * driver, and every later call reads none.
     *
     * BUCKET RECOVERY: a part carried by exactly ONE segment (a base
     * generation's frozen artifact, or any part after `compactManifest`
@@ -725,43 +732,36 @@ object DurableStore {
   }
 
   /** Footer schema of each part dir this JVM resolved (None: no data
-    * files). Part dirs — segment copies and published attempts — are
-    * immutable once written, and a footer read is a Spark job.
+    * file). Part dirs — segment copies and published attempts — are
+    * immutable once written, so a serve over known segments reads no
+    * footer at all.
     */
   private val partDirSchemas =
     new java.util.concurrent.ConcurrentHashMap[String, Option[StructType]]()
 
   /** The ONE schema resolver of every persisted part read: the schema
     * of part `p` over its `copies` (segment -> dir; "" for a plain
-    * layout's part dir). Each dir's footer is read once per JVM
-    * (`partDirSchemas`), and every call checks each copy against the
-    * part's declared columns — a set comparison, no I/O — because a
-    * multi-dir read takes ONE footer's schema, so a retired-layout
-    * copy next to current ones would otherwise read back null-filled.
-    * Returns the schema Spark's own inference would pick for the
-    * multi-dir read: the first data file's, in path order.
+    * layout's part dir). Each dir's footer is read once per JVM, on the
+    * driver with no Spark job (`Tables.strictFooterSchema`: an
+    * unreadable footer fails naming its dir), and every call checks
+    * each copy against the part's declared schema — no I/O — because a
+    * multi-dir read takes ONE schema, so a retired-layout copy next to
+    * current ones would otherwise read back null-filled. Returns the
+    * declared schema; an ad-hoc part reads in its first data file's
+    * schema, in path order, as Spark's own inference would.
     */
   private def partSchema(s: SparkSession, family: String, fp: String,
       p: Part, copies: Seq[(String, String)]): StructType = {
-    val found = copies.map { case (seg, dir) =>
-      val schema = Option(partDirSchemas.get(dir)).getOrElse {
-        val read =
-          try Some(s.read.parquet(dir).schema)
-          catch {
-            // no data files: no rows to misread
-            case e: AnalysisException
-                if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
-          }
-        partDirSchemas.put(dir, read)
-        read
-      }
-      schema.foreach(sc =>
-        requireLayout(family, fp, p, sc.fieldNames.toSeq, seg))
-      dir -> schema
+    val found = copies.sortBy(_._2).flatMap { case (seg, dir) =>
+      val sc = partDirSchemas.computeIfAbsent(dir,
+        d => Tables.strictFooterSchema(s, d))
+      sc.foreach(requireLayout(family, fp, p, _, seg))
+      sc
     }
-    found.sortBy(_._1).collectFirst { case (_, Some(sc)) => sc }
-      // no copy holds a data file: Spark's own inference error
-      .getOrElse(s.read.parquet(copies.map(_._2): _*).schema)
+    if (p.schema.nonEmpty) p.schema
+    else GraftBridge.asNullable(found.headOption.getOrElse(sys.error(
+      s"$family/$fp part ${p.name} has no data file in " +
+        copies.map(_._2).mkString(", "))))
   }
 
   /** Publish an explicit ordered segment list as `fp`'s manifest: ONE
@@ -1038,77 +1038,51 @@ object DurableStore {
     def aged(p: Path): Boolean =
       try f.getFileStatus(p).getModificationTime <= cutoff
       catch { case _: java.io.FileNotFoundException => false }
-    def readLines(p: Path): Option[Seq[String]] =
-      try Some(readFully(f, p).linesIterator.toSeq)
-      catch { case _: java.io.IOException => None }
-    // highest readable COMPLETE marker of a layout dir, no retry — a
-    // mid-write publish is protected by the grace, not by waiting; a
-    // future-format marker errors loudly (this engine cannot know what
-    // it references, so it must not sweep around it)
-    def effective(base: Path): Option[(Long, Seq[String])] =
-      markerCandidates(f, base).iterator.flatMap { case (g, p) =>
-        readLines(p).filter(markerComplete).map { lines =>
-          requireKnownFormat(lines, p.toString)
-          (g, lines)
-        }
-      }.nextOption()
     var debris = List.empty[String]
     var stale = List.empty[String]
     val children = f.listStatus(fam).toSeq
-    // one marker read per layout: classification AND the supersession
-    // stamps both come from this cache
+    // one marker read per layout, no retry (a mid-write publish is
+    // protected by the grace, not by waiting): classification AND the
+    // supersession stamps both come from this cache. Every control
+    // file read here fails loudly on a future format — this engine
+    // cannot know what it references, so it must not sweep around it
     val layoutState: Map[String, Option[(Long, Seq[String])]] = children
-      .filter(st => st.isDirectory &&
-        !st.getPath.getName.startsWith(".") &&
-        !st.getPath.getName.startsWith("seg_"))
-      .map(st => st.getPath.getName -> effective(st.getPath)).toMap
+      .filter(isLayoutDir)
+      .map(st => st.getPath.getName -> effectiveMarker(f, st.getPath))
+      .toMap
     val layoutStamp: Map[String, (Long, Long)] = layoutState.collect {
       case (n, Some((_, lines))) => n -> stampOf(lines)
     }
     // the family HEAD (multi-writer append chain) pins its layout: the
     // current generation of a head-tracked family must never sweep,
     // whatever keep-set the caller names
-    val headStates = children
-      .filter(st => !st.isDirectory &&
-        st.getPath.getName.startsWith(HeadFilePrefix) &&
-        headVersionOf(st.getPath.getName) >= 0)
-      .flatMap { st =>
-        readLines(st.getPath).filter(markerComplete).map { lines =>
-          requireKnownFormat(lines, st.getPath.toString)
-          (headVersionOf(st.getPath.getName), st.getPath, lines.head)
-        }
-      }
-    val headTop: Option[(Long, Path, String)] =
-      headStates.sortBy(-_._1).headOption
+    val headTop: Option[(Path, String)] = headFiles(children)
+      .flatMap { case (_, p) => controlLines(f, p).map(l => (p, l.head)) }
+      .headOption
     val keepEff =
-      if (keep.isEmpty) keep else keep ++ headTop.map(_._3)
+      if (keep.isEmpty) keep else keep ++ headTop.map(_._2)
     // pass 1: fingerprint dirs and loose files — segments are judged
     // AFTER the keep set is applied, against the SURVIVING manifests
     children.foreach { st =>
       val name = st.getPath.getName
       val isSeg = st.isDirectory && name.startsWith("seg_")
-      val isFpDir = st.isDirectory && !name.startsWith(".") && !isSeg
+      val isFpDir = isLayoutDir(st)
       if (!isFpDir && !isSeg) {
         if (!st.isDirectory && name.startsWith(HeadFilePrefix)) {
           // head files: keep exactly the highest COMPLETE head; torn
           // or superseded ones are debris past the grace (sweeping a
           // torn head un-burns a crashed CAS's version number)
-          if (!headTop.exists(_._2 == st.getPath) && aged(st.getPath)) {
+          if (!headTop.exists(_._1 == st.getPath) && aged(st.getPath)) {
             debris ::= name
             f.delete(st.getPath, false)
           }
-        } else if (!st.isDirectory &&
-            name.startsWith(BatchLedgerPrefix)) {
+        } else if (isLedger(st)) {
           // batch ledgers: torn, or naming a segment that is gone ->
           // debris past the grace; naming a segment some complete
           // MANIFEST lists -> the pin did its job (the run published),
           // debris past the grace; otherwise the ledger pins an
           // in-flight segment (referencedSegments) and must stay
-          val named = readLines(st.getPath) match {
-            case Some(lines) if markerComplete(lines) &&
-                lines.head.startsWith("seg_") => Some(lines.head)
-            case _ => None
-          }
+          val named = ledgerSegment(f, st.getPath)
           val published = named.exists(seg =>
             layoutState.values.flatten.exists { case (_, lines) =>
               lines.head == "manifest" && lines.contains(seg) })
@@ -1260,9 +1234,7 @@ object DurableStore {
     val fam = famDir(s, family)
     val f = fsOf(s, fam)
     if (!f.exists(fam)) return VacuumReport(Nil, Nil)
-    val complete = f.listStatus(fam).toSeq
-      .filter(st => st.isDirectory && !st.getPath.getName.startsWith(".")
-        && !st.getPath.getName.startsWith("seg_"))
+    val complete = f.listStatus(fam).toSeq.filter(isLayoutDir)
       .map(_.getPath.getName)
       // a torn-marker layout has no stamp to order by — it is debris,
       // classified by the vacuum pass, never "kept"; a corrupted
@@ -1308,6 +1280,13 @@ object DurableStore {
     */
   val BatchLedgerPrefix = "_GRAFT_BATCH_"
 
+  private def isLedger(st: FileStatus): Boolean =
+    !st.isDirectory && st.getPath.getName.startsWith(BatchLedgerPrefix)
+
+  /** The segment a complete batch ledger names. */
+  private def ledgerSegment(f: FileSystem, p: Path): Option[String] =
+    controlLines(f, p).map(_.head).filter(_.startsWith("seg_"))
+
   private def batchLedgerPath(s: SparkSession, family: String,
       runId: String, batchId: Long): Path =
     new Path(famDir(s, family), s"$BatchLedgerPrefix${runId}_b$batchId")
@@ -1344,21 +1323,13 @@ object DurableStore {
     val f = fsOf(s, fam)
     f.mkdirs(fam)
     val lp = batchLedgerPath(s, family, runId, batchId)
-    def ledgered(): Option[String] =
-      try {
-        val lines = readFully(f, lp).linesIterator.toSeq
-        if (markerComplete(lines) && lines.head.startsWith("seg_")) {
-          requireKnownFormat(lines, lp.toString)
-          Some(lines.head)
-        } else None
-      } catch { case _: java.io.IOException => None }
     var attempts = 0
     var out: Option[(String, Boolean)] = None
     while (out.isEmpty) {
       attempts += 1
       require(attempts <= 60,
         s"batch ledger $lp unresolvable after $attempts attempts")
-      ledgered() match {
+      ledgerSegment(f, lp) match {
         case Some(seg) if segmentComplete(s, family, seg) =>
           out = Some((seg, false))
         case Some(_) =>
@@ -1395,26 +1366,18 @@ object DurableStore {
     requireRunId(runId)
     val fam = famDir(s, family)
     val f = fsOf(s, fam)
-    if (!f.exists(fam)) return Nil
     val pfx = s"$BatchLedgerPrefix${runId}_b"
-    f.listStatus(fam).toSeq
+    listed(f, fam)
       .filter(st => !st.isDirectory && st.getPath.getName.startsWith(pfx))
       .flatMap { st =>
-        val id = st.getPath.getName.stripPrefix(pfx).toLongOption
-        val lines =
-          try Some(readFully(f, st.getPath).linesIterator.toSeq)
-          catch { case _: java.io.IOException => None }
         for {
-          i <- id
-          ls <- lines
-          if markerComplete(ls) && ls.head.startsWith("seg_")
+          i <- st.getPath.getName.stripPrefix(pfx).toLongOption
+          seg <- ledgerSegment(f, st.getPath)
         } yield {
-          requireKnownFormat(ls, st.getPath.toString)
-          require(segmentComplete(s, family, ls.head),
-            s"batch ledger ${st.getPath} names swept segment " +
-              s"${ls.head} — a grace-less vacuum raced this run; " +
-              "re-ingest the batch")
-          (i, ls.head)
+          require(segmentComplete(s, family, seg),
+            s"batch ledger ${st.getPath} names swept segment $seg — a " +
+              "grace-less vacuum raced this run; re-ingest the batch")
+          (i, seg)
         }
       }.sortBy(_._1)
   }
@@ -1432,9 +1395,8 @@ object DurableStore {
     requireRunId(runId)
     val fam = famDir(s, family)
     val f = fsOf(s, fam)
-    if (!f.exists(fam)) return 0
     val pfx = s"$BatchLedgerPrefix${runId}_b"
-    val files = f.listStatus(fam).toSeq
+    val files = listed(f, fam)
       .filter(st => !st.isDirectory && st.getPath.getName.startsWith(pfx))
     files.foreach(st => f.delete(st.getPath, false))
     files.size
@@ -1468,6 +1430,15 @@ object DurableStore {
   private def headPath(s: SparkSession, family: String, v: Long): Path =
     new Path(famDir(s, family), s"$HeadFilePrefix$v")
 
+  /** The head files among a family dir's entries, (version, path),
+    * highest version first.
+    */
+  private def headFiles(children: Seq[FileStatus]): Seq[(Long, Path)] =
+    children.filter(st => !st.isDirectory &&
+        st.getPath.getName.startsWith(HeadFilePrefix))
+      .map(st => (headVersionOf(st.getPath.getName), st.getPath))
+      .filter(_._1 >= 0).sortBy(-_._1)
+
   /** Highest COMPLETE head of the family: (version, fingerprint). A
     * torn candidate (a crashed or in-flight CAS) is skipped; its
     * version number stays burned until vacuum sweeps the torn file.
@@ -1476,22 +1447,9 @@ object DurableStore {
       : Option[(Long, String)] = {
     val fam = famDir(s, family)
     val f = fsOf(s, fam)
-    if (!f.exists(fam)) return None
-    f.listStatus(fam).toSeq
-      .filter(st => !st.isDirectory &&
-        st.getPath.getName.startsWith(HeadFilePrefix) &&
-        headVersionOf(st.getPath.getName) >= 0)
-      .sortBy(st => -headVersionOf(st.getPath.getName))
-      .iterator
-      .flatMap { st =>
-        try {
-          val lines = readFully(f, st.getPath).linesIterator.toSeq
-          if (markerComplete(lines)) {
-            requireKnownFormat(lines, st.getPath.toString)
-            Some((headVersionOf(st.getPath.getName), lines.head))
-          } else None
-        } catch { case _: java.io.IOException => None }
-      }.nextOption()
+    headFiles(listed(f, fam)).iterator
+      .flatMap { case (v, p) => controlLines(f, p).map(l => (v, l.head)) }
+      .nextOption()
   }
 
   /** One head-CAS attempt. An append records its commit's DELTA
@@ -1683,21 +1641,8 @@ object DurableStore {
       family: String): Seq[(Long, Seq[String])] = {
     val fam = famDir(s, family)
     val f = fsOf(s, fam)
-    if (!f.exists(fam)) return Nil
-    f.listStatus(fam).toSeq
-      .filter(st => !st.isDirectory &&
-        st.getPath.getName.startsWith(HeadFilePrefix) &&
-        headVersionOf(st.getPath.getName) >= 0)
-      .sortBy(st => headVersionOf(st.getPath.getName))
-      .flatMap { st =>
-        try {
-          val lines = readFully(f, st.getPath).linesIterator.toSeq
-          if (markerComplete(lines)) {
-            requireKnownFormat(lines, st.getPath.toString)
-            Some((headVersionOf(st.getPath.getName), lines))
-          } else None
-        } catch { case _: java.io.IOException => None }
-      }
+    headFiles(listed(f, fam)).reverse
+      .flatMap { case (v, p) => controlLines(f, p).map(v -> _) }
   }
 
   /** Every COMPLETE surviving head version of the family, ascending:
@@ -1828,20 +1773,16 @@ object DurableStore {
     val all = manifestSegments(s, family, fpTo)
     parts.map { p =>
       val copies = segmentCopies(s, family, delta, p.name)
+      // an empty window resolves the part's schema over the serving chain
+      val carrying =
+        if (copies.nonEmpty) copies else segmentCopies(s, family, all, p.name)
+      require(carrying.nonEmpty,
+        s"change capture: no segment of $family/$fpTo carries part ${p.name}")
+      val schema = partSchema(s, family, fpTo, p, carrying)
       val df =
-        if (copies.nonEmpty) s.read
-          .schema(partSchema(s, family, fpTo, p, copies))
-          .parquet(copies.map(_._2): _*)
-        else {
-          // schema from the serving chain's first copy
-          val carrying = segmentPartDirs(s, family, all, p.name)
-          require(carrying.nonEmpty,
-            s"change capture: no segment of $family/$fpTo carries " +
-              s"part ${p.name}")
-          s.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            segmentPartSchema(s, family, fpTo, p, carrying.head))
-        }
+        if (copies.isEmpty) s.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+        else s.read.schema(schema).parquet(copies.map(_._2): _*)
       p.name -> df
     }.toMap
   }

@@ -73,9 +73,10 @@ object MixtureModelStore {
   val JointFamily = "mixture_joint"
   val JointParts: Seq[DurableStore.Part] = Seq(
     DurableStore.Part("pc", Some("prev"),
-      Seq("prev", "cur", "pair_f", "pair_r")),
-    DurableStore.Part("ctx", Some("prev"), Seq("prev", "ctx_f", "ctx_r")),
-    DurableStore.Part("vocab", None, Seq("v_f", "v_r")))
+      "prev STRING, cur STRING, pair_f BIGINT, pair_r BIGINT"),
+    DurableStore.Part("ctx", Some("prev"),
+      "prev STRING, ctx_f BIGINT, ctx_r BIGINT"),
+    DurableStore.Part("vocab", None, "v_f BIGINT, v_r BIGINT"))
 
   /** Load-or-build the DURABLE joint count tables (pc, ctx, vocab):
     * count training runs in the first application ever to see this
@@ -108,7 +109,7 @@ object MixtureModelStore {
     */
   val DsirIncFamily = "dsir_counts_inc"
   val DsirIncParts: Seq[DurableStore.Part] =
-    Seq(DurableStore.Part("counts", None, Seq("bkt", "ct", "cr")))
+    Seq(DurableStore.Part("counts", None, "bkt BIGINT, ct BIGINT, cr BIGINT"))
 
   private def bucketCounts(docs: DataFrame): DataFrame =
     Dsir.bucketCountsOf(Dsir.bucketFrame(docs, "doc_id", "text",
@@ -157,8 +158,8 @@ object MixtureModelStore {
   val JointIncFamily = "mixture_joint_inc"
   val JointIncParts: Seq[DurableStore.Part] = Seq(
     DurableStore.Part("pc", Some("prev"),
-      Seq("prev", "cur", "pair_f", "pair_r")),
-    DurableStore.Part("toks", None, Seq("tok", "is_r")))
+      "prev STRING, cur STRING, pair_f BIGINT, pair_r BIGINT"),
+    DurableStore.Part("toks", None, "tok STRING, is_r BIGINT"))
 
   /** One batch's slice of the joint trained state: its own pair
     * counts and its own distinct (tok, is_r) set.

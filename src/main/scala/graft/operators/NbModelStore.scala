@@ -53,9 +53,10 @@ object NbModelStore {
     */
   val DurableFamily = "nb_model"
   val DurableParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("feat", Some("feat"), Seq("feat", "pos_c", "neg_c")),
-    DurableStore.Part("totals", None, Seq("n_pos", "n_neg", "v")),
-    DurableStore.Part("labels", None, Seq("doc_id", "is_dup")))
+    DurableStore.Part("feat", Some("feat"),
+      "feat STRING, pos_c BIGINT, neg_c BIGINT"),
+    DurableStore.Part("totals", None, "n_pos BIGINT, n_neg BIGINT, v BIGINT"),
+    DurableStore.Part("labels", None, "doc_id BIGINT, is_dup BIGINT"))
 
   /** Load-or-build the DURABLE (labels, model): the winnow pass and
     * the training aggregate run in the first application ever to see
@@ -112,7 +113,7 @@ object NbModelStore {
   val IncFamily = "nb_model_inc"
   val IncParts: Seq[DurableStore.Part] =
     Seq(DurableStore.Part("feat", Some("feat"),
-      Seq("feat", "pos_c", "neg_c")))
+      "feat STRING, pos_c BIGINT, neg_c BIGINT"))
 
   /** Labeled-batch fingerprint: doc_id + text + is_dup, so the same
     * documents under a different label assignment are a different

@@ -71,9 +71,10 @@ object NgramModelStore {
     */
   val DurableFamily = "lm_bigram"
   val DurableParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("pairs", Some("prev"), Seq("prev", "cur", "pair_c")),
-    DurableStore.Part("ctx", Some("prev"), Seq("prev", "ctx_c")),
-    DurableStore.Part("vocab", None, Seq("v")))
+    DurableStore.Part("pairs", Some("prev"),
+      "prev STRING, cur STRING, pair_c BIGINT"),
+    DurableStore.Part("ctx", Some("prev"), "prev STRING, ctx_c BIGINT"),
+    DurableStore.Part("vocab", None, "v BIGINT"))
 
   /** Load-or-build the DURABLE bigram store: the first application
     * ever to see this corpus trains and persists (the raw training
@@ -116,8 +117,9 @@ object NgramModelStore {
     */
   val IncFamily = "lm_bigram_inc"
   val IncParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("pairs", Some("prev"), Seq("prev", "cur", "pair_c")),
-    DurableStore.Part("toks", None, Seq("tok")))
+    DurableStore.Part("pairs", Some("prev"),
+      "prev STRING, cur STRING, pair_c BIGINT"),
+    DurableStore.Part("toks", None, "tok STRING"))
 
   /** One batch's slice of the lineage: its clean-slice pair counts
     * and its distinct token set.

@@ -66,12 +66,12 @@ object OpqModelStore {
     */
   val DurableFamily = "opq_model"
   val DurableParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("rot", None, Seq("i", "row")),
-    DurableStore.Part("err", None, Seq("i", "v")),
-    DurableStore.Part("cb", None, Seq("m", "c", "row")),
-    DurableStore.Part("pca_mean", None, Seq("i", "row")),
-    DurableStore.Part("pca_axes", None, Seq("i", "row")),
-    DurableStore.Part("pca_eig", None, Seq("i", "row")))
+    DurableStore.Part("rot", None, "i INT, row ARRAY<DOUBLE>"),
+    DurableStore.Part("err", None, "i INT, v DOUBLE"),
+    DurableStore.Part("cb", None, "m INT, c INT, row ARRAY<DOUBLE>"),
+    DurableStore.Part("pca_mean", None, "i INT, row ARRAY<DOUBLE>"),
+    DurableStore.Part("pca_axes", None, "i INT, row ARRAY<DOUBLE>"),
+    DurableStore.Part("pca_eig", None, "i INT, row ARRAY<DOUBLE>"))
 
   /** Load-or-build the DURABLE model tables: the PCA pass and the
     * alternating fit run in the first application ever to see this

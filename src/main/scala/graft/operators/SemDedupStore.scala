@@ -43,8 +43,10 @@ object SemDedupStore {
     */
   val DurableFamily = "semdedup"
   val DurableParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("pairs", Some("a_id"), Seq("a_id", "b_id", "cos")),
-    DurableStore.Part("labels", Some("doc_id"), Seq("doc_id", "cluster_id")))
+    DurableStore.Part("pairs", Some("a_id"),
+      "a_id BIGINT, b_id BIGINT, cos DOUBLE"),
+    DurableStore.Part("labels", Some("doc_id"),
+      "doc_id BIGINT, cluster_id BIGINT"))
 
   private val exact = new AppCache[DataFrame]("semdedup_exact")
   private val semPairs = new AppCache[DataFrame]("semdedup_pairs")
@@ -111,9 +113,10 @@ object SemDedupStore {
     */
   val IncFamily = "semdedup_inc"
   val IncParts: Seq[DurableStore.Part] = Seq(
-    DurableStore.Part("cents", None, Seq("cent_id", "cent_emb")),
-    DurableStore.Part("assign", Some("cent_id"), Seq("c_id", "cent_id")),
-    DurableStore.Part("pairs", Some("a_id"), Seq("a_id", "b_id", "cos")))
+    DurableStore.Part("cents", None, "cent_id BIGINT, cent_emb ARRAY<FLOAT>"),
+    DurableStore.Part("assign", Some("cent_id"), "c_id BIGINT, cent_id BIGINT"),
+    DurableStore.Part("pairs", Some("a_id"),
+      "a_id BIGINT, b_id BIGINT, cos DOUBLE"))
 
   /** Since round 14 a MANIFEST family (O(delta) WRITE): the base
     * segment holds the frozen centroids + base assignment/pairs; each

@@ -25,16 +25,11 @@ object LlmCcUpdateQueries {
           .localCheckpoint(eager = true)
         val updated = Dedup.updateComponents(standing,
           pairs.where(touchesBatch))
-        val full = Dedup.components(pairs)
-        val ug = updated.groupBy(col("doc_id"), col("cluster_id"))
-          .agg(count(lit(1)).as("__cu"))
-        val fg = full.groupBy(col("doc_id"), col("cluster_id"))
-          .agg(count(lit(1)).as("__cf"))
-        ug.join(fg, Seq("doc_id", "cluster_id"), "full_outer")
-          .agg(count(when(col("__cf").isNotNull, 1)).as("n_nodes"),
-            sum(when(col("__cu").isNull || col("__cf").isNull ||
-                col("__cu") =!= col("__cf"), 1L).otherwise(0L))
-              .as("__mism"))
+        // checkpointed: it feeds both the node count and the gate
+        val full = Dedup.components(pairs).localCheckpoint(eager = true)
+        full.agg(count_distinct(col("doc_id"), col("cluster_id"))
+            .as("n_nodes"))
+          .crossJoin(mismatches(updated, full, "__mism"))
           .select(col("n_nodes"),
             (col("__mism") === 0).as("update_eq_rebuild_ok"))
       },

@@ -3433,8 +3433,8 @@ object LlmQueries {
           every(col("__p") ===
             floor(col("__n") * lit(2500L) / lit(10000.0)).cast("long"))
             .as("prune_frac_ok"),
-          every(col("__minP").isNull || col("__maxK").isNull ||
-            col("__minP") > col("__maxK")).as("proto_order_ok"))
+          every(coalesce(col("__minP") > col("__maxK"), lit(true)))
+            .as("proto_order_ok"))
         e.agg(count(lit(1)).as("n_input"))
           .crossJoin(recall).crossJoin(checks)
       },

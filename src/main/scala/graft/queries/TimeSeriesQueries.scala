@@ -2362,7 +2362,7 @@ object TimeSeriesQueries {
           Tables.load(s, dir, "documents").select(col("doc_id"))
             .repartition(3).write.mode("overwrite")
             .parquet(s"$out/stage")
-          val schema = s.read.parquet(s"$out/stage").schema
+          val schema = Tables.strictFooterSchema(s, s"$out/stage").get
           val invocations =
             scala.collection.concurrent.TrieMap.empty[Long, Int]
           val crashArmed =
@@ -2458,7 +2458,7 @@ object TimeSeriesQueries {
           docs.where(col("doc_id") % 10 >= 5 && col("doc_id") % 10 < 8)
             .repartition(2).write.mode("overwrite")
             .parquet(s"$out/stage")
-          val schema = s.read.parquet(s"$out/stage").schema
+          val schema = Tables.strictFooterSchema(s, s"$out/stage").get
           val ingest: (org.apache.spark.sql.DataFrame, Long) => Unit =
             (batch, batchId) => {
               ds.writeBatchSegmentOnce(s, fam, runId, batchId, parts)(

@@ -36,4 +36,9 @@ object GraftBridge {
   def rebind[T](d: Dataset[T], s: SparkSession): Dataset[T] =
     ofRows(s.asInstanceOf[classic.SparkSession], d.queryExecution.analyzed)
       .as(d.encoder)
+
+  /** `private[spark] StructType.asNullable`: every field, nested ones
+    * included, nullable — the schema a parquet scan reads back.
+    */
+  def asNullable(t: types.StructType): types.StructType = t.asNullable
 }

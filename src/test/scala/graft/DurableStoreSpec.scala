@@ -1,7 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{DeflateDictStore, Dsir, DupSpanStore,
   DurableStore, MixtureModelStore, NbModelStore, NgramModelStore,
@@ -79,7 +82,8 @@ class DurableStoreSpec extends SparkSpec {
     * DsirBuckets rows), built from the mixture store's bucket frame.
     */
   private val DsirFamily = "dsir_imp"
-  private val DsirParts = Seq(DurableStore.Part("imp", None, Seq("bkt", "imp")))
+  private val DsirParts =
+    Seq(DurableStore.Part("imp", None, "bkt BIGINT, imp BIGINT"))
 
   private def durableDsirImportance(fp: String): DataFrame =
     DurableStore.loadOrBuild(spark, DsirFamily, fp, DsirParts) {
@@ -513,7 +517,8 @@ class DurableStoreSpec extends SparkSpec {
     import graft.operators.{AnnIndexStore, Similarity}
     val fam = AnnIndexStore.IncFamily
     // an engine that declared no columns — the pre-check writer
-    val unchecked = AnnIndexStore.DurableParts.map(_.copy(cols = Nil))
+    val unchecked =
+      AnnIndexStore.DurableParts.map(_.copy(schema = new StructType()))
     val e = graft.Tables.load(spark, fixtureDir, "embeddings")
     val base = e.where(col("vec_id") % 4 =!= 0)
     val dl = e.where(col("vec_id") % 4 === 0)
@@ -531,7 +536,7 @@ class DurableStoreSpec extends SparkSpec {
     def refused(fp: String)(body: => Any): Unit = {
       val err = intercept[IllegalArgumentException](body).getMessage
       Seq(s"$fam/$fp", s"segment $oldSeg", "part codes",
-          "has columns (c_id, blk, code)",
+          "has columns (c_id bigint, blk int, code bigint)",
           "DurableStore.vacuum(s, \"ann_index_inc\"")
         .foreach(w => assert(err.contains(w), err))
     }
@@ -569,9 +574,10 @@ class DurableStoreSpec extends SparkSpec {
       Seq(DurableStore.Part("t", None)))
     val err = intercept[IllegalArgumentException](
       DurableStore.loadOrBuild(spark, "spec_layout", "fp0",
-        Seq(DurableStore.Part("t", None, Seq("a", "b"))))(
+        Seq(DurableStore.Part("t", None, "a BIGINT, b BIGINT")))(
         fail("a built layout must not rebuild"))).getMessage
-    assert(err.contains("spec_layout/fp0 part t has columns (a, c)"), err)
+    assert(err.contains(
+      "spec_layout/fp0 part t has columns (a bigint, c bigint)"), err)
   }
 
   test("manifestTables resolves each immutable segment once: over a " +
@@ -579,8 +585,8 @@ class DurableStoreSpec extends SparkSpec {
       "serves the same rows") {
     import spark.implicits._
     val fam = "spec_zero_job"
-    val parts = Seq(DurableStore.Part("t", None, Seq("k", "v")),
-      DurableStore.Part("m", Some("k"), Seq("k", "w")))
+    val parts = Seq(DurableStore.Part("t", None, "k BIGINT, v STRING"),
+      DurableStore.Part("m", Some("k"), "k BIGINT, w DOUBLE"))
     def t(lo: Int, hi: Int) =
       (lo until hi).map(i => (i.toLong, s"v$i")).toDF("k", "v")
     val segs = DurableStore.writeSegment(spark, fam, parts, Map(
@@ -589,10 +595,11 @@ class DurableStoreSpec extends SparkSpec {
         DurableStore.writeSegment(spark, fam, parts, Map("t" -> d)))
     assert(DurableStore.publishManifest(spark, fam, "fp3", segs))
     var first: Map[String, DataFrame] = null
-    // the first call reads each fresh segment copy's footers
+    // the first call reads each fresh segment copy's footers — on the
+    // driver, so it starts no job either
     assert(jobsStarted {
       first = DurableStore.manifestTables(spark, fam, "fp3", parts)
-    } > 0)
+    } === 0)
     var second: Map[String, DataFrame] = null
     assert(jobsStarted {
       second = DurableStore.manifestTables(spark, fam, "fp3", parts)
@@ -602,14 +609,162 @@ class DurableStoreSpec extends SparkSpec {
     assert(sortedRows(second("m")) === Seq("[1,2.0]"))
   }
 
+  test("a loadOrBuild reload starts zero Spark jobs: after " +
+      "dropRegistered, and over a copied layout this JVM never read") {
+    import spark.implicits._
+    val fam = "spec_cold_reload"
+    val parts = Seq(DurableStore.Part("t", Some("k"), "k BIGINT, v STRING"),
+      DurableStore.Part("u", None, "w DOUBLE"))
+    val built = DurableStore.loadOrBuild(spark, fam, "fpA", parts)(Map(
+      "t" -> (0 until 6).map(i => (i.toLong, s"v$i")).toDF("k", "v"),
+      "u" -> Seq(1.5, 2.5).toDF("w")))
+    val rows = sortedRows(built("t"))
+    // a second application's first read: the same files under a
+    // fingerprint dir no part dir of which this JVM has resolved
+    val fa = new java.io.File(storeRoot, s"$fam/fpA").toPath
+    val fb = new java.io.File(storeRoot, s"$fam/fpB").toPath
+    java.nio.file.Files.walk(fa).iterator().asScala.toSeq.foreach(p =>
+      java.nio.file.Files.copy(p, fb.resolve(fa.relativize(p))))
+    DurableStore.dropRegistered(spark, fam, "fpA", parts)
+    for (fp <- Seq("fpA", "fpB")) {
+      var t: Map[String, DataFrame] = null
+      assert(jobsStarted {
+        t = DurableStore.loadOrBuild(spark, fam, fp, parts)(
+          fail("a published layout must not rebuild"))
+      } === 0, fp)
+      assert(sortedRows(t("t")) === rows, fp)
+      assert(sortedRows(t("u")) === Seq("[1.5]", "[2.5]"), fp)
+    }
+  }
+
+  test("a type-only layout change is refused: an array<int> codes " +
+      "segment next to array<bigint> ones, whose column names match") {
+    import spark.implicits._
+    val fam = "spec_type_layout"
+    val parts = Seq(DurableStore.Part("codes", Some("c_id"),
+      "c_id BIGINT, codes ARRAY<BIGINT>"))
+    val unchecked = parts.map(_.copy(schema = new StructType()))
+    val cur = DurableStore.writeSegment(spark, fam, parts, Map("codes" ->
+      Seq((1L, Array(3L, 4L))).toDF("c_id", "codes")))
+    // the writer check: the current engine cannot write the old type
+    val werr = intercept[IllegalArgumentException](
+      DurableStore.writeSegment(spark, fam, parts, Map("codes" ->
+        Seq((2L, Array(5, 6))).toDF("c_id", "codes")))).getMessage
+    assert(werr.contains("has columns (c_id bigint, codes array<int>)"), werr)
+    val old = DurableStore.writeSegment(spark, fam, unchecked, Map("codes" ->
+      Seq((2L, Array(5, 6))).toDF("c_id", "codes")))
+    assert(DurableStore.publishManifest(spark, fam, "fpMixed",
+      Seq(cur, old)))
+    // positive control: the two copies differ in type only, so a
+    // name-only check passes them
+    val dirs = DurableStore.segmentPartDirs(spark, fam, Seq(cur, old),
+      "codes")
+    val found = dirs.map(d => DurableStore.segmentPartSchema(spark, fam,
+      "fpMixed", unchecked.head, d))
+    assert(found.map(_.fieldNames.toSet).distinct.size === 1, found)
+    assert(found.map(_("codes").dataType.catalogString) ===
+      Seq("array<bigint>", "array<int>"))
+    val err = intercept[IllegalArgumentException](
+      DurableStore.manifestTables(spark, fam, "fpMixed", parts)).getMessage
+    Seq(s"$fam/fpMixed (segment $old) part codes",
+        "has columns (c_id bigint, codes array<int>)",
+        "this engine reads (c_id bigint, codes array<bigint>)")
+      .foreach(w => assert(err.contains(w), err))
+  }
+
+  test("a truncated footer in a part dir fails the load and names the " +
+      "dir") {
+    import spark.implicits._
+    val fam = "spec_torn_footer"
+    val parts = Seq(DurableStore.Part("t", None, "k BIGINT"))
+    val seg = DurableStore.writeSegment(spark, fam, parts,
+      Map("t" -> Seq(1L, 2L).toDF("k").coalesce(1)))
+    val dir = DurableStore.segmentPartDirs(spark, fam, Seq(seg), "t").head
+    val data = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(data.length === 1)
+    val bytes = java.nio.file.Files.readAllBytes(data.head.toPath)
+    java.nio.file.Files.write(data.head.toPath, bytes.take(bytes.length / 2))
+    new java.io.File(dir, s".${data.head.getName}.crc").delete()
+    assert(DurableStore.publishManifest(spark, fam, "fpTorn", Seq(seg)))
+    val err = intercept[java.io.IOException](
+      DurableStore.manifestTables(spark, fam, "fpTorn", parts)).getMessage
+    assert(err.contains(s"unreadable parquet footer in $dir"), err)
+  }
+
+  test("a batch ledger in a newer format fails vacuum loudly, never " +
+      "sweeping it as debris") {
+    import spark.implicits._
+    val fam = "spec_ledger_fmt"
+    val parts = Seq(DurableStore.Part("t", None))
+    val seg = DurableStore.writeSegment(spark, fam, parts,
+      Map("t" -> Seq(1L).toDF("k")))
+    val ledger = new java.io.File(storeRoot,
+      s"$fam/${DurableStore.BatchLedgerPrefix}r1_b0")
+    rewriteMarker(ledger, s"$seg\nfmt=${DurableStore.CurrentMarkerFormat + 1}" +
+      "\nts=1.1")
+    val err = intercept[IllegalArgumentException](
+      DurableStore.vacuum(spark, fam)).getMessage
+    assert(err.contains(s"declares format ${DurableStore.CurrentMarkerFormat + 1}"),
+      err)
+    assert(ledger.exists() && DurableStore.segmentComplete(spark, fam, seg))
+  }
+
+  test("property: the control-file reader accepts a byte prefix of a " +
+      "marker, head or ledger only with the full head line and seg_ " +
+      "lines; a newer format throws") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val f = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    val file = new java.io.File(
+      java.nio.file.Files.createTempDirectory("graft_ctl_").toFile, "ctl")
+    val p = new org.apache.hadoop.fs.Path(file.getAbsolutePath)
+    def read(content: String) = {
+      rewriteMarker(file, content)
+      DurableStore.controlLines(f, p)
+    }
+    val cur = s"fmt=${DurableStore.CurrentMarkerFormat}"
+    val hex = Gen.listOfN(12, Gen.hexChar).map(_.mkString.toLowerCase)
+    val seg = hex.map("seg_" + _)
+    val fp = for (n <- Gen.choose(0L, 99999L); x <- hex; s <- hex)
+      yield s"n${n}_x${x}_s$s"
+    // the routing heads and bodies every writer emits, stamp last
+    val content = for {
+      (head, body) <- Gen.oneOf(
+        fp.flatMap(f => hex.map(h => (s"attempt_${f}_${h.take(8)}", Nil))),
+        Gen.const((".", Nil)),
+        Gen.choose(1, 4).flatMap(Gen.listOfN(_, seg))
+          .map(ss => ("manifest", ss)),
+        fp.flatMap(f => Gen.option(seg).map(o => (f, o.toList))),
+        seg.map(g => (g, Nil)))
+      fmt <- Gen.oneOf(Nil, Seq(cur))
+      ms <- Gen.choose(0L, Long.MaxValue)
+      sq <- Gen.choose(1L, 9999L)
+    } yield ((head +: fmt) ++ body :+ s"ts=$ms.$sq").mkString("\n")
+    def segLines(ls: Seq[String]) = ls.filter(_.startsWith("seg_"))
+    val prop = Prop.forAll(content) { c =>
+      val full = c.linesIterator.toSeq
+      read(c).contains(full) &&
+        (0 until c.length).forall(n => read(c.take(n)).forall(ls =>
+          ls.head == full.head &&
+            segLines(ls.tail) == segLines(full.tail))) &&
+        scala.util.Try(read(c.replace(cur,
+          s"fmt=${DurableStore.CurrentMarkerFormat + 1}")))
+          .isFailure == c.contains(cur)
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   test("changesBetween refuses a retired-layout delta segment: a " +
       "pre-r17 codes (c_id, blk, code) delta never reads back " +
       "null-filled") {
     import spark.implicits._
     val fam = "spec_cdc_layout"
     val parts = Seq(DurableStore.Part("codes", Some("c_id"),
-      Seq("c_id", "codes")))
-    val unchecked = parts.map(_.copy(cols = Nil))
+      "c_id BIGINT, codes ARRAY<INT>"))
+    val unchecked = parts.map(_.copy(schema = new StructType()))
     def codes(lo: Long, hi: Long) =
       (lo until hi).map(i => (i, Array(i.toInt, 7))).toDF("c_id", "codes")
     def fp(df: DataFrame) = DurableStore.frameFingerprint(df, Seq("c_id"))
@@ -637,7 +792,8 @@ class DurableStoreSpec extends SparkSpec {
       "positive control: the unchecked union should misread codes")
     val err = intercept[IllegalArgumentException](
       DurableStore.changesBetween(spark, fam, 0L, 2L, parts)).getMessage
-    Seq(s"segment $oldSeg", "part codes", "has columns (c_id, blk, code)",
+    Seq(s"segment $oldSeg", "part codes",
+        "has columns (c_id bigint, blk int, code int)",
         "DurableStore.vacuum(s, \"spec_cdc_layout\"")
       .foreach(w => assert(err.contains(w), err))
     // a window holding only the current-layout delta still serves

@@ -132,8 +132,9 @@ class GatesSpec extends SparkSpec {
       .filter(p => p.toString.endsWith(".scala") &&
         p.getFileName.toString != "Gates.scala")
       .filter { p =>
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          .contains(""".isNotNull && col("__""")
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        Seq(""".isNotNull && col("__""", """.isNull || col("__""")
+          .exists(src.contains)
       }.toSeq
     assert(copies.isEmpty,
       s"presence-mark count outside Gates: ${copies.mkString(", ")}")

@@ -29,15 +29,16 @@ class StreamingOpsSpec extends SparkSpec {
   private def runStream(name: String,
       plan: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
       batches: Seq[Seq[Ev]],
-      mode: String = "append"): Array[org.apache.spark.sql.Row] = {
+      mode: String = "append",
+      s: org.apache.spark.sql.SparkSession = spark): Array[org.apache.spark.sql.Row] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
+    implicit val sqlCtx = s.sqlContext
     val stream = MemoryStream[Ev]
     val q = plan(stream.toDF())
       .writeStream.format("memory").queryName(name).outputMode(mode).start()
     try {
       batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-      spark.table(name).collect()
+      s.table(name).collect()
     } finally q.stop()
   }
 
@@ -128,23 +129,16 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("tumblingAgg under the RocksDB state store (the spill-to-disk backend for 100 TB-scale state)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val got = runStream("t_rocks", StreamingOps.tumblingAgg(_),
-        Seq(events.take(3), events.drop(3)), mode = "complete")
-        .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
-        .toSet
-      // identical result to the default (HDFS-backed) provider
-      assert(got.contains((ts("2024-01-01 00:00:00"), "a", 2L)))
-      assert(got.contains((ts("2024-01-01 01:00:00"), "b", 2L)))
-      assert(got.contains((ts("2024-01-01 03:00:00"), "a", 1L)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val got = Engine.scoped(spark, Map(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+      s => runStream("t_rocks", StreamingOps.tumblingAgg(_),
+        Seq(events.take(3), events.drop(3)), mode = "complete", s = s)
+    }.map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
+    // identical result to the default (HDFS-backed) provider
+    assert(got.contains((ts("2024-01-01 00:00:00"), "a", 2L)))
+    assert(got.contains((ts("2024-01-01 01:00:00"), "b", 2L)))
+    assert(got.contains((ts("2024-01-01 03:00:00"), "a", 1L)))
   }
 
   test("intervalJoin: stream-stream pairs match the batch interval join") {

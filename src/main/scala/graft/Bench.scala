@@ -31,6 +31,10 @@ object Bench {
     // from a warmed second attempt.
     val steady = BenchSteady.seconds
     var retried = List.empty[(String, (Double, Double))]
+    // Per query, what each Trace span moved during its first reading:
+    // "query/<name>" plus every span it opened, each job counted under
+    // the innermost one; snapshots sit outside the timed window.
+    var phases = List.empty[(String, Map[Trace.Key, Trace.Work])]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       if (!skipGc) {
         val g0 = System.nanoTime()
@@ -45,7 +49,7 @@ object Bench {
       def once(): Double = {
         val t0 = System.nanoTime()
         val ok =
-          try {
+          try Trace.span(spark, "query", name) {
             val df = fn(spark, sfDir)
             df.select(xxhash64(df.columns.map(col): _*).as("h"))
               .agg(expr("bit_xor(h)"))
@@ -55,7 +59,9 @@ object Bench {
         val secs = (System.nanoTime() - t0) / 1e9
         if (ok) secs else -1.0
       }
+      val before = Trace.snapshot(spark)
       val first = once()
+      phases ::= name -> Trace.delta(before, Trace.snapshot(spark))
       steady.get(name) match {
         case Some(st) if first > 3 * st =>
           retried ::= (name -> (first, once()))
@@ -71,16 +77,24 @@ object Bench {
       }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // One-time standing-store build seconds (StoreBuildLedger): these
-    // land inside whichever consumer ran FIRST and read like per-query
-    // cost in "queries" — the separate map lets a driver line decompose
-    // into build + query (r10 judge finding: l72 rep1 25 s vs 4 s warm,
-    // all shared-build).
-    val storeJson = graft.operators.StoreBuildLedger.snapshot.toSeq.sorted
+    // One-time standing-store build seconds (the Trace.Store layer):
+    // these land inside whichever consumer ran FIRST and read like
+    // per-query cost in "queries" — the separate map lets a driver line
+    // decompose into build + query (r10 judge finding: l72 rep1 25 s vs
+    // 4 s warm, all shared-build).
+    val storeJson = Trace.snapshot(spark).toSeq
+      .collect { case ((Trace.Store, k), w) => k -> w.seconds }.sorted
       .map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    def workJson(w: Trace.Work): String =
+      s"""{"spans":${w.spans},"wall_sec":${w.seconds},"jobs":${w.jobs},"stages":${w.stages},"task_sec":${w.taskMs / 1e3},"shuffle_write_bytes":${w.shuffleWriteBytes},"spill_bytes":${w.spillBytes},"gc_sec":${w.gcMs / 1e3}}"""
+    val phasesJson = phases.reverse.map { case (q, d) =>
+      s"\"$q\":" + d.toSeq.sortBy(_._1)
+        .map { case ((layer, n), w) => s"\"$layer/$n\":" + workJson(w) }
+        .mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","gc_sec":${gcNanos / 1e9},"store_build_sec":$storeJson,"retries":$retryJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","gc_sec":${gcNanos / 1e9},"store_build_sec":$storeJson,"retries":$retryJson,"phases":$phasesJson}"""
     println(json)
     // Land the complete JSON on disk — the driver's stdout capture keeps
     // only the last ~2 KB, which a 97-query line overflows.

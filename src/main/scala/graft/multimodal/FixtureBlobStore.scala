@@ -4,18 +4,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.StoreBuildLedger
+import graft.operators.AppCache
 
 /** Application-scoped cache of the synthesized codec-fixture corpora —
-  * the StoreBuildLedger discipline applied to the harness fixtures
+  * the store-build discipline applied to the harness fixtures
   * themselves: the batch rungs of each modality tier (image l66/l71/
   * l85, audio l111/l117/l118, video l119/l120/l121) all synthesize the
   * SAME deterministic blob corpus per kind (id-derived formulas — the
   * oracle contract), and JPEG-encoding every AVI frame several times
   * per run is pure waste. Synthesis runs once per (application, corpus
-  * dir, kind), the frame is localCheckpoint'ed (blobs are KB-sized —
-  * tiny next to the corpus text), and the build seconds land in the
-  * ledger as `fixture_<kind>` so bench lines stay decomposable.
+  * dir, kind) through one `AppCache` per kind, the frame is
+  * localCheckpoint'ed (blobs are KB-sized — tiny next to the corpus
+  * text), and the build seconds land in the store layer as
+  * `fixture_<kind>` so bench lines stay decomposable.
   *
   * The STREAMING faces (t30/t45/t47) deliberately do NOT read this
   * cache: a checkpointed static frame is not a stream, and live
@@ -25,30 +26,24 @@ import graft.operators.StoreBuildLedger
   */
 object FixtureBlobStore {
 
-  private final case class Key(appId: String, dir: String, kind: String)
+  private val synth: Map[String, (DataFrame, String) => DataFrame] = Map(
+    "png" -> Multimodal.withPngBlob,
+    "image_mixed" -> Multimodal.withMixedImageBlob,
+    "wav" -> Multimodal.withWavBlob,
+    "avi" -> Multimodal.withAviBlob)
 
-  private val cache = scala.collection.mutable.Map.empty[Key, DataFrame]
+  private val caches: Map[String, AppCache[DataFrame]] =
+    synth.keys.map(k => k -> new AppCache[DataFrame](s"fixture_$k")).toMap
 
   /** The shared clean blob frame (doc_id, content) for `kind` in
     * {png, image_mixed, wav, avi} over `dir`'s documents ids.
     */
-  def shared(s: SparkSession, dir: String, kind: String): DataFrame =
-    synchronized {
-      val key = Key(s.sparkContext.applicationId,
-        new java.io.File(dir).getCanonicalPath, kind)
-      // entries from stopped applications in the same JVM can never be
-      // hit again but would pin checkpointed frames: evict them
-      cache.filterInPlace((k, _) => k.appId == key.appId)
-      cache.getOrElseUpdate(key, StoreBuildLedger.timed(s"fixture_$kind") {
-        val ids = Tables.load(s, dir, "documents").select(col("doc_id"))
-        val blobs = kind match {
-          case "png" => Multimodal.withPngBlob(ids, "doc_id")
-          case "image_mixed" => Multimodal.withMixedImageBlob(ids, "doc_id")
-          case "wav" => Multimodal.withWavBlob(ids, "doc_id")
-          case "avi" => Multimodal.withAviBlob(ids, "doc_id")
-          case other => sys.error(s"FixtureBlobStore: unknown kind $other")
-        }
-        blobs.localCheckpoint(eager = true)
-      })
+  def shared(s: SparkSession, dir: String, kind: String): DataFrame = {
+    val cache = caches.getOrElse(kind,
+      sys.error(s"FixtureBlobStore: unknown kind $kind"))
+    cache.get(s, dir)(()) { _ =>
+      val ids = Tables.load(s, dir, "documents").select(col("doc_id"))
+      synth(kind)(ids, "doc_id").localCheckpoint(eager = true)
     }
+  }
 }

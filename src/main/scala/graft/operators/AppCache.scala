@@ -19,8 +19,8 @@ import org.apache.spark.sql.SparkSession
   * key once. It has two steps: `resolve` (untimed here — typically a
   * durable load-or-build, whose genuine build seconds accrue under its
   * own `durable_<family>` key) and `pin` (the localCheckpoint/collect
-  * that makes the artifact servable), timed under `ledgerKey`. A cache
-  * whose whole build is the pin resolves `()`.
+  * that makes the artifact servable), timed as the `Trace.Store` span
+  * `ledgerKey`. A cache whose whole build is the pin resolves `()`.
   *
   * A cross-application file cache is deliberately NOT attempted here:
   * that is `DurableStore`'s job, with its transactional publish.
@@ -37,16 +37,16 @@ final class AppCache[V](ledgerKey: String) {
 
   def get[A](s: SparkSession, dir: String, variant: String = "")(
       resolve: => A)(pin: A => V): V =
-    getIn(s.sparkContext.applicationId, dir, variant)(resolve)(pin)
+    getIn(s, s.sparkContext.applicationId, dir, variant)(resolve)(pin)
 
   /** `get` under an explicit application id — lets a test stand in for
     * a second application inside one SparkContext.
     */
-  private[graft] def getIn[A](appId: String, dir: String, variant: String)(
-      resolve: => A)(pin: A => V): V = synchronized {
+  private[graft] def getIn[A](s: SparkSession, appId: String, dir: String,
+      variant: String)(resolve: => A)(pin: A => V): V = synchronized {
     entries.getOrElseUpdate(keyFor(appId, dir, variant), {
       val a = resolve
-      StoreBuildLedger.timed(ledgerKey)(pin(a))
+      graft.Trace.span(s, graft.Trace.Store, ledgerKey)(pin(a))
     })
   }
 
@@ -57,7 +57,7 @@ final class AppCache[V](ledgerKey: String) {
   def seed(s: SparkSession, dir: String, variant: String = "")(
       seedKey: String)(pinned: => V): Unit = synchronized {
     entries.update(keyFor(s.sparkContext.applicationId, dir, variant),
-      StoreBuildLedger.timed(seedKey)(pinned))
+      graft.Trace.span(s, graft.Trace.Store, seedKey)(pinned))
   }
 
   def clear(): Unit = synchronized(entries.clear())

@@ -63,25 +63,29 @@ object Curation {
       threshold: Double = 0.8, trainPct: Int = 80, valPct: Int = 10,
       shardTokens: Long = 2048L, exactContainment: Boolean = false,
       dfCap: Int = 64): DataFrame = {
+    def phase[A](name: String)(body: => A): A =
+      graft.Trace.span(docs.sparkSession, "curation", name)(body)
     val cleaned = docs.select(col(idCol).as("doc_id"),
       TextAnalysis.cleanText(col(textCol)).as("text"))
     // The 3-regex scrub is the most text-heavy scan in the run and
     // feeds both stage 2 and the ledger; checkpointing s1 makes it run
     // ONCE (n0 below is a raw-row count that needs no scrub at all).
-    val s1 = cleaned.where(length(col("text")) > 0)
-      .localCheckpoint(eager = true)
+    val s1 = phase("scrub")(cleaned.where(length(col("text")) > 0)
+      .localCheckpoint(eager = true))
     // Identical digest implies identical text (a collision needs a
     // SHA-256 break), so first() over the group's texts is
     // value-deterministic.
-    val s2 = s1.groupBy(sha2(col("text"), 256).as("__dig"))
-      .agg(min(col("doc_id")).as("doc_id"), first(col("text")).as("text"))
-      .drop("__dig")
-      .localCheckpoint(eager = true)
+    val s2 = phase("dedup_exact")(
+      s1.groupBy(sha2(col("text"), 256).as("__dig"))
+        .agg(min(col("doc_id")).as("doc_id"), first(col("text")).as("text"))
+        .drop("__dig")
+        .localCheckpoint(eager = true))
     // One posting table feeds the containment join AND both size lookups
     // (docs with < k tokens have no postings, but they also can never
     // appear in a pair, so the inner size joins below stay complete).
-    val postings = Dedup.containmentPostings(s2, "doc_id", "text")
-      .localCheckpoint(eager = true)
+    val postings = graft.Trace.span(docs.sparkSession, "containment",
+      "postings")(Dedup.containmentPostings(s2, "doc_id", "text")
+        .localCheckpoint(eager = true))
     val pairs =
       if (exactContainment)
         Dedup.containmentPairsFromPostings(postings, threshold)
@@ -103,8 +107,9 @@ object Curation {
     // the run's last text-heavy scan runs once, not per aggregate.
     // s3 itself is consumed only here, so the projection is the thing
     // worth materializing.
-    val keys = TextAnalysis.packKeys(s3, "doc_id", "text")
-      .localCheckpoint(eager = true)
+    val keys = phase("dedup_containment")(
+      TextAnalysis.packKeys(s3, "doc_id", "text")
+        .localCheckpoint(eager = true))
 
     val scrubAgg = docs.agg(count(lit(1)).as("n0"))
       .crossJoin(s1.agg(count(lit(1)).as("n1")))

@@ -510,7 +510,8 @@ object Dedup {
   }
 
   def components(pairs: DataFrame, maxIters: Int = 50,
-      fuse: Int = 4): DataFrame = {
+      fuse: Int = 4): DataFrame =
+    graft.Trace.span(pairs.sparkSession, "dedup", "components") {
     // Materialize the DIRECTED pair list EAGERLY, then build the
     // symmetric view from it. `pairs` may be an expensive plan (an LSH
     // candidate join); the first loop job references the edge list from
@@ -637,7 +638,7 @@ object Dedup {
     // only reads checkpointed blocks.
     labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
     }
-  }
+    }
 
   /** Connected components of a SUPERSET pair graph, derived from the
     * labels of a refining subgraph instead of a second full label-

@@ -72,11 +72,12 @@ object NbModelStore {
       val pairs = Dedup.winnowPairs(d, "doc_id", "text",
         k = WinnowK, w = WinnowW, minShared = MinShared, dfCap = DfCap)
       // checkpointed: the label frame feeds BOTH trainNb sides
-      val labeled = pairs.select(col("a_id").as("doc_id"))
-        .unionByName(pairs.select(col("b_id").as("doc_id")))
-        .distinct()
-        .select(col("doc_id"), lit(1L).as("is_dup"))
-        .localCheckpoint(eager = true)
+      val labeled = graft.Trace.span(s, "dedup", "winnow_pairs")(
+        pairs.select(col("a_id").as("doc_id"))
+          .unionByName(pairs.select(col("b_id").as("doc_id")))
+          .distinct()
+          .select(col("doc_id"), lit(1L).as("is_dup"))
+          .localCheckpoint(eager = true))
       val model = NbClassifier.trainNb(
         d.join(labeled, Seq("doc_id"), "left_anti"),
         d.join(labeled.select("doc_id"), Seq("doc_id"), "left_semi"),

@@ -67,7 +67,7 @@ object NgramLm {
     * so an inlined tokens(text) child is re-split by every slice/
     * element_at inside the lambda — O(tokens^2) per document, doubled
     * again by the filter InferFiltersFromGenerate synthesizes under the
-    * explode. r16's LmProbe measured the inline form at ~3.0 s of pure
+    * explode. r16's phase timing measured the inline form at ~3.0 s of pure
     * pair generation on sf0.1 (5k docs) vs 0.08 s for the split itself;
     * the two-step projection is plan-neutral otherwise (same rows, same
     * broadcast-join scoring on top). CollapseProject keeps the

@@ -519,10 +519,12 @@ object Similarity {
     */
   def indexCandidates(queries: DataFrame, idCol: String, embCol: String,
       centroids: DataFrame, lists: DataFrame, nProbe: Int): DataFrame =
-    lists.join(broadcast(probeTop(renameQ(queries, idCol, embCol),
-        centroids, nProbe)), Seq("cent_id"))
-      .where(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"))
+    graft.Trace.span(queries.sparkSession, "serve", "index_candidates") {
+      lists.join(broadcast(probeTop(renameQ(queries, idCol, embCol),
+          centroids, nProbe)), Seq("cent_id"))
+        .where(col("q_id") =!= col("c_id"))
+        .select(col("q_id"), col("c_id"))
+    }
 
   /** `pqTopK` served from a persisted `AnnIndex` — the daily-run face:
     * ADC-rank the given candidates with the PERSISTED codebook, codes
@@ -535,27 +537,28 @@ object Similarity {
       idCol: String, embCol: String, k: Int, m: Int,
       codebook: DataFrame, codes: DataFrame, norms: DataFrame,
       candidates: DataFrame, rerank: Int = 0,
-      cbLocalOpt: Option[PqCodebookLocal] = None): DataFrame = {
-    // r17: `codes` is persisted in ARRAY form — (c_id, codes), the
-    // serving-tier record layout encode produces natively — so serving
-    // is ONE equi-join of candidates against (codes, norm) plus the
-    // codegen'd per-row ADC fold. The r16 shape rebuilt the arrays per
-    // serve (distinct + join + collect_list + array_sort: three extra
-    // exchange-bearing stages per query), which the driver measured as
-    // the l72/t22 2x regression. Callers that already hold the boot-
-    // collected codebook (the sharedServe meta) pass it via
-    // `cbLocalOpt`, skipping the per-call driver collect; persisted-
-    // table callers (l72/l116/l123) keep the collect — their contract
-    // is that serving boots from the store.
-    val cb = cbLocalOpt.getOrElse(collectCodebookLocal(codebook))
-    require(cb.m == m,
-      s"pqTopKFromIndex: codebook has m=${cb.m} blocks, caller expected $m")
-    val cEnc = codes.select(col("c_id"), col("codes").as("__codes"))
-      .join(norms, Seq("c_id"))
-    adcTopKLocal(renameQ(queries, idCol, embCol),
-      corpus.select(col(idCol).as("c_id"), col(embCol).as("c_emb")),
-      cb, cEnc, candidates, k, rerank)
-  }
+      cbLocalOpt: Option[PqCodebookLocal] = None): DataFrame =
+    graft.Trace.span(queries.sparkSession, "serve", "pq_topk_from_index") {
+      // r17: `codes` is persisted in ARRAY form — (c_id, codes), the
+      // serving-tier record layout encode produces natively — so serving
+      // is ONE equi-join of candidates against (codes, norm) plus the
+      // codegen'd per-row ADC fold. The r16 shape rebuilt the arrays per
+      // serve (distinct + join + collect_list + array_sort: three extra
+      // exchange-bearing stages per query), which the driver measured as
+      // the l72/t22 2x regression. Callers that already hold the boot-
+      // collected codebook (the sharedServe meta) pass it via
+      // `cbLocalOpt`, skipping the per-call driver collect; persisted-
+      // table callers (l72/l116/l123) keep the collect — their contract
+      // is that serving boots from the store.
+      val cb = cbLocalOpt.getOrElse(collectCodebookLocal(codebook))
+      require(cb.m == m,
+        s"pqTopKFromIndex: codebook has m=${cb.m} blocks, caller expected $m")
+      val cEnc = codes.select(col("c_id"), col("codes").as("__codes"))
+        .join(norms, Seq("c_id"))
+      adcTopKLocal(renameQ(queries, idCol, embCol),
+        corpus.select(col(idCol).as("c_id"), col(embCol).as("c_emb")),
+        cb, cEnc, candidates, k, rerank)
+    }
 
   /** The serving tier's in-process view of the index's TINY artifacts:
     * centroids (nCentroids rows) and codebook (m*nCodes sub-vectors),
@@ -676,13 +679,14 @@ object Similarity {
     // — the Opq.fitRotation sync-point shape) and ship the tiny codebook
     // inside the encode/ADC expressions: the retired formulation ran a
     // broadcast-join + two shuffled aggregates per Lloyd round plus a
-    // sub-block-exploded encode join, and r16's phase probe (PqProbe)
+    // sub-block-exploded encode join, and r16's phase probe
     // measured that machinery at 2.9 s train + 3.0 s score on a
     // 2000-row corpus — all Exchange/job floor, no data. The transient
     // per-(vector, block) frame no longer exists at all; the artifact a
     // production pipeline persists is still `codes` (m small values + a
     // norm per vector).
-    val cb = pqTrainCodebookLocal(c, m, nCodes, trainIters)
+    val cb = graft.Trace.span(spark, "pq", "train_codebook")(
+      pqTrainCodebookLocal(c, m, nCodes, trainIters))
     val cEnc = c.select(col("c_id"),
       PqFunctions.encodeCodes(cb, col("c_emb")).as("__codes"),
       vecNorm(col("c_emb")).as("c_norm"))

@@ -34,7 +34,7 @@ object LlmDurableStoreQueries {
     * queries prove the contract end-to-end — build (or reload) the
     * layout, EVICT every in-memory artifact and registered table to
     * simulate a brand-new application, reload, and gate in-query that
-    * the reload paid ZERO build seconds (StoreBuildLedger) and that
+    * the reload paid ZERO store-build seconds (`Trace.Store`) and that
     * the serve plan reads the persisted tables with zero training
     * aggregates. Output and oracle are the training twin's plus the
     * literal gate booleans, so the driver's hash gate enforces the
@@ -44,7 +44,7 @@ object LlmDurableStoreQueries {
 
     QuerySpec(
       "l122_lm_durable_serve",
-      "l83's bigram LM served from the DURABLE store — the second-application contract l107's per-run tables couldn't prove: the count tables live at a fixed warehouse path keyed by the corpus content fingerprint (the l27 hash discipline lifted to the corpus — a changed corpus invalidates, a byte-identical one reuses), and the query (a) load-or-builds, (b) evicts the in-memory NgramModelStore AND drops the registered catalog tables (external — files stay), then (c) reloads and serves the full l83 card. Gates, in-query and hash-enforced: the reload accrued ZERO StoreBuildLedger seconds under durable_lm_bigram (no training or write job ran), and the serve plan carries no training aggregate (the ModelStoreSpec probe, inlined). Hash-exact against l83's oracle plus the literal gate columns: durability must be invisible to the scores and free for every application after the first",
+      "l83's bigram LM served from the DURABLE store — the second-application contract l107's per-run tables couldn't prove: the count tables live at a fixed warehouse path keyed by the corpus content fingerprint (the l27 hash discipline lifted to the corpus — a changed corpus invalidates, a byte-identical one reuses), and the query (a) load-or-builds, (b) evicts the in-memory NgramModelStore AND drops the registered catalog tables (external — files stay), then (c) reloads and serves the full l83 card. Gates, in-query and hash-enforced: the reload accrued ZERO store-build seconds under durable_lm_bigram (no training or write job ran), and the serve plan carries no training aggregate (the ModelStoreSpec probe, inlined). Hash-exact against l83's oracle plus the literal gate columns: durability must be invisible to the scores and free for every application after the first",
       (s, dir) => {
         val st = graft.operators.NgramModelStore
         val ds = graft.operators.DurableStore
@@ -96,7 +96,7 @@ object LlmDurableStoreQueries {
 
     QuerySpec(
       "l123_ann_durable_serve",
-      "l72's IVF-PQ serve from the DURABLE index store — the vector-side second-application contract: the five index tables (lists/codes/norms bucketed on their join keys, centroids/codebook boot tables) live at a fixed path keyed by the embeddings content fingerprint; the query build-or-loads, evicts AnnIndexStore and the registered tables, reloads, and serves l72's full probe -> ADC -> rerank -> fidelity-gate pipeline. Gates, in-query and hash-enforced: zero StoreBuildLedger seconds accrued by the reload, AND the candidate/ADC plans' catalog leaves are exactly the re-registered durable tables (the serve reads the store, not a retrain — bucket specs survive re-registration, so the index-side joins stay exchange-free, plan-probed in DurableStoreSpec). Oracle = l72's plus the literal gate columns",
+      "l72's IVF-PQ serve from the DURABLE index store — the vector-side second-application contract: the five index tables (lists/codes/norms bucketed on their join keys, centroids/codebook boot tables) live at a fixed path keyed by the embeddings content fingerprint; the query build-or-loads, evicts AnnIndexStore and the registered tables, reloads, and serves l72's full probe -> ADC -> rerank -> fidelity-gate pipeline. Gates, in-query and hash-enforced: zero store-build seconds accrued by the reload, AND the candidate/ADC plans' catalog leaves are exactly the re-registered durable tables (the serve reads the store, not a retrain — bucket specs survive re-registration, so the index-side joins stay exchange-free, plan-probed in DurableStoreSpec). Oracle = l72's plus the literal gate columns",
       (s, dir) => {
         val st = graft.operators.AnnIndexStore
         val ds = graft.operators.DurableStore
@@ -149,7 +149,7 @@ object LlmDurableStoreQueries {
 
     QuerySpec(
       "l130_semdedup_durable_serve",
-      "the semantic-dedup family served from the DURABLE store — the last standing build that still re-ran per application (semdedup pairs + component labels, ~6 s at sf0.1 on every run): the two tables (pairs bucketed on a_id, labels on doc_id) live at a fixed path keyed by the embeddings content fingerprint; the query build-or-loads, evicts the SEMANTIC caches (the exact all-pairs twin survives — it is the gate baseline, in-memory by design) and the registered tables, reloads, re-seeds the shared store for sibling consumers (l61/l62/l99), and serves BOTH user-facing cards over the reloaded tables: l61's recall census (cluster-found pairs vs the exact twin) and l62's dropped-set census (coarsened exact components vs semantic components). Durability also PINS the clustering draw: the persisted pair set is one fixed recall-valid draw every consumer shares, instead of a fresh shuffled-double kmeans per application. Gates, in-query and hash-enforced: zero StoreBuildLedger seconds accrued by the reload, and both card plans' catalog leaves include the re-registered durable tables. Oracle = l61's + l62's oracles cross-joined plus the literal gate columns",
+      "the semantic-dedup family served from the DURABLE store — the last standing build that still re-ran per application (semdedup pairs + component labels, ~6 s at sf0.1 on every run): the two tables (pairs bucketed on a_id, labels on doc_id) live at a fixed path keyed by the embeddings content fingerprint; the query build-or-loads, evicts the SEMANTIC caches (the exact all-pairs twin survives — it is the gate baseline, in-memory by design) and the registered tables, reloads, re-seeds the shared store for sibling consumers (l61/l62/l99), and serves BOTH user-facing cards over the reloaded tables: l61's recall census (cluster-found pairs vs the exact twin) and l62's dropped-set census (coarsened exact components vs semantic components). Durability also PINS the clustering draw: the persisted pair set is one fixed recall-valid draw every consumer shares, instead of a fresh shuffled-double kmeans per application. Gates, in-query and hash-enforced: zero store-build seconds accrued by the reload, and both card plans' catalog leaves include the re-registered durable tables. Oracle = l61's + l62's oracles cross-joined plus the literal gate columns",
       (s, dir) => {
         val st = SemDedupStore
         val ds = graft.operators.DurableStore

@@ -241,8 +241,10 @@ object LlmQueries {
     val d = Tables.load(s, dir, "documents")
     // the count tables come from the family's standing build
     // (NgramModelStore) — shared with l87/l88/t28/t31
-    val model = graft.operators.NgramModelStore.sharedBigram(s, dir, order)
-    cardOf(NgramLm.surprisalBits(d, "doc_id", "text", model, order))
+    val model = graft.Trace.span(s, "lm", "model")(
+      graft.operators.NgramModelStore.sharedBigram(s, dir, order))
+    graft.Trace.span(s, "lm", "score")(
+      cardOf(NgramLm.surprisalBits(d, "doc_id", "text", model, order)))
   }
 
   /** Band census + top/bottom-10 card over a (doc_id, n_scored,
@@ -640,7 +642,7 @@ object LlmQueries {
     // a FIXED number per fixture, and "recall >= floor" is a stable boolean
     // the DuckDB oracle asserts as literal TRUE (same contract as r09's HLL
     // error bound). Floors sit under the measured values at sf0.001/0.01/0.1
-    // (RecallProbe: LSH 0.41-0.49, IVF 0.48-0.54, SimHash r 0.49-0.56 /
+    // (measured: LSH 0.41-0.49, IVF 0.48-0.54, SimHash r 0.49-0.56 /
     // p 1.0) with margin, so a real regression — a broken signature, a
     // dropped table, an aliased bucket mask — flips the boolean and fails
     // the hash, while fixture-scale noise cannot. Integer cross-multiply,
@@ -1406,8 +1408,9 @@ object LlmQueries {
         // once, materialize it (the tokenize+shingle+explode scan was
         // each side's dominant cold cost — r7's 57.8 s driver reading),
         // and let the exact join and the df-capped path read the blocks.
-        val postings = Dedup.containmentPostings(docs, "doc_id", "text")
-          .localCheckpoint(eager = true)
+        val postings = graft.Trace.span(s, "containment", "postings")(
+          Dedup.containmentPostings(docs, "doc_id", "text")
+            .localCheckpoint(eager = true))
         val exact = Dedup.containmentPairsFromPostings(postings, 0.8)
           .select(col("a_id"), col("b_id"))
         val capped = Dedup.containmentPairsCappedFromPostings(postings,
@@ -1538,9 +1541,10 @@ object LlmQueries {
         // contract — generate it once, materialize, and pass it to both
         // sides instead of each rebuilding centroids + lists + probes
         // (half of r7's 32.6 s driver reading was this duplication).
-        val cand = Similarity.ivfCandidates(s, q, e, "vec_id", "embedding",
-            nCentroids = 8, nProbe = 6, trainIters = 0)
-          .localCheckpoint(eager = true)
+        val cand = graft.Trace.span(s, "pq", "candidates")(
+          Similarity.ivfCandidates(s, q, e, "vec_id", "embedding",
+              nCentroids = 8, nProbe = 6, trainIters = 0)
+            .localCheckpoint(eager = true))
         Gates.recall(
           Similarity.ivfTopK(s, q, e, "vec_id", "embedding", 10,
             nCentroids = 8, nProbe = 6, candidatesOpt = Some(cand)),
@@ -3702,10 +3706,11 @@ object LlmQueries {
         // pass over the corpus; the gates are agreement-thresholded, so
         // which equally-valid fitted draw serves them is immaterial)
         val model = graft.operators.OpqModelStore.shared(s, dir)._1
-        val rot = e.select(col("vec_id"),
-            transform(Pca.projectExpr(model, col("embedding"), model.dim,
-              whiten = false), x => x.cast("float")).as("embedding"))
-          .localCheckpoint(eager = true)
+        val rot = graft.Trace.span(s, "opq", "rotate")(
+          e.select(col("vec_id"),
+              transform(Pca.projectExpr(model, col("embedding"), model.dim,
+                whiten = false), x => x.cast("float")).as("embedding"))
+            .localCheckpoint(eager = true))
         val isQ = col("vec_id") % 25 === 0
         def topkSet(corpus: org.apache.spark.sql.DataFrame) =
           Similarity.bruteForceTopK(corpus.where(isQ), corpus,
@@ -3713,9 +3718,10 @@ object LlmQueries {
         val rotInv = Gates.recall(topkSet(e), topkSet(rot),
           Seq("q_id", "c_id"), 95, "n_exact", "rot_invariant_ok")
         val q = rot.where(isQ)
-        val cand = Similarity.ivfCandidates(s, q, rot, "vec_id",
-            "embedding", nCentroids = 8, nProbe = 6, trainIters = 0)
-          .localCheckpoint(eager = true)
+        val cand = graft.Trace.span(s, "pq", "candidates")(
+          Similarity.ivfCandidates(s, q, rot, "vec_id",
+              "embedding", nCentroids = 8, nProbe = 6, trainIters = 0)
+            .localCheckpoint(eager = true))
         val pqGate = Gates.recall(
             Similarity.ivfTopK(s, q, rot, "vec_id", "embedding", 10,
               nCentroids = 8, nProbe = 6, candidatesOpt = Some(cand)),

@@ -687,7 +687,7 @@ object TimeSeriesQueries {
         // the engine spin from a driver future and back-fill the
         // micro-batches' idle capacity (guide §2.6); the checkpoint
         // makes the materialization eager, inside this run
-        val batchTopF = scala.concurrent.Future {
+        val batchTopF = graft.Trace.future(s) {
           S.pqTopKFromIndex(qB, e, "vec_id", "embedding",
               k = 10, m = graft.operators.AnnIndexStore.DefaultM,
               codebook = idx.codebook, codes = idx.codes,
@@ -700,7 +700,7 @@ object TimeSeriesQueries {
               cbLocalOpt = Some(meta.cb))
             .select(col("q_id"), col("c_id"))
             .localCheckpoint(eager = true)
-        }(scala.concurrent.ExecutionContext.global)
+        }
         val emitted = runBounded(s, served, "t22_stream_ann_serve_mem",
           "update", statePartitions = Some(8))
         val streamTop = emitted.groupBy(col("q_id"))
@@ -2052,8 +2052,7 @@ object TimeSeriesQueries {
         st.evictAll()
         ds.dropRegistered(s, st.DurableFamily, fp, st.DurableParts)
         val beforeDurable = ds.buildSeconds(st.DurableFamily)
-        val beforeTrain = graft.operators.StoreBuildLedger.snapshot
-          .getOrElse("ann_index", 0.0)
+        val beforeTrain = graft.Trace.seconds(graft.Trace.Store, "ann_index")
         val idx = st.durableIndex(s, dir, fp)
         st.seedIndex(s, dir, idx)
         // boot: collect the tiny artifacts from the reloaded tables
@@ -2072,7 +2071,7 @@ object TimeSeriesQueries {
         // materializes concurrently with the engine spin (guide §2.6);
         // it touches no build ledger (cbLocalOpt skips the collect),
         // so the zero-build/zero-training gates below are unaffected
-        val batchTopF = scala.concurrent.Future {
+        val batchTopF = graft.Trace.future(s) {
           S.pqTopKFromIndex(qB, e, "vec_id", "embedding",
               k = 10, m = graft.operators.AnnIndexStore.DefaultM,
               codebook = idx.codebook, codes = idx.codes,
@@ -2086,15 +2085,15 @@ object TimeSeriesQueries {
               cbLocalOpt = Some(meta.cb))
             .select(col("q_id"), col("c_id"))
             .localCheckpoint(eager = true)
-        }(scala.concurrent.ExecutionContext.global)
+        }
         val emitted = runBounded(s, served, "t50_stream_cold_boot_mem",
           "update", statePartitions = Some(8))
         val batchTop = scala.concurrent.Await.result(batchTopF,
           scala.concurrent.duration.Duration.Inf)
         val buildFree =
           ds.buildSeconds(st.DurableFamily) == beforeDurable
-        val trainFree = graft.operators.StoreBuildLedger.snapshot
-          .getOrElse("ann_index", 0.0) == beforeTrain
+        val trainFree =
+          graft.Trace.seconds(graft.Trace.Store, "ann_index") == beforeTrain
         val streamTop = emitted.groupBy(col("q_id"))
           .agg(max_by(col("topk"), col("n_seen")).as("topk"))
           .select(col("q_id"), explode(col("topk")).as("p"))
@@ -2167,6 +2166,10 @@ object TimeSeriesQueries {
         val ds = graft.operators.DurableStore
         val st = graft.operators.AnnIndexStore
         val parts = st.DurableParts
+        // one span per phase (Bench's per-query `phases`); the jobs of
+        // each land under the innermost span open when they start
+        def phase[A](name: String)(body: => A): A =
+          graft.Trace.span(s, "t52_stream_ingest_republish", name)(body)
         val e = Tables.load(s, dir, "embeddings")
         val base = e.where(col("vec_id") % 5 =!= 0)
         val baseFp = ds.frameFingerprint(base, Seq("vec_id", "embedding"))
@@ -2178,30 +2181,31 @@ object TimeSeriesQueries {
         // bases (verify at sf0.01 and bench at sf0.1 alternate over
         // one store root — each would sweep and re-train the other's)
         val fam = s"ann_ingest_$baseFp"
-        // retention first: sweep prior runs' union generation (and its
-        // now-unreferenced streamed segments) — the standing base
-        // layout survives, so only the first run ever trains
-        ds.vacuum(s, fam, keep = Set(baseFp))
-        // the standing base: one-time training build per base-corpus
-        // lifetime, a single-segment manifest (ledgered durable_<fam>)
-        val baseT = ds.loadOrBuildBase(s, fam, baseFp, parts) {
-          val idx = S.buildAnnIndex(base, "vec_id", "embedding",
-            st.DefaultNCentroids, st.DefaultTrainIters, st.DefaultM,
-            st.DefaultNCodes, st.DefaultPqTrainIters)
-          Map("cent" -> idx.centroids, "lists" -> idx.lists,
-            "codebook" -> idx.codebook, "codes" -> idx.codes,
-            "norms" -> idx.norms)
+        val (cent, cb, segsBase, statsBefore) = phase("base") {
+          // retention first: sweep prior runs' union generation (and its
+          // now-unreferenced streamed segments) — the standing base
+          // layout survives, so only the first run ever trains
+          ds.vacuum(s, fam, keep = Set(baseFp))
+          // the standing base: one-time training build per base-corpus
+          // lifetime, a single-segment manifest (ledgered durable_<fam>)
+          val baseT = ds.loadOrBuildBase(s, fam, baseFp, parts) {
+            val idx = S.buildAnnIndex(base, "vec_id", "embedding",
+              st.DefaultNCentroids, st.DefaultTrainIters, st.DefaultM,
+              st.DefaultNCodes, st.DefaultPqTrainIters)
+            Map("cent" -> idx.centroids, "lists" -> idx.lists,
+              "codebook" -> idx.codebook, "codes" -> idx.codes,
+              "norms" -> idx.norms)
+          }
+          (baseT("cent").localCheckpoint(eager = true),
+            baseT("codebook").localCheckpoint(eager = true),
+            ds.manifestSegments(s, fam, baseFp),
+            Gates.manifestStats(s, fam, baseFp))
         }
-        val cent = baseT("cent").localCheckpoint(eager = true)
-        val cb = baseT("codebook").localCheckpoint(eager = true)
-        val segsBase = ds.manifestSegments(s, fam, baseFp)
-        val statsBefore = Gates.manifestStats(s, fam, baseFp)
         // zero-training watermark AFTER the base build: nothing past
         // this line may train (writeSegment/publishManifest/
         // manifestTables never touch the build ledger)
         def trainSecs(): Double = ds.buildSeconds(fam) +
-          graft.operators.StoreBuildLedger.snapshot
-            .getOrElse("ann_index", 0.0)
+          graft.Trace.seconds(graft.Trace.Store, "ann_index")
         val trainBefore = trainSecs()
         // the EQUIVALENCE BASE (frozen-model batch rebuild over the
         // union + its top-k) depends only on the standing base
@@ -2211,7 +2215,7 @@ object TimeSeriesQueries {
         // engine spins' idle capacity. assignEncode/indexCandidates/
         // pqTopKFromIndex write no build ledger, so the zero-training
         // gate is unaffected.
-        val rebuildF = scala.concurrent.Future {
+        val rebuildF = graft.Trace.future(s)(phase("rebuild") {
           val (lR0, cR0, nR0) = S.assignEncode(cent, cb, e,
             "vec_id", "embedding", m = st.DefaultM)
           val lR = lR0.localCheckpoint(eager = true)
@@ -2227,7 +2231,7 @@ object TimeSeriesQueries {
             .select(col("q_id"), col("c_id"))
             .localCheckpoint(eager = true)
           (lR, cR, nR, batchTop)
-        }(scala.concurrent.ExecutionContext.global)
+        })
         // INGEST: the delta arrives as a stream; each micro-batch is
         // per-row encoded against the frozen artifacts and lands as
         // one immutable segment (the t13 CDC shape, durable form)
@@ -2255,40 +2259,45 @@ object TimeSeriesQueries {
             }
             ()
           }
-        val q = Tables.loadStream(s, dir, "embeddings")
-          .where(col("vec_id") % 5 === 0)
-          .writeStream
-          .foreachBatch(ingestBatch)
-          .option("checkpointLocation", s"$out/_ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.stop()
+        phase("ingest") {
+          val q = Tables.loadStream(s, dir, "embeddings")
+            .where(col("vec_id") % 5 === 0)
+            .writeStream
+            .foreachBatch(ingestBatch)
+            .option("checkpointLocation", s"$out/_ckpt")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          q.stop()
+        }
         // REPUBLISH: the drained state becomes a first-class durable
         // generation — one marker, zero data movement; the segment
         // list comes from the DURABLE ledger in batchId order (the
         // stream's arrival order), exactly what a restarted driver
         // would do — process memory holds nothing the publish needs
-        val segsStreamed = ds.batchSegments(s, fam, runId).map(_._2)
-        val published = ds.publishManifest(s, fam, newFp,
-          segsBase ++ segsStreamed)
-        // O(delta)-write gate: exactly base ++ streamed segments, base
-        // bytes untouched
-        val segsNew = ds.manifestSegments(s, fam, newFp)
-        val odeltaOk = published && segsStreamed.nonEmpty &&
-          segsNew == segsBase ++ segsStreamed &&
-          segsBase.forall(g =>
-            ds.segmentFileStats(s, fam, g) == statsBefore(g))
+        val odeltaOk = phase("republish") {
+          val segsStreamed = ds.batchSegments(s, fam, runId).map(_._2)
+          val published = ds.publishManifest(s, fam, newFp,
+            segsBase ++ segsStreamed)
+          // O(delta)-write gate: exactly base ++ streamed segments, base
+          // bytes untouched
+          val segsNew = ds.manifestSegments(s, fam, newFp)
+          published && segsStreamed.nonEmpty &&
+            segsNew == segsBase ++ segsStreamed &&
+            segsBase.forall(g =>
+              ds.segmentFileStats(s, fam, g) == statsBefore(g))
+        }
         // COLD BOOT: resolve the published layout fresh (marker +
         // footer reads) and collect the tiny serve meta — the one
         // cost a restart legitimately pays, ledgered
-        val t = ds.manifestTables(s, fam, newFp, parts)
-        // since r17 the published codes ARE the array-form serve
-        // layout — boot is the tiny meta collect, zero reconstruction
-        val meta =
-          graft.operators.StoreBuildLedger.timed("ann_ingest_serve") {
+        val (t, meta) = phase("boot") {
+          val t = ds.manifestTables(s, fam, newFp, parts)
+          // since r17 the published codes ARE the array-form serve
+          // layout — boot is the tiny meta collect, zero reconstruction
+          (t, graft.Trace.span(s, graft.Trace.Store, "ann_ingest_serve") {
             S.collectServeMeta(t("cent"), t("codebook"))
-          }
+          })
+        }
         val codesArr = t("codes")
         // SERVE the query-vector stream against the published union
         val served = graft.streaming.StreamingOps.annTopKState(
@@ -2298,8 +2307,8 @@ object TimeSeriesQueries {
             "vec_id", "embedding", meta, t("lists"), codesArr,
             t("norms"), nProbe = 6),
           k = 10)
-        val emitted = runBounded(s, served, "t52_ingest_republish_mem",
-          "update", statePartitions = Some(8))
+        val emitted = phase("serve")(runBounded(s, served,
+          "t52_ingest_republish_mem", "update", statePartitions = Some(8)))
         // the concurrently-materialized equivalence base (launched
         // before the ingest spin): an independent path from the
         // published segments
@@ -2310,8 +2319,8 @@ object TimeSeriesQueries {
           .agg(max_by(col("topk"), col("n_seen")).as("topk"))
           .select(col("q_id"), explode(col("topk")).as("p"))
           .select(col("q_id"), col("p._2").as("c_id"))
-        val res = Gates.recall(batchTop, streamTop, Seq("q_id", "c_id"), 90,
-            "n_topk", "stream_ok")
+        val res = phase("gates")(Gates.recall(batchTop, streamTop,
+            Seq("q_id", "c_id"), 90, "n_topk", "stream_ok")
           .crossJoin(broadcast(
             e.agg(count(when(col("vec_id") % 5 =!= 0, 1)).as("n_base"),
               count(when(col("vec_id") % 5 === 0, 1)).as("n_streamed"))))
@@ -2328,7 +2337,7 @@ object TimeSeriesQueries {
               .as("ingest_exact_ok"),
             lit(trainFree).as("ingest_train_free_ok"),
             lit(odeltaOk).as("write_odelta_ok"))
-          .localCheckpoint(eager = true) // ckpt dir is deleted below
+          .localCheckpoint(eager = true)) // ckpt dir is deleted below
         // the manifest now carries the references — drop the run's
         // batch ledgers so retention is free to retire this
         // generation later

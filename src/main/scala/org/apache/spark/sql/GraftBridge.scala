@@ -41,4 +41,11 @@ object GraftBridge {
     * included, nullable — the schema a parquet scan reads back.
     */
   def asNullable(t: types.StructType): types.StructType = t.asNullable
+
+  /** Wait until every scheduler event posted so far has reached the
+    * listeners (`private[spark]` listener bus): listener totals read
+    * right after an action otherwise miss its last task ends.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(30000L)
 }

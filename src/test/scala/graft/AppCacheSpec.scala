@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.operators.{AppCache, StoreBuildLedger}
+import graft.operators.AppCache
 
 /** The application-scoped artifact cache every model store sits on:
   * one build per (application, dir, variant) under concurrency,
@@ -20,7 +20,7 @@ class AppCacheSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory("graft_appcache_").toString
 
   private def ledger(key: String): Double =
-    StoreBuildLedger.snapshot.getOrElse(key, 0.0)
+    Trace.seconds(Trace.Store, key)
 
   test("concurrent callers of one key build it once") {
     val (cache, _) = fresh()
@@ -59,7 +59,7 @@ class AppCacheSpec extends SparkSpec {
     val (cache, _) = fresh()
     val builds = new AtomicInteger()
     def getIn(app: String) =
-      cache.getIn(app, dir, "")(builds.incrementAndGet())(n => s"$app-$n")
+      cache.getIn(spark, app, dir, "")(builds.incrementAndGet())(n => s"$app-$n")
     assert(getIn("app-stopped") === "app-stopped-1")
     assert(getIn("app-stopped") === "app-stopped-1") // hit
     assert(cache.get(spark, dir)(builds.incrementAndGet())(n => s"live-$n")

@@ -122,21 +122,21 @@ class CheckpointManagerSpec extends SparkSpec {
 
   test("a path whose filesystem is not LocalFileSystem gets Spark's manager") {
     val conf = new Configuration()
-    conf.set(s"fs.${CreateCountingFs.scheme}.impl", classOf[CreateCountingFs].getName)
+    conf.set(s"fs.${CountingFs.scheme}.impl", classOf[CountingFs].getName)
     conf.set(key, Engine.settings(key))
     val dir = tempDir("graft_ckpt_nonlocal_")
-    val root = new Path(s"${CreateCountingFs.scheme}://$dir")
+    val root = new Path(s"${CountingFs.scheme}://$dir")
     // Spark's factory still resolves the engine's class, which hands a
     // scheme with no FileContext binding to Spark's FileSystem fallback.
     val fm = CheckpointFileManager.create(root, conf)
     assert(fm.isInstanceOf[LocalCheckpointFileManager])
     assert(fm.asInstanceOf[LocalCheckpointFileManager].base
       .isInstanceOf[FileSystemBasedCheckpointFileManager])
-    val before = CreateCountingFs.creates.get
+    val before = CountingFs.creates.get
     val out = fm.createAtomic(new Path(root, "0"), overwriteIfPossible = false)
     assert(out.isInstanceOf[CheckpointFileManager.RenameBasedFSDataOutputStream])
     try out.write("spark's path".getBytes(UTF_8)) finally out.close()
-    assert(CreateCountingFs.creates.get - before === 1) // its temp file
+    assert(CountingFs.creates.get - before === 1) // its temp file
     assert(read(dir.resolve("0")) === "spark's path")
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.operators.{DeflateDictStore, Dsir, DupSpanStore,
   DurableStore, MixtureModelStore, NbModelStore, NgramModelStore,
-  OpqModelStore, StoreBuildLedger}
+  OpqModelStore}
 
 /** The durable-store contract (the l122/l123 gates, unit-faced): a
   * family's artifacts live at a fixed path keyed by a corpus content
@@ -578,6 +578,13 @@ class DurableStoreSpec extends SparkSpec {
         fail("a built layout must not rebuild"))).getMessage
     assert(err.contains(
       "spec_layout/fp0 part t has columns (a bigint, c bigint)"), err)
+  }
+
+  test("jobsStarted counts a span's jobs, also those of spans the body " +
+      "opens, so the zero-job pins below cannot pass vacuously") {
+    assert(jobsStarted(spark.range(10).count()) >= 1)
+    assert(jobsStarted(
+      Trace.span(spark, "serve", "manifest_tables")(spark.range(10).count())) >= 1)
   }
 
   test("manifestTables resolves each immutable segment once: over a " +
@@ -1391,6 +1398,31 @@ class DurableStoreSpec extends SparkSpec {
       assert(t("t").count() === 2)
     }
     assert(d === 0.0, s"kept manifest accrued build seconds: $d")
+  }
+
+  test("vacuumKeepLatest reads each layout's marker once to rank and " +
+      "classify it") {
+    import spark.implicits._
+    val fam = "spec_keep_latest_reads"
+    val parts = Seq(DurableStore.Part("t", None))
+    for (fp <- Seq("fpA", "fpB", "fpC"))
+      DurableStore.loadOrBuild(spark, fam, fp, parts)(
+        Map("t" -> Seq((0, fp)).toDF("k", "who")))
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${CountingFs.scheme}.impl",
+      classOf[CountingFs].getName)
+    // the same files, reached through a filesystem that counts opens
+    spark.conf.set("spark.graft.store.root",
+      s"${CountingFs.scheme}://$storeRoot")
+    val before = CountingFs.markerOpens.get
+    val rep =
+      try DurableStore.vacuumKeepLatest(spark, fam, 1)
+      finally spark.conf.set("spark.graft.store.root", storeRoot)
+    assert(rep.stale.toSet === Set("fpA", "fpB"), s"stale: ${rep.stale}")
+    // one read per layout in the sweep, plus the segment pass's
+    // reachability read of the one layout that survives it
+    assert(CountingFs.markerOpens.get - before === 3 + 1)
+    assert(DurableStore.isBuilt(spark, fam, "fpC"))
   }
 
   test("compaction's superseded chain is tombstone-graced: historical " +

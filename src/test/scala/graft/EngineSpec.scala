@@ -36,17 +36,34 @@ class EngineSpec extends SparkSpec {
   private def grouped(s: org.apache.spark.sql.SparkSession): DataFrame =
     s.range(100).groupBy(col("id") % 7).count()
 
+  /** The .scala files under `root`, with their text. */
+  private def sources(root: String): Seq[(java.nio.file.Path, String)] = {
+    val dir = java.nio.file.Paths.get(root)
+    assert(java.nio.file.Files.isDirectory(dir), dir.toAbsolutePath)
+    java.nio.file.Files.walk(dir).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      .toSeq
+  }
+
   test("only Engine.scala writes session conf in src/main") {
-    val root = java.nio.file.Paths.get("src/main")
-    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
-    val writers = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "Engine.scala")
-      .filter { p =>
-        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        src.contains(".conf.set(") || src.contains(".conf.unset(")
-      }.toSeq
+    val writers = sources("src/main").collect {
+      case (p, src) if p.getFileName.toString != "Engine.scala" &&
+        (src.contains(".conf.set(") || src.contains(".conf.unset(")) => p
+    }
     assert(writers.isEmpty, s"session conf written outside Engine: ${writers.mkString(", ")}")
+  }
+
+  test("only Trace.scala and Progress.scala in src/main register a " +
+      "Spark listener, and no test does") {
+    val call = "addSpark" + "Listener"
+    val allowed = Set("src/main/scala/graft/Trace.scala",
+      "src/main/scala/graft/pipeline/Progress.scala")
+    val found = (sources("src/main") ++ sources("src/test")).collect {
+      case (p, src) if !allowed(p.toString) && src.contains(call) => p
+    }
+    assert(found.isEmpty, s"listeners registered outside Trace/Progress: ${found.mkString(", ")}")
+    assert(allowed.forall(p => java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(p))))
   }
 
   test("scoped: the body sees the override, the parent never does") {

@@ -298,18 +298,18 @@ class InfluxDsv2Spec extends SparkSpec {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
     spark.sparkContext.hadoopConfiguration.set(
-      s"fs.${CreateCountingFs.scheme}.impl", classOf[CreateCountingFs].getName)
+      s"fs.${CountingFs.scheme}.impl", classOf[CountingFs].getName)
     val dir = Files.createTempDirectory("graft_dsv2_nonlocal_").toString
     val write = new InfluxWrite(StructType(Seq(StructField("id", LongType),
         StructField("name", StringType))), "m", "time", 2,
       truncateFirst = false,
-      new FileFlushTransport(s"${CreateCountingFs.scheme}://$dir/m", None))
-    val before = CreateCountingFs.creates.get
+      new FileFlushTransport(s"${CountingFs.scheme}://$dir/m", None))
+    val before = CountingFs.creates.get
     val w = write.createBatchWriterFactory(onePartition).createWriter(0, 1L)
     (1 to 5).foreach(i => w.write(InternalRow(i.toLong,
       UTF8String.fromString(s"v$i"))))
     write.commit(Array[WriterCommitMessage](w.commit()))
-    assert(CreateCountingFs.creates.get - before === 3) // 2 + 2 + 1 rows
+    assert(CountingFs.creates.get - before === 3) // 2 + 2 + 1 rows
     assert(lines(dir).size === 5)
   }
 
@@ -405,35 +405,14 @@ class InfluxDsv2Spec extends SparkSpec {
     def refused(e: Exception): Unit =
       assert(e.getMessage.contains("'ntz'") &&
         e.getMessage.contains("TimestampNTZType"), e.getMessage)
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(Option(e.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    val sc = spark.sparkContext
     val dir = Files.createTempDirectory("graft_dsv2_types_").toString
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("influx_types_build", "write build only")
-      try refused(intercept[IllegalArgumentException] {
+    assert(jobsStarted {
+      refused(intercept[IllegalArgumentException] {
         frame.write.format("graft-influx")
           .option("path", dir).option("measurement", "m")
           .mode("append").save()
-      }) finally sc.clearJobGroup()
-      // listener events arrive in order: once a later marker job is seen,
-      // every job the refused write could have started is seen too
-      sc.setJobGroup("influx_types_marker", "listener barrier")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("influx_types_marker") &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-      assert(groups.contains("influx_types_marker"),
-        "the listener never saw the marker job")
-      assert(!groups.contains("influx_types_build"),
-        "a job ran while building the refused write")
-    } finally sc.removeSparkListener(listener)
+      })
+    } === 0, "a job ran while building the refused write")
     val posts = new java.util.concurrent.atomic.AtomicInteger()
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
@@ -630,22 +609,31 @@ object InfluxDsv2Spec {
 }
 
 /** A FileSystem that is not Hadoop's `LocalFileSystem` (the raw local
-  * one under its own scheme) and counts `create` calls, so a test can
-  * see the file transport stage through `FileSystem.create` there.
+  * one under its own scheme) and counts `create` calls and opens of
+  * durable-store markers, so a test can see the file transport stage
+  * through `FileSystem.create` there, or a sweep's marker reads.
   */
-final class CreateCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create(s"${CreateCountingFs.scheme}:///")
+final class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${CountingFs.scheme}:///")
 
   // the overload `create(path, overwrite)` reaches
   override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
-    CreateCountingFs.creates.incrementAndGet()
+    CountingFs.creates.incrementAndGet()
     super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName.startsWith(graft.operators.DurableStore.Marker))
+      CountingFs.markerOpens.incrementAndGet()
+    super.open(f, bufferSize)
   }
 }
 
-object CreateCountingFs {
+object CountingFs {
   val scheme = "graftcount"
   val creates = new java.util.concurrent.atomic.AtomicInteger()
+  val markerOpens = new java.util.concurrent.atomic.AtomicInteger()
 }

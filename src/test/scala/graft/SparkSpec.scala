@@ -10,31 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** Spark jobs `body` starts, counted by a job-group listener; a
-    * later marker job is the barrier for the listener's ordered events.
+  /** Spark jobs started while `body` runs, counted by `Trace`: the
+    * jobs of every span (the body runs in one of its own, and spans it
+    * opens take their jobs from it), plus any started outside a span.
+    * The suites run one at a time, so nothing else starts jobs then.
     */
   def jobsStarted(body: => Unit): Int = {
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(Option(e.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("jobs_started_body", "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("jobs_started_marker", "listener barrier")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("jobs_started_marker") &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-      assert(groups.contains("jobs_started_marker"),
-        "the listener never saw the marker job")
-      groups.toArray.count(_ == "jobs_started_body")
-    } finally sc.removeSparkListener(listener)
+    val before = Trace.snapshot(spark)
+    Trace.span(spark, "test", "jobs_started")(body)
+    Trace.delta(before, Trace.snapshot(spark)).values.map(_.jobs).sum.toInt
   }
 }
 
